@@ -381,6 +381,13 @@ def test_fetch_first_with_ties(engine):
         "t(x) ORDER BY x FETCH FIRST 2 ROWS WITH TIES) s"
     ).collect()
     assert rows[0].n == 3
+    # a statement that opens with its scope's paren keeps that paren
+    # outermost, around the whole rank() rewrite
+    from witdb_spark.plans.dialect import transpile
+
+    out = transpile("(SELECT x FROM t ORDER BY x FETCH FIRST 2 ROWS WITH TIES)")
+    assert out.startswith("(SELECT * EXCEPT (__wt_rank) FROM (")
+    assert out.endswith("__wt_q) WHERE __wt_rank <= 2 ORDER BY x)")
     # FETCH ... ONLY still maps to plain LIMIT
     rows = engine.sql(
         "SELECT x FROM (VALUES (1), (2), (3)) t(x) "

@@ -663,6 +663,7 @@ def test_year_month_conjunction_rewrite():
     from witdb_spark.plans.dialect import (
         _rewrite_year_month_ranges,
         _rewrite_year_ranges,
+        transpile,
     )
 
     out = _rewrite_year_month_ranges(
@@ -682,6 +683,44 @@ def test_year_month_conjunction_rewrite():
     assert _rewrite_year_ranges(frac) == frac
     frac2 = "WHERE year(l_shipdate) = 1996.5"
     assert _rewrite_year_ranges(frac2) == frac2
+    # NOT binds tighter than AND: it negates only the year comparison,
+    # so the conjunction must not collapse into one negated month range
+    neg = "WHERE NOT year(o_orderdate) = 1995 AND month(o_orderdate) = 3"
+    assert _rewrite_year_month_ranges(neg) == neg
+    out = transpile("SELECT o_orderkey FROM orders " + neg)
+    assert (
+        "NOT (o_orderdate >= TIMESTAMP_NTZ '1995-01-01 00:00:00'"
+        " AND o_orderdate < TIMESTAMP_NTZ '1996-01-01 00:00:00')"
+        " AND month(o_orderdate) = 3"
+    ) in out
+
+
+def test_decimal_typed_cols_reach_fixpoint():
+    """A name is decimal only if its whole alias chain grounds out in a
+    decimal expression: a 7-hop chain rooted at a DOUBLE must be
+    removed link by link until none of it is left."""
+    from witdb_spark.plans.dialect import _decimal_typed_cols
+
+    hops = ["c0 AS (SELECT CAST(l_quantity AS DOUBLE) AS a0 FROM lineitem)"]
+    hops += [f"c{i} AS (SELECT a{i - 1} AS a{i} FROM c{i - 1})" for i in range(1, 8)]
+    chain = "WITH " + ", ".join(hops) + " SELECT SUM(a7) AS s FROM c7"
+    assert _decimal_typed_cols(chain) == frozenset()
+    grounded = chain.replace("AS DOUBLE", "AS DECIMAL(30,6)")
+    assert {"a0", "a7"} <= _decimal_typed_cols(grounded)
+
+
+def test_comments_do_not_flip_quote_tracking():
+    """An apostrophe inside a comment is not a string delimiter: the
+    rewrites after it still see code."""
+    from witdb_spark.plans.dialect import transpile
+
+    out = transpile("SELECT x -- it's\n, ARRAY[1,2][1] FROM t")
+    assert "element_at(array(1,2), 1)" in out
+    out2 = transpile("SELECT /* don't */ ARRAY[1,2][1], element_at(m, 'k') FROM t")
+    assert "element_at(array(1,2), 1)" in out2
+    assert "try_element_at(m, 'k')" in out2
+    # the comments themselves pass through verbatim
+    assert "-- it's\n" in out and "/* don't */" in out2
 
 
 def test_year_predicate_pushes_date_bounds(spark):

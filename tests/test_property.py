@@ -98,6 +98,80 @@ def test_transpile_idempotent_on_spark_sql():
 
 
 # ---------------------------------------------------------------------------
+# the SQL lexer (plans/lexer.py) vs a brute-force character scanner
+
+
+def reference_scan(text: str):
+    """(code flag per char, paren depth per char, open -> close index)
+    by walking the text one character at a time with SQL's rules."""
+    n = len(text)
+    code, depth = [True] * n, [0] * n
+    closes, stacks = {}, {"(": [], "[": []}
+    d = i = 0
+    while i < n:
+        c = text[i]
+        if c in "'\"":  # string (non-code) or quoted identifier (code)
+            j = i + 1
+            while j < n:
+                if text[j] == c:
+                    if text[j + 1 : j + 2] == c:
+                        j += 2
+                        continue
+                    j += 1
+                    break
+                j += 1
+        elif text.startswith("--", i):
+            j = text.find("\n", i)
+            j = n if j < 0 else j
+        elif text.startswith("/*", i):
+            j = text.find("*/", i + 2)
+            j = n if j < 0 else j + 2
+        else:
+            if c in "([":
+                stacks[c].append(i)
+            elif c in ")]":
+                st = stacks["(" if c == ")" else "["]
+                if st:
+                    closes[st.pop()] = i
+            d += (c == "(") - (c == ")")
+            depth[i] = d
+            i += 1
+            continue
+        for k in range(i, j):
+            code[k] = c == '"'
+            depth[k] = d
+        i = j
+    return code, depth, closes
+
+
+_SQL_PIECES = st.one_of(
+    st.sampled_from(["(", ")", "[", "]", ",", " ", "\n", "-", "/", "*",
+                     "<", ">", "'", '"', "SELECT", "a1", "x_y", "AS"]),
+    st.text("ab'() ,", max_size=6).map(lambda t: "'" + t.replace("'", "''") + "'"),
+    st.text('ab"() ,', max_size=6).map(lambda t: '"' + t.replace('"', '""') + '"'),
+    st.text("ab'\"()-*/ ", max_size=8).map(lambda t: "--" + t + "\n"),
+    st.text("ab'\"()-/\n ", max_size=8).map(lambda t: "/*" + t + "*/"),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_SQL_PIECES, max_size=30).map("".join))
+def test_lexer_matches_reference_scanner(text):
+    from witdb_spark.plans.lexer import Lexed
+
+    lx = Lexed(text)
+    assert "".join(lx.toks) == text
+    code, depth, closes = reference_scan(text)
+    assert lx.closes == closes
+    assert [lx.is_code(p) for p in range(len(text))] == code
+    assert [lx.depth(p) for p in range(len(text))] == depth
+    # code-only regex iteration, including its whole-word shortcut
+    for pat in (r"\bSELECT\b", r"\bAS\s*\(", r"\ba1\s+AS\b", r"\bx_y\b"):
+        want = [m.start() for m in re.finditer(pat, text, re.I) if code[m.start()]]
+        assert [m.start() for m in lx.finditer(pat)] == want
+
+
+# ---------------------------------------------------------------------------
 # digest determinism: merge must be invariant to pool order (the claim that
 # makes agg_tdigest_rollup oracle-able across engines)
 

@@ -399,55 +399,52 @@ def test_sum_decimal_narrowing_rewrite():
     assert _expr_abs_bound("unknown + 1") == float("inf")
 
 
-def test_eager_dim_agg_rewrite_guards(oracle):
-    """r16: the eager-aggregation rewrite (plans/eager_agg.py) — exact on
-    the q64 cross_sales shape (verified against DuckDB here), and
-    correctly refuses shapes where lifting would change results."""
-    import pandas as pd
+def test_cte_selfjoin_narrowing_guards():
+    """The narrowing refuses every CTE body where lifting a dimension
+    out of the aggregation would change results: each case is one edit
+    away from a body that does narrow."""
+    from witdb_spark.plans.eager_agg import rewrite_cte_selfjoin_narrow
 
-    from witdb_spark.plans.eager_agg import rewrite_eager_dim_agg
-    from witdb_spark.queries import QUERIES
+    def cte(body: str, att: str = "store_name") -> str:
+        return (
+            f"WITH cs AS ({body})"
+            f" SELECT c1.{att}, c1.s1 AS a, c2.s1 AS b"
+            f" FROM cs c1 JOIN cs c2 ON c1.item_sk = c2.item_sk"
+        )
 
-    text = QUERIES["tpcds_sql_q64"].oracle
-    rewritten = rewrite_eager_dim_agg(text, force=True)
-    assert "__ea_pre" in rewritten
-    a = oracle.execute(text).fetchdf()
-    b = oracle.execute(rewritten).fetchdf()
-    assert list(a.columns) == list(b.columns)
-    sa = a.sort_values(by=list(a.columns), kind="mergesort").reset_index(drop=True)
-    sb = b.sort_values(by=list(a.columns), kind="mergesort").reset_index(drop=True)
-    pd.testing.assert_frame_equal(sa, sb)
-    # p_brand is NOT declared unique and p_partkey is not in the keys:
-    # grouping by l_partkey would be finer than by p_brand -> no lift
-    nolift = rewrite_eager_dim_agg(
-        "SELECT p_brand, SUM(CAST(l_quantity AS DECIMAL(30,6))) AS s"
-        " FROM lineitem JOIN part ON p_partkey = l_partkey"
-        " GROUP BY p_brand",
-        force=True,
-    )
-    assert "__ea_pre" not in nolift
-    # l_orderkey is not unique in lineitem: joining it post-agg would
-    # drop the fan-out multiplicity COUNT(*) counts -> no lift
-    nolift2 = rewrite_eager_dim_agg(
-        "SELECT o_orderpriority, COUNT(*) AS c"
-        " FROM orders JOIN lineitem ON l_orderkey = o_orderkey"
-        " GROUP BY o_orderpriority",
-        force=True,
-    )
-    assert "__ea_pre" not in nolift2
-    # outer joins / HAVING / DISTINCT make a block ineligible
-    for q in (
-        "SELECT s_name, SUM(CAST(l_quantity AS DECIMAL(30,6))) AS s"
-        " FROM lineitem LEFT JOIN supplier ON s_suppkey = l_suppkey"
-        " GROUP BY s_name",
-        "SELECT s_name, SUM(CAST(l_quantity AS DECIMAL(30,6))) AS s"
+    base = (
+        "SELECT s_name AS store_name, l_partkey AS item_sk,"
+        " SUM(CAST(l_quantity AS DECIMAL(30,6))) AS s1"
         " FROM lineitem JOIN supplier ON s_suppkey = l_suppkey"
-        " GROUP BY s_name HAVING COUNT(*) > 1",
-        "SELECT DISTINCT s_name, SUM(CAST(l_quantity AS DECIMAL(30,6))) AS s"
-        " FROM lineitem JOIN supplier ON s_suppkey = l_suppkey"
-        " GROUP BY s_name",
-    ):
-        assert "__ea_pre" not in rewrite_eager_dim_agg(q, force=True), q
+        " GROUP BY s_name, l_partkey"
+    )
+    assert "__ea_pre" in rewrite_cte_selfjoin_narrow(cte(base))
+    refused = [
+        # p_brand is NOT declared unique and p_partkey is not in the
+        # keys: grouping by l_partkey would be finer than by p_brand
+        cte(
+            "SELECT p_brand AS brand, l_suppkey AS item_sk,"
+            " SUM(CAST(l_quantity AS DECIMAL(30,6))) AS s1"
+            " FROM lineitem JOIN part ON p_partkey = l_partkey"
+            " GROUP BY p_brand, l_suppkey",
+            att="brand",
+        ),
+        # l_orderkey is not unique in lineitem: joining it post-agg would
+        # drop the fan-out multiplicity COUNT(*) counts
+        cte(
+            "SELECT o_orderpriority AS prio, o_custkey AS item_sk,"
+            " COUNT(*) AS s1"
+            " FROM orders JOIN lineitem ON l_orderkey = o_orderkey"
+            " GROUP BY o_orderpriority, o_custkey",
+            att="prio",
+        ),
+        # outer joins / HAVING / DISTINCT make the block ineligible
+        cte(base.replace("JOIN supplier", "LEFT JOIN supplier")),
+        cte(base + " HAVING COUNT(*) > 1"),
+        cte(base.replace("SELECT s_name", "SELECT DISTINCT s_name")),
+    ]
+    for q in refused:
+        assert rewrite_cte_selfjoin_narrow(q) == q, q
 
 
 def test_tables_dataframe_memoized(spark):
@@ -471,7 +468,7 @@ def test_cte_selfjoin_narrowing(oracle):
     from witdb_spark.queries import QUERIES
 
     text = QUERIES["tpcds_sql_q64"].oracle
-    r = rewrite_cte_selfjoin_narrow(text, force=True)
+    r = rewrite_cte_selfjoin_narrow(text)
     assert "__ea_pre" in r and "__ea_a1" in r
     # the CTE no longer exposes the dimension strings; the consumer
     # reads them through the re-attach joins
@@ -490,10 +487,21 @@ def test_cte_selfjoin_narrowing(oracle):
         "WHERE cs1.syear = 1996",
         "WHERE cs1.store_name > 'A' AND cs1.syear = 1996",
     )
-    assert rewrite_cte_selfjoin_narrow(bad, force=True) == bad
+    assert rewrite_cte_selfjoin_narrow(bad) == bad
     # an unaliased instance cannot be re-pointed either
     bad2 = text.replace("cross_sales cs1 JOIN", "cross_sales JOIN")
-    assert rewrite_cte_selfjoin_narrow(bad2, force=True) == bad2
+    assert rewrite_cte_selfjoin_narrow(bad2) == bad2
+    # star expansion over an instance would expose the hidden anchor
+    # columns and lose the dropped attributes
+    items = text[
+        text.index("SELECT cs1.product_name") : text.index("FROM cross_sales cs1")
+    ]
+    star = text.replace(items, "SELECT * ")
+    assert rewrite_cte_selfjoin_narrow(star) == star
+    qstar = text.replace(
+        "SELECT cs1.product_name, cs1.store_name,", "SELECT cs1.*,"
+    )
+    assert rewrite_cte_selfjoin_narrow(qstar) == qstar
 
 
 def test_sum_narrowing_skips_window_calls():

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from witdb_spark.catalog import Tables
 from witdb_spark.functions import register_all
 from witdb_spark.plans import transpile
+from witdb_spark.plans.lexer import UnsupportedTrinoSyntax, is_comment, lex, split
 
 # Reference session properties (SystemSessionProperties.java) -> Spark confs.
 SESSION_PROPERTIES: dict[str, str] = {
@@ -186,10 +187,8 @@ class Engine:
             )
         m = re.match(r"^\s*SHOW\s+STATS\s+FOR\s*\(", text, re.I)
         if m:  # SHOW STATS FOR (query) — reference ShowStatsRewrite
-            from witdb_spark.plans.dialect import _match_paren
-
             open_idx = text.index("(", m.start())
-            close_idx = _match_paren(text, open_idx)
+            close_idx = lex(text).close(open_idx)
             inner = text[open_idx + 1 : close_idx]
             self.sql(inner).createOrReplaceTempView("__show_stats_q")
             return self.show_stats("__show_stats_q")
@@ -614,11 +613,7 @@ class Engine:
             if which == "INPUT":
                 # positional parameter slots; types are unknown until bound
                 # (the reference reports 'unknown' for untyped params too)
-                n = sum(
-                    chunk.count("?")
-                    for chunk in re.split(r"('(?:[^']|'')*')", prepared[name])
-                    if not chunk.startswith("'")
-                )
+                n = sum(1 for _ in lex(prepared[name]).finditer(r"\?"))
                 rows = [(i, "unknown") for i in range(n)]
                 return self.spark.createDataFrame(
                     rows, "Position int, Type string"
@@ -626,17 +621,7 @@ class Engine:
                     [], "Position int, Type string"
                 )
             # OUTPUT: bind NULLs to parameters and describe the result schema
-            stub = prepared[name]
-            out, i = [], 0
-            for chunk in re.split(r"('(?:[^']|'')*')", stub):
-                if chunk.startswith("'"):
-                    out.append(chunk)
-                    continue
-                while "?" in chunk:
-                    chunk = chunk.replace("?", "NULL", 1)
-                    i += 1
-                out.append(chunk)
-            schema = self.sql("".join(out)).schema
+            schema = self.sql(lex(prepared[name]).sub(r"\?", "NULL")).schema
             rows = [(f.name, f.dataType.simpleString()) for f in schema.fields]
             return self.spark.createDataFrame(rows, "`Column Name` string, Type string")
         if re.match(r"^\s*SHOW\s+SESSION\s*;?\s*$", text, re.I):
@@ -683,9 +668,7 @@ class Engine:
         if m:  # reference ExecuteTask.java — literal args bound positionally
             args = []
             if m.group(2):
-                from witdb_spark.plans.dialect import _split_top_level
-
-                for lit in _split_top_level(m.group(2)):
+                for lit in split(m.group(2), angle=True):
                     args.append(self.spark.sql(f"SELECT {lit}").collect()[0][0])
             return self.execute(m.group(1), *args)
         m = re.match(
@@ -772,10 +755,6 @@ class Engine:
         connector + iceberg library procedures) and
         system.clean('<path>'[, keep_last]) (Hudi's cleaner).
         Returns a one-row summary DataFrame."""
-        from witdb_spark.plans.dialect import (
-            _match_paren,
-            _split_call_args,
-        )
         from witdb_spark.sources.delta_log import (
             delta_checkpoint,
             delta_optimize,
@@ -783,11 +762,12 @@ class Engine:
         )
 
         open_idx = text.index("(", m.start())
-        close_idx = _match_paren(text, open_idx)
+        lx = lex(text)
+        close_idx = lx.close(open_idx)
         if text[close_idx + 1 :].strip().rstrip(";").strip():
             raise ValueError("trailing tokens after CALL procedure")
         args = []
-        for a in _split_call_args(text[open_idx + 1 : close_idx]):
+        for a in lx.split(open_idx + 1, close_idx):
             a = a.strip()
             a = re.sub(r"(?is)^[A-Za-z_]\w*\s*=>\s*", "", a)  # named ok
             if len(a) >= 2 and a[0] == a[-1] == "'":
@@ -1138,15 +1118,11 @@ class Engine:
         (reference plugin/trino-delta-lake tablechanges/
         TableChangesFunction.java). Matches inside string literals are
         left alone."""
-        from witdb_spark.plans.dialect import _scan_maps
         from witdb_spark.sources.delta_log import delta_table_changes
 
-        _depths, instr = _scan_maps(text)
         out = text
         n = 0
-        for m in reversed(list(self._TABLE_CHANGES.finditer(text))):
-            if instr[m.start()]:
-                continue
+        for m in reversed(list(lex(text).finditer(self._TABLE_CHANGES))):
             df = delta_table_changes(
                 self.spark,
                 m.group("path"),
@@ -1172,7 +1148,6 @@ class Engine:
         plain unpruned view."""
         import re as _re
 
-        from witdb_spark.plans.dialect import _scan_maps
         from witdb_spark.sources.lakehouse import read_table
 
         if _re.match(
@@ -1186,8 +1161,7 @@ class Engine:
         pat = _re.compile(
             r"(delta|iceberg|hudi)\s*\.\s*'(?P<path>[^']+)'", _re.I
         )
-        _depths, instr = _scan_maps(text)
-        refs = [m for m in pat.finditer(text) if not instr[m.start()]]
+        refs = list(lex(text).finditer(pat))
         if not refs:
             return text
         where = None
@@ -1223,18 +1197,12 @@ class Engine:
                 ):
                     alias = am.group("alias")
                     # literal-aware strip: alias. only outside strings
-                    parts = _re.split(r"('(?:[^']|'')*')", pred)
-                    rx = _re.compile(
-                        rf"\b{_re.escape(alias)}\s*\.\s*(?=[A-Za-z_])",
-                        _re.I,
-                    )
-                    pred = "".join(
-                        p if i % 2 else rx.sub("", p)
-                        for i, p in enumerate(parts)
+                    pred = lex(pred).sub(
+                        rf"\b{_re.escape(alias)}\s*\.\s*(?=[A-Za-z_])", ""
                     )
                 # any OTHER qualified ref would not resolve inside the
                 # reader's re-applied filter — no pushdown then
-                code = _re.sub(r"'(?:[^']|'')*'", "''", pred)
+                code = lex(pred).blank_strings()
                 if not _re.search(r"[A-Za-z_]\w*\s*\.\s*[A-Za-z_]", code):
                     where = pred
         # r15 stats-fed join distribution (the reference CBO's
@@ -1313,8 +1281,6 @@ class Engine:
         Returns a one-row summary DataFrame, or None when ``text`` is
         not a lakehouse DML statement."""
         import re as _re
-
-        from witdb_spark.plans.dialect import UnsupportedTrinoSyntax
 
         def fragment(sql_fragment: str) -> str:
             # Trino-dialect fragments (ARRAY literals, functions) go
@@ -1447,22 +1413,17 @@ class Engine:
             text, _re.I,
         )
         if m:
-            from witdb_spark.plans.dialect import (
-                _scan_maps,
-                _split_call_args,
-            )
-
             fmt, path = m.group(1).lower(), m.group("path")
             tail = text[m.end() :].rstrip().rstrip(";")
             # the SET/WHERE boundary is the first TOP-LEVEL WHERE
             # outside string literals — a WHERE inside a string or a
             # scalar-subquery assignment must not split the statement
-            depths, instr = _scan_maps(tail)
+            tlx = lex(tail)
             wm = next(
                 (
                     mm
-                    for mm in _re.finditer(r"\bWHERE\b", tail, _re.I)
-                    if depths[mm.start()] == 0 and not instr[mm.start()]
+                    for mm in tlx.finditer(r"\bWHERE\b")
+                    if tlx.depth(mm.start()) == 0
                 ),
                 None,
             )
@@ -1471,10 +1432,10 @@ class Engine:
                 fragment(tail[wm.end() :].strip()) if wm else "true"
             )
             assignments = {}
-            # _split_call_args, not _split_top_level: assignment RHS
-            # can contain comparison operators (< > would be taken as
-            # brackets and swallow the comma)
-            for item in _split_call_args(sets_text):
+            # no angle brackets: assignment RHS can contain comparison
+            # operators (< > would be taken as brackets and swallow the
+            # comma)
+            for item in split(sets_text):
                 am = _re.match(
                     r"^\s*([A-Za-z_]\w*)\s*=\s*(.+)$", item, _re.S
                 )
@@ -1503,13 +1464,6 @@ class Engine:
 
         from pyspark.sql import functions as F
 
-        from witdb_spark.plans.dialect import (
-            UnsupportedTrinoSyntax,
-            _match_paren,
-            _scan_maps,
-            _split_call_args,
-        )
-
         def remap_aliases(expr: str, mapping: dict[str, str]) -> str:
             # alias. -> tgt./src. outside string literals, in ONE pass:
             # sequential passes would re-rewrite their own output when a
@@ -1517,14 +1471,11 @@ class Engine:
             live = {k: v for k, v in mapping.items() if k}
             if not live:
                 return expr
-            _, instr = _scan_maps(expr)
             pat = r"\b(%s)\s*\." % "|".join(
                 _re.escape(k) for k in live
             )
             pieces, last = [], 0
-            for mm in _re.finditer(pat, expr):
-                if instr[mm.start()]:
-                    continue
+            for mm in lex(expr).finditer(pat, flags=0):
                 pieces.append(
                     expr[last : mm.start()] + live[mm.group(1)] + "."
                 )
@@ -1538,7 +1489,7 @@ class Engine:
         rest = text[pos:]
         if rest.lstrip().startswith("("):
             open_idx = text.index("(", pos)
-            close_idx = _match_paren(text, open_idx)
+            close_idx = lex(text).close(open_idx)
             source = self.sql(text[open_idx + 1 : close_idx])
             pos = close_idx + 1
         else:
@@ -1559,14 +1510,15 @@ class Engine:
         salias = sm.group("salias") or ""
         pos += sm.end()
         # clause list starts at the first top-level WHEN after ON
-        depths, instr = _scan_maps(text)
-        wm = None
-        for mm in _re.finditer(r"\bWHEN\b", text, _re.I):
-            if mm.start() >= pos and not instr[mm.start()] and depths[
-                mm.start()
-            ] == 0:
-                wm = mm
-                break
+        lx = lex(text)
+        wm = next(
+            (
+                mm
+                for mm in lx.finditer(r"\bWHEN\b")
+                if mm.start() >= pos and lx.depth(mm.start()) == 0
+            ),
+            None,
+        )
         if wm is None:
             raise UnsupportedTrinoSyntax("MERGE: no WHEN clauses")
         on_text = text[pos : wm.start()]
@@ -1587,11 +1539,11 @@ class Engine:
         kwargs: dict = {"insert_not_matched": False}
         clause_text = text[wm.start() :].rstrip().rstrip(";")
         # split on top-level WHEN
-        cd, cinstr = _scan_maps(clause_text)
+        clx = lex(clause_text)
         starts = [
             mm.start()
-            for mm in _re.finditer(r"\bWHEN\b", clause_text, _re.I)
-            if cd[mm.start()] == 0 and not cinstr[mm.start()]
+            for mm in clx.finditer(r"\bWHEN\b")
+            if clx.depth(mm.start()) == 0
         ]
         clauses = [
             clause_text[s:e].strip()
@@ -1638,7 +1590,7 @@ class Engine:
                     set_text = _re.sub(
                         r"(?is)^UPDATE\s+SET\s+", "", act
                     )
-                    for item in _split_call_args(set_text):
+                    for item in split(set_text):
                         am = _re.match(
                             r"^\s*([A-Za-z_]\w*)\s*=\s*(.+)$", item, _re.S
                         )
@@ -1677,7 +1629,7 @@ class Engine:
                     ]
                     vals = [
                         v.strip()
-                        for v in _split_call_args(im.group("vals"))
+                        for v in split(im.group("vals"))
                     ]
                     if len(cols) != len(vals) or not all(
                         _re.fullmatch(r"[A-Za-z_]\w*", c) for c in cols
@@ -1801,19 +1753,12 @@ class Engine:
         body is swapped for SELECT * FROM the checkpointed view, so no
         reference retargeting happens and a column sharing the CTE's
         name (tpcds q4's year_total output column) is unaffected."""
-        from witdb_spark.plans.dialect import _match_paren, _scan_maps
-
         head = re.match(r"\s*WITH\s+", sql, re.I)
         if head is None or re.match(r"\s*WITH\s+RECURSIVE\b", sql, re.I):
             return sql
 
         def code_refs(text: str, name: str):
-            _, instr = _scan_maps(text)
-            return [
-                mm
-                for mm in re.finditer(r"\b%s\b" % re.escape(name), text)
-                if not instr[mm.start()]
-            ]
+            return list(lex(text).finditer(r"\b%s\b" % re.escape(name), flags=0))
 
         pos = head.end()
         ctes: list[tuple[str, str]] = []
@@ -1823,8 +1768,8 @@ class Engine:
                 return sql  # unexpected WITH shape: leave untouched
             open_idx = pos + nm.end() - 1
             try:
-                close_idx = _match_paren(sql, open_idx)
-            except Exception:
+                close_idx = lex(sql).close(open_idx)
+            except UnsupportedTrinoSyntax:
                 return sql
             ctes.append((nm.group(1), sql[open_idx + 1 : close_idx]))
             after = re.match(r"\s*,", sql[close_idx + 1 :])
@@ -2012,8 +1957,6 @@ class Engine:
             return text
         import re as _re
 
-        from witdb_spark.plans.dialect import _scan_maps
-
         names = "|".join(
             _re.escape(n) for n in self._registered_tables
         )
@@ -2021,11 +1964,8 @@ class Engine:
             rf"\b(delta|iceberg|hudi)\s*\.\s*({names})\b(?!\s*')",
             _re.I,
         )
-        _depths, instr = _scan_maps(text)
         out, last = [], 0
-        for m in pat.finditer(text):
-            if instr[m.start()]:
-                continue
+        for m in lex(text).finditer(pat):
             fmt, path = self._registered_tables[m.group(2).lower()]
             if fmt != m.group(1).lower():
                 raise ValueError(
@@ -2469,21 +2409,19 @@ class Engine:
         prepared = getattr(self, "_prepared", {})
         if name not in prepared:
             raise KeyError(f"prepared statement {name!r} does not exist")
-        text = prepared[name]
-        # strip comments so a '?' inside -- or /* */ is not a parameter
-        text = re.sub(r"--[^\n]*", "", text)
-        text = re.sub(r"/\*.*?\*/", "", text, flags=re.S)
-        out, i = [], 0
-        for chunk in re.split(r"('(?:[^']|'')*')", text):
-            if chunk.startswith("'"):  # string literal: '?' is not a param
-                out.append(chunk)
-                continue
-            while "?" in chunk:
-                chunk = chunk.replace("?", f":p{i}", 1)
-                i += 1
-            out.append(chunk)
-        if i != len(args):
-            raise ValueError(f"{name!r} takes {i} parameters, got {len(args)}")
+        # drop comments; each '?' left in code (never one inside a string
+        # literal) binds the next positional argument
+        lx = lex("".join(t for t in lex(prepared[name]).toks if not is_comment(t)))
+        params = list(lx.finditer(r"\?"))
+        if len(params) != len(args):
+            raise ValueError(
+                f"{name!r} takes {len(params)} parameters, got {len(args)}"
+            )
+        out, last = [], 0
+        for k, m in enumerate(params):
+            out += [lx.text[last : m.start()], f":p{k}"]
+            last = m.end()
+        out.append(lx.text[last:])
         return self.sql("".join(out), **{f"p{k}": v for k, v in enumerate(args)})
 
     def deallocate(self, name: str) -> None:

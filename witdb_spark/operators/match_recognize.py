@@ -743,33 +743,18 @@ def _extract_navigation(cond: str, existing: dict):
     generated column references, recording (kind, inner_expr, offset) ->
     column name into `existing` (shared across DEFINEs so identical
     navigations compute once). Paren/string-aware."""
-    from witdb_spark.plans.dialect import _in_string_scan, _match_paren
-
-    def split_args(text: str) -> list[str]:
-        # paren/bracket-aware, but NOT <>-aware: DEFINE bodies are full of
-        # comparison operators (dialect._split_top_level counts < > as
-        # brackets, which corrupts the split for e.g. NEXT(if(a > b, a, b)))
-        parts, depth, start = [], 0, 0
-        for i, c, in_str in _in_string_scan(text):
-            if in_str:
-                continue
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-            elif c == "," and depth == 0:
-                parts.append(text[start:i].strip())
-                start = i + 1
-        parts.append(text[start:].strip())
-        return parts
+    from witdb_spark.plans.lexer import lex
 
     while True:
         m = _NAV.search(cond)
         if m is None:
             return cond
         open_idx = m.end() - 1
-        close_idx = _match_paren(cond, open_idx)
-        parts = split_args(cond[open_idx + 1 : close_idx])
+        lx = lex(cond)
+        close_idx = lx.close(open_idx)
+        # NOT <>-aware: DEFINE bodies are full of comparison operators
+        # (e.g. NEXT(if(a > b, a, b)))
+        parts = lx.split(open_idx + 1, close_idx)
         inner = parts[0]
         off = int(parts[1]) if len(parts) > 1 else 1
         key = (m.group(1).upper(), inner, off)

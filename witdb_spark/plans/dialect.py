@@ -5,7 +5,14 @@ The reference parses SQL with an ANTLR grammar
 parser — Spark SQL's grammar already covers the overwhelming majority of the
 dialect (joins, set ops, grouping sets, windows, lateral, filter-clause,
 intervals, quantified subqueries). What remains are surface differences,
-handled here as quote-aware textual rewrites:
+handled here as textual rewrites over ONE lexical model of the text:
+plans/lexer.py owns every quoting and nesting rule (string literals with
+'' escapes, -- and /* */ comments, "quoted identifiers", matching
+()/[] pairs, paren depth, top-level comma splits). No pass here scans
+characters itself — each asks the lexer for code-only matches, a
+matching close, a depth or a split, so a string literal or a comment
+never looks like SQL to any of them. A text is lexed once per version:
+a pass re-lexes only after it splices new text in.
 
   - ARRAY[...] literals          -> array(...)
   - "quoted identifiers"         -> `backticked`
@@ -33,12 +40,9 @@ Function-name coverage itself comes from functions.register_all() macros.
 from __future__ import annotations
 
 import re
+from functools import lru_cache
 
-_STRING_SPLIT = re.compile(r"('(?:[^']|'')*')")  # single-quoted SQL strings
-
-
-class UnsupportedTrinoSyntax(ValueError):
-    pass
+from witdb_spark.plans.lexer import UnsupportedTrinoSyntax, is_comment, lex, split
 
 
 def _rewrite_segment(seg: str) -> str:
@@ -80,70 +84,47 @@ def _rewrite_segment(seg: str) -> str:
     seg = re.sub(
         r"\bFOR\s+(TIMESTAMP|VERSION)\s+AS\s+OF\b", r"\1 AS OF", seg, flags=re.I
     )
-    # Trino->Spark NAME renames from the passthrough table (only entries
-    # whose spellings differ; generated once below). SQL macros cannot
-    # cover generic/lambda signatures, so these are textual — previously
-    # the table was API-documentation only and SQL-path calls to e.g.
-    # starts_with/levenshtein_distance/zip failed to resolve (or, worse,
-    # repeat() bound to Spark's STRING repeat instead of array_repeat).
-    for _t, _s in _PASSTHROUGH_RENAMES:
-        seg = re.sub(rf"\b{_t}\s*\(", f"{_s}(", seg, flags=re.I)
-    # lambda-predicate matchers (reference ArrayAllMatchFunction etc.):
-    # SQL macros can't take lambdas, so these are pure renames onto
-    # Spark's higher-order builtins; none_match wraps below in transpile.
-    seg = re.sub(r"\ball_match\s*\(", "forall(", seg, flags=re.I)
-    seg = re.sub(r"\bany_match\s*\(", "exists(", seg, flags=re.I)
-    # aggregate renames (reference BitwiseAndAggregation.java etc.)
-    seg = re.sub(r"\bbitwise_and_agg\s*\(", "bit_and(", seg, flags=re.I)
-    seg = re.sub(r"\bbitwise_or_agg\s*\(", "bit_or(", seg, flags=re.I)
-    seg = re.sub(r"\bfrom_unixtime\s*\(", "timestamp_seconds(", seg, flags=re.I)
-    seg = re.sub(r"\bapprox_distinct\s*\(", "approx_count_distinct(", seg, flags=re.I)
-    seg = re.sub(r"\barbitrary\s*\(", "any_value(", seg, flags=re.I)
-    return seg
-
-
-def _passthrough_renames() -> list[tuple[str, str]]:
-    from witdb_spark.functions.registry import PASSTHROUGH
-
-    return sorted(
-        (t, sp) for t, sp in PASSTHROUGH.items() if t != sp
+    # function-name renames, one pass (_CALL_RENAMES)
+    return _CALL_RENAME.sub(
+        lambda m: _CALL_RENAMES[m.group(1).lower()] + "(", seg
     )
 
 
-_PASSTHROUGH_RENAMES = _passthrough_renames()
+def _call_renames() -> dict[str, str]:
+    """Trino -> Spark function-name renames, applied to ``name(`` calls.
+
+    The passthrough table's entries whose spellings differ: SQL macros
+    cannot cover generic/lambda signatures, so these are textual —
+    previously the table was API-documentation only and SQL-path calls
+    to e.g. starts_with/levenshtein_distance/zip failed to resolve (or,
+    worse, repeat() bound to Spark's STRING repeat instead of
+    array_repeat). Then the lambda-predicate matchers (reference
+    ArrayAllMatchFunction etc.: SQL macros can't take lambdas, so these
+    are pure renames onto Spark's higher-order builtins; none_match
+    wraps in transpile) and the aggregate renames (reference
+    BitwiseAndAggregation.java etc.). No target is itself a source
+    name, so one pass equals applying them one by one."""
+    from witdb_spark.functions.registry import PASSTHROUGH
+
+    out = {t.lower(): sp for t, sp in PASSTHROUGH.items() if t != sp}
+    out.update(
+        all_match="forall",
+        any_match="exists",
+        bitwise_and_agg="bit_and",
+        bitwise_or_agg="bit_or",
+        from_unixtime="timestamp_seconds",
+        approx_distinct="approx_count_distinct",
+        arbitrary="any_value",
+    )
+    assert not set(map(str.lower, out.values())) & set(out)
+    return out
 
 
-def _in_string_scan(sql: str):
-    """Yield (index, char, in_string) walking the text with SQL quote rules
-    ('' escapes a quote inside a string)."""
-    in_str = False
-    i = 0
-    while i < len(sql):
-        c = sql[i]
-        if c == "'":
-            if in_str and i + 1 < len(sql) and sql[i + 1] == "'":
-                yield i, c, True
-                yield i + 1, sql[i + 1], True
-                i += 2
-                continue
-            in_str = not in_str
-        yield i, c, in_str or c == "'"
-        i += 1
-
-
-def _match_bracket(sql: str, open_idx: int) -> int:
-    """Index of the ']' matching sql[open_idx] == '[', string-aware."""
-    depth = 0
-    for i, c, in_str in _in_string_scan(sql[open_idx:]):
-        if in_str:
-            continue
-        if c == "[":
-            depth += 1
-        elif c == "]":
-            depth -= 1
-            if depth == 0:
-                return open_idx + i
-    raise UnsupportedTrinoSyntax(f"unbalanced '[' at position {open_idx}")
+_CALL_RENAMES = _call_renames()
+_CALL_RENAME = re.compile(
+    r"\b(%s)\s*\(" % "|".join(sorted(_CALL_RENAMES, key=len, reverse=True)),
+    re.I,
+)
 
 
 def _expr_start(sql: str, bracket_idx: int) -> int | None:
@@ -156,15 +137,9 @@ def _expr_start(sql: str, bracket_idx: int) -> int | None:
     if j < 0:
         return None
     if sql[j] == ")":
-        depth = 0
-        while j >= 0:
-            if sql[j] == ")":
-                depth += 1
-            elif sql[j] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            j -= 1
+        j = lex(sql).opens.get(j)
+        if j is None:
+            return None
         # include a preceding function name if present
         k = j - 1
         while k >= 0 and (sql[k].isalnum() or sql[k] in "_."):
@@ -188,17 +163,12 @@ def _rewrite_brackets(sql: str) -> str:
     Trino's subscript: 1-based on arrays, key lookup on maps."""
     i = 0
     while True:
-        # find next '[' outside a string literal
-        open_idx = None
-        for idx, c, in_str in _in_string_scan(sql):
-            if idx < i or in_str:
-                continue
-            if c == "[":
-                open_idx = idx
-                break
-        if open_idx is None:
+        lx = lex(sql)
+        om = lx.search(r"\[", i)
+        if om is None:
             return sql
-        close_idx = _match_bracket(sql, open_idx)
+        open_idx = om.start()
+        close_idx = lx.close(open_idx)
         # ARRAY literal?
         m = re.search(r"\bARRAY\s*$", sql[:open_idx], flags=re.I)
         if m:
@@ -233,20 +203,6 @@ _UNNEST_ALIAS = re.compile(
 )
 
 
-def _match_paren(sql: str, open_idx: int) -> int:
-    depth = 0
-    for i, c, in_str in _in_string_scan(sql[open_idx:]):
-        if in_str:
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return open_idx + i
-    raise UnsupportedTrinoSyntax(f"unbalanced '(' at position {open_idx}")
-
-
 def _rewrite_unnest(sql: str) -> str:
     """UNNEST in FROM (grammar SqlBase.g4:417) -> LATERAL VIEW:
       CROSS JOIN UNNEST(a) AS t(x)        -> LATERAL VIEW explode(a) t AS x
@@ -263,13 +219,13 @@ def _rewrite_unnest(sql: str) -> str:
     sequence()-style empty/descending edge cases. Map arguments with
     ORDINALITY are rejected (Trino orders map entries arbitrarily there)."""
     while True:
-        m = _UNNEST_HEAD.search(sql)
+        lx = lex(sql)
+        m = lx.search(_UNNEST_HEAD)
         if m is None:
             return sql
         outer = "LEFT" in m.group(1).upper()
         open_idx = sql.index("(", m.end() - 1)
-        close_idx = _match_paren(sql, open_idx)
-        args = sql[open_idx + 1 : close_idx]
+        close_idx = lx.close(open_idx)
         am = _UNNEST_ALIAS.match(sql, close_idx + 1)
         if am is None:
             raise UnsupportedTrinoSyntax(
@@ -277,19 +233,7 @@ def _rewrite_unnest(sql: str) -> str:
             )
         ordinality = bool(am.group(1))
         alias, cols = am.group(2), [c.strip() for c in am.group(3).split(",")]
-        # top-level comma split of args (string/paren-aware)
-        parts, depth, start = [], 0, 0
-        for i, c, in_str in _in_string_scan(args):
-            if in_str:
-                continue
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-            elif c == "," and depth == 0:
-                parts.append(args[start:i].strip())
-                start = i + 1
-        parts.append(args[start:].strip())
+        parts = lx.split(open_idx + 1, close_idx)
         if ordinality:
             # number of alias cols must be #arrays + 1 (ordinal is last);
             # a single map arg would need 3 cols (k, v, ord) — unsupported
@@ -333,32 +277,21 @@ def _rewrite_numeric_histogram(sql: str) -> str:
     The 3-arg weighted form has no Spark analog and raises."""
     pos = 0
     while True:
-        m = re.search(r"\bnumeric_histogram\s*\(", sql[pos:], flags=re.I)
+        lx = lex(sql)
+        m = lx.search(r"\bnumeric_histogram\s*\(", pos)
         if m is None:
             return sql
-        open_idx = pos + m.end() - 1
-        close_idx = _match_paren(sql, open_idx)
-        args = sql[open_idx + 1 : close_idx]
-        parts, depth, start = [], 0, 0
-        for i, c, in_str in _in_string_scan(args):
-            if in_str:
-                continue
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-            elif c == "," and depth == 0:
-                parts.append(args[start:i].strip())
-                start = i + 1
-        parts.append(args[start:].strip())
+        open_idx = m.end() - 1
+        close_idx = lx.close(open_idx)
+        parts = lx.split(open_idx + 1, close_idx)
         if len(parts) != 2:
             raise UnsupportedTrinoSyntax(
                 "numeric_histogram(buckets, value, weight) weighted form"
                 " has no Spark analog"
             )
         repl = f"histogram_numeric({parts[1]}, {parts[0]})"
-        sql = sql[: pos + m.start()] + repl + sql[close_idx + 1 :]
-        pos = pos + m.start() + 1
+        sql = sql[: m.start()] + repl + sql[close_idx + 1 :]
+        pos = m.start() + 1
 
 
 def _rewrite_with_strings(sql: str) -> str:
@@ -380,24 +313,14 @@ def _rewrite_with_strings(sql: str) -> str:
     # every such char literally), and the repo's own SQL surface uses them.
     pos = 0
     while True:
-        m = re.search(r"\bdate_format\s*\(", sql[pos:], flags=re.I)
+        lx = lex(sql)
+        m = lx.search(r"\bdate_format\s*\(", pos)
         if m is None:
             break
-        name_start = pos + m.start()
-        open_idx = pos + m.end() - 1
-        close_idx = _match_paren(sql, open_idx)
-        args = sql[open_idx + 1 : close_idx]
-        depth, fmt = 0, None
-        for j, c, in_str in _in_string_scan(args):
-            if in_str:
-                continue
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-            elif c == "," and depth == 0:
-                fmt = args[j + 1 :].strip()
-                break
+        name_start = m.start()
+        open_idx = m.end() - 1
+        args = lx.split(open_idx + 1, lx.close(open_idx))
+        fmt = args[1] if len(args) == 2 else None
         if fmt is not None and re.fullmatch(r"'[^']*%[^']*'", fmt):
             sql = sql[:name_start] + "mysql_" + sql[name_start:]
             pos = name_start + len("mysql_date_format")
@@ -436,43 +359,6 @@ _MULTIWORD_TYPES = {
 }
 
 
-def _split_top_level(text: str) -> list[str]:
-    """Split on commas at paren/bracket depth 0, string-aware."""
-    parts, depth, start = [], 0, 0
-    for i, c, in_str in _in_string_scan(text):
-        if in_str:
-            continue
-        if c in "([<":
-            depth += 1
-        elif c in ")]>":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(text[start:i].strip())
-            start = i + 1
-    parts.append(text[start:].strip())
-    return parts
-
-
-def _split_call_args(text: str) -> list[str]:
-    """Split on commas at paren/bracket depth 0, string-aware — like
-    _split_top_level but WITHOUT treating < > as brackets, for argument
-    lists that may contain `name => value` (the named-argument arrow
-    would unbalance an angle-bracket depth count)."""
-    parts, depth, start = [], 0, 0
-    for i, c, in_str in _in_string_scan(text):
-        if in_str:
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(text[start:i].strip())
-            start = i + 1
-    parts.append(text[start:].strip())
-    return parts
-
-
 def trino_type_to_spark(t: str) -> str:
     """Translate a Trino type string (SqlBase.g4 `type` rule) to Spark DDL.
 
@@ -482,9 +368,9 @@ def trino_type_to_spark(t: str) -> str:
     through — Spark accepts those forms directly."""
     t = t.strip()
     head = re.match(r"^(ARRAY|MAP|ROW)\s*\(", t, flags=re.I)
-    if head and _match_paren(t, head.end() - 1) == len(t) - 1:
+    if head and lex(t).close(head.end() - 1) == len(t) - 1:
         kind = head.group(1).upper()
-        parts = _split_top_level(t[head.end() : -1])
+        parts = split(t[head.end() : -1], angle=True)
         if kind == "ARRAY":
             return f"ARRAY<{trino_type_to_spark(parts[0])}>"
         if kind == "MAP":
@@ -577,12 +463,12 @@ def _rewrite_unicode_literals(sql: str) -> str:
 
     pos = 0
     while True:
-        m = _first_code_match(pat, sql[pos:], flags=re.I | re.S)
+        m = lex(sql).search(pat, pos, flags=re.I | re.S)
         if m is None:
             return sql
         repl = decode(m)
-        sql = sql[: pos + m.start()] + repl + sql[pos + m.end() :]
-        pos = pos + m.start() + len(repl)
+        sql = sql[: m.start()] + repl + sql[m.end() :]
+        pos = m.start() + len(repl)
 
 
 _TYPED_LITERALS = {
@@ -609,7 +495,7 @@ def _rewrite_typed_literals(sql: str) -> str:
     pat = rf"\b({names})\s+'((?:[^']|'')*)'"
     pos = 0
     while True:
-        m = _first_code_match(pat, sql[pos:])
+        m = lex(sql).search(pat, pos)
         if m is None:
             return sql
         name = m.group(1).upper()
@@ -624,8 +510,8 @@ def _rewrite_typed_literals(sql: str) -> str:
             repl = f"'{text}'"
         else:
             repl = f"CAST('{text}' AS {_TYPED_LITERALS[name]})"
-        sql = sql[: pos + m.start()] + repl + sql[pos + m.end() :]
-        pos = pos + m.start() + len(repl)
+        sql = sql[: m.start()] + repl + sql[m.end() :]
+        pos = m.start() + len(repl)
 
 
 _EXTRACT_FIELD_MAP = {
@@ -645,23 +531,22 @@ def _rewrite_extract_fields(sql: str) -> str:
     for src_f, dst_f in (("DAY_OF_MONTH", "DAY"), ("DAY_OF_YEAR", "DOY")):
         pos = 0
         while True:
-            m = _first_code_match(
-                rf"\bEXTRACT\s*\(\s*{src_f}\s+FROM\b", sql[pos:]
+            m = lex(sql).search(
+                rf"\bEXTRACT\s*\(\s*{src_f}\s+FROM\b", pos
             )
             if m is None:
                 break
             repl = f"EXTRACT({dst_f} FROM"
-            sql = sql[: pos + m.start()] + repl + sql[pos + m.end() :]
-            pos = pos + m.start() + len(repl)
+            sql = sql[: m.start()] + repl + sql[m.end() :]
+            pos = m.start() + len(repl)
     for field, fn in _EXTRACT_FIELD_MAP.items():
         while True:
-            m = _first_code_match(
-                rf"\bEXTRACT\s*\(\s*{field}\s+FROM\b", sql
-            )
+            lx = lex(sql)
+            m = lx.search(rf"\bEXTRACT\s*\(\s*{field}\s+FROM\b")
             if m is None:
                 break
             open_idx = sql.index("(", m.start())
-            close_idx = _match_paren(sql, open_idx)
+            close_idx = lx.close(open_idx)
             inner = sql[m.end() : close_idx].strip()
             sql = f"{sql[: m.start()]}{fn}({inner}){sql[close_idx + 1 :]}"
     return sql
@@ -677,21 +562,21 @@ def _rewrite_json_casts(sql: str) -> str:
     other operands the type alone can't be known textually."""
     pos = 0
     while True:
-        sub = sql[pos:]
-        m = _first_code_match(
-            r"\bcast\s*\(\s*(json_parse|json_extract|json_query)\s*\(", sub
+        lx = lex(sql)
+        m = lx.search(
+            r"\bcast\s*\(\s*(json_parse|json_extract|json_query)\s*\(", pos
         )
         if m is None:
             return sql
-        start = pos + m.start()
+        start = m.start()
         open_idx = sql.index("(", start)
-        close_idx = _match_paren(sql, open_idx)
+        close_idx = lx.close(open_idx)
         body = sql[open_idx + 1 : close_idx]
         mm = re.match(
             r"\s*(json_parse|json_extract|json_query)\s*\(", body, re.I
         )
         fn_open = body.index("(", mm.end() - 1)
-        fn_close = _match_paren(body, fn_open)
+        fn_close = lex(body).close(fn_open)
         operand = body[: fn_close + 1].strip()
         rest = body[fn_close + 1 :]
         as_m = re.match(r"\s*AS\s+(.+)$", rest, re.I | re.S)
@@ -721,39 +606,17 @@ def _rewrite_cast_types(sql: str) -> str:
     AS inside nested casts, which are handled on their own scan visit)."""
     pos = 0
     while True:
-        m = re.search(r"\b(?:try_)?cast\s*\(", sql[pos:], flags=re.I)
+        lx = lex(sql)
+        m = lx.search(r"\b(?:try_)?cast\s*\(", pos)
         if m is None:
             return sql
-        if _scan_maps(sql)[1][pos + m.start()]:
-            pos = pos + m.start() + 1  # inside a string literal: skip
-            continue
-        open_idx = pos + m.end() - 1
+        open_idx = m.end() - 1
         try:
-            close_idx = _match_paren(sql, open_idx)
+            close_idx = lx.close(open_idx)
         except UnsupportedTrinoSyntax:
             return sql
         args = sql[open_idx + 1 : close_idx]
-        # last depth-0 AS keyword
-        depth, as_idx = 0, None
-        i = 0
-        prev_alnum = False
-        for j, c, in_str in _in_string_scan(args):
-            if in_str:
-                prev_alnum = False
-                continue
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-            elif (
-                depth == 0
-                and c in "Aa"
-                and not prev_alnum
-                and args[j : j + 2].upper() == "AS"
-                and (j + 2 >= len(args) or not (args[j + 2].isalnum() or args[j + 2] == "_"))
-            ):
-                as_idx = j
-            prev_alnum = c.isalnum() or c == "_"
+        as_idx = _last_top_as(args)
         if as_idx is None:
             pos = open_idx + 1
             continue
@@ -766,52 +629,36 @@ def _rewrite_cast_types(sql: str) -> str:
             type_text, flags=re.I,
         ):
             expr = args[:as_idx].strip()
-            sql = (
-                sql[: pos + m.start()]
-                + f"timetz_parse({expr})"
-                + sql[close_idx + 1 :]
-            )
-            pos = pos + m.start() + 1
+            sql = sql[: m.start()] + f"timetz_parse({expr})" + sql[close_idx + 1 :]
+            pos = m.start() + 1
             continue
         # TIME has no Spark type: CAST(x AS TIME[(p)]) becomes the
         # nanos-of-day parse macro (registry trino_time).
         if re.match(r"^\s*TIME\b(?!STAMP)", type_text, flags=re.I):
             expr = args[:as_idx].strip()
-            sql = (
-                sql[: pos + m.start()]
-                + f"trino_time({expr})"
-                + sql[close_idx + 1 :]
-            )
-            pos = pos + m.start() + 1
+            sql = sql[: m.start()] + f"trino_time({expr})" + sql[close_idx + 1 :]
+            pos = m.start() + 1
             continue
         translated = " " + trino_type_to_spark(type_text)
         sql = (
             sql[: open_idx + 1 + as_idx + 2] + translated + sql[close_idx:]
         )
         pos = open_idx + 1  # re-scan inside: nested casts in the expression
-    return sql
+
+
+def _last_top_as(args: str) -> int | None:
+    """Index of the last top-level AS keyword in a CAST argument list
+    (the type separator; the expression may hold nested casts)."""
+    lx = lex(args)
+    as_idx = None
+    for i in lx.top_level():
+        if lx.toks[i].upper() == "AS":
+            as_idx = lx.starts[i]
+    return as_idx
 
 
 _FETCH_TIES = re.compile(r"\bFETCH\s+FIRST\s+(\d+)\s+ROWS?\s+WITH\s+TIES\b", re.I)
 _ORDER_BY = re.compile(r"\bORDER\s+BY\b", re.I)
-
-
-def _scan_maps(sql: str) -> tuple[list[int], list[bool]]:
-    """Per-character (paren depth, inside-string) maps. A '(' carries the
-    incremented depth at its own index, so every character of a scope —
-    including its opening paren — shares the scope's depth value."""
-    depths = [0] * len(sql)
-    instr = [False] * len(sql)
-    depth = 0
-    for i, c, in_str in _in_string_scan(sql):
-        instr[i] = in_str
-        if not in_str:
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-        depths[i] = depth
-    return depths, instr
 
 
 def _rewrite_fetch_ties(sql: str) -> str:
@@ -823,23 +670,17 @@ def _rewrite_fetch_ties(sql: str) -> str:
     before the final sort), so the plan scales like ORDER BY + LIMIT —
     the same shape the reference's LimitNode-with-ties lowers to."""
     while True:
-        depths, instr = _scan_maps(sql)
-        m = next(
-            (c for c in _FETCH_TIES.finditer(sql) if not instr[c.start()]), None
-        )
+        lx = lex(sql)
+        m = lx.search(_FETCH_TIES)
         if m is None:
             return sql
-        d0 = depths[m.start()]
-        # scope start: walk back over every char at depth >= d0; the char
-        # before the run is just outside the opening paren (or start of text)
-        i = m.start() - 1
-        while i >= 0 and depths[i] >= d0:
-            i -= 1
-        content_start = i + 2 if i >= 0 else 0
+        d0 = lx.depth(m.start())
+        # scope start: just inside the enclosing opening paren
+        content_start = lx.encl(m.start()) + 1
         # the scope's own ORDER BY (last one at this depth before FETCH)
         ob = None
-        for om in _ORDER_BY.finditer(sql, content_start, m.start()):
-            if not instr[om.start()] and depths[om.start()] == d0:
+        for om in lx.finditer(_ORDER_BY, content_start, m.start()):
+            if lx.depth(om.start()) == d0:
                 ob = om
         if ob is None:
             raise UnsupportedTrinoSyntax(
@@ -851,16 +692,13 @@ def _rewrite_fetch_ties(sql: str) -> str:
                 "OFFSET combined with FETCH FIRST ... WITH TIES is not"
                 " supported"
             )
-        if any(re.match(r"^\d+\b", k) for k in _split_top_level(keys)):
+        if any(re.match(r"^\d+\b", k) for k in split(keys, angle=True)):
             raise UnsupportedTrinoSyntax(
                 "positional ORDER BY keys cannot be carried into the"
                 " WITH TIES rank() rewrite; name the sort columns"
             )
         # nothing but whitespace may follow the FETCH clause in its scope
-        j = m.end()
-        while j < len(sql) and depths[j] >= d0:
-            j += 1
-        if sql[m.end() : j].strip():
+        if sql[m.end() : lx.scope_end(m.start())].strip():
             raise UnsupportedTrinoSyntax(
                 "FETCH FIRST ... WITH TIES must be the final clause of its"
                 " query scope"
@@ -891,32 +729,24 @@ _QUANT_AGG = {
 }
 
 
-def _lhs_start(sql: str, op_idx: int, depths: list[int], instr: list[bool]) -> int:
+def _lhs_start(sql: str, op_idx: int) -> int:
     """Start index of the comparison's left operand: scan left over the
     additive expression (identifiers, calls, arithmetic, strings) until a
     clause keyword, a comma, another comparison, or the enclosing paren."""
-    d0 = depths[op_idx]
-    i = op_idx - 1
-    while i >= 0:
-        if instr[i]:
-            i -= 1
+    lx = lex(sql)
+    d0 = lx.depth(op_idx)
+    s = 0
+    for i in range(lx.index(op_idx) - 1, -1, -1):
+        t, d = lx.toks[i], lx.depth(lx.starts[i])
+        if not lx.is_code(lx.starts[i]) or d > d0:
             continue
-        if depths[i] < d0:
+        if (
+            d < d0
+            or t in (",", "=", "<", ">", "!")
+            or ((t[0].isalpha() or t[0] == "_") and t.upper() in _LHS_STOP)
+        ):
+            s = lx.starts[i] + len(t)
             break
-        if depths[i] == d0:
-            c = sql[i]
-            if c in ",=<>!":
-                break
-            if c.isalpha() or c == "_":
-                k = i
-                while k >= 0 and (sql[k].isalnum() or sql[k] == "_"):
-                    k -= 1
-                if sql[k + 1 : i + 1].upper() in _LHS_STOP:
-                    break
-                i = k
-                continue
-        i -= 1
-    s = i + 1
     while s < op_idx and sql[s] in " \t\n":
         s += 1
     return s
@@ -941,17 +771,16 @@ def _rewrite_quantified(sql: str) -> str:
     `= ALL` / `<> ANY` (no single-extreme lowering) raise; uncorrelated
     subqueries only — a correlated body fails loudly at analysis."""
     while True:
-        depths, instr = _scan_maps(sql)
-        m = next((c for c in _QUANT.finditer(sql) if not instr[c.start()]), None)
+        m = lex(sql).search(_QUANT)
         if m is None:
             return sql
         op, quant = m.group(1), m.group(2).upper()
         if quant == "SOME":
             quant = "ANY"
         open_idx = m.end() - 1
-        close_idx = _match_paren(sql, open_idx)
+        close_idx = lex(sql).close(open_idx)
         body = sql[open_idx + 1 : close_idx].strip()
-        lhs_s = _lhs_start(sql, m.start(), depths, instr)
+        lhs_s = _lhs_start(sql, m.start())
         lhs = sql[lhs_s : m.start()].strip()
         if not lhs:
             raise UnsupportedTrinoSyntax(
@@ -1002,11 +831,10 @@ def _rewrite_at_time_zone(sql: str) -> str:
     Spark has no AT TIME ZONE operator; the left operand is captured with
     the comparison-operand scanner."""
     while True:
-        depths, instr = _scan_maps(sql)
-        m = next((c for c in _AT_TZ.finditer(sql) if not instr[c.start()]), None)
+        m = lex(sql).search(_AT_TZ)
         if m is None:
             return sql
-        lhs_s = _lhs_start(sql, m.start(), depths, instr)
+        lhs_s = _lhs_start(sql, m.start())
         lhs = sql[lhs_s : m.start()].strip()
         if not lhs:
             raise UnsupportedTrinoSyntax("AT TIME ZONE: no left operand found")
@@ -1043,22 +871,17 @@ def _try_top_op(inner: str) -> int | None:
     ('/' and '*' bind tighter). Unary signs and exponent literals (1e-5)
     are skipped."""
     best_add = best_mul = None
-    depth = 0
+    lx = lex(inner)
     prev = ""
-    for i, c, in_str in _in_string_scan(inner):
-        if in_str:
-            prev = c
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and c in _TRY_OPS and i > 0:
-            p = prev
-            is_unary = p in "+-*/%(," or p == ""
+    for k in lx.top_level():
+        c, i = lx.toks[k], lx.starts[k]
+        if c.isspace() or is_comment(c):
+            continue  # whitespace and comments never precede an operand
+        if c in _TRY_OPS and i > 0:
+            is_unary = prev in "+-*/%(,"
             is_exp = (
                 c in "+-"
-                and p in "eE"
+                and prev in "eE"
                 and i >= 2
                 and inner[i - 2].isdigit()
             )
@@ -1067,8 +890,7 @@ def _try_top_op(inner: str) -> int | None:
                     best_add = i
                 else:
                     best_mul = i
-        if not c.isspace():
-            prev = c
+        prev = c[-1]
     return best_add if best_add is not None else best_mul
 
 
@@ -1080,7 +902,7 @@ def _try_decompose(inner: str) -> str:
     TRY's contract (any error inside -> NULL). Leaves pass through."""
     inner = inner.strip()
     # fully parenthesized? strip and recurse
-    if inner.startswith("(") and _match_paren(inner, 0) == len(inner) - 1:
+    if inner.startswith("(") and lex(inner).close(0) == len(inner) - 1:
         return f"({_try_decompose(inner[1:-1])})"
     op_idx = _try_top_op(inner)
     if op_idx is not None:
@@ -1088,41 +910,22 @@ def _try_decompose(inner: str) -> str:
         lhs, rhs = inner[:op_idx], inner[op_idx + 1 :]
         return f"{_TRY_OPS[c]}({_try_decompose(lhs)}, {_try_decompose(rhs)})"
     cm = re.match(r"(?:try_)?cast\s*\(", inner, flags=re.I)
-    if cm and _match_paren(inner, cm.end() - 1) == len(inner) - 1:
+    if cm and lex(inner).close(cm.end() - 1) == len(inner) - 1:
         args = inner[cm.end() : -1]
-        # split at the last depth-0 AS (the type separator)
-        depth, as_idx = 0, None
-        prev_alnum = False
-        for j, ch, in_str in _in_string_scan(args):
-            if in_str:
-                prev_alnum = False
-                continue
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            elif (
-                depth == 0
-                and ch in "Aa"
-                and not prev_alnum
-                and args[j : j + 2].upper() == "AS"
-                and (j + 2 >= len(args) or not (args[j + 2].isalnum() or args[j + 2] == "_"))
-            ):
-                as_idx = j
-            prev_alnum = ch.isalnum() or ch == "_"
+        as_idx = _last_top_as(args)
         if as_idx is not None:
             return (
                 f"try_cast({_try_decompose(args[:as_idx])} {args[as_idx:]})"
             )
         return f"try_cast({args})"
     em = re.match(r"element_at\s*\(", inner, flags=re.I)
-    if em and _match_paren(inner, em.end() - 1) == len(inner) - 1:
+    if em and lex(inner).close(em.end() - 1) == len(inner) - 1:
         return re.sub(r"^element_at", "try_element_at", inner, flags=re.I)
     fm = re.match(r"([A-Za-z_][A-Za-z0-9_]*)\s*\(", inner)
     if (
         fm
         and fm.group(1).lower() in _TRY_FN_TWINS
-        and _match_paren(inner, fm.end() - 1) == len(inner) - 1
+        and lex(inner).close(fm.end() - 1) == len(inner) - 1
     ):
         twin = _TRY_FN_TWINS[fm.group(1).lower()]
         return f"{twin}({inner[fm.end():-1]})"
@@ -1137,11 +940,12 @@ def _rewrite_try(sql: str) -> str:
     those failable forms raises rather than silently changing semantics
     (e.g. TRY over a function whose own evaluation can error)."""
     while True:
-        m = _first_code_match(r"\bTRY\s*\(", sql)
+        lx = lex(sql)
+        m = lx.search(r"\bTRY\s*\(")
         if m is None:
             return sql
         open_idx = sql.index("(", m.start())
-        close_idx = _match_paren(sql, open_idx)
+        close_idx = lx.close(open_idx)
         inner = sql[open_idx + 1 : close_idx].strip()
         repl = _try_decompose(inner)
         if repl == inner and not re.match(r"try_", repl, flags=re.I):
@@ -1167,12 +971,13 @@ def _rewrite_listagg(sql: str) -> str:
     collect_list's nondeterministic order. One sort key; ON OVERFLOW is
     rejected (Spark strings don't truncate)."""
     while True:
-        m = _first_code_match(_LISTAGG.pattern, sql)
+        lx = lex(sql)
+        m = lx.search(_LISTAGG)
         if m is None:
             return sql
         open_idx = sql.index("(", m.start())
-        close_idx = _match_paren(sql, open_idx)
-        args = _split_call_args(sql[open_idx + 1 : close_idx])
+        close_idx = lx.close(open_idx)
+        args = lx.split(open_idx + 1, close_idx)
         if re.search(r"\bON\s+OVERFLOW\b", sql[open_idx:close_idx], re.I):
             raise UnsupportedTrinoSyntax("LISTAGG ON OVERFLOW")
         if not 1 <= len(args) <= 2:
@@ -1183,7 +988,7 @@ def _rewrite_listagg(sql: str) -> str:
         wm = _WITHIN.match(sql, close_idx + 1)
         if wm is None:
             raise UnsupportedTrinoSyntax("LISTAGG requires WITHIN GROUP")
-        sort_close = _match_paren(sql, sql.index("(", close_idx + 1))
+        sort_close = lx.close(sql.index("(", close_idx + 1))
         sort = sql[wm.end() : sort_close].strip()
         # NULLS FIRST/LAST: stripped — keys are sorted through a struct
         # array_sort whose NULL placement is engine-defined (documented)
@@ -1197,27 +1002,6 @@ def _rewrite_listagg(sql: str) -> str:
             arr = f"reverse({arr})"
         repl = f"array_join(transform({arr}, s -> s.v), {sep})"
         sql = sql[: m.start()] + repl + sql[sort_close + 1 :]
-
-
-def _first_code_match(pattern: str, sql: str, flags=re.I):
-    """First regex match whose start lies OUTSIDE string literals — the
-    guard that keeps rewrite passes from mangling SQL-shaped text inside
-    '...' (e.g. a literal containing "cast(x as varchar)")."""
-    instr = _scan_maps(sql)[1]
-    for m in re.finditer(pattern, sql, flags):
-        if not instr[m.start()]:
-            return m
-    return None
-
-
-def _first_code_iter(pattern: str, sql: str, flags=re.I):
-    """All regex matches whose start lies outside string literals (the
-    read-only sibling of _first_code_match — only valid while sql is
-    not being mutated between yields)."""
-    instr = _scan_maps(sql)[1]
-    for m in re.finditer(pattern, sql, flags):
-        if not instr[m.start()]:
-            yield m
 
 
 def _rewrite_agg_calls(sql: str) -> str:
@@ -1284,12 +1068,13 @@ def _rewrite_agg_calls(sql: str) -> str:
     ]
     for pat, build, nargs in forms:
         while True:
-            m = _first_code_match(pat, sql)
+            lx = lex(sql)
+            m = lx.search(pat)
             if m is None:
                 break
             open_idx = sql.index("(", m.start())
-            close_idx = _match_paren(sql, open_idx)
-            args = _split_call_args(sql[open_idx + 1 : close_idx])
+            close_idx = lx.close(open_idx)
+            args = lx.split(open_idx + 1, close_idx)
             if len(args) != nargs:
                 raise UnsupportedTrinoSyntax(
                     f"{m.group(0).strip('(').strip()} takes {nargs} argument(s)"
@@ -1354,9 +1139,9 @@ def _norm_expr(text: str) -> str:
 def _item_alias(item: str) -> tuple[str, str | None]:
     """Split a select item into (expr, alias) at the LAST top-level AS."""
     pos = None
-    for m in re.finditer(r"\bAS\b", item, re.I):
-        depths, instr = _scan_maps(item)
-        if depths[m.start()] == 0 and not instr[m.start()]:
+    lx = lex(item)
+    for m in lx.finditer(r"\bAS\b"):
+        if lx.depth(m.start()) == 0:
             pos = m
     if pos is None:
         return item.strip(), None
@@ -1370,7 +1155,7 @@ def _parse_agg_call(expr: str) -> tuple[str, str] | None:
         return None
     open_idx = expr.index("(", m.start())
     try:
-        close_idx = _match_paren(expr, open_idx)
+        close_idx = lex(expr).close(open_idx)
     except Exception:
         return None
     if expr[close_idx + 1 :].strip():
@@ -1390,22 +1175,22 @@ def _rewrite_sketch_filter(sql: str) -> str:
     pat = r"\b(qdigest_agg|tdigest_agg|approx_set|make_set_digest)\s*\("
     pos = 0
     while True:
-        sub = sql[pos:]
-        m = _first_code_match(pat, sub)
+        lx = lex(sql)
+        m = lx.search(pat, pos)
         if m is None:
             return sql
-        open_idx = pos + m.start() + sub[m.start() :].index("(")
-        close_idx = _match_paren(sql, open_idx)
+        open_idx = sql.index("(", m.start())
+        close_idx = lx.close(open_idx)
         rest = sql[close_idx + 1 :]
         fm = re.match(r"(?is)^\s*FILTER\s*\(", rest)
         if fm is None:
             pos = close_idx + 1
             continue
         f_open = close_idx + 1 + rest.index("(")
-        f_close = _match_paren(sql, f_open)
+        f_close = lx.close(f_open)
         clause = sql[f_open + 1 : f_close].strip()
         wm = re.match(r"(?is)^WHERE\b", clause)
-        args = _split_call_args(sql[open_idx + 1 : close_idx])
+        args = lx.split(open_idx + 1, close_idx)
         # multi-arg builds (e.g. a future weighted qdigest_agg(x, w)):
         # wrap only the first (value) argument — the UDAFs skip NULL
         # values, so nulling the value masks the whole row.
@@ -1426,8 +1211,8 @@ def _rewrite_sketch_filter(sql: str) -> str:
             folded = f"CASE WHEN {cond} THEN {val} END"
         all_args = ", ".join([folded] + [a.strip() for a in args[1:]])
         repl = f"{fname}({all_args})"
-        sql = sql[: pos + m.start()] + repl + sql[f_close + 1 :]
-        pos = pos + m.start() + len(repl)
+        sql = sql[: m.start()] + repl + sql[f_close + 1 :]
+        pos = m.start() + len(repl)
 
 
 def _rewrite_weighted_digests(sql: str) -> str:
@@ -1444,13 +1229,13 @@ def _rewrite_weighted_digests(sql: str) -> str:
     for base, arities in (("qdigest_agg", (2, 3)), ("tdigest_agg", (2,))):
         pos = 0
         while True:
-            sub = sql[pos:]
-            m = _first_code_match(r"\b%s\s*\(" % base, sub)
+            lx = lex(sql)
+            m = lx.search(r"\b%s\s*\(" % base, pos)
             if m is None:
                 break
-            open_idx = pos + m.start() + sub[m.start():].index("(")
-            close_idx = _match_paren(sql, open_idx)
-            args = _split_call_args(sql[open_idx + 1 : close_idx])
+            open_idx = sql.index("(", m.start())
+            close_idx = lx.close(open_idx)
+            args = lx.split(open_idx + 1, close_idx)
             if len(args) not in arities:
                 pos = close_idx + 1
                 continue
@@ -1462,8 +1247,8 @@ def _rewrite_weighted_digests(sql: str) -> str:
                 + args[1].strip()
                 + ")"
             )
-            sql = sql[: pos + m.start()] + repl + sql[close_idx + 1 :]
-            pos = pos + m.start() + len(repl)
+            sql = sql[: m.start()] + repl + sql[close_idx + 1 :]
+            pos = m.start() + len(repl)
     return sql
 
 
@@ -1500,19 +1285,19 @@ def _rewrite_generic_merge(sql: str) -> str:
     strictly clearer than Spark's unresolved-function error."""
     ident = r"[A-Za-z_]\w*"
     for _ in range(8):
-        if _first_code_match(r"\bmerge\s*\(", sql) is None:
+        lx = lex(sql)
+        if lx.search(r"\bmerge\s*\(") is None:
             return sql
         # alias -> merge name, from every visible producer call
         amap: dict[str, str | None] = {}
         producer_alias_pos: set[int] = set()
-        for m in _first_code_iter(
+        for m in lx.finditer(
             r"\b(%s)\s*\("
-            % "|".join(sorted(_SKETCH_MERGE_FOR, key=len, reverse=True)),
-            sql,
+            % "|".join(sorted(_SKETCH_MERGE_FOR, key=len, reverse=True))
         ):
-            open_idx = m.start() + sql[m.start():].index("(")
+            open_idx = sql.index("(", m.start())
             try:
-                close_idx = _match_paren(sql, open_idx)
+                close_idx = lx.close(open_idx)
             except Exception:
                 continue
             am = re.match(
@@ -1538,10 +1323,10 @@ def _rewrite_generic_merge(sql: str) -> str:
         # `merge(d) AS d` spelling) is type-consistent — and if the
         # merge itself is untraceable the statement raises anyway.
         if amap:
-            for mm in _first_code_iter(r"\bmerge\s*\(", sql):
-                open_idx = mm.start() + sql[mm.start():].index("(")
+            for mm in lx.finditer(r"\bmerge\s*\("):
+                open_idx = sql.index("(", mm.start())
                 try:
-                    close_idx = _match_paren(sql, open_idx)
+                    close_idx = lx.close(open_idx)
                 except Exception:
                     continue
                 am = re.match(
@@ -1549,20 +1334,20 @@ def _rewrite_generic_merge(sql: str) -> str:
                 )
                 if am is not None:
                     producer_alias_pos.add(close_idx + 1 + am.start(1))
-            for am2 in _first_code_iter(r"\bAS\s+(%s)" % ident, sql):
+            for am2 in lx.finditer(r"\bAS\s+(%s)" % ident):
                 alias = am2.group(1).lower()
                 if alias in amap and am2.start(1) not in producer_alias_pos:
                     amap[alias] = None
         progressed = False
         pos = 0
         while True:
-            sub = sql[pos:]
-            m = _first_code_match(r"\bmerge\s*\(", sub)
+            lx = lex(sql)
+            m = lx.search(r"\bmerge\s*\(", pos)
             if m is None:
                 break
-            open_idx = pos + m.start() + sub[m.start():].index("(")
-            close_idx = _match_paren(sql, open_idx)
-            args = _split_call_args(sql[open_idx + 1 : close_idx])
+            open_idx = sql.index("(", m.start())
+            close_idx = lx.close(open_idx)
+            args = lx.split(open_idx + 1, close_idx)
             arg = args[0].strip() if len(args) == 1 else ""
             key = arg.split(".")[-1].lower()
             target = (
@@ -1574,15 +1359,15 @@ def _rewrite_generic_merge(sql: str) -> str:
                 pos = close_idx + 1
                 continue
             sql = (
-                sql[: pos + m.start()]
+                sql[: m.start()]
                 + target
                 + sql[open_idx:]
             )
             progressed = True
-            pos = pos + m.start() + len(target) + (close_idx - open_idx) + 1
+            pos = m.start() + len(target) + (close_idx - open_idx) + 1
         if not progressed:
             break
-    if _first_code_match(r"\bmerge\s*\(", sql) is not None:
+    if lex(sql).search(r"\bmerge\s*\(") is not None:
         raise UnsupportedTrinoSyntax(
             "merge(sketch) dispatches on the argument's type, which this"
             " SQL front door can only infer from a sketch build visible"
@@ -1620,33 +1405,24 @@ def _rewrite_sketch_distinct(sql: str) -> str:
     guard = 0
     while guard < 50:
         guard += 1
-        m = _first_code_match(pat, sql)
+        lx = lex(sql)
+        m = lx.search(pat)
         if m is None:
             break
-        depths, instr = _scan_maps(sql)
-        d = depths[m.start()]
+        d = lx.depth(m.start())
         # nearest enclosing SELECT: the build may sit nested inside a
         # reader scalar (value_at_quantile(qdigest_agg(DISTINCT x), q)),
         # so take the last prior SELECT at depth <= d
         sel = None
-        for sm in re.finditer(r"\bSELECT\b", sql, re.I):
+        for sm in lx.finditer(r"\bSELECT\b"):
             if sm.start() >= m.start():
                 break
-            if not instr[sm.start()] and depths[sm.start()] <= d:
+            if lx.depth(sm.start()) <= d:
                 sel = sm
         if sel is None:
             sql = sql[: m.start()] + "__SKDKEEP_" + sql[m.start() :]
             continue
-        bd = depths[sel.start()]
-        end = (
-            len(sql)
-            if bd == 0
-            else next(
-                i
-                for i in range(sel.start(), len(sql))
-                if depths[i] < bd and not instr[i]
-            )
-        )
+        end = lx.scope_end(sel.start())
         block = sql[sel.start() : end]
         rewritten = _sketch_block_distinct(block)
         if rewritten is None:
@@ -1671,11 +1447,12 @@ def _fold_nested_distinct_builds(
     )
     n = 0
     while True:
-        m = _first_code_match(pat, expr)
+        lx = lex(expr)
+        m = lx.search(pat)
         if m is None:
             break
-        open_idx = m.start() + expr[m.start():].index("(")
-        close_idx = _match_paren(expr, open_idx)
+        open_idx = expr.index("(", m.start())
+        close_idx = lx.close(open_idx)
         arg = expr[open_idx + 1 : close_idx].strip()
         arg = re.sub(r"(?is)^DISTINCT\b\s*", "", arg)
         if "," in arg:
@@ -1692,11 +1469,12 @@ def _fold_nested_distinct_builds(
         r"\b(qdigest_agg|tdigest_agg|approx_set|make_set_digest|count"
         r"|sum|avg|array_agg|listagg|collect_list|collect_set)\s*\("
     )
-    for lm in _first_code_iter(leftover, expr):
+    lx = lex(expr)
+    for lm in lx.finditer(leftover):
         if expr[lm.end() :].lstrip().startswith("__dx"):
             continue
         return None, 0
-    if _first_code_match(r"\bDISTINCT\b", expr) is not None:
+    if lx.search(r"\bDISTINCT\b") is not None:
         return None, 0
     # every bare identifier left must be __dx or a literal keyword —
     # a raw-table column reference would dangle once the outer query
@@ -1709,10 +1487,7 @@ def _fold_nested_distinct_builds(
         "decimal", "real", "boolean", "date", "timestamp", "float",
         "char", "binary", "escape",
     }
-    instr = _scan_maps(expr)[1]
-    for im in re.finditer(r"[A-Za-z_]\w*", expr):
-        if instr[im.start()]:
-            continue
+    for im in lx.finditer(r"[A-Za-z_]\w*", flags=0):
         if im.start() > 0 and expr[im.start() - 1] in "0123456789._":
             continue  # exponent / qualified tail
         rest = expr[im.end() :].lstrip()
@@ -1725,44 +1500,56 @@ def _fold_nested_distinct_builds(
     return expr, n
 
 
+def _top_kw(lx, pattern: str):
+    """First code match of ``pattern`` at paren depth 0."""
+    return next(lx.at_depth(pattern, 0), None)
+
+
+def _owning_select(lx, pos: int):
+    """(SELECT match, FROM match) of the block that owns the clause at
+    ``pos``: the last SELECT before pos at pos's depth and that block's
+    first FROM. None when either is missing or the block is DISTINCT."""
+    d = lx.depth(pos)
+    sel = None
+    for sel in lx.at_depth(r"\bSELECT\b", d, 0, pos):
+        pass
+    if sel is None or re.match(r"\s*DISTINCT\b", lx.text[sel.end() : pos], re.I):
+        return None
+    frm = next(lx.at_depth(r"\bFROM\b", d, sel.end(), pos), None)
+    return None if frm is None else (sel, frm)
+
+
 def _sketch_block_distinct(block: str) -> str | None:
     """Rewrite one SELECT block for the DISTINCT fold, or None to bail."""
-    bd, binstr = _scan_maps(block)
-    for cm in re.finditer(r"--|/\*", block):
-        if not binstr[cm.start()]:
-            return None  # single-line reassembly vs comments
-
-    def top_kw(pattern: str):
-        for m in re.finditer(pattern, block, re.I):
-            if bd[m.start()] == 0 and not binstr[m.start()]:
-                return m
-        return None
+    lx = lex(block)
+    if any(map(is_comment, lx.toks)):
+        return None  # single-line reassembly vs comments
 
     for bailer in (
         r"\bUNION\b", r"\bINTERSECT\b", r"\bEXCEPT\b", r"\bWINDOW\b",
         r"\bQUALIFY\b", r"\bSELECT\s+DISTINCT\b",
         r"\bGROUPING\s+SETS\b", r"\bROLLUP\b", r"\bCUBE\b", r"\bFETCH\b",
     ):
-        if top_kw(bailer):
+        if _top_kw(lx, bailer):
             return None
-    if top_kw(r"\bOVER\b"):
+    if _top_kw(lx, r"\bOVER\b"):
         # r9: same hoist as the two-level split — a windowed co-item
         # over group keys / aggregate aliases wraps around the fold
         return _sketch_block_over_hoist(
             block, inner_rewrite=_sketch_block_distinct
         )
-    fm = top_kw(r"\bFROM\b")
+    fm = _top_kw(lx, r"\bFROM\b")
     if fm is None:
         return None
-    gm = top_kw(r"\bGROUP\s+BY\b")
+    gm = _top_kw(lx, r"\bGROUP\s+BY\b")
     tail_m = (
-        top_kw(r"\bHAVING\b")
-        or top_kw(r"\bORDER\s+BY\b")
-        or top_kw(r"\bLIMIT\b")
+        _top_kw(lx, r"\bHAVING\b")
+        or _top_kw(lx, r"\bORDER\s+BY\b")
+        or _top_kw(lx, r"\bLIMIT\b")
         # bare OFFSET (no LIMIT/ORDER BY) must also land in the tail —
         # leaking it into the dedup subquery would apply it BEFORE the
         # aggregation instead of after
-        or top_kw(r"\bOFFSET\b")
+        or _top_kw(lx, r"\bOFFSET\b")
     )
     tail_start = tail_m.start() if tail_m else len(block)
     if gm and gm.start() > tail_start:
@@ -1771,7 +1558,7 @@ def _sketch_block_distinct(block: str) -> str | None:
     source_end = gm.start() if gm else tail_start
     source_text = block[fm.end() : source_end].strip()
     keys = (
-        [k for k in _split_call_args(block[gm.end() : tail_start]) if k]
+        [k for k in split(block[gm.end() : tail_start]) if k]
         if gm
         else []
     )
@@ -1783,7 +1570,7 @@ def _sketch_block_distinct(block: str) -> str | None:
     dargs: dict[str, str] = {}  # normalized -> first raw spelling
     builds = 0
     co_aggs = {"count", "sum", "avg", "min", "max"}
-    for item in _split_call_args(items_text):
+    for item in split(items_text):
         if not item.strip():
             continue
         expr, alias = _item_alias(item)
@@ -1891,37 +1678,28 @@ def _rewrite_sketch_two_level(sql: str) -> str:
     guard = 0
     while guard < 200:
         guard += 1
-        m = _first_code_match(pat, sql)
+        lx = lex(sql)
+        m = lx.search(pat)
         if m is None:
             break
-        depths, instr = _scan_maps(sql)
-        # the ENCLOSING select: nearest preceding SELECT whose depth
-        # equals the minimum depth between it and the call. A deeper
-        # preceding SELECT is a sibling subquery (depth dips below it
-        # before the call); a WRAPPED call (hll_cardinality(approx_set(
-        # ...))) sits deeper than its own SELECT, so requiring equal
-        # depths — the pre-r8 rule — never found its block at all.
-        sel = None
-        for sm in reversed(
-            list(re.finditer(r"\bSELECT\b", sql[: m.start()], re.I))
-        ):
-            if instr[sm.start()]:
-                continue
-            if depths[sm.start()] == min(depths[sm.start() : m.start()]):
-                sel = sm
-                break
+        # the ENCLOSING select: nearest preceding SELECT whose paren
+        # scope still holds the call. A deeper preceding SELECT is a
+        # sibling subquery (its scope closes before the call); a WRAPPED
+        # call (hll_cardinality(approx_set(...))) sits deeper than its
+        # own SELECT, so requiring equal depths — the pre-r8 rule —
+        # never found its block at all.
+        sel = next(
+            (
+                sm
+                for sm in reversed(list(lx.finditer(r"\bSELECT\b", 0, m.start())))
+                if lx.scope_end(sm.start()) > m.start()
+            ),
+            None,
+        )
         if sel is None:
             sql = keep(sql, m.start())
             continue
-        d = depths[sel.start()]
-        if d == 0:
-            end = len(sql)
-        else:
-            end = next(
-                i
-                for i in range(sel.start(), len(sql))
-                if depths[i] < d and not instr[i]
-            )
+        end = lx.scope_end(sel.start())
         block = sql[sel.start() : end]
         rewritten = _sketch_block_two_level(block)
         if rewritten is None:
@@ -1964,22 +1742,11 @@ def _extract_embedded_aggs(
     [(alias, agg call text)]), or None to bail the hoist entirely
     (degenerate nesting). The window function itself — the call whose
     matching close paren is directly followed by OVER — is left alone."""
-    _ed, einstr = _scan_maps(expr)
+    lx = lex(expr)
     spans: list[tuple[int, int]] = []
-    for m in _AGG_SHAPE_RE.finditer(expr):
-        if einstr[m.start()]:
-            continue
-        i = expr.index("(", m.end() - 1)
-        depth, j = 0, i
-        while j < len(expr):
-            if expr[j] == "(" and not einstr[j]:
-                depth += 1
-            elif expr[j] == ")" and not einstr[j]:
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        else:
+    for m in lx.finditer(_AGG_SHAPE_RE):
+        j = lx.closes.get(expr.index("(", m.end() - 1))
+        if j is None:
             return None  # unbalanced — malformed, bail
         if re.match(r"(?i)OVER\b", expr[j + 1 :].lstrip()):
             continue  # the window function itself
@@ -2010,35 +1777,28 @@ def _sketch_block_over_hoist(block: str, inner_rewrite=None) -> str | None:
     the remainder can rewrite (PARTIAL->FINAL split by default, the
     DISTINCT fold via ``inner_rewrite``). Returns the wrapped rewrite,
     or None to keep the single-level plan."""
-    bd, binstr = _scan_maps(block)
-
-    def top_kw(pattern: str):
-        for m in re.finditer(pattern, block, re.I):
-            if bd[m.start()] == 0 and not binstr[m.start()]:
-                return m
-        return None
-
-    fm = top_kw(r"\bFROM\b")
+    lx = lex(block)
+    fm = _top_kw(lx, r"\bFROM\b")
     if fm is None:
         return None
     # strip a trailing ORDER BY/LIMIT/OFFSET — it runs AFTER the window
     # projection, so it re-attaches to the hoisted outer select
     tm = (
-        top_kw(r"\bORDER\s+BY\b")
-        or top_kw(r"\bLIMIT\b")
-        or top_kw(r"\bOFFSET\b")
+        _top_kw(lx, r"\bORDER\s+BY\b")
+        or _top_kw(lx, r"\bLIMIT\b")
+        or _top_kw(lx, r"\bOFFSET\b")
     )
     tail = ""
     if tm:
         tail = " " + block[tm.start():].strip()
         block = block[: tm.start()]
-        bd, binstr = _scan_maps(block)
-    gm = top_kw(r"\bGROUP\s+BY\b")
+        lx = lex(block)
+    gm = _top_kw(lx, r"\bGROUP\s+BY\b")
     if gm is None:
         return None
-    hm = top_kw(r"\bHAVING\b")
+    hm = _top_kw(lx, r"\bHAVING\b")
     keys_end = hm.start() if hm else len(block)
-    keys = [k for k in _split_call_args(block[gm.end() : keys_end]) if k]
+    keys = [k for k in split(block[gm.end() : keys_end]) if k]
     if not all(re.fullmatch(r"[A-Za-z_]\w*", k) for k in keys):
         return None
     items_text = block[len("SELECT") : fm.start()]
@@ -2047,16 +1807,11 @@ def _sketch_block_over_hoist(block: str, inner_rewrite=None) -> str | None:
     allowed = {k.lower() for k in keys}
     win_items: list[tuple[str, str]] = []
     emb_items: list[str] = []  # embedded-agg synthetic inner items
-    for item in _split_call_args(items_text):
+    for item in split(items_text):
         if not item.strip():
             return None
         expr, alias = _item_alias(item)
-        has_over = False
-        ed, einstr = _scan_maps(expr)
-        for om in re.finditer(r"\bOVER\b", expr, re.I):
-            if ed[om.start()] == 0 and not einstr[om.start()]:
-                has_over = True
-        if not has_over:
+        if _top_kw(lex(expr), r"\bOVER\b") is None:
             inner_items.append(item.strip())
             if alias:
                 out = alias
@@ -2088,12 +1843,10 @@ def _sketch_block_over_hoist(block: str, inner_rewrite=None) -> str | None:
     # on the ORIGINAL block but unresolvable above the wrapper — bail
     # to the single level (pre-hoist behavior) rather than break it.
     win_aliases = {a.lower() for _e, a in win_items}
-    if tail and _AGG_SHAPE_RE.search(
-        re.sub(r"'(?:[^']|'')*'", "''", tail)
-    ):
+    if tail and _AGG_SHAPE_RE.search(lex(tail).blank_strings()):
         return None  # aggregate-shaped tail: unresolvable above the wrap
     for expr in [e for e, _a in win_items] + ([tail] if tail else []):
-        code = re.sub(r"'(?:[^']|'')*'", "''", expr)
+        code = lex(expr).blank_strings()
         for im in re.finditer(r"[A-Za-z_]\w*", code):
             if im.start() > 0 and code[im.start() - 1] in "0123456789._":
                 continue
@@ -2122,20 +1875,13 @@ def _sketch_block_over_hoist(block: str, inner_rewrite=None) -> str | None:
 
 def _sketch_block_two_level(block: str) -> str | None:
     """Rewrite one SELECT block (no enclosing parens) or None to bail."""
-    bd, binstr = _scan_maps(block)
     # Comment guard: the rewrite reassembles clause fragments on one
     # line, so a '--' line comment in the source would swallow whatever
     # gets appended after it (WHERE/AND from the HAVING hoist, GROUP BY,
     # the closing paren). Bail to the single-level plan — conservative,
-    # never wrong. String literals containing '--' are fine (binstr).
-    for cm in re.finditer(r"--|/\*", block):
-        if not binstr[cm.start()]:
-            return None
-
-    def top_kw(pattern: str):
-        for m in re.finditer(pattern, block, re.I):
-            if bd[m.start()] == 0 and not binstr[m.start()]:
-                return m
+    # never wrong. String literals containing '--' are fine.
+    lx = lex(block)
+    if any(map(is_comment, lx.toks)):
         return None
 
     for bailer in (
@@ -2144,9 +1890,9 @@ def _sketch_block_two_level(block: str) -> str | None:
         r"\bGROUPING\s+SETS\b", r"\bROLLUP\b", r"\bCUBE\b",
         r"\bFETCH\b",
     ):
-        if top_kw(bailer):
+        if _top_kw(lx, bailer):
             return None
-    if top_kw(r"\bOVER\b"):
+    if _top_kw(lx, r"\bOVER\b"):
         # r9 (VERDICT r8 task 7): a windowed co-item evaluates over the
         # AGGREGATED rows, so it hoists to a projection around the
         # split as long as every identifier it reads is a group key or
@@ -2165,9 +1911,9 @@ def _sketch_block_two_level(block: str) -> str | None:
     # bail to the single-level plan instead of emitting unparseable
     # inner SQL with the OFFSET stranded inside the partial block
     tm = (
-        top_kw(r"\bORDER\s+BY\b")
-        or top_kw(r"\bLIMIT\b")
-        or top_kw(r"\bOFFSET\b")
+        _top_kw(lx, r"\bORDER\s+BY\b")
+        or _top_kw(lx, r"\bLIMIT\b")
+        or _top_kw(lx, r"\bOFFSET\b")
     )
     if tm:
         tail = block[tm.start():].strip()
@@ -2178,7 +1924,7 @@ def _sketch_block_two_level(block: str) -> str | None:
         )
         if m_tail is None or not (m_tail.group("items") or m_tail.group("lim")):
             return None
-        for item in _split_top_level(m_tail.group("items") or ""):
+        for item in split(m_tail.group("items") or "", angle=True):
             core = re.sub(
                 r"(?is)\s+(ASC|DESC)?\s*(NULLS\s+(FIRST|LAST))?\s*$", "",
                 item,
@@ -2189,18 +1935,18 @@ def _sketch_block_two_level(block: str) -> str | None:
                 sort_cores.append(core)
         trailing = " " + tail
         block = block[: tm.start()]
-        bd, binstr = _scan_maps(block)
-    fm = top_kw(r"\bFROM\b")
+        lx = lex(block)
+    fm = _top_kw(lx, r"\bFROM\b")
     if fm is None:
         return None
-    gm = top_kw(r"\bGROUP\s+BY\b")
+    gm = _top_kw(lx, r"\bGROUP\s+BY\b")
     # r7: HAVING whose predicate touches ONLY group-key columns hoists
     # into the source WHERE (semantically identical — the predicate is
     # constant within each group) so the block still splits two-level.
     # Any other HAVING bails to the single-level plan.
     block_end = len(block)
     having_pred = None
-    hm = top_kw(r"\bHAVING\b")
+    hm = _top_kw(lx, r"\bHAVING\b")
     if hm:
         if gm is None or hm.start() < gm.start():
             return None
@@ -2209,7 +1955,7 @@ def _sketch_block_two_level(block: str) -> str | None:
     items_text = block[len("SELECT") : fm.start()]
     source_text = block[fm.end() : gm.start() if gm else block_end].strip()
     keys = (
-        [k for k in _split_call_args(block[gm.end() : block_end]) if k]
+        [k for k in split(block[gm.end() : block_end]) if k]
         if gm
         else []
     )
@@ -2223,16 +1969,16 @@ def _sketch_block_two_level(block: str) -> str | None:
             "and", "or", "not", "in", "between", "like", "is", "null",
             "true", "false", "escape",
         }
-        pred_code = re.sub(r"'(?:[^']|'')*'", "''", having_pred)
+        pred_code = lex(having_pred).blank_strings()
         if any(
             t.lower() not in allowed
             for t in re.findall(r"[A-Za-z_]\w*", pred_code)
         ):
             return None
-        sd, sinstr = _scan_maps(source_text)
+        slx = lex(source_text)
         wm = None
-        for m2 in re.finditer(r"\bWHERE\b", source_text, re.I):
-            if sd[m2.start()] == 0 and not sinstr[m2.start()]:
+        for m2 in slx.finditer(r"\bWHERE\b"):
+            if slx.depth(m2.start()) == 0:
                 wm = m2
         if wm is not None:
             source_text += f" AND ({having_pred})"
@@ -2257,7 +2003,7 @@ def _sketch_block_two_level(block: str) -> str | None:
     n_sketch = 0
     n_wrapped = 0
     out_names: list[str] = []
-    for item in _split_call_args(items_text):
+    for item in split(items_text):
         if not item:
             return None
         expr, alias = _item_alias(item)
@@ -2292,7 +2038,7 @@ def _sketch_block_two_level(block: str) -> str | None:
             # values_at_quantiles(qdigest_agg(v), array(..)). The wrapper
             # (and any trailing literal-only arguments) moves to the
             # merge level; anything else bails the whole block.
-            parts = _split_call_args(args)
+            parts = split(args)
             inner_call = _parse_agg_call(parts[0]) if parts else None
             rest = [r.strip() for r in parts[1:]]
             if (
@@ -2313,7 +2059,7 @@ def _sketch_block_two_level(block: str) -> str | None:
             wrapper, rest = None, []
         if fname in _SKETCH_BUILD_FORMS:
             merge_name, needs_rank_salt = _SKETCH_BUILD_FORMS[fname]
-            arg_list = _split_call_args(args)
+            arg_list = split(args)
             want_arity = 2 if fname in ("qdigest_agg_w", "tdigest_agg_w") else 1
             if len(arg_list) != want_arity:
                 return None
@@ -2404,7 +2150,7 @@ def _sketch_block_two_level(block: str) -> str | None:
         r"(?i)\b(rand|randn|random|uuid|shuffle"
         r"|monotonically_increasing_id)\s*\("
         r"|\bLIMIT\b|\bTABLESAMPLE\b",
-        re.sub(r"'(?:[^']|'')*'", "''", source_text),
+        lex(source_text).blank_strings(),
     ):
         return None
     jvm = "SELECT " + ", ".join(key_plain_items + plain_items)
@@ -2435,13 +2181,13 @@ def _rewrite_bit_count(sql: str) -> str:
     rewrite too; 1-arg calls pass through."""
     pos = 0
     while True:
-        sub = sql[pos:]
-        m = _first_code_match(r"\bbit_count\s*\(", sub)
+        lx = lex(sql)
+        m = lx.search(r"\bbit_count\s*\(", pos)
         if m is None:
             return sql
-        open_idx = pos + m.start() + sub[m.start():].index("(")
-        close_idx = _match_paren(sql, open_idx)
-        args = _split_call_args(sql[open_idx + 1 : close_idx])
+        open_idx = sql.index("(", m.start())
+        close_idx = lx.close(open_idx)
+        args = lx.split(open_idx + 1, close_idx)
         if len(args) != 2:
             pos = open_idx + 1
             continue
@@ -2452,8 +2198,8 @@ def _rewrite_bit_count(sql: str) -> str:
             repl = (
                 f"bit_count(({x}) & (shiftleft(cast(1 as bigint), {bits}) - 1))"
             )
-        sql = sql[: pos + m.start()] + repl + sql[close_idx + 1 :]
-        pos = pos + m.start() + len(repl)
+        sql = sql[: m.start()] + repl + sql[close_idx + 1 :]
+        pos = m.start() + len(repl)
 
 
 def _rewrite_bing_tiles_around(sql: str) -> str:
@@ -2463,19 +2209,19 @@ def _rewrite_bing_tiles_around(sql: str) -> str:
     SQL macro unchanged."""
     pos = 0
     while True:
-        sub = sql[pos:]
-        m = _first_code_match(r"\bbing_tiles_around\s*\(", sub)
+        lx = lex(sql)
+        m = lx.search(r"\bbing_tiles_around\s*\(", pos)
         if m is None:
             return sql
-        open_idx = pos + m.start() + sub[m.start():].index("(")
-        close_idx = _match_paren(sql, open_idx)
-        args = _split_call_args(sql[open_idx + 1 : close_idx])
+        open_idx = sql.index("(", m.start())
+        close_idx = lx.close(open_idx)
+        args = lx.split(open_idx + 1, close_idx)
         if len(args) != 4:
             pos = open_idx + 1
             continue
         repl = f"bing_tiles_around_radius({', '.join(a.strip() for a in args)})"
-        sql = sql[: pos + m.start()] + repl + sql[close_idx + 1 :]
-        pos = pos + m.start() + len(repl)
+        sql = sql[: m.start()] + repl + sql[close_idx + 1 :]
+        pos = m.start() + len(repl)
 
 
 def _rewrite_features(sql: str) -> str:
@@ -2484,21 +2230,21 @@ def _rewrite_features(sql: str) -> str:
     map(bigint, double) builder)."""
     pos = 0
     while True:
-        sub = sql[pos:]
-        m = _first_code_match(r"\bfeatures\s*\(", sub)
+        lx = lex(sql)
+        m = lx.search(r"\bfeatures\s*\(", pos)
         if m is None:
             return sql
-        open_idx = pos + m.start() + sub[m.start():].index("(")
-        close_idx = _match_paren(sql, open_idx)
-        args = [a.strip() for a in _split_call_args(sql[open_idx + 1 : close_idx])]
+        open_idx = sql.index("(", m.start())
+        close_idx = lx.close(open_idx)
+        args = [a.strip() for a in lx.split(open_idx + 1, close_idx)]
         # emit map_from_arrays directly: the late segment pass rewrites
         # every non-empty map( to map_from_arrays( (Trino's 2-array MAP
         # constructor), which would mangle an interleaved map() here
         keys = ", ".join(f"{i}L" for i in range(len(args)))
         vals = ", ".join(f"CAST({a} AS DOUBLE)" for a in args)
         repl = f"map_from_arrays(array({keys}), array({vals}))"
-        sql = sql[: pos + m.start()] + repl + sql[close_idx + 1 :]
-        pos = pos + m.start() + len(repl)
+        sql = sql[: m.start()] + repl + sql[close_idx + 1 :]
+        pos = m.start() + len(repl)
 
 
 def _rewrite_color_family(sql: str) -> str:
@@ -2512,13 +2258,13 @@ def _rewrite_color_family(sql: str) -> str:
     for name in ("color", "bar", "render"):
         pos = 0
         while True:
-            sub = sql[pos:]
-            m = _first_code_match(r"\b%s\s*\(" % name, sub)
+            lx = lex(sql)
+            m = lx.search(r"\b%s\s*\(" % name, pos)
             if m is None:
                 break
-            open_idx = pos + m.start() + sub[m.start():].index("(")
-            close_idx = _match_paren(sql, open_idx)
-            args = [a.strip() for a in _split_call_args(sql[open_idx + 1 : close_idx])]
+            open_idx = sql.index("(", m.start())
+            close_idx = lx.close(open_idx)
+            args = [a.strip() for a in lx.split(open_idx + 1, close_idx)]
             repl = None
             if name == "color" and len(args) == 3:
                 repl = f"color_interp({args[0]}, {args[1]}, {args[2]})"
@@ -2542,8 +2288,8 @@ def _rewrite_color_family(sql: str) -> str:
             if repl is None:
                 pos = open_idx + 1
                 continue
-            sql = sql[: pos + m.start()] + repl + sql[close_idx + 1 :]
-            pos = pos + m.start() + len(repl)
+            sql = sql[: m.start()] + repl + sql[close_idx + 1 :]
+            pos = m.start() + len(repl)
     return sql
 
 
@@ -2551,11 +2297,12 @@ def _rewrite_none_match(sql: str) -> str:
     """none_match(x, f) (reference ArrayNoneMatchFunction) ->
     (NOT exists(x, f)) — needs paren matching, not a plain rename."""
     while True:
-        m = _first_code_match(r"\bnone_match\s*\(", sql)
+        lx = lex(sql)
+        m = lx.search(r"\bnone_match\s*\(")
         if m is None:
             return sql
         open_idx = sql.index("(", m.start())
-        close_idx = _match_paren(sql, open_idx)
+        close_idx = lx.close(open_idx)
         inner = sql[open_idx + 1 : close_idx]
         sql = f"{sql[: m.start()]}(NOT exists({inner})){sql[close_idx + 1 :]}"
 
@@ -2595,11 +2342,12 @@ def rewrite_table_ptfs(sql: str, schema_of=None) -> str:
     guard = 0
     while guard < 50:
         guard += 1
-        m = _first_code_match(r"\bTABLE\s*\(", sql)
+        lx = lex(sql)
+        m = lx.search(r"\bTABLE\s*\(")
         if m is None:
             return sql
-        open_idx = m.start() + sql[m.start():].index("(")
-        close_idx = _match_paren(sql, open_idx)
+        open_idx = sql.index("(", m.start())
+        close_idx = lx.close(open_idx)
         inner = sql[open_idx + 1 : close_idx].strip()
         fm = re.match(r"(?is)^(%s)\s*\(" % ident, inner)
         if fm is None or fm.group(1).lower() not in (
@@ -2613,8 +2361,8 @@ def rewrite_table_ptfs(sql: str, schema_of=None) -> str:
                 + inner[:80]
             )
         f_open = inner.index("(", fm.start(1))
-        f_close = _match_paren(inner, f_open)
-        raw_args = _split_call_args(inner[f_open + 1 : f_close])
+        f_close = lex(inner).close(f_open)
+        raw_args = split(inner[f_open + 1 : f_close])
         named: dict[str, str] = {}
         positional: list[str] = []
         for a in raw_args:
@@ -2657,8 +2405,7 @@ def rewrite_table_ptfs(sql: str, schema_of=None) -> str:
             src = named["input"].strip()
             tm = re.match(r"(?is)^TABLE\s*\(", src)
             if tm:
-                src = src[src.index("(") + 1 : _match_paren(
-                    src, src.index("(")
+                src = src[src.index("(") + 1 : lex(src).close(src.index("(")
                 )].strip()
             dm = re.match(r"(?is)^DESCRIPTOR\s*\(", named["columns"])
             if dm is None:
@@ -2666,10 +2413,10 @@ def rewrite_table_ptfs(sql: str, schema_of=None) -> str:
                     "exclude_columns columns must be a DESCRIPTOR(...)"
                 )
             c_open = named["columns"].index("(")
-            c_close = _match_paren(named["columns"], c_open)
+            c_close = lex(named["columns"]).close(c_open)
             drop = {
                 c.strip().split()[0].strip('"').lower()
-                for c in _split_call_args(
+                for c in split(
                     named["columns"][c_open + 1 : c_close]
                 )
             }
@@ -2709,14 +2456,9 @@ def transpile(sql: str) -> str:
     sql = _rewrite_unicode_literals(sql)
     sql = _rewrite_typed_literals(sql)
     sql = _rewrite_extract_fields(sql)
-    parts = _STRING_SPLIT.split(sql)
-    parts = [
-        p
-        if p.startswith("'")
-        else re.sub(r"\belement_at\s*\(", "try_element_at(", p, flags=re.I)
-        for p in parts
-    ]
-    sql = "".join(parts)
+    sql = lex(sql).map_code(
+        lambda p: re.sub(r"\belement_at\s*\(", "try_element_at(", p, flags=re.I)
+    )
     # bracket constructs BEFORE TRY so TRY(a[i]) sees the decomposable
     # element_at form (string-aware scanner: ARRAY literals and subscripts
     # may contain string literals)
@@ -2740,7 +2482,7 @@ def transpile(sql: str) -> str:
     sql = _rewrite_at_time_zone(sql)
     sql = _rewrite_json_casts(sql)
     sql = _rewrite_cast_types(sql)
-    if re.search(r"\bMATCH_RECOGNIZE\b", sql, flags=re.I):
+    if lex(sql).search(r"\bMATCH_RECOGNIZE\b") is not None:
         raise UnsupportedTrinoSyntax(
             "MATCH_RECOGNIZE has no SQL form here; use the DataFrame"
             " operator witdb_spark.operators.match_recognize (same PATTERN/"
@@ -2748,21 +2490,15 @@ def transpile(sql: str) -> str:
         )
     sql = _rewrite_unnest(sql)
     sql = _rewrite_numeric_histogram(sql)
-    # then segment-local rewrites (never touch string literals)
-    parts = _STRING_SPLIT.split(sql)
-    parts = [p if p.startswith("'") else _rewrite_segment(p) for p in parts]
-    sql = "".join(parts)
+    # then segment-local rewrites (never touch strings or comments)
+    sql = lex(sql).map_code(_rewrite_segment)
     sql = _rewrite_with_strings(sql)
     sql = _rewrite_year_month_ranges(sql)
     sql = _rewrite_year_ranges(sql)
     sql = _rewrite_rollup_prestage(sql)
-    from witdb_spark.plans.eager_agg import (
-        rewrite_cte_selfjoin_narrow,
-        rewrite_eager_dim_agg,
-    )
+    from witdb_spark.plans.eager_agg import rewrite_cte_selfjoin_narrow
 
     sql = rewrite_cte_selfjoin_narrow(sql)
-    sql = rewrite_eager_dim_agg(sql)
     return _rewrite_sum_decimal_narrowing(sql)
 
 
@@ -2852,24 +2588,27 @@ def _rewrite_year_month_ranges(sql: str) -> str:
     year() half alone and leave the month() half unsargable). Same total
     per-expression equivalence as the year rewrite — NULL input yields
     NULL under both spellings, the conjunction is replaced as a unit so
-    it composes under OR/NOT/CASE — and the month range prunes 12x
-    tighter than the year range at the scan. Fires only on the fixed
-    NTZ catalog columns, both sides naming the SAME column, never
-    inside strings, and skips re-aliased names (guide §6)."""
+    it composes under OR/CASE — and the month range prunes 12x tighter
+    than the year range at the scan. A conjunction right after NOT is
+    left alone: NOT binds tighter than AND, so it negates only the
+    year() comparison (which _rewrite_year_ranges then rewrites on its
+    own). Fires only on the fixed NTZ catalog columns, both sides
+    naming the SAME column, never inside strings, and skips re-aliased
+    names (guide §6)."""
     skip = {
         name
         for name in _YEAR_RANGE_COLS
-        if _first_code_match(rf"\bAS\s+{name}\b", sql)
+        if lex(sql).search(rf"\bAS\s+{name}\b")
     }
     while True:
-        instr = _scan_maps(sql)[1]
+        lx = lex(sql)
         m = None
-        for cand in _MONTH_CMP.finditer(sql):
+        for cand in lx.finditer(_MONTH_CMP):
             if (
-                not instr[cand.start()]
-                and cand.group("base").lower() not in skip
+                cand.group("base").lower() not in skip
                 and cand.group("col").lower() == cand.group("col2").lower()
                 and 1 <= int(cand.group("m")) <= 12
+                and (lx.prev_code_token(cand.start()) or "").upper() != "NOT"
             ):
                 m = cand
                 break
@@ -2908,15 +2647,17 @@ def _rewrite_year_ranges(sql: str) -> str:
     skip = {
         name
         for name in _YEAR_RANGE_COLS
-        if _first_code_match(rf"\bAS\s+{name}\b", sql)
+        if lex(sql).search(rf"\bAS\s+{name}\b")
     }
     while True:
-        instr = _scan_maps(sql)[1]
-        m = None
-        for cand in _YEAR_CMP.finditer(sql):
-            if not instr[cand.start()] and cand.group("base").lower() not in skip:
-                m = cand
-                break
+        m = next(
+            (
+                cand
+                for cand in lex(sql).finditer(_YEAR_CMP)
+                if cand.group("base").lower() not in skip
+            ),
+            None,
+        )
         if m is None:
             return sql
         col = m.group("col")
@@ -2964,6 +2705,25 @@ _CAST_DEC_TAIL = re.compile(
 _NUM_LIT = re.compile(r"^\d+(\.\d+)?([eE][+-]?\d+)?$")
 
 
+def _top_chars(e: str, chars: str):
+    """(index, char) of each character of ``chars`` that sits in code at
+    the top level of ``e`` (outside every ()/[] group)."""
+    lx = lex(e)
+    for k in lx.top_level():
+        t = lx.toks[k]
+        if len(t) == 1 and t in chars:
+            yield lx.starts[k], t
+
+
+def _top_binary_ops(e: str, ops: str):
+    """Indices of top-level operators in ``ops`` that follow an operand
+    (an identifier, number or closing paren), i.e. binary, not unary."""
+    for i, _c in _top_chars(e, ops):
+        prev = e[:i].rstrip()
+        if i > 0 and prev and (prev[-1].isalnum() or prev[-1] in ")_."):
+            yield i
+
+
 def _expr_abs_bound(expr: str) -> float:
     """Conservative |value| bound via interval arithmetic over the
     catalog's declared column bounds (catalog.COLUMN_ABS_BOUNDS):
@@ -3002,37 +2762,20 @@ def _expr_abs_bound(expr: str) -> float:
             return max(vals) if vals else INF
         # strip one layer of wrapping parens
         if e.startswith("("):
-            close = _match_paren(e, 0)
+            close = lex(e).close(0)
             if close == len(e) - 1:
                 return bound(e[1:-1])
         # split on top-level +/- (unary minus handled by empty lhs)
-        depth = 0
-        for i, c, in_str in _in_string_scan(e):
-            if in_str:
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c in "+-" and depth == 0 and i > 0:
-                prev = e[:i].rstrip()
-                if prev and (prev[-1].isalnum() or prev[-1] in ")_."):
-                    if prev[-1].lower() == "e" and len(prev) > 1 and prev[-2].isdigit():
-                        continue  # exponent sign in 1.0e-2
-                    return bound(e[:i]) + bound(e[i + 1 :])
+        for i in _top_binary_ops(e, "+-"):
+            prev = e[:i].rstrip()
+            if prev[-1].lower() == "e" and len(prev) > 1 and prev[-2].isdigit():
+                continue  # exponent sign in 1.0e-2
+            return bound(e[:i]) + bound(e[i + 1 :])
         if e.startswith("-") or e.startswith("+"):
             return bound(e[1:])
         # top-level *
-        depth = 0
-        for i, c, in_str in _in_string_scan(e):
-            if in_str:
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c == "*" and depth == 0:
-                return bound(e[:i]) * bound(e[i + 1 :])
+        for i, c in _top_chars(e, "*"):
+            return bound(e[:i]) * bound(e[i + 1 :])
         # atom: literal or column ref
         if "(" in e or ")" in e or "'" in e or "/" in e or " " in e:
             return INF
@@ -3071,19 +2814,15 @@ def _rewrite_sum_decimal_narrowing(sql: str) -> str:
     out = sql
     search = 0
     while True:
-        _, instr = _scan_maps(out)
-        m = None
-        for cand in _SUM_CAST.finditer(out, search):
-            if not instr[cand.start()]:
-                m = cand
-                break
+        lx = lex(out)
+        m = lx.search(_SUM_CAST, search)
         if m is None:
             return out
         search = m.end()
         s_open = m.end() - 1
         try:
-            s_close = _match_paren(out, s_open)
-        except Exception:
+            s_close = lx.close(s_open)
+        except UnsupportedTrinoSyntax:
             continue
         arg = out[s_open + 1 : s_close].strip()
         after = out[s_close + 1 :].lstrip().upper()
@@ -3095,8 +2834,8 @@ def _rewrite_sum_decimal_narrowing(sql: str) -> str:
         if not cm:
             continue
         try:
-            c_close = _match_paren(arg, cm.end() - 1)
-        except Exception:
+            c_close = lex(arg).close(cm.end() - 1)
+        except UnsupportedTrinoSyntax:
             continue
         if c_close != len(arg) - 1:
             continue
@@ -3140,7 +2879,7 @@ def _is_decimal_cast(arg: str, dec_cols: frozenset[str] = frozenset()) -> bool:
     # strip one layer of wrapping parens
     if a.startswith("("):
         try:
-            if _match_paren(a, 0) == len(a) - 1:
+            if lex(a).close(0) == len(a) - 1:
                 return _is_decimal_cast(a[1:-1], dec_cols)
         except Exception:
             return False
@@ -3159,25 +2898,15 @@ def _is_decimal_cast(arg: str, dec_cols: frozenset[str] = frozenset()) -> bool:
             _is_decimal_cast(b, dec_cols) for b in branches
         )
     # top-level +,-,* : every operand must be decimal
-    depth = 0
-    for i, c, in_str in _in_string_scan(a):
-        if in_str:
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c in "+-*" and depth == 0 and i > 0:
-            prev = a[:i].rstrip()
-            if prev and (prev[-1].isalnum() or prev[-1] in ")_."):
-                return _is_decimal_cast(prev, dec_cols) and _is_decimal_cast(
-                    a[i + 1 :], dec_cols
-                )
+    for i in _top_binary_ops(a, "+-*"):
+        return _is_decimal_cast(a[:i].rstrip(), dec_cols) and _is_decimal_cast(
+            a[i + 1 :], dec_cols
+        )
     fm = re.match(r"(CAST|COALESCE|SUM)\s*\(", a, re.I)
     if not fm:
         return False
     try:
-        close = _match_paren(a, fm.end() - 1)
+        close = lex(a).close(fm.end() - 1)
     except Exception:
         return False
     if close != len(a) - 1:
@@ -3192,7 +2921,7 @@ def _is_decimal_cast(arg: str, dec_cols: frozenset[str] = frozenset()) -> bool:
         )
     if head == "COALESCE":
         return all(
-            _is_decimal_cast(p, dec_cols) for p in _split_top_level(inner)
+            _is_decimal_cast(p, dec_cols) for p in split(inner, angle=True)
         )
     # SUM over a decimal expression is decimal-typed
     return _is_decimal_cast(inner, dec_cols)
@@ -3206,37 +2935,18 @@ def _decimal_typed_cols(sql: str) -> frozenset[str]:
     chains through two CTE levels), so membership is solved to a
     fixpoint; a name also defined anywhere as anything non-decimal is
     excluded."""
-    _, instr = _scan_maps(sql)
+    lx = lex(sql)
     defs: list[tuple[str, str]] = []
-    for m in re.finditer(r"\bAS\s+([A-Za-z_]\w*)", sql, re.I):
-        if instr[m.start()]:
-            continue
+    for m in lx.finditer(r"\bAS\s+([A-Za-z_]\w*)"):
         name = m.group(1).lower()
-        # walk back over the expression this AS closes: scan left to the
-        # previous same-depth comma or opening paren (the select-list
-        # item boundary)
-        j = m.start() - 1
-        depth = 0
-        start = None
-        while j >= 0:
-            c = sql[j]
-            if instr[j]:
-                j -= 1
-                continue
-            if c == ")":
-                depth += 1
-            elif c == "(":
-                if depth == 0:
-                    start = j + 1
-                    break
-                depth -= 1
-            elif c == "," and depth == 0:
-                start = j + 1
-                break
-            j -= 1
-        if start is None:
-            start = 0
-        expr = sql[start : m.start()]
+        # the expression this AS closes starts after the previous
+        # same-depth comma or the enclosing opening paren (the
+        # select-list item boundary)
+        o = lx.encl(m.start())
+        c = sql.rfind(",", o + 1, m.start())
+        while c >= 0 and (lx.encl(c) != o or not lx.is_code(c)):
+            c = sql.rfind(",", o + 1, c)
+        expr = sql[max(o, c) + 1 : m.start()]
         expr = re.sub(r"^\s*SELECT\b", "", expr, flags=re.I)
         defs.append((name, expr))
     # Greatest fixpoint: start from every defined name and remove any
@@ -3255,7 +2965,9 @@ def _decimal_typed_cols(sql: str) -> frozenset[str]:
     dec = frozenset(
         {n for n, _ in defs if n not in physical}
     )
-    for _ in range(6):
+    # each pass that changes dec removes at least one name, so
+    # len(defs) + 1 passes always reach the fixpoint
+    for _ in range(len(defs) + 1):
         status: dict[str, bool] = {}
         for name, expr in defs:
             ok = _is_decimal_cast(expr, dec)
@@ -3269,21 +2981,21 @@ def _decimal_typed_cols(sql: str) -> frozenset[str]:
     return dec
 
 
+@lru_cache(maxsize=8)
 def _cte_bodies(sql: str) -> dict[str, str]:
     """``name AS ( body )`` spans found anywhere in the text."""
     out: dict[str, str] = {}
-    _, instr = _scan_maps(sql)
-    for m in re.finditer(r"\b([A-Za-z_]\w*)\s+AS\s*\(", sql, re.I):
-        if instr[m.start()]:
-            continue
+    lx = lex(sql)
+    for m in lx.finditer(r"\b([A-Za-z_]\w*)\s+AS\s*\("):
         try:
-            close = _match_paren(sql, m.end() - 1)
-        except Exception:
+            close = lx.close(m.end() - 1)
+        except UnsupportedTrinoSyntax:
             continue
         out[m.group(1).lower()] = sql[m.end() : close]
     return out
 
 
+@lru_cache(maxsize=64)
 def _decimal_cols_for_scope(sql: str, scope_text: str) -> frozenset[str]:
     """Decimal-typed column names visible FROM a block's own source
     subtree: the block's FROM text plus the bodies of every CTE it
@@ -3302,20 +3014,6 @@ def _decimal_cols_for_scope(sql: str, scope_text: str) -> frozenset[str]:
                 texts.append(bodies[n])
                 frontier.append(bodies[n])
     return _decimal_typed_cols("\n".join(texts))
-
-
-def _sub_code(pat: re.Pattern, repl: str, text: str) -> str:
-    """re.sub that skips matches starting inside string literals."""
-    _, instr = _scan_maps(text)
-    out, last = [], 0
-    for m in pat.finditer(text):
-        if instr[m.start()]:
-            continue
-        out.append(text[last : m.start()])
-        out.append(repl)
-        last = m.end()
-    out.append(text[last:])
-    return "".join(out)
 
 
 def _rewrite_rollup_prestage(sql: str) -> str:
@@ -3350,55 +3048,32 @@ def _rewrite_rollup_prestage(sql: str) -> str:
     outer query keeps the original ROLLUP/CUBE over the same keys."""
     search_from = 0
     while True:
-        depths, instr = _scan_maps(sql)
-        m = None
-        for cand in _ROLLUP_HEAD.finditer(sql, search_from):
-            if not instr[cand.start()]:
-                m = cand
-                break
+        lx = lex(sql)
+        m = lx.search(_ROLLUP_HEAD, search_from)
         if m is None:
             return sql
         search_from = m.end()  # default: leave this block as-is
-        d = depths[m.start()]
+        d = lx.depth(m.start())
         open_idx = m.end() - 1
-        close_idx = _match_paren(sql, open_idx)
-        keys = _split_top_level(sql[open_idx + 1 : close_idx])
+        close_idx = lx.close(open_idx)
+        keys = lx.split(open_idx + 1, close_idx, angle=True)
         if any(not k or k.startswith("(") for k in keys):
             continue  # composite grouping elements — leave alone
-        # ---- locate the owning SELECT and its FROM at this depth ----
-        sel = None
-        for sm in re.finditer(r"\bSELECT\b", sql[: m.start()], re.I):
-            if not instr[sm.start()] and depths[sm.start()] == d:
-                sel = sm
-        if sel is None:
+        owner = _owning_select(lx, m.start())
+        if owner is None:
             continue
-        if re.match(r"\s*DISTINCT\b", sql[sel.end() : m.start()], re.I):
-            continue
-        frm = None
-        for fm in re.finditer(r"\bFROM\b", sql[sel.end() : m.start()], re.I):
-            p = sel.end() + fm.start()
-            if not instr[p] and depths[p] == d:
-                frm = (p, sel.end() + fm.end())
-                break
-        if frm is None:
-            continue
-        select_list = sql[sel.end() : frm[0]]
-        from_where = sql[frm[1] : m.start()]
+        sel, frm = owner
+        select_list = sql[sel.end() : frm.start()]
+        from_where = sql[frm.end() : m.start()]
         if "__roll_pre" in from_where:
             continue  # already rewritten (the spliced text re-scans)
         # decimal-typedness resolves against THIS block's source subtree
         dec_cols = _decimal_cols_for_scope(sql, from_where)
         # ---- optional HAVING between the key list and the next clause ----
-        scope_end = len(sql)
-        for p in range(close_idx + 1, len(sql)):
-            if not instr[p] and depths[p] < d:
-                scope_end = p
-                break
-        tail_m = _CLAUSE_AFTER_GROUP.search(sql, close_idx + 1, scope_end)
-        while tail_m is not None and (
-            instr[tail_m.start()] or depths[tail_m.start()] != d
-        ):
-            tail_m = _CLAUSE_AFTER_GROUP.search(sql, tail_m.end(), scope_end)
+        scope_end = lx.scope_end(m.start())
+        tail_m = next(
+            lx.at_depth(_CLAUSE_AFTER_GROUP, d, close_idx + 1, scope_end), None
+        )
         having_end = tail_m.start() if tail_m else scope_end
         having = sql[close_idx + 1 : having_end]
         hm = re.match(r"\s*HAVING\b", having, re.I)
@@ -3410,14 +3085,9 @@ def _rewrite_rollup_prestage(sql: str) -> str:
         # r15: ORDER BY SUM(x) after the splice referenced raw columns
         # the rewritten block no longer exposes). Text from a UNION/
         # INTERSECT/EXCEPT onward is the NEXT block — left verbatim.
-        tail = sql[having_end:scope_end]
-        rest_at = scope_end
-        for sm in _SET_OP.finditer(tail):
-            p = having_end + sm.start()
-            if not instr[p] and depths[p] == d:
-                rest_at = p
-                tail = sql[having_end:rest_at]
-                break
+        set_op = next(lx.at_depth(_SET_OP, d, having_end, scope_end), None)
+        rest_at = set_op.start() if set_op else scope_end
+        tail = sql[having_end:rest_at]
         # ---- eligibility: every aggregate call is SUM(...) or COUNT(*) ----
         body = select_list + having + tail
         if (
@@ -3437,15 +3107,13 @@ def _rewrite_rollup_prestage(sql: str) -> str:
         part_sums: list[list[tuple[int, int, str, bool]]] = [[], [], []]
         eligible = True
         for pi, part in enumerate((select_list, having, tail)):
-            _, pinstr = _scan_maps(part)
-            for am in re.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", part):
-                if pinstr[am.start()]:
-                    continue
+            plx = lex(part)
+            for am in plx.finditer(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(", flags=0):
                 name = am.group(1).upper()
                 if name.lower() in _NONAGG_CALL_NAMES:
                     continue
                 a_open = am.end() - 1
-                a_close = _match_paren(part, a_open)
+                a_close = plx.close(a_open)
                 arg = part[a_open + 1 : a_close]
                 after = part[a_close + 1 :].lstrip()
                 is_window = after.upper().startswith("OVER")
@@ -3519,7 +3187,7 @@ def _rewrite_rollup_prestage(sql: str) -> str:
                     + r"\s+".join(re.escape(tok) for tok in k.split())
                     + (r"(?![\w.])" if re.match(r"[\w]", k[-1]) else "")
                 )
-                new_parts = [_sub_code(pat, alias, p) for p in new_parts]
+                new_parts = [lex(p).sub(pat, alias) for p in new_parts]
         # one inner partial SUM per alias (whitespace-variant spellings of
         # the same argument share an alias — emit the first-seen spelling)
         seen: set[str] = set()

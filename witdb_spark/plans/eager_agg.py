@@ -1,28 +1,26 @@
-"""Eager aggregation: pull dimension equi-joins ABOVE a GROUP BY.
+"""Eager aggregation: narrow a self-joined aggregate CTE to surrogate keys.
 
 The q64-family shape aggregates a fact join with grouping keys that are
 mostly dimension ATTRIBUTES (long strings like p_name/s_name), while the
-aggregation itself reduces almost nothing (VERDICT r15: 86,903 input rows
--> 86,896 groups on tpcds_sql_q64's cross_sales). Every input row then
-pays string hashing in both hash-aggregate levels and the exchange
-carries the strings once per group (guide §2.3: shuffle fewer bytes /
-narrower types; §3.3). Spark has no group-by pushdown rule, but the
-engine knows something Catalyst does not: the catalog's declared-and-
-verified UNIQUE columns (catalog.UNIQUE_COLUMNS, gated by
+aggregation itself reduces almost nothing (86,903 input rows -> 86,896
+groups on tpcds_sql_q64's cross_sales). Every input row then pays
+string hashing in both hash-aggregate levels and the exchange carries
+the strings once per group (guide §2.3: shuffle fewer bytes / narrower
+types; §3.3). Spark has no group-by pushdown rule, but the engine knows
+something Catalyst does not: the catalog's declared-and-verified UNIQUE
+columns (catalog.UNIQUE_COLUMNS, gated by
 tests/test_semantics.py::test_declared_unique_columns_hold). Under those
-constraints
+constraints the block
 
     SELECT d.att, ..., SUM(f.x), COUNT(*)
     FROM fact f JOIN dim d ON d.key = f.fk ...
     GROUP BY d.att, ...
 
-is value-identical to aggregating FIRST, grouped by the fact-side join
-column, and re-attaching the dimension attributes afterwards:
+aggregates the same partition of rows when it groups FIRST by the
+fact-side join column (``_rewrite_block`` builds that pre-aggregation):
 
-    SELECT d.att, ..., __ea_s0, __ea_cnt
-    FROM (SELECT f.fk, ..., SUM(f.x) AS __ea_s0, COUNT(*) AS __ea_cnt
-          FROM fact f ... GROUP BY f.fk, ...) AS __ea_pre
-    JOIN dim d ON d.key = fk ...
+    SELECT f.fk, ..., SUM(f.x) AS __ea_s0, COUNT(*) AS __ea_cnt
+    FROM fact f ... GROUP BY f.fk, ...
 
 Why this is exact (each condition is enforced, not assumed):
   - ``d.key`` UNIQUE in d  =>  the lifted join is 1:1 per key value:
@@ -50,6 +48,29 @@ pre-stage), aggregates without an AS alias (the output column name
 would change), and sources whose columns are unknown (a CTE whose
 output list cannot be parsed).
 
+Where the lifted dimensions are re-joined decides whether this wins.
+Re-joining them right above the pre-aggregation, inside the block, was
+measured WORSE on tpcds_sql_q64 at sf0.1 (interleaved A/B, noop sink):
+the narrow-key aggregation itself wins (the two fact-agg stages drop
+678->564 / 643->528 ms CPU, their exchanges 5.31->3.78 / 5.36->3.74
+MB), but the Join nodes between the self-join and the materialized
+aggregate stages blow Spark's size-only join estimate (product of child
+sizes) past the broadcast threshold, so AQE no longer converts the
+cross_sales self-join to broadcast before its exchanges launch: two new
+5.28/3.94 MB exchanges plus sorts appear, netting +9% CPU and +54%
+shuffle bytes (2241->2444 ms CPU, 11.2->17.3 MB; CBO on does not change
+the estimate). That block-level form was removed. What ships is the
+composition below (rewrite_cte_selfjoin_narrow): the CTE exposes only
+surrogate keys and the attributes are re-attached on the FINAL joined
+output. Measured on the same setup: executor CPU 2749 -> 2519 ms (-8%),
+shuffle write 11.20 -> 7.95 MB (-29%), wall min 2.15 -> 1.99 s. The
+shuffle ledger proves the mechanism: 7.95 MB = cs_ui (0.53) + the two
+narrow surrogate-key aggregate exchanges (3.78 + 3.74) and nothing
+else — the self-join exchanges never materialize because the aggregate
+sits directly atop its exchange again and AQE broadcast-converts the
+self-join at re-planning, while the dimension joins probe the final
+406-row joined output instead of 2 x 86k group rows.
+
 The DuckDB oracle text is never touched — only the Spark-side plan
 changes; the driver's hash compare is the gate.
 """
@@ -57,8 +78,17 @@ changes; the driver's hash compare is the gate.
 from __future__ import annotations
 
 import re
+from functools import lru_cache
 
 from witdb_spark.catalog import TABLE_COLUMNS, UNIQUE_COLUMNS
+from witdb_spark.plans.dialect import (
+    _NONAGG_CALL_NAMES,
+    _decimal_cols_for_scope,
+    _is_decimal_cast,
+    _owning_select,
+    _top_kw,
+)
+from witdb_spark.plans.lexer import UnsupportedTrinoSyntax, lex, split
 
 _GROUP_BY = re.compile(
     r"\bGROUP\s+BY\b(?!\s+(?:ROLLUP|CUBE|GROUPING)\b)", re.I
@@ -98,14 +128,6 @@ _KEYWORDS = frozenset(
 )
 
 
-def _helpers():
-    # lazy: dialect imports this module inside transpile(); importing
-    # dialect lazily here breaks the cycle at module-load time
-    from witdb_spark.plans import dialect as d
-
-    return d
-
-
 class _Bail(Exception):
     pass
 
@@ -125,46 +147,29 @@ class _Source:
         self.lifted = False
 
 
+@lru_cache(maxsize=8)
 def _cte_columns(sql: str) -> dict[str, frozenset | None]:
     """Output-column sets of `name AS ( SELECT ... )` bodies found in the
     text; None marks a CTE whose output list could not be parsed."""
-    d = _helpers()
     out: dict[str, frozenset | None] = {}
-    _, instr = d._scan_maps(sql)
-    for m in re.finditer(r"\b([A-Za-z_]\w*)\s+AS\s*\(", sql, re.I):
-        if instr[m.start()]:
-            continue
+    lx = lex(sql)
+    for m in lx.finditer(r"\b([A-Za-z_]\w*)\s+AS\s*\("):
         name = m.group(1).lower()
         if name.upper() in ("CAST", "TRY_CAST"):
             continue
         try:
-            close = d._match_paren(sql, m.end() - 1)
-        except Exception:
+            close = lx.close(m.end() - 1)
+        except UnsupportedTrinoSyntax:
             continue
-        body = sql[m.end() : close]
-        bd, binstr = d._scan_maps(body)
-        sel = frm = None
-        for sm in re.finditer(r"\bSELECT\b", body, re.I):
-            if not binstr[sm.start()] and bd[sm.start()] == 0:
-                sel = sm
-                break
-        if sel is None:
-            out[name] = None
-            continue
-        for fm in re.finditer(r"\bFROM\b", body, re.I):
-            if (
-                fm.start() > sel.end()
-                and not binstr[fm.start()]
-                and bd[fm.start()] == 0
-            ):
-                frm = fm
-                break
+        blx = lex(sql[m.end() : close])
+        sel = _top_kw(blx, r"\bSELECT\b")
+        frm = next(blx.at_depth(r"\bFROM\b", 0, sel.end() + 1), None) if sel else None
         if frm is None:
             out[name] = None
             continue
         cols = set()
         ok = True
-        for item in d._split_top_level(body[sel.end() : frm.start()]):
+        for item in split(blx.text[sel.end() : frm.start()], angle=True):
             am = re.search(r"\bAS\s+([A-Za-z_]\w*)\s*$", item, re.I)
             pm = _PLAIN_REF.match(item) if am is None else None
             if am:
@@ -181,13 +186,9 @@ def _cte_columns(sql: str) -> dict[str, frozenset | None]:
 def _collect_refs(text: str) -> list[tuple[str | None, str, int]]:
     """(qualifier, column, offset) for every column-shaped token; raises
     _Bail on nothing — unresolvable tokens are handled by the resolver."""
-    d = _helpers()
-    _, instr = d._scan_maps(text)
     refs = []
-    for m in _REF.finditer(text):
+    for m in lex(text).finditer(_REF):
         i = m.start()
-        if instr[i]:
-            continue
         if i > 0 and (text[i - 1].isdigit() or text[i - 1] in "._'\""):
             continue  # inside a number/identifier/literal tail
         after = text[m.end() :].lstrip()
@@ -222,19 +223,10 @@ def _resolve(sources, q, c):
 
 
 def _parse_from(from_clause: str):
-    d = _helpers()
-    depths, instr = d._scan_maps(from_clause)
-    for i, ch in enumerate(from_clause):
-        if ch == "," and depths[i] == 0 and not instr[i]:
-            raise _Bail()
-    for bm in _BANNED_FROM.finditer(from_clause):
-        if depths[bm.start()] == 0 and not instr[bm.start()]:
-            raise _Bail()
-    cuts = [
-        jm
-        for jm in re.finditer(r"\bJOIN\b", from_clause, re.I)
-        if depths[jm.start()] == 0 and not instr[jm.start()]
-    ]
+    lx = lex(from_clause)
+    if _top_kw(lx, ",") or _top_kw(lx, _BANNED_FROM):
+        raise _Bail()
+    cuts = list(lx.at_depth(r"\bJOIN\b", 0))
     segs = []
     bounds = [0] + [jm.start() for jm in cuts] + [len(from_clause)]
     for i in range(len(bounds) - 1):
@@ -277,105 +269,41 @@ def _ref_parts(t: str) -> tuple[str | None, str]:
     )
 
 
-#: Default OFF — measured r16 on tpcds_sql_q64 at sf0.1 (interleaved
-#: A/B, noop sink): the narrow-key aggregation itself wins (the two
-#: fact-agg stages drop 678->564 / 643->528 ms CPU, their exchanges
-#: 5.31->3.78 / 5.36->3.74 MB), but lifting the dims puts Join nodes
-#: between the self-join and the materialized aggregate stages, and
-#: Spark's size-only join estimate (product of child sizes) then blows
-#: past the broadcast threshold, so AQE no longer converts the
-#: cross_sales self-join to broadcast BEFORE its exchanges launch: two
-#: new 5.28/3.94 MB exchanges + sorts appear, netting +0.2 s CPU and
-#: +54% shuffle bytes (2241->2444 ms CPU, 11.2->17.3 MB; CBO on does
-#: not change the estimate). The rewrite is kept (verified exact on all
-#: 8 affected texts vs DuckDB, plus the Spark oracle) for the shape
-#: where it composes with a consumer-side narrow-key rewrite; enable
-#: per-call with force=True.
-ENABLED = False
-
-
-def rewrite_eager_dim_agg(sql: str, force: bool = False) -> str:
-    if not (ENABLED or force):
-        return sql
-    search_from = 0
-    while True:
-        hit = _try_block(sql, search_from)
-        if hit is None:
-            return sql
-        new_sql, resume = hit
-        if new_sql is None:
-            search_from = resume
-        else:
-            sql, search_from = new_sql, resume
-
-
-def _try_block(sql: str, search_from: int):
-    """Find the next GROUP BY block from search_from; return
-    (new_sql_or_None, resume_index), or None when no block remains."""
-    d = _helpers()
-    depths, instr = d._scan_maps(sql)
-    m = None
-    for cand in _GROUP_BY.finditer(sql, search_from):
-        if not instr[cand.start()]:
-            m = cand
-            break
-    if m is None:
-        return None
-    try:
-        res = _rewrite_block(sql, m, depths, instr)
-    except _Bail:
-        return (None, m.end())
-    if res is None:
-        return (None, m.end())
-    return res  # (new_sql, index just past the spliced block)
-
-
-def _rewrite_block(sql, m, depths, instr, emit="join"):
-    d = _helpers()
-    dep = depths[m.start()]
+def _rewrite_block(sql, m):
+    """Analyse the GROUP BY block whose keyword match is ``m`` when the
+    block is EXACTLY a CTE body (``name AS ( <block> )``): the lifted
+    dimension sources and the pre-aggregation that replaces the block.
+    Returns the parts dict _narrow_cte_and_consumer consumes, None when
+    the block is no CTE body or no dimension lifts; raises _Bail on
+    ineligible shapes."""
+    lx = lex(sql)
+    dep = lx.depth(m.start())
     # owning SELECT / FROM / WHERE at this depth
-    sel = None
-    for sm in re.finditer(r"\bSELECT\b", sql[: m.start()], re.I):
-        if not instr[sm.start()] and depths[sm.start()] == dep:
-            sel = sm
-    if sel is None:
+    owner_sel = _owning_select(lx, m.start())
+    if owner_sel is None:
         raise _Bail()
-    if re.match(r"\s*DISTINCT\b", sql[sel.end() : m.start()], re.I):
-        raise _Bail()
-    frm = None
-    for fm in re.finditer(r"\bFROM\b", sql[sel.end() : m.start()], re.I):
-        p = sel.end() + fm.start()
-        if not instr[p] and depths[p] == dep:
-            frm = (p, sel.end() + fm.end())
-            break
-    if frm is None:
-        raise _Bail()
-    select_list = sql[sel.end() : frm[0]]
-    whr = None
-    for wm in re.finditer(r"\bWHERE\b", sql[frm[1] : m.start()], re.I):
-        p = frm[1] + wm.start()
-        if not instr[p] and depths[p] == dep:
-            whr = (p, frm[1] + wm.end())
-            break
-    from_clause = sql[frm[1] : (whr[0] if whr else m.start())]
-    where_clause = sql[whr[0] : m.start()] if whr else ""
+    sel, frm = owner_sel
+    body_open = lx.encl(sel.start())
+    if (
+        body_open not in lx.closes
+        or sql[body_open + 1 : sel.start()].strip()
+    ):
+        return None
+    cte_m = re.search(r"([A-Za-z_]\w*)\s+AS\s*$", sql[:body_open], re.I)
+    if cte_m is None:
+        return None
+    select_list = sql[sel.end() : frm.start()]
+    whr = next(lx.at_depth(r"\bWHERE\b", dep, frm.end(), m.start()), None)
+    from_clause = sql[frm.end() : (whr.start() if whr else m.start())]
+    where_clause = sql[whr.start() : m.start()] if whr else ""
     if "__ea_pre" in from_clause or "__roll_pre" in from_clause:
         raise _Bail()
     # scope end and tail: HAVING/ORDER BY/... after the keys -> bail
-    scope_end = len(sql)
-    for p in range(m.end(), len(sql)):
-        if not instr[p] and depths[p] < dep:
-            scope_end = p
-            break
-    tail_m = _CLAUSE_AFTER_GROUP.search(sql, m.end(), scope_end)
-    while tail_m is not None and (
-        instr[tail_m.start()] or depths[tail_m.start()] != dep
-    ):
-        tail_m = _CLAUSE_AFTER_GROUP.search(sql, tail_m.end(), scope_end)
-    if tail_m is not None:
+    scope_end = lx.scope_end(m.start())
+    if next(lx.at_depth(_CLAUSE_AFTER_GROUP, dep, m.end(), scope_end), None):
         raise _Bail()
     keys_text = sql[m.end() : scope_end]
-    keys = d._split_top_level(keys_text)
+    keys = split(keys_text, angle=True)
     if not keys or any(not k or k.startswith("(") or k[0].isdigit() for k in keys):
         raise _Bail()
     if re.search(r"\bSELECT\b", select_list, re.I) or re.search(
@@ -409,21 +337,20 @@ def _rewrite_block(sql, m, depths, instr, emit="join"):
             owner(q, c)
 
     # ---- aggregate calls in the SELECT list (hardened classification) ----
-    _, sinstr = d._scan_maps(select_list)
+    slx = lex(select_list)
+    dec_cols = None
     sums = []  # (start, end, arg, is_sum)
-    for am in re.finditer(r"\b([A-Za-z_]\w*)\s*\(", select_list):
-        if sinstr[am.start()]:
-            continue
+    for am in slx.finditer(r"\b([A-Za-z_]\w*)\s*\(", flags=0):
         name = am.group(1).upper()
-        if name.lower() in d._NONAGG_CALL_NAMES:
+        if name.lower() in _NONAGG_CALL_NAMES:
             continue
         a_open = am.end() - 1
-        a_close = d._match_paren(select_list, a_open)
+        a_close = slx.close(a_open)
         arg = select_list[a_open + 1 : a_close]
         if name == "SUM":
-            if not d._is_decimal_cast(
-                arg, d._decimal_cols_for_scope(sql, from_clause)
-            ):
+            if dec_cols is None:
+                dec_cols = _decimal_cols_for_scope(sql, from_clause)
+            if not _is_decimal_cast(arg, dec_cols):
                 raise _Bail()
             sums.append((am.start(), a_close + 1, arg, True))
         elif name == "COUNT" and arg.strip() == "*":
@@ -528,7 +455,7 @@ def _rewrite_block(sql, m, depths, instr, emit="join"):
                     raise _Bail()
 
     # ---- select items that change must carry an AS alias ----
-    items = d._split_top_level(select_list)
+    items = split(select_list, angle=True)
     # offsets of items within select_list for change detection
     off = 0
     item_spans = []
@@ -612,9 +539,9 @@ def _rewrite_block(sql, m, depths, instr, emit="join"):
             + r"\s+".join(re.escape(tok) for tok in key_text.split())
             + (r"(?![\w.])" if re.match(r"[\w]", key_text[-1]) else "")
         )
-        new_sel = d._sub_code(pat, repl, new_sel)
+        new_sel = lex(new_sel).sub(pat, repl)
     # alias check: items whose text changed must end in AS <name>
-    new_items = d._split_top_level(new_sel)
+    new_items = split(new_sel, angle=True)
     if len(new_items) != len(items):
         raise _Bail()
     for old, new in zip(items, new_items):
@@ -623,44 +550,25 @@ def _rewrite_block(sql, m, depths, instr, emit="join"):
         ):
             raise _Bail()
 
-    if emit == "parts":
-        return {
-            "sel_start": sel.start(),
-            "scope_end": scope_end,
-            "items": items,
-            "new_sel": new_sel,
-            "inner": inner,
-            "lifted": lifted,
-            "exposed": exposed,
-            "owner": owner,
-        }
-    # ---- outer FROM: pre-agg + the lifted dims in original order ----
-    outer_from = [f"({inner}) AS __ea_pre"]
-    for s in lifted:
-        seg = s.text
-        head = seg[: seg.upper().index(" ON ")] if " ON " in seg.upper() else None
-        if head is None:
-            hm = re.match(r"^(.*?)\bON\b", seg, re.I | re.S)
-            head = hm.group(1)
-        dim_ref = (
-            f"{s.alias}.{getattr(s, '_k_self')}"
-            if s.alias.lower() != s.table
-            else f"{s.table}.{getattr(s, '_k_self')}"
-        )
-        anchor_name = exposed[_norm_ref(getattr(s, "_anchor"))]
-        outer_from.append(f"JOIN {head.strip()} ON {dim_ref} = {anchor_name}")
-    block = f"SELECT {new_sel.strip()} FROM {' '.join(outer_from)} "
-    new_sql = sql[: sel.start()] + block + sql[scope_end:]
-    return (new_sql, sel.start() + len(block))
+    return {
+        "cte": cte_m.group(1),
+        "cte_at": cte_m.start(1),
+        "sel_start": sel.start(),
+        "scope_end": scope_end,
+        "items": items,
+        "new_sel": new_sel,
+        "inner": inner,
+        "lifted": lifted,
+        "exposed": exposed,
+        "owner": owner,
+    }
 
 
 # ---------------------------------------------------------------------------
 # CTE self-join narrowing: the composition that makes eager aggregation a
 # WIN on the q64 shape (guide §8 — decide with small rows, attach strings
-# at the very end). The plain block-level rewrite above loses locally
-# because dim joins between the self-join and the materialized aggregate
-# stages blow Spark's size-product join estimate and AQE stops broadcast-
-# converting the self-join. Here the CTE itself exposes ONLY surrogate
+# at the very end; the module docstring has the measurements). The CTE
+# itself exposes ONLY surrogate
 # keys (the aggregate sits directly atop its exchange, so AQE's runtime
 # conversion works again), the self-join equality on a dimension attribute
 # is rewritten to the equivalent surrogate-key equality (attribute is
@@ -679,25 +587,27 @@ def _rewrite_block(sql, m, depths, instr, emit="join"):
 # dimension joins on both instances).
 # ---------------------------------------------------------------------------
 
+_STAR_ITEM = re.compile(
+    r"(?:\bSELECT(?:\s+(?:DISTINCT|ALL))?|,)\s*(?:(?P<q>[A-Za-z_]\w*)\s*\.\s*)?\*",
+    re.I,
+)
+_CONSUMER_CLAUSE = re.compile(
+    r"\b(WHERE|GROUP\s+BY|ORDER\s+BY|HAVING|LIMIT|UNION|INTERSECT|EXCEPT|WINDOW)\b",
+    re.I,
+)
 _ITEM_REF = re.compile(
     r"^\s*((?:[A-Za-z_]\w*\.)?([A-Za-z_]\w*))(?:\s+AS\s+([A-Za-z_]\w*))?\s*$",
     re.I,
 )
 
 
-def rewrite_cte_selfjoin_narrow(sql: str, force: bool = False) -> str:
-    if not (ENABLED_CTE_NARROW or force):
-        return sql
-    d = _helpers()
-    depths, instr = d._scan_maps(sql)
-    for m in _GROUP_BY.finditer(sql):
-        if instr[m.start()]:
-            continue
+def rewrite_cte_selfjoin_narrow(sql: str) -> str:
+    for m in lex(sql).finditer(_GROUP_BY):
         try:
-            parts = _rewrite_block(sql, m, depths, instr, emit="parts")
+            parts = _rewrite_block(sql, m)
         except _Bail:
             continue
-        if not isinstance(parts, dict):
+        if parts is None:
             continue
         try:
             out = _narrow_cte_and_consumer(sql, parts)
@@ -709,25 +619,10 @@ def rewrite_cte_selfjoin_narrow(sql: str, force: bool = False) -> str:
 
 
 def _narrow_cte_and_consumer(sql: str, P: dict) -> str | None:
-    d = _helpers()
-    sel_start, scope_end = P["sel_start"], P["scope_end"]
-    # the block must be EXACTLY a CTE body: `name AS ( <block> )`
-    if scope_end >= len(sql) or sql[scope_end] != ")":
-        return None
-    j = sel_start - 1
-    while j >= 0 and sql[j].isspace():
-        j -= 1
-    if j < 0 or sql[j] != "(":
-        return None
-    if d._match_paren(sql, j) != scope_end:
-        return None
-    hm = re.search(r"([A-Za-z_]\w*)\s+AS\s*$", sql[:j], re.I)
-    if hm is None:
-        return None
-    cte = hm.group(1)
+    sel_start, scope_end, cte = P["sel_start"], P["scope_end"], P["cte"]
     lifted, owner, exposed = P["lifted"], P["owner"], P["exposed"]
     items = P["items"]
-    new_items = d._split_top_level(P["new_sel"])
+    new_items = split(P["new_sel"], angle=True)
     if len(new_items) != len(items):
         return None
 
@@ -774,13 +669,11 @@ def _narrow_cte_and_consumer(sql: str, P: dict) -> str | None:
     # ---- the consumer: everything after the CTE body close ----
     head, close, tail = sql[:sel_start], sql[scope_end], sql[scope_end + 1 :]
     cte_pat = re.compile(rf"(?<![\w.]){re.escape(cte)}(?![\w.])", re.I)
-    if cte_pat.search(head[: hm.start(1)]):
+    if cte_pat.search(head[: P["cte_at"]]):
         return None  # referenced before its definition — not our shape
-    td, ti = d._scan_maps(tail)
+    tlx = lex(tail)
     instances: list[tuple[int, str]] = []
-    for mm in cte_pat.finditer(tail):
-        if ti[mm.start()]:
-            continue
+    for mm in tlx.finditer(cte_pat):
         before = tail[: mm.start()].rstrip()
         if not re.search(r"\b(FROM|JOIN)$", before, re.I):
             return None  # referenced outside a FROM — not our shape
@@ -793,20 +686,27 @@ def _narrow_cte_and_consumer(sql: str, P: dict) -> str | None:
         instances.append((mm.start(), am.group(1)))
     if not instances:
         return None
-    inst_depth = td[instances[0][0]]
-    if any(td[p] != inst_depth for p, _ in instances):
+    inst_depth = tlx.depth(instances[0][0])
+    if any(tlx.depth(p) != inst_depth for p, _ in instances):
         return None  # instances in different scopes
     aliases = [a for _, a in instances]
-    if len(set(a.lower() for a in aliases)) != len(aliases):
+    alias_set = {a.lower() for a in aliases}
+    if len(alias_set) != len(aliases):
         return None
+
+    # ---- guard: a star select item (SELECT * over the instances, or
+    # <instance>.*) would expose the hidden anchor columns and lose the
+    # dropped attributes ----
+    for sm in tlx.finditer(_STAR_ITEM):
+        q = sm.group("q")
+        if (q.lower() in alias_set) if q else tlx.depth(sm.start()) == inst_depth:
+            return None
 
     # ---- guard: every reference to a DROPPED att is qualified and in a
     # rewritable position (select item, or both-sides ON equality) ----
     dropped = {a for a, (_, _, keeps) in att_out.items() if not keeps}
     for a in dropped:
-        for mm in re.finditer(rf"(?<![\w.]){a}(?![\w.])", tail, re.I):
-            if ti[mm.start()]:
-                continue
+        for mm in tlx.finditer(rf"(?<![\w.]){a}(?![\w.])"):
             before = tail[: mm.start()].rstrip()
             if before.endswith("."):
                 continue  # qualified — handled below
@@ -828,14 +728,11 @@ def _narrow_cte_and_consumer(sql: str, P: dict) -> str | None:
             re.I,
         )
         pieces, last = [], 0
-        _, pti = d._scan_maps(new_tail)
-        for mo in pair.finditer(new_tail):
-            if pti[mo.start()]:
-                continue  # inside a string literal — leave verbatim
+        for mo in lex(new_tail).finditer(pair):
             x, y = mo.group(1), mo.group(2)
             if (
-                x.lower() in {al.lower() for al in aliases}
-                and y.lower() in {al.lower() for al in aliases}
+                x.lower() in alias_set
+                and y.lower() in alias_set
                 and uniq
             ):
                 pieces.append(new_tail[last : mo.start()])
@@ -861,12 +758,9 @@ def _narrow_cte_and_consumer(sql: str, P: dict) -> str | None:
         )
         pieces = []
         last = 0
-        _, nti = d._scan_maps(new_tail)
-        for mo in qref.finditer(new_tail):
-            if nti[mo.start()]:
-                continue
+        for mo in lex(new_tail).finditer(qref):
             x = mo.group(1)
-            if x.lower() not in {al.lower() for al in aliases}:
+            if x.lower() not in alias_set:
                 return None  # some other relation exposes this name — bail
             # must be a complete select-list item: ends at a top-level
             # comma or the FROM keyword, starts after SELECT or a comma
@@ -886,27 +780,14 @@ def _narrow_cte_and_consumer(sql: str, P: dict) -> str | None:
     # ---- add one dimension join per (instance, lifted dim) so groups
     # whose key has no dimension row are dropped exactly as the original
     # CTE dropped their input rows ----
-    td2, ti2 = d._scan_maps(new_tail)
+    nlx = lex(new_tail)
     # insertion point: first same-depth clause keyword / scope exit after
     # the last instance
-    last_inst = max(
-        mm.start()
-        for mm in cte_pat.finditer(new_tail)
-        if not ti2[mm.start()] and td2[mm.start()] == inst_depth
-    )
-    insert_at = len(new_tail)
-    clause = re.compile(
-        r"\b(WHERE|GROUP\s+BY|ORDER\s+BY|HAVING|LIMIT|UNION|INTERSECT|EXCEPT|WINDOW)\b",
-        re.I,
-    )
-    for p in range(last_inst, len(new_tail)):
-        if not ti2[p] and td2[p] < inst_depth:
-            insert_at = p
-            break
-        cm = clause.match(new_tail, p)
-        if cm and not ti2[p] and td2[p] == inst_depth:
-            insert_at = p
-            break
+    last_inst = max(mm.start() for mm in nlx.at_depth(cte_pat, inst_depth))
+    insert_at = nlx.scope_end(last_inst)
+    cm = next(nlx.at_depth(_CONSUMER_CLAUSE, inst_depth, last_inst, insert_at), None)
+    if cm is not None:
+        insert_at = cm.start()
     joins = []
     for x in aliases:
         for s in lifted:
@@ -923,18 +804,3 @@ def _narrow_cte_and_consumer(sql: str, P: dict) -> str | None:
         + new_tail[insert_at:]
     )
     return head + new_body + close + new_tail
-
-
-#: Default ON — measured r16 on tpcds_sql_q64 at sf0.1 (interleaved A/B,
-#: noop sink): executor CPU 2749 -> 2519 ms (-8%), shuffle write
-#: 11.20 -> 7.95 MB (-29%), wall min 2.15 -> 1.99 s. The shuffle ledger
-#: proves the mechanism: 7.95 MB = cs_ui (0.53) + the two narrow
-#: surrogate-key aggregate exchanges (3.78 + 3.74) and NOTHING else —
-#: the self-join exchanges never materialize because the aggregate sits
-#: directly atop its exchange again and AQE broadcast-converts the
-#: self-join at re-planning, while the dimension joins probe the final
-#: 406-row joined output instead of 2 x 86k group rows. At 100 TB the
-#: same shape is strictly better still: the per-group exchanges carry
-#: ints instead of ~70 bytes of strings, and the attributes attach
-#: after the most selective join (guide §8).
-ENABLED_CTE_NARROW = True

@@ -68,32 +68,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from witdb_spark.plans.dialect import (
-    UnsupportedTrinoSyntax,
-    _in_string_scan,
-    _match_paren,
-    _scan_maps,
-    transpile,
-)
+from witdb_spark.plans.dialect import UnsupportedTrinoSyntax, transpile
+from witdb_spark.plans.lexer import lex, split
 
-
-def _split_args(text: str) -> list[str]:
-    """Split on commas at paren/bracket depth 0, string-aware. Unlike
-    dialect._split_top_level this does NOT treat < > as brackets — DEFINE
-    and MEASURES bodies are expressions full of comparison operators."""
-    parts, depth, start = [], 0, 0
-    for i, c, in_str in _in_string_scan(text):
-        if in_str:
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(text[start:i].strip())
-            start = i + 1
-    parts.append(text[start:].strip())
-    return parts
 
 _MR_HEAD = re.compile(
     r"\b([A-Za-z_][A-Za-z0-9_.]*)\s+MATCH_RECOGNIZE\s*\(", re.I
@@ -122,26 +99,23 @@ def _parse_clause(body: str) -> dict:
         r"ALL\s+ROWS\s+PER\s+MATCH|AFTER\s+MATCH|PATTERN|SUBSET|DEFINE)\b",
         re.I,
     )
-    depths, instr = _scan_maps(body)
-    marks = [
-        m for m in pat.finditer(body)
-        if not instr[m.start()] and depths[m.start()] == 0
-    ]
+    lx = lex(body)
+    marks = [m for m in lx.finditer(pat) if lx.depth(m.start()) == 0]
     for i, m in enumerate(marks):
         kw = " ".join(m.group(1).upper().split())
         seg = body[m.end() : marks[i + 1].start() if i + 1 < len(marks) else len(body)]
         seg = seg.strip()
         if kw == "PARTITION BY":
-            spec["partition_by"] = [c.strip() for c in _split_args(seg)]
+            spec["partition_by"] = [c.strip() for c in split(seg)]
         elif kw == "ORDER BY":
-            keys = _split_args(seg)
+            keys = split(seg)
             if len(keys) != 1 or re.search(r"\bDESC\b", keys[0], re.I):
                 raise UnsupportedTrinoSyntax(
                     "MATCH_RECOGNIZE ORDER BY: exactly one ascending key"
                 )
             spec["order_by"] = keys[0].strip()
         elif kw == "MEASURES":
-            for item in _split_args(seg):
+            for item in split(seg):
                 mm = re.match(r"^(.*?)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$",
                               item.strip(), re.I | re.S)
                 if not mm:
@@ -165,13 +139,13 @@ def _parse_clause(body: str) -> dict:
             seg = seg.strip()
             if not seg.startswith("("):
                 raise UnsupportedTrinoSyntax("PATTERN needs parentheses")
-            close = _match_paren(seg, 0)
+            close = lex(seg).close(0)
             spec["pattern"] = seg[1:close].strip()
         elif kw == "SUBSET":
             # SUBSET S = (A, B), T = (C) — union variables (reference
             # Matcher.java / SqlBase.g4 SUBSET clause)
             spec["subset"] = {}
-            for item in _split_args(seg):
+            for item in split(seg):
                 sm = re.match(
                     r"^([A-Za-z_][A-Za-z0-9_]*)\s*=\s*\(([^)]*)\)$", item.strip()
                 )
@@ -182,7 +156,7 @@ def _parse_clause(body: str) -> dict:
                 ]
         elif kw == "DEFINE":
             spec["define"] = {}
-            for item in _split_args(seg):
+            for item in split(seg):
                 dm = re.match(r"^([A-Za-z_][A-Za-z0-9_]*)\s+AS\s+(.*)$",
                               item.strip(), re.I | re.S)
                 if not dm:
@@ -280,7 +254,7 @@ def _wrap_bare_columns(e: str, ord_col: str, data_cols) -> str:
         m = callee.search(masked)
         if m is None:
             break
-        close = _match_paren(masked, masked.index("(", m.start()))
+        close = lex(masked).close(masked.index("(", m.start()))
         placeholders.append(masked[m.start() : close + 1])
         masked = (
             masked[: m.start()]
@@ -485,8 +459,6 @@ def _extract_navs(measures):
     FINAL default). Each call is replaced by a placeholder column that
     _lower materializes by joining the row-number-indexed source
     partition at anchor_rn -+ n."""
-    from witdb_spark.plans.dialect import _split_call_args
-
     navs = []  # (PREV|NEXT, FIRST|LAST, inner_expr, n, placeholder, explicit)
     out = []
     for expr, name in measures:
@@ -495,8 +467,8 @@ def _extract_navs(measures):
             if m is None:
                 break
             open_idx = expr.index("(", m.start())
-            close = _match_paren(expr, open_idx)
-            parts = _split_call_args(expr[open_idx + 1 : close])
+            close = lex(expr).close(open_idx)
+            parts = split(expr[open_idx + 1 : close])
             inner = parts[0].strip()
             n = 1
             if len(parts) > 1:
@@ -525,7 +497,7 @@ def _ph_inside_agg(measures, ph: str) -> bool:
     agg_call = re.compile(r"\b(?:" + "|".join(_AGG_NAMES) + r")\s*\(", re.I)
     for expr, _name in measures:
         for m in agg_call.finditer(expr):
-            close = _match_paren(expr, expr.index("(", m.start()))
+            close = lex(expr).close(expr.index("(", m.start()))
             if re.search(rf"\b{ph}\b", expr[m.start() : close + 1]):
                 return True
     return False
@@ -538,15 +510,13 @@ def rewrite_match_recognize(spark: SparkSession, sql: str) -> str:
     """Replace every `<table> MATCH_RECOGNIZE (...) [AS alias]` relation in
     `sql` with a computed temp view; returns the rewritten query text."""
     while True:
-        depths, instr = _scan_maps(sql)
-        m = next(
-            (c for c in _MR_HEAD.finditer(sql) if not instr[c.start()]), None
-        )
+        lx = lex(sql)
+        m = lx.search(_MR_HEAD)
         if m is None:
             return sql
         table = m.group(1)
         open_idx = m.end() - 1
-        close_idx = _match_paren(sql, open_idx)
+        close_idx = lx.close(open_idx)
         spec = _parse_clause(sql[open_idx + 1 : close_idx])
         am = _ALIAS.match(sql, close_idx + 1)
         alias = None
@@ -835,11 +805,9 @@ def has_pattern_window(sql: str) -> bool:
     """True if the query has a WINDOW clause whose body contains a row
     pattern (reference SqlBase.g4 windowFrame: MEASURES/PATTERN/DEFINE
     inside a window specification)."""
-    depths, instr = _scan_maps(sql)
-    for m in _PATTERN_WINDOW.finditer(sql):
-        if instr[m.start()]:
-            continue
-        close = _match_paren(sql, m.end() - 1)
+    lx = lex(sql)
+    for m in lx.finditer(_PATTERN_WINDOW):
+        close = lx.close(m.end() - 1)
         if re.search(r"\bPATTERN\s*\(", sql[m.end() : close], re.I):
             return True
     return False
@@ -872,16 +840,13 @@ def rewrite_pattern_windows(spark: SparkSession, sql: str) -> str:
     from witdb_spark.operators.match_recognize import match_recognize
 
     while True:
-        depths, instr = _scan_maps(sql)
+        lx = lex(sql)
         m = next(
             (
                 c
-                for c in _PATTERN_WINDOW.finditer(sql)
-                if not instr[c.start()]
-                and re.search(
-                    r"\bPATTERN\s*\(",
-                    sql[c.end() : _match_paren(sql, c.end() - 1)],
-                    re.I,
+                for c in lx.finditer(_PATTERN_WINDOW)
+                if re.search(
+                    r"\bPATTERN\s*\(", sql[c.end() : lx.close(c.end() - 1)], re.I
                 )
             ),
             None,
@@ -890,7 +855,7 @@ def rewrite_pattern_windows(spark: SparkSession, sql: str) -> str:
             return sql
         wname = m.group(1)
         open_idx = m.end() - 1
-        close_idx = _match_paren(sql, open_idx)
+        close_idx = lx.close(open_idx)
         body = sql[open_idx + 1 : close_idx]
         # frame extent: Trino requires CURRENT ROW .. UNBOUNDED FOLLOWING
         # for pattern windows; strip it (and INITIAL) before clause parse
@@ -921,10 +886,8 @@ def rewrite_pattern_windows(spark: SparkSession, sql: str) -> str:
         fm = next(
             (
                 c
-                for c in re.finditer(
-                    r"\bFROM\s+([A-Za-z_][A-Za-z0-9_.]*)", sql, re.I
-                )
-                if not instr[c.start()] and depths[c.start()] == 0
+                for c in lx.finditer(r"\bFROM\s+([A-Za-z_][A-Za-z0-9_.]*)")
+                if lx.depth(c.start()) == 0
             ),
             None,
         )

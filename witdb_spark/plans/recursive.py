@@ -37,7 +37,7 @@ import re
 
 from pyspark.sql import DataFrame
 
-from witdb_spark.plans.dialect import _match_paren, _scan_maps
+from witdb_spark.plans.lexer import lex
 
 _HEAD = re.compile(
     r"^\s*WITH\s+RECURSIVE\s+([A-Za-z_][A-Za-z0-9_]*)\s*"
@@ -55,9 +55,9 @@ def has_recursive(sql: str) -> bool:
 
 def _split_body(body: str) -> tuple[str, str, bool]:
     """(anchor, step, is_union_all): split at the FIRST top-level UNION."""
-    depths, instr = _scan_maps(body)
-    for m in _UNION.finditer(body):
-        if not instr[m.start()] and depths[m.start()] == 0:
+    lx = lex(body)
+    for m in lx.finditer(_UNION):
+        if lx.depth(m.start()) == 0:
             return (
                 body[: m.start()].strip(),
                 body[m.end():].strip(),
@@ -78,7 +78,7 @@ def execute_recursive(engine, sql: str) -> DataFrame:
     name = m.group(1)
     cols = [c.strip() for c in m.group(2).split(",")] if m.group(2) else None
     open_idx = sql.index("(", m.end() - 1)
-    close_idx = _match_paren(sql, open_idx)
+    close_idx = lex(sql).close(open_idx)
     anchor, step, union_all = _split_body(sql[open_idx + 1 : close_idx])
     rest = sql[close_idx + 1 :].strip()
 

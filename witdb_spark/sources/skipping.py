@@ -30,6 +30,8 @@ import datetime
 import re
 from dataclasses import dataclass
 
+from witdb_spark.plans.lexer import lex
+
 _IDENT = r"(?:`([^`]+)`|([A-Za-z_][A-Za-z0-9_]*))"
 _NUM = r"(-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)"
 _STR = r"'((?:[^']|'')*)'"
@@ -96,57 +98,21 @@ def _parse_ts(s: str) -> datetime.datetime:
 
 
 def _split_top(s: str, kw: str) -> list[str]:
-    """Split on a top-level keyword (outside quotes/parens, word
-    boundaries). Returns [s] when the keyword does not appear."""
-    parts, depth, i, start = [], 0, 0, 0
-    n, k = len(s), len(kw)
-    upper = s.upper()
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "'" and j + 1 < n and s[j + 1] == "'":
-                    j += 2
-                    continue
-                if s[j] == "'":
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and upper.startswith(kw, i)
-            and (i == 0 or (not s[i - 1].isalnum() and s[i - 1] != "_"))
-            and (
-                i + k >= n
-                or (not s[i + k].isalnum() and s[i + k] != "_")
-            )
-        ):
-            parts.append(s[start:i])
-            start = i + k
-            i += k
-            continue
-        i += 1
+    """Split on a top-level keyword (outside strings, comments and
+    brackets; whole words only). Returns [s] when it does not appear."""
+    lx = lex(s)
+    parts, start = [], 0
+    for i in lx.top_level():
+        if lx.toks[i].upper() == kw:
+            parts.append(s[start : lx.starts[i]])
+            start = lx.starts[i] + len(kw)
     parts.append(s[start:])
     return parts
 
 
 def _strip_parens(s: str) -> str:
     s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(s):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    return s
+    while s.startswith("(") and lex(s).closes.get(0) == len(s) - 1:
         s = s[1:-1].strip()
     return s
 
