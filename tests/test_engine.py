@@ -1480,6 +1480,167 @@ def test_sql_ctas_lakehouse(spark, tmp_path):
     ).collect()[0].n == 5
 
 
+def _jobs_run_by(spark, action) -> int:
+    """Spark jobs ``action()`` runs, read from the status store under a
+    job tag of its own (listener bus drained on both sides)."""
+    import uuid
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tag = f"jobs-{uuid.uuid4().hex}"
+    bus.waitUntilEmpty()
+    sc.addJobTag(tag)
+    try:
+        action()
+    finally:
+        sc.removeJobTag(tag)
+    bus.waitUntilEmpty()
+    return len(list(sc._jsc.sc().statusTracker().getJobIdsForTag(tag)))
+
+
+def test_statement_results_run_no_job(spark, tmp_path):
+    """Lakehouse statement results are local relations: collecting the
+    summary Engine.sql returns for CTAS/INSERT/UPDATE/DELETE/MERGE on
+    Delta and Iceberg, SHOW TABLES and DESCRIBE runs no Spark job (the
+    reference returns them from the coordinator,
+    TableFinishOperator.java:51)."""
+    eng = Engine(spark)
+    spark.range(3).createOrReplaceTempView("no_job_src")
+    for fmt in ("delta", "iceberg"):
+        t = str(tmp_path / f"no_job_{fmt}")
+        stmts = [
+            f"CREATE TABLE {fmt}.'{t}' AS SELECT CAST(id AS BIGINT) AS k,"
+            " CAST(id % 3 AS BIGINT) AS v FROM range(20)",
+            f"INSERT INTO {fmt}.'{t}' VALUES (100, 1), (101, 2)",
+            f"UPDATE {fmt}.'{t}' SET v = v + 1 WHERE k < 5",
+            f"DELETE FROM {fmt}.'{t}' WHERE k = 7",
+            f"MERGE INTO {fmt}.'{t}' t USING (SELECT CAST(id AS BIGINT)"
+            " AS k FROM range(18, 23)) s ON t.k = s.k WHEN MATCHED THEN"
+            " UPDATE SET v = 0 WHEN NOT MATCHED THEN INSERT (k, v)"
+            " VALUES (s.k, 9)",
+        ]
+        for q in stmts:
+            df = eng.sql(q)
+            rows: list = []
+            jobs = _jobs_run_by(spark, lambda: rows.extend(df.collect()))
+            assert (jobs, len(rows)) == (0, 1), q
+        assert sorted(
+            r.k for r in eng.sql(f"SELECT k FROM {fmt}.'{t}'").collect()
+        ) == [k for k in range(23) if k != 7] + [100, 101]
+    for q in ("SHOW TABLES", "DESCRIBE no_job_src"):
+        df = eng.sql(q)
+        assert _jobs_run_by(spark, df.collect) == 0, q
+    assert [r.Column for r in eng.sql("DESCRIBE no_job_src").collect()] == [
+        "id"
+    ]
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    """local_frame builds the same schema and rows as
+    createDataFrame(rows, ddl) for every statement-result type, NULLs
+    included, and refuses types whose values could convert differently
+    on the Arrow path (timestamp/date)."""
+    from witdb_spark.local_frame import local_frame
+
+    ddl = "s string, b bigint, i int, d double, f boolean"
+    rows = [
+        ("x", 2**40, -7, 2.5, True),
+        (None, None, None, None, None),
+        ("", 0, 0, -0.0, False),
+    ]
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema == want.schema and empty.collect() == []
+    for bad in ("t timestamp", "s string, d date"):
+        with pytest.raises(TypeError):
+            local_frame(spark, [], bad)
+
+
+def test_insert_reports_committed_rows(spark, tmp_path):
+    """INSERT reports the rows the writer committed — the count and
+    the write see the same rows even for a non-deterministic query —
+    for Delta, Iceberg and Hudi COW/MOR; a Delta ANALYZE sidecar's
+    rowCount grows by that same count (its batch is read from the
+    committed files)."""
+    import json
+
+    from witdb_spark.sources.delta_log import extended_stats_file
+    from witdb_spark.sources.hudi_meta import write_hudi_mor_create
+
+    eng = Engine(spark)
+    base = "SELECT CAST(id AS BIGINT) AS k, CAST(id AS DOUBLE) AS v"
+    tables = {}
+    for fmt in ("delta", "iceberg", "hudi"):
+        t = str(tmp_path / f"ins_{fmt}")
+        eng.sql(
+            f"CREATE TABLE {fmt}.'{t}' WITH (record_key = 'k') AS"
+            f" {base} FROM range(10)"
+        ).collect()
+        tables[fmt] = t
+    tables["hudi_mor"] = str(tmp_path / "ins_hudi_mor")
+    write_hudi_mor_create(
+        spark, spark.sql(f"{base} FROM range(10)").coalesce(1),
+        tables["hudi_mor"], record_key="k",
+    )
+    eng.sql(f"ANALYZE delta.'{tables['delta']}'").collect()
+    sidecar = extended_stats_file(tables["delta"])
+    assert json.load(open(sidecar))["rowCount"] == 10.0
+    for name, t in tables.items():
+        fmt = name.split("_")[0]
+
+        def count() -> int:
+            return eng.sql(
+                f"SELECT count(*) AS n FROM {fmt}.'{t}'"
+            ).collect()[0].n
+
+        before = count()
+        rows = eng.sql(
+            f"INSERT INTO {fmt}.'{t}' {base} FROM range(1000, 1400)"
+            " WHERE rand() < 0.5"
+        ).collect()[0].rows
+        assert 0 < rows < 400, name
+        assert count() - before == rows, name
+        if name == "delta":
+            assert json.load(open(sidecar))["rowCount"] == 10.0 + rows
+
+
+def test_insert_nondeterministic_partitions_into_mor(spark, tmp_path):
+    """A MOR INSERT whose query takes its partition value from the
+    clock (each run of the query sees a new one) and keeps rows at
+    random commits and reports the table's row-count growth: the
+    writer reads the query once, so no row can land in a partition an
+    earlier read of the same query never produced."""
+    from witdb_spark.sources.hudi_meta import write_hudi_mor_create
+
+    eng = Engine(spark)
+    t = str(tmp_path / "mor_rand_parts")
+    write_hudi_mor_create(
+        spark,
+        spark.sql(
+            "SELECT CAST(id AS BIGINT) AS k, CAST(id AS DOUBLE) AS v,"
+            " CAST(id % 2 AS BIGINT) AS p FROM range(4)"
+        ).coalesce(1),
+        t, record_key="k", partition_by=["p"],
+    )
+
+    def count() -> int:
+        return eng.sql(
+            f"SELECT count(*) AS n FROM hudi.'{t}'"
+        ).collect()[0].n
+
+    rows = eng.sql(
+        f"INSERT INTO hudi.'{t}' SELECT CAST(id AS BIGINT) AS k,"
+        " CAST(id AS DOUBLE) AS v,"
+        " unix_micros(current_timestamp()) % 1000000 + 2 AS p"
+        " FROM range(100, 160) WHERE rand() < 0.5"
+    ).collect()[0].rows
+    assert 0 < rows < 60
+    assert count() == 4 + rows
+
+
 def test_sql_ctas_delta_table_properties(spark, tmp_path):
     """r12: CTAS WITH the trino-delta-lake table-property spellings —
     column_mapping_mode / change_data_feed_enabled /

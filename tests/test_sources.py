@@ -8332,3 +8332,62 @@ def test_iceberg_dynamic_overwrite_maintenance_walks(spark, tmp_path):
         (r.id, r.r, r.tag)
         for r in read_iceberg_snapshot(spark, t).collect()
     } == want
+
+
+def test_delta_ctas_decimal_stats(spark, tmp_path):
+    """Per-file Delta stats isolate each column: a DECIMAL(18,2)
+    column (INT64-backed, bounds pyarrow cannot extract) and a
+    DECIMAL(38,4) column (Decimal bounds JSON cannot encode) lose only
+    their own min/max — CTAS succeeds, every add keeps numRecords,
+    nullCount and the other columns' bounds, and skipping on the
+    decimal column still returns the right rows."""
+    import json
+
+    from witdb_spark.engine import Engine
+
+    eng = Engine(spark)
+    for prec in ("18,2", "38,4"):
+        t = str(tmp_path / f"dec_{prec.replace(',', '_')}")
+        eng.sql(
+            f"CREATE TABLE delta.'{t}' AS SELECT CAST(id AS BIGINT) k,"
+            f" CAST(id * 1.25 AS DECIMAL({prec})) amt FROM range(10)"
+        ).collect()
+        with open(f"{t}/_delta_log/{0:020d}.json") as fh:
+            adds = [
+                a["add"] for a in map(json.loads, fh) if "add" in a
+            ]
+        stats = [json.loads(a["stats"]) for a in adds]
+        assert sum(st["numRecords"] for st in stats) == 10, prec
+        for st in stats:
+            assert st["nullCount"] == {"k": 0, "amt": 0}, prec
+            assert "amt" not in st["minValues"], prec
+            if st["numRecords"]:
+                assert st["minValues"]["k"] <= st["maxValues"]["k"], prec
+        assert eng.sql(
+            f"SELECT count(*) AS n FROM delta.'{t}' WHERE amt > 5"
+        ).collect()[0].n == 5, prec
+
+
+def test_connector_probe_memoized_per_context(spark, tmp_path, monkeypatch):
+    """connector_available probes the JVM once per (SparkContext,
+    format): the classpath is fixed at launch, so ten read_table calls
+    on one format pay one Class.forName round trip, not ten."""
+    from witdb_spark.sources import lakehouse
+    from witdb_spark.sources.delta_log import write_delta
+
+    t = str(tmp_path / "probe_memo")
+    write_delta(spark, spark.range(3), t, mode="create")
+    calls: list[str] = []
+    probe = lakehouse._probe_connector
+
+    def counting_probe(spark_, fmt):
+        calls.append(fmt)
+        return probe(spark_, fmt)
+
+    monkeypatch.setattr(lakehouse, "_probe_connector", counting_probe)
+    monkeypatch.setattr(
+        spark.sparkContext, "_witdb_connector_memo", {}, raising=False
+    )
+    for _ in range(10):
+        assert lakehouse.read_table(spark, "delta", t).count() == 3
+    assert calls == ["delta"]

@@ -126,6 +126,12 @@ class Tables:
         # or persisted: every query still computes from the parquet
         # files; only the schema lookup stops repeating (guide §5 —
         # the driver should do almost no work).
+        # Assumes immutable fixtures: the reader snapshots the schema
+        # and the file listing at first access, so a fixture directory
+        # regenerated or appended to within one session keeps serving
+        # the first listing. Fixture sets are written once and only
+        # read after that; a caller that rewrites one must use a fresh
+        # sf_dir (or session) to see the new files.
         memo = getattr(self._spark, "_witdb_df_memo", None)
         if memo is None:
             memo = {}

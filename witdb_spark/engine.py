@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from witdb_spark.catalog import Tables
 from witdb_spark.functions import register_all
+from witdb_spark.local_frame import local_frame
 from witdb_spark.plans import transpile
 from witdb_spark.plans.lexer import UnsupportedTrinoSyntax, is_comment, lex, split
 
@@ -248,8 +249,8 @@ class Engine:
                     self.spark, m.group("path"),
                     [e for e in joined if e],
                 )
-                return self.spark.createDataFrame(
-                    [(spec_id,)], "spec_id int"
+                return local_frame(
+                    self.spark, [(spec_id,)], "spec_id int"
                 )
             # plain property: 'string' | true/false | number
             raw = m.group("val").strip().rstrip(";").strip()
@@ -300,8 +301,8 @@ class Engine:
                     " supported jar-free (the reference's hudi"
                     " connector is read-only)"
                 )
-            return self.spark.createDataFrame(
-                [(key, "" if val is None else val)],
+            return local_frame(
+                self.spark, [(key, "" if val is None else val)],
                 "key string, value string",
             )
         m = re.match(
@@ -329,7 +330,8 @@ class Engine:
                         f"{path} is not a {fmt} table"
                     )
                 shutil.rmtree(path)
-                return self.spark.createDataFrame(
+                return local_frame(
+                    self.spark,
                     [(path, "dropped")], "path string, result string"
                 )
             if fmt == "delta":
@@ -346,8 +348,8 @@ class Engine:
                 from witdb_spark.sources.hudi_meta import hudi_truncate
 
                 res = str(hudi_truncate(self.spark, path))
-            return self.spark.createDataFrame(
-                [(path, res)], "path string, result string"
+            return local_frame(
+                self.spark, [(path, res)], "path string, result string"
             )
         m = re.match(
             r"^\s*CREATE\s+TABLE\s+(?P<fmt>delta|iceberg|hudi)\s*\.\s*"
@@ -408,45 +410,16 @@ class Engine:
                         if vm.group("s") is not None
                         else vm.group("b").lower()
                     )
-            # persist before counting: count() + the write would
-            # otherwise evaluate the query twice — a double scan, and
-            # a non-deterministic query could commit different rows
-            # than it reports (r12 ADVICE)
-            df = self.sql(m.group("q")).persist()
-            try:
-                n = df.count()
-                if fmt == "delta":
-                    from witdb_spark.sources.delta_log import (
-                        write_delta,
-                    )
-
-                    write_delta(
-                        self.spark, df, path, mode="create",
-                        partition_by=part_by,
-                        configuration=configuration or None,
-                    )
-                elif fmt == "iceberg":
-                    from witdb_spark.sources.iceberg_meta import (
-                        write_iceberg,
-                    )
-
-                    write_iceberg(
-                        self.spark, df, path, mode="create",
-                        partition_by=part_by,
-                    )
-                else:
-                    from witdb_spark.sources.hudi_meta import (
-                        write_hudi,
-                    )
-
-                    write_hudi(
-                        self.spark, df, path, mode="create",
-                        record_key=record_key, partition_by=part_by,
-                    )
-            finally:
-                df.unpersist()
-            return self.spark.createDataFrame(
-                [(path, n)], "path string, rows bigint"
+            # the writer reports the rows it staged: one evaluation of
+            # the query, and the count is the committed rows even for a
+            # non-deterministic query (r12 ADVICE)
+            n = self._lake_write(
+                fmt, self.sql(m.group("q")), path, "create",
+                partition_by=part_by, record_key=record_key,
+                configuration=configuration or None,
+            )
+            return local_frame(
+                self.spark, [(path, n)], "path string, rows bigint"
             )
         dml = self._sql_lakehouse_dml(text)
         if dml is not None:
@@ -482,7 +455,8 @@ class Engine:
                 except Exception:
                     val = None
                 rows.append((name, val if val is not None else "", conf))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 rows, "Name string, Value string, `Spark Conf` string"
             )
         m = re.match(
@@ -505,16 +479,16 @@ class Engine:
                 # EXPLAIN must NEVER execute DML (only EXPLAIN ANALYZE
                 # runs its statement, per the reference's semantics)
                 if etype == "VALIDATE":
-                    return self.spark.createDataFrame(
-                        [(True,)], "Valid boolean"
+                    return local_frame(
+                        self.spark, [(True,)], "Valid boolean"
                     )
-                return self.spark.createDataFrame(
-                    [(dml_desc,)], "`Query Plan` string"
+                return local_frame(
+                    self.spark, [(dml_desc,)], "`Query Plan` string"
                 )
             if etype == "VALIDATE":
                 self.sql(m.group(2))  # analysis errors propagate
-                return self.spark.createDataFrame(
-                    [(True,)], "Valid boolean"
+                return local_frame(
+                    self.spark, [(True,)], "Valid boolean"
                 )
             if etype == "IO":
                 # the scanned-relations surface of the plan (reference
@@ -527,22 +501,22 @@ class Engine:
                     ln.strip() for ln in plan.splitlines()
                     if "Scan" in ln or "Relation" in ln
                 ) or plan
-                return self.spark.createDataFrame(
-                    [(scans,)], "`Query Plan` string"
+                return local_frame(
+                    self.spark, [(scans,)], "`Query Plan` string"
                 )
             mode = "extended" if etype == "LOGICAL" else "formatted"
             df = self.sql(m.group(2))
             plan = df._jdf.queryExecution().explainString(
                 self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
             )
-            return self.spark.createDataFrame(
-                [(plan,)], "`Query Plan` string"
+            return local_frame(
+                self.spark, [(plan,)], "`Query Plan` string"
             )
         m = re.match(r"^\s*EXPLAIN\s+(ANALYZE\s+)?(.+)$", text, re.I | re.S)
         if m and not re.match(r"^\s*EXPLAIN\s+ANALYZE\s*$", text, re.I):
             plan = self.explain(m.group(2), analyze=bool(m.group(1)))
-            return self.spark.createDataFrame(
-                [(plan,)], "`Query Plan` string"
+            return local_frame(
+                self.spark, [(plan,)], "`Query Plan` string"
             )
         m = re.match(
             r"^\s*DESCRIBE\s+([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$", text, re.I
@@ -550,8 +524,8 @@ class Engine:
         if m:  # Trino DESCRIBE == SHOW COLUMNS (DescribeTask delegates)
             return self.show_columns(m.group(1))
         if re.match(r"^\s*SHOW\s+TABLES\s*;?\s*$", text, re.I):
-            return self.spark.createDataFrame(
-                [(t,) for t in self.tables()], "Table string"
+            return local_frame(
+                self.spark, [(t,) for t in self.tables()], "Table string"
             )
         if re.match(r"^\s*SHOW\s+FUNCTIONS\s*;?\s*$", text, re.I):
             # reference ShowFunctionsRewrite: the Trino-name surface =
@@ -570,8 +544,8 @@ class Engine:
                 "date_diff", "date_format", "bit_count",
             }
             names = sorted(set(PASSTHROUGH) | set(MACROS) | temp | dialect_names)
-            return self.spark.createDataFrame(
-                [(n,) for n in names], "Function string"
+            return local_frame(
+                self.spark, [(n,) for n in names], "Function string"
             )
         m = re.match(
             r"^\s*SHOW\s+CREATE\s+VIEW\s+([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
@@ -582,7 +556,7 @@ class Engine:
             if name not in self._views:
                 raise KeyError(f"View not found: {name!r}")
             ddl = f"CREATE VIEW {name} AS\n{self._views[name]}"
-            return self.spark.createDataFrame([(ddl,)], "`Create View` string")
+            return local_frame(self.spark, [(ddl,)], "`Create View` string")
         m = re.match(
             r"^\s*SHOW\s+CREATE\s+TABLE\s+([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
             text, re.I,
@@ -594,13 +568,13 @@ class Engine:
                 for f in self.spark.table(name).schema.fields
             )
             ddl = f"CREATE TABLE {name} (\n   {cols}\n)"
-            return self.spark.createDataFrame([(ddl,)], "`Create Table` string")
+            return local_frame(self.spark, [(ddl,)], "`Create Table` string")
         if re.match(r"^\s*SHOW\s+CATALOGS\s*;?\s*$", text, re.I):
             rows = [(c.name,) for c in self.spark.catalog.listCatalogs()]
-            return self.spark.createDataFrame(rows, "Catalog string")
+            return local_frame(self.spark, rows, "Catalog string")
         if re.match(r"^\s*SHOW\s+SCHEMAS\s*;?\s*$", text, re.I):
             rows = [(d.name,) for d in self.spark.catalog.listDatabases()]
-            return self.spark.createDataFrame(rows, "Schema string")
+            return local_frame(self.spark, rows, "Schema string")
         m = re.match(
             r"^\s*DESCRIBE\s+(INPUT|OUTPUT)\s+([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
             text, re.I,
@@ -615,21 +589,21 @@ class Engine:
                 # (the reference reports 'unknown' for untyped params too)
                 n = sum(1 for _ in lex(prepared[name]).finditer(r"\?"))
                 rows = [(i, "unknown") for i in range(n)]
-                return self.spark.createDataFrame(
-                    rows, "Position int, Type string"
-                ) if rows else self.spark.createDataFrame(
-                    [], "Position int, Type string"
+                return local_frame(
+                    self.spark, rows, "Position int, Type string"
                 )
             # OUTPUT: bind NULLs to parameters and describe the result schema
             schema = self.sql(lex(prepared[name]).sub(r"\?", "NULL")).schema
             rows = [(f.name, f.dataType.simpleString()) for f in schema.fields]
-            return self.spark.createDataFrame(rows, "`Column Name` string, Type string")
+            return local_frame(
+                self.spark, rows, "`Column Name` string, Type string"
+            )
         if re.match(r"^\s*SHOW\s+SESSION\s*;?\s*$", text, re.I):
             rows = [
                 (prop, self.spark.conf.get(conf, None) or "")
                 for prop, conf in SESSION_PROPERTIES.items()
             ]
-            return self.spark.createDataFrame(rows, "Name string, Value string")
+            return local_frame(self.spark, rows, "Name string, Value string")
         m = _CREATE_MV.match(text)
         if m:
             return self.create_materialized_view(
@@ -813,8 +787,8 @@ class Engine:
                     " directory"
                 )
             self._registered_tables[name.lower()] = (tfmt, tpath)
-            return self.spark.createDataFrame(
-                [(name.lower(), tfmt, tpath)],
+            return local_frame(
+                self.spark, [(name.lower(), tfmt, tpath)],
                 "name string, format string, path string",
             )
         if proc == "unregister_table":
@@ -822,8 +796,8 @@ class Engine:
             if name not in self._registered_tables:
                 raise ValueError(f"no registered table {args[0]!r}")
             tfmt, tpath = self._registered_tables.pop(name)
-            return self.spark.createDataFrame(
-                [(name, tfmt, tpath)],
+            return local_frame(
+                self.spark, [(name, tfmt, tpath)],
                 "name string, format string, path string",
             )
         path = args[0]
@@ -862,8 +836,8 @@ class Engine:
             if len(args) < 2:
                 raise ValueError("system.restore needs a version")
             res = delta_restore(self.spark, path, int(args[1]))
-            return self.spark.createDataFrame(
-                [(path, res["version"], res["files_added"],
+            return local_frame(
+                self.spark, [(path, res["version"], res["files_added"],
                   res["files_removed"])],
                 "path string, version bigint, files_added bigint,"
                 " files_removed bigint",
@@ -895,7 +869,8 @@ class Engine:
                     "m": 60_000, "s": 1_000,
                 }[rm.group(2)]
             res = delta_vacuum(self.spark, path, retain_ms=retain_ms)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(path, res["deleted"])], "path string, deleted_files bigint"
             )
         if proc == "optimize":
@@ -908,7 +883,8 @@ class Engine:
                 )
 
                 r = iceberg_optimize(self.spark, path, target_files=target)
-                return self.spark.createDataFrame(
+                return local_frame(
+                    self.spark,
                     [(path, r["snapshot_id"], r["files_rewritten"])],
                     "path string, snapshot_id bigint,"
                     " files_rewritten bigint",
@@ -932,12 +908,12 @@ class Engine:
                     inst = hudi_cluster(
                         self.spark, path, target_groups=target
                     )
-                return self.spark.createDataFrame(
-                    [(path, inst)], "path string, instant string"
+                return local_frame(
+                    self.spark, [(path, inst)], "path string, instant string"
                 )
             res = delta_optimize(self.spark, path, target_files=target)
-            return self.spark.createDataFrame(
-                [(path, res["version"], res["files_before"],
+            return local_frame(
+                self.spark, [(path, res["version"], res["files_before"],
                   res["files_after"])],
                 "path string, version bigint, files_before bigint,"
                 " files_after bigint",
@@ -952,7 +928,8 @@ class Engine:
             res = iceberg_expire_snapshots(
                 path, keep_last=keep, spark=self.spark
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(path, res["expired_snapshots"], res["deleted_files"])],
                 "path string, expired_snapshots bigint,"
                 " deleted_files bigint",
@@ -968,7 +945,8 @@ class Engine:
                     "system.rollback_to_snapshot needs a snapshot id"
                 )
             sid = iceberg_rollback_to_snapshot(path, int(args[1]))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(path, sid)], "path string, current_snapshot_id bigint"
             )
         if proc == "drop_extended_stats":
@@ -980,8 +958,8 @@ class Engine:
                     iceberg_drop_statistics,
                 )
 
-                return self.spark.createDataFrame(
-                    [(path, iceberg_drop_statistics(path))],
+                return local_frame(
+                    self.spark, [(path, iceberg_drop_statistics(path))],
                     "path string, dropped boolean",
                 )
             if fmt != "delta":
@@ -993,8 +971,8 @@ class Engine:
             existed = os.path.exists(f)
             if existed:
                 os.remove(f)
-            return self.spark.createDataFrame(
-                [(path, existed)], "path string, dropped boolean"
+            return local_frame(
+                self.spark, [(path, existed)], "path string, dropped boolean"
             )
         if proc == "remove_orphan_files":
             # reference RemoveOrphanFilesTableProcedure.java (r13)
@@ -1023,7 +1001,8 @@ class Engine:
             res = iceberg_remove_orphan_files(
                 path, retention_ms=retain_ms, spark=self.spark
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(path, res["scanned_files"], res["deleted_files"])],
                 "path string, scanned_files bigint,"
                 " deleted_files bigint",
@@ -1046,8 +1025,8 @@ class Engine:
             )
 
             res = iceberg_cherry_pick(path, int(args[1]))
-            return self.spark.createDataFrame(
-                [(path, res["source_snapshot_id"],
+            return local_frame(
+                self.spark, [(path, res["source_snapshot_id"],
                   res["current_snapshot_id"])],
                 "path string, source_snapshot_id bigint,"
                 " current_snapshot_id bigint",
@@ -1070,8 +1049,8 @@ class Engine:
                     " '<to>')"
                 )
             res = iceberg_fast_forward(path, args[1], args[2])
-            return self.spark.createDataFrame(
-                [(path, res["branch"], res["previous_head"],
+            return local_frame(
+                self.spark, [(path, res["branch"], res["previous_head"],
                   res["current_head"])],
                 "path string, branch string, previous_head bigint,"
                 " current_head bigint",
@@ -1082,7 +1061,8 @@ class Engine:
 
             keep = int(args[1]) if len(args) > 1 else 1
             res = hudi_clean(path, keep_last=keep)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(path, res["retained_instants"], res["deleted_files"])],
                 "path string, retained_instants bigint,"
                 " deleted_files bigint",
@@ -1091,7 +1071,8 @@ class Engine:
             self.spark, path,
             v2=(len(args) > 1 and str(args[1]).lower() == "v2"),
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(path, version)], "path string, checkpointed_version bigint"
         )
 
@@ -1274,6 +1255,48 @@ class Engine:
         ]
         return out
 
+    def _lake_write(
+        self,
+        fmt: str,
+        df: DataFrame,
+        path: str,
+        mode: str,
+        partition_by: list[str] | None = None,
+        record_key: str | None = None,
+        configuration: dict[str, str] | None = None,
+    ) -> int:
+        """CTAS (``mode='create'``) / INSERT (``'append'``) through the
+        jar-free writers; returns the rows the commit holds, as the
+        writer counted them from what it staged."""
+        if fmt == "delta":
+            from witdb_spark.sources.delta_log import _write_delta
+
+            return _write_delta(
+                self.spark, df, path, mode=mode,
+                partition_by=partition_by, configuration=configuration,
+            )[1]
+        if fmt == "iceberg":
+            from witdb_spark.sources.iceberg_meta import _write_iceberg
+
+            return _write_iceberg(
+                self.spark, df, path, mode=mode, partition_by=partition_by
+            )[1]
+        from witdb_spark.sources.hudi_meta import (
+            _hudi_log_insert,
+            _properties,
+            _write_hudi,
+        )
+
+        if (
+            mode == "append"
+            and _properties(path).get("hoodie.table.type") == "MERGE_ON_READ"
+        ):
+            return _hudi_log_insert(self.spark, path, df)[1]
+        return _write_hudi(
+            self.spark, df, path, mode=mode,
+            record_key=record_key, partition_by=partition_by,
+        )[1]
+
     def _sql_lakehouse_dml(self, text: str):
         """SQL-text DML on jar-free lakehouse path tables — the
         reference's front door for DELETE/UPDATE/MERGE (io.trino.sql.tree
@@ -1358,42 +1381,13 @@ class Engine:
                         for c, f in zip(df.columns, target.fields)
                     ]
                 )
-            # persist before counting: single evaluation for the
-            # count AND the write (r12 ADVICE — a non-deterministic
-            # query must commit exactly the rows it reports)
-            df = df.persist()
-            try:
-                n = df.count()
-                if fmt == "delta":
-                    from witdb_spark.sources.delta_log import (
-                        write_delta,
-                    )
-
-                    write_delta(self.spark, df, path, mode="append")
-                elif fmt == "iceberg":
-                    from witdb_spark.sources.iceberg_meta import (
-                        write_iceberg,
-                    )
-
-                    write_iceberg(self.spark, df, path, mode="append")
-                else:
-                    from witdb_spark.sources.hudi_meta import (
-                        _properties,
-                        hudi_log_insert,
-                        write_hudi,
-                    )
-
-                    if (
-                        _properties(path).get("hoodie.table.type")
-                        == "MERGE_ON_READ"
-                    ):
-                        hudi_log_insert(self.spark, path, df)
-                    else:
-                        write_hudi(self.spark, df, path, mode="append")
-            finally:
-                df.unpersist()
-            return self.spark.createDataFrame(
-                [(path, n)], "path string, rows bigint"
+            # the count is what the writer committed (reference
+            # TableFinishOperator.java:51 sums its page sinks' rows):
+            # one evaluation, and a non-deterministic query reports
+            # exactly the rows it committed (r12 ADVICE)
+            n = self._lake_write(fmt, df, path, "append")
+            return local_frame(
+                self.spark, [(path, n)], "path string, rows bigint"
             )
         m = _re.match(
             r"^\s*DELETE\s+FROM\s+" + self._DML_TABLE
@@ -1405,8 +1399,8 @@ class Engine:
             # no WHERE = every row (ANSI DELETE semantics)
             pred = fragment(m.group("pred")) if m.group("pred") else "true"
             res = self._dml_dispatch(fmt, "delete", path, pred)
-            return self.spark.createDataFrame(
-                [(path, str(res))], "path string, result string"
+            return local_frame(
+                self.spark, [(path, str(res))], "path string, result string"
             )
         m = _re.match(
             r"^\s*UPDATE\s+" + self._DML_TABLE + r"\s+SET\s+",
@@ -1447,8 +1441,8 @@ class Engine:
             res = self._dml_dispatch(
                 fmt, "update", path, pred, assignments
             )
-            return self.spark.createDataFrame(
-                [(path, str(res))], "path string, result string"
+            return local_frame(
+                self.spark, [(path, str(res))], "path string, result string"
             )
         m = _re.match(
             r"^\s*MERGE\s+INTO\s+" + self._DML_TABLE
@@ -1679,8 +1673,8 @@ class Engine:
         res = self._dml_dispatch(
             fmt, "merge", path, None, None, source, on_cols, kwargs
         )
-        return self.spark.createDataFrame(
-            [(path, str(res))], "path string, result string"
+        return local_frame(
+            self.spark, [(path, str(res))], "path string, result string"
         )
 
     def _dml_dispatch(
@@ -1821,11 +1815,11 @@ class Engine:
                 continue  # engine internals (__information_schema_*, __mr_rel_*)
             kind = "VIEW" if t.tableType in ("VIEW", "TEMPORARY") else "BASE TABLE"
             tables.append((cat, t.namespace[0] if t.namespace else "default", t.name, kind))
-        self.spark.createDataFrame(
-            tables or [(cat, "default", "", "")],
+        local_frame(
+            self.spark, tables,
             "table_catalog string, table_schema string, table_name string,"
             " table_type string",
-        ).where("table_name <> ''").createOrReplaceTempView(
+        ).createOrReplaceTempView(
             "__information_schema_tables"
         )
         cols = []
@@ -1839,20 +1833,20 @@ class Engine:
                     )
             except Exception:
                 continue  # dropped concurrently / unresolvable
-        self.spark.createDataFrame(
-            cols or [(cat, "default", "", "", 0, "", "")],
+        local_frame(
+            self.spark, cols,
             "table_catalog string, table_schema string, table_name string,"
             " column_name string, ordinal_position int, is_nullable string,"
             " data_type string",
-        ).where("table_name <> ''").createOrReplaceTempView(
+        ).createOrReplaceTempView(
             "__information_schema_columns"
         )
         views = [(cat, "default", n, sql) for n, sql in self._views.items()]
-        self.spark.createDataFrame(
-            views or [(cat, "default", "", "")],
+        local_frame(
+            self.spark, views,
             "table_catalog string, table_schema string, table_name string,"
             " view_definition string",
-        ).where("table_name <> ''").createOrReplaceTempView(
+        ).createOrReplaceTempView(
             "__information_schema_views"
         )
 
@@ -2075,8 +2069,8 @@ class Engine:
             from witdb_spark.sources.iceberg_meta import iceberg_analyze
 
             r = iceberg_analyze(self.spark, path)
-            return self.spark.createDataFrame(
-                [
+            return local_frame(
+                self.spark, [
                     (
                         path,
                         r["analyzed_columns"],
@@ -2155,8 +2149,8 @@ class Engine:
         with open(tmp, "w") as fh:
             _json.dump(out, fh)
         os.replace(tmp, target)
-        return self.spark.createDataFrame(
-            [(path, len(col_stats), float(r["__n"]))],
+        return local_frame(
+            self.spark, [(path, len(col_stats), float(r["__n"]))],
             "path string, analyzed_columns bigint, row_count double",
         )
 
@@ -2207,8 +2201,8 @@ class Engine:
                 )
             )
         rows.append((None, None, None, None, None, None, float(n)))
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "column_name string, data_size double, distinct_values_count"
             " double, nulls_fraction double, low_value string, high_value"
             " string, row_count double",
@@ -2316,8 +2310,8 @@ class Engine:
             f"CREATE TABLE {fmt}.\"{path}\" (\n   {cols}\n)\n"
             f"WITH (\n   {with_block}\n)"
         )
-        return self.spark.createDataFrame(
-            [(ddl,)], "`Create Table` string"
+        return local_frame(
+            self.spark, [(ddl,)], "`Create Table` string"
         )
 
     def show_columns(self, table: str) -> DataFrame:
@@ -2327,7 +2321,8 @@ class Engine:
             (f.name, f.dataType.simpleString(), "", f.metadata.get("comment", ""))
             for f in self.spark.table(table).schema.fields
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "Column string, Type string, Extra string, Comment string"
         )
 

@@ -20,8 +20,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from witdb_spark.catalog import Tables
+from witdb_spark.local_frame import local_frame
 from witdb_spark.queries.registry import register
-from witdb_spark.queries.shared import DEC, dsum, local_df, sql_sum
+from witdb_spark.queries.shared import DEC, dsum, sql_sum
 
 # DuckDB oracle twin of catalog.Tables._read_events: the parquet ts column is
 # TIMESTAMP(NANOS); both engines operate on exact int64 nanoseconds (ts_ns) so
@@ -384,7 +385,7 @@ def unnest_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def values_inline_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
-    tiers = local_df(
+    tiers = local_frame(
         spark,
         [
             ("1-URGENT", "hot"),
@@ -2201,7 +2202,7 @@ def iceberg_eqdelete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     write_iceberg(
         spark,
-        local_df(spark, [(0, "REBORN")],
+        local_frame(spark, [(0, "REBORN")],
                  "n_nationkey bigint, n_name string"),
         path,
         mode="append",

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from witdb_spark.catalog import Tables
 from witdb_spark.queries.registry import register
-from witdb_spark.queries.shared import local_df
+from witdb_spark.local_frame import local_frame
 
 # CCW triangles, 0.25-grid vertices, lattice-safe within [0,97)x[0,89)
 TRIANGLES: list[list[tuple[float, float]]] = [
@@ -85,10 +85,10 @@ def spatial_join_contains_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = t.events.select(
         "event_id", F.expr(_PX).alias("x"), F.expr(_PY_SPARK).alias("y")
     )
-    # VALUES LocalRelation, not createDataFrame: a python-parallelized
+    # LocalRelation, not createDataFrame(<list>): a python-parallelized
     # 6-row dim costs 32 python-worker tasks per downstream action in
-    # local[32] (see queries/shared.local_df)
-    polys = local_df(
+    # local[32] (see witdb_spark/local_frame.py)
+    polys = local_frame(
         spark,
         [(i, tri_wkt(tri)) for i, tri in enumerate(TRIANGLES)],
         "poly_id int, wkt string",

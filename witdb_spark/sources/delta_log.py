@@ -829,55 +829,18 @@ def _delta_add_can_match(
     return predicate_can_match(pred, atom_can_match)
 
 
-def read_delta_snapshot(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    timestamp_ms: int | None = None,
-    where: str | None = None,
-    _row_tags: bool = False,
-) -> DataFrame:
-    """Read a Delta table at a snapshot (latest, an explicit version, or
-    the last version committed at/before ``timestamp_ms``) without the
-    connector jar — reference TransactionLogAccess/CheckpointEntryIterator
-    analog. Returns a DataFrame in the table's declared column order.
-    r9: adds carrying deletion vectors read jar-free — each branch is
-    tagged with the parquet _metadata (file_path, row_index) and the
-    union anti-joins the DV positions, decoded on executors. r9 read
-    delta.columnMapping.mode=name tables (top-level); r10 extends
-    mapping to NESTED types (recursive physical schema, logical names
-    restored by a positional struct cast) and to mode=id (the read
-    schema carries each field's delta.columnMapping.id as
-    parquet.field.id metadata and Spark's native field-id resolution
-    matches columns — spark.sql.parquet.fieldId.read.enabled). Add
-    actions' partitionValues stay keyed by PHYSICAL names in both
-    modes (PROTOCOL.md "Column Mapping"). Reference analog:
-    plugin/trino-delta-lake/.../DeltaLakeSchemaSupport.java.
-    ``where`` (r10) turns on FILE SKIPPING: add entries are pruned by
-    partition values and per-file stats (the reference's TupleDomain
-    pruning over AddFileEntry stats) before the scan is built, then
-    the full predicate re-applies to the rows — pruning never changes
-    results; at fleet scale the win is never listing pruned files.
-    r14: snapshot PLANNING is distributed (_snapshot_files_plan) —
-    checkpoint add actions are never collected to the driver; file
-    skipping runs executor-side over the checkpoint relation and only
-    surviving (path, partitionValues, dv) triples come back."""
-    from pyspark.sql.types import StructField
-
-    _, metadata, _target, state, files_df = _snapshot_files_plan(
-        spark, path, version, timestamp_ms
-    )
+def _column_maps(spark: SparkSession, metadata: dict):
+    """(schema, mapping mode, phys, phys_part) of a metaData action.
+    phys: logical top-level name -> name to SELECT off the scan;
+    phys_part: logical name -> partitionValues key (physical in BOTH
+    mapping modes — the protocol keys partition values physically)."""
     schema = StructType.fromJson(json.loads(metadata["schemaString"]))
     cm_mode = (metadata.get("configuration") or {}).get(
         "delta.columnMapping.mode", "none"
     )
-    mapped = cm_mode in ("name", "id")
-    # phys: logical top-level name -> name to SELECT off the scan;
-    # phys_part: logical name -> partitionValues key (physical in BOTH
-    # mapping modes — the protocol keys partition values physically)
     phys = {f.name: f.name for f in schema.fields}
     phys_part = dict(phys)
-    if mapped:
+    if cm_mode in ("name", "id"):
         for f in schema.fields:
             phys_part[f.name] = _cm_physical_name(f)
         if cm_mode == "name":
@@ -893,70 +856,27 @@ def read_delta_snapshot(
             spark.conf.set(
                 "spark.sql.parquet.fieldId.read.enabled", "true"
             )
+    return schema, cm_mode, phys, phys_part
+
+
+def _scan_entries(
+    spark: SparkSession,
+    path: str,
+    metadata: dict,
+    entries: list[tuple],
+    _row_tags: bool = False,
+) -> DataFrame:
+    """The rows of the add ``entries`` — (log-relative path,
+    partitionValues dict, deletion-vector descriptor JSON or None) —
+    in the table's declared column order, logical names restored,
+    partition values typed, DV'd positions removed."""
+    from pyspark.sql.types import StructField
+
+    schema, cm_mode, phys, phys_part = _column_maps(spark, metadata)
+    mapped = cm_mode in ("name", "id")
     part_cols = list(metadata.get("partitionColumns") or [])
     part_fields = {f.name: f for f in schema.fields if f.name in part_cols}
     data_fields = [f for f in schema.fields if f.name not in part_cols]
-    pred = None
-    if where is not None:
-        from witdb_spark.sources.skipping import parse_predicate
-
-        pred = parse_predicate(where)
-    if pred is not None:  # None = unanalyzable -> scan everything
-        type_by_col = {
-            f.name: f.dataType.simpleString() for f in schema.fields
-        }
-        if state is not None:
-            state = {
-                k: add
-                for k, add in state.items()
-                if _delta_add_can_match(
-                    pred, add, part_cols, phys_part, type_by_col
-                )
-            }
-        else:
-            # checkpoint-backed snapshot: skipping runs WHERE the add
-            # entries live — on the executors — so pruned files' stats
-            # never ship to the driver (reference: the delta connector
-            # evaluates TupleDomain pruning in split generation)
-            _pred, _pc, _pp, _tbc = pred, part_cols, phys_part, type_by_col
-
-            def _prune(batches):
-                import pandas as _pd
-
-                for pdf in batches:
-                    keep = [
-                        _delta_add_can_match(
-                            _pred,
-                            {"partitionValues": pv, "stats": st},
-                            _pc,
-                            _pp,
-                            _tbc,
-                        )
-                        for pv, st in zip(pdf["pv"], pdf["stats"])
-                    ]
-                    yield pdf[_pd.Series(keep, index=pdf.index)]
-
-            files_df = files_df.mapInPandas(_prune, _FILES_ENTRY_SCHEMA)
-
-    # entries: (log-relative path, partitionValues dict, dv desc json).
-    # The checkpoint branch collects them WITHOUT the stats column —
-    # driver memory is O(surviving files x ~100 B), the FileIndex bound.
-    if state is not None:
-        entries = [
-            (
-                add["path"],
-                add.get("partitionValues") or {},
-                json.dumps(add["deletionVector"])
-                if add.get("deletionVector")
-                else None,
-            )
-            for add in state.values()
-        ]
-    else:
-        entries = [
-            (r["path"], r["pv"] or {}, r["dv"])
-            for r in files_df.select("path", "pv", "dv").collect()
-        ]
     if cm_mode == "name":
         data_schema = StructType(
             [
@@ -1060,7 +980,109 @@ def read_delta_snapshot(
     keep_cols = [f.name for f in schema.fields]
     if _row_tags:
         keep_cols += ["__dv_file", "__dv_pos"]
-    out = out.select(*keep_cols)
+    return out.select(*keep_cols)
+
+
+def read_delta_snapshot(
+    spark: SparkSession,
+    path: str,
+    version: int | None = None,
+    timestamp_ms: int | None = None,
+    where: str | None = None,
+    _row_tags: bool = False,
+) -> DataFrame:
+    """Read a Delta table at a snapshot (latest, an explicit version, or
+    the last version committed at/before ``timestamp_ms``) without the
+    connector jar — reference TransactionLogAccess/CheckpointEntryIterator
+    analog. Returns a DataFrame in the table's declared column order.
+    r9: adds carrying deletion vectors read jar-free — each branch is
+    tagged with the parquet _metadata (file_path, row_index) and the
+    union anti-joins the DV positions, decoded on executors. r9 read
+    delta.columnMapping.mode=name tables (top-level); r10 extends
+    mapping to NESTED types (recursive physical schema, logical names
+    restored by a positional struct cast) and to mode=id (the read
+    schema carries each field's delta.columnMapping.id as
+    parquet.field.id metadata and Spark's native field-id resolution
+    matches columns — spark.sql.parquet.fieldId.read.enabled). Add
+    actions' partitionValues stay keyed by PHYSICAL names in both
+    modes (PROTOCOL.md "Column Mapping"). Reference analog:
+    plugin/trino-delta-lake/.../DeltaLakeSchemaSupport.java.
+    ``where`` (r10) turns on FILE SKIPPING: add entries are pruned by
+    partition values and per-file stats (the reference's TupleDomain
+    pruning over AddFileEntry stats) before the scan is built, then
+    the full predicate re-applies to the rows — pruning never changes
+    results; at fleet scale the win is never listing pruned files.
+    r14: snapshot PLANNING is distributed (_snapshot_files_plan) —
+    checkpoint add actions are never collected to the driver; file
+    skipping runs executor-side over the checkpoint relation and only
+    surviving (path, partitionValues, dv) triples come back."""
+    _, metadata, _target, state, files_df = _snapshot_files_plan(
+        spark, path, version, timestamp_ms
+    )
+    schema, _cm_mode, _phys, phys_part = _column_maps(spark, metadata)
+    part_cols = list(metadata.get("partitionColumns") or [])
+    pred = None
+    if where is not None:
+        from witdb_spark.sources.skipping import parse_predicate
+
+        pred = parse_predicate(where)
+    if pred is not None:  # None = unanalyzable -> scan everything
+        type_by_col = {
+            f.name: f.dataType.simpleString() for f in schema.fields
+        }
+        if state is not None:
+            state = {
+                k: add
+                for k, add in state.items()
+                if _delta_add_can_match(
+                    pred, add, part_cols, phys_part, type_by_col
+                )
+            }
+        else:
+            # checkpoint-backed snapshot: skipping runs WHERE the add
+            # entries live — on the executors — so pruned files' stats
+            # never ship to the driver (reference: the delta connector
+            # evaluates TupleDomain pruning in split generation)
+            _pred, _pc, _pp, _tbc = pred, part_cols, phys_part, type_by_col
+
+            def _prune(batches):
+                import pandas as _pd
+
+                for pdf in batches:
+                    keep = [
+                        _delta_add_can_match(
+                            _pred,
+                            {"partitionValues": pv, "stats": st},
+                            _pc,
+                            _pp,
+                            _tbc,
+                        )
+                        for pv, st in zip(pdf["pv"], pdf["stats"])
+                    ]
+                    yield pdf[_pd.Series(keep, index=pdf.index)]
+
+            files_df = files_df.mapInPandas(_prune, _FILES_ENTRY_SCHEMA)
+
+    # The checkpoint branch collects the entries WITHOUT the stats
+    # column — driver memory is O(surviving files x ~100 B), the
+    # FileIndex bound.
+    if state is not None:
+        entries = [
+            (
+                add["path"],
+                add.get("partitionValues") or {},
+                json.dumps(add["deletionVector"])
+                if add.get("deletionVector")
+                else None,
+            )
+            for add in state.values()
+        ]
+    else:
+        entries = [
+            (r["path"], r["pv"] or {}, r["dv"])
+            for r in files_df.select("path", "pv", "dv").collect()
+        ]
+    out = _scan_entries(spark, path, metadata, entries, _row_tags)
     if where is not None:
         # skipping above is conservative; the full predicate re-applies
         # so pruning can NEVER change results
@@ -1902,22 +1924,21 @@ def _partition_values_from_rel(rel: str, part_cols: list[str]) -> dict:
     return vals
 
 
-def _file_stats_json(f: str) -> str | None:
+def _file_stats_json(md) -> str:
     """Per-file stats for the add action (PROTOCOL.md 'Per-file
     Statistics': numRecords/minValues/maxValues/nullCount), aggregated
-    from the parquet footer's row-group column statistics — what the
-    reference persists via AddFileEntry.stats and what
-    read_delta_snapshot's file skipping prunes on. Columns without
-    usable footer stats are simply omitted (readers treat missing
-    stats as unknown)."""
+    from the parquet footer ``md`` (pyarrow FileMetaData) row-group
+    column statistics — what the reference persists via
+    AddFileEntry.stats and what read_delta_snapshot's file skipping
+    prunes on. Columns without usable footer stats are simply omitted
+    (readers treat missing stats as unknown), one column at a time: a
+    column whose bounds pyarrow cannot extract (INT32/INT64-backed
+    DECIMAL) or JSON cannot encode (Decimal) loses only its own
+    min/max."""
     import datetime as _dt
 
-    import pyarrow.parquet as pq
+    import pyarrow as pa
 
-    try:
-        md = pq.ParquetFile(f).metadata
-    except Exception:
-        return None
     num_records = md.num_rows
     mins: dict = {}
     maxs: dict = {}
@@ -1951,7 +1972,11 @@ def _file_stats_json(f: str) -> str | None:
             if not st.has_min_max:
                 mins[name] = maxs[name] = None  # poison: drop below
                 continue
-            lo, hi = st.min, st.max
+            try:
+                lo, hi = st.min, st.max
+            except pa.ArrowNotImplementedError:
+                mins[name] = maxs[name] = None
+                continue
             if isinstance(lo, bytes):
                 try:
                     lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
@@ -1970,16 +1995,27 @@ def _file_stats_json(f: str) -> str | None:
             return v.isoformat()
         return v
 
-    stats = {
-        "numRecords": num_records,
-        "minValues": {k: ser(v) for k, v in mins.items() if v is not None},
-        "maxValues": {k: ser(v) for k, v in maxs.items() if v is not None},
-        "nullCount": nulls,
+    def encodable(v) -> bool:
+        try:
+            json.dumps(v, allow_nan=False)
+            return True
+        except (TypeError, ValueError):
+            return False
+
+    bounds = {
+        k: (ser(lo), ser(maxs[k]))
+        for k, lo in mins.items()
+        if lo is not None and maxs.get(k) is not None
     }
-    try:
-        return json.dumps(stats)
-    except (TypeError, ValueError):
-        return None
+    bounds = {k: b for k, b in bounds.items() if encodable(b)}
+    return json.dumps(
+        {
+            "numRecords": num_records,
+            "minValues": {k: b[0] for k, b in bounds.items()},
+            "maxValues": {k: b[1] for k, b in bounds.items()},
+            "nullCount": nulls,
+        }
+    )
 
 
 def _cm_write_type(dt):
@@ -2122,14 +2158,17 @@ def _cm_create_schema(df, mode: str) -> tuple[str, int]:
 
 def _stage_data_files(
     df, path: str, partition_by: list[str]
-) -> list[dict]:
+) -> tuple[list[dict], int]:
     """Write df's rows as parquet under the table root (hive dirs for
     partitions) and return their add actions, each carrying per-file
-    stats for data skipping. Files keep Spark's part-<task>-<uuid>
-    names, which are globally unique."""
+    stats for data skipping, plus the number of rows staged (summed
+    from the footers the stats are read from). Files keep Spark's
+    part-<task>-<uuid> names, which are globally unique."""
     import glob
     import shutil
     import uuid
+
+    import pyarrow.parquet as pq
 
     staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
     if partition_by:
@@ -2155,6 +2194,7 @@ def _stage_data_files(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staging)
     adds = []
+    rows = 0
     for f in glob.glob(
         os.path.join(staging, "**", "*.parquet"), recursive=True
     ):
@@ -2171,12 +2211,12 @@ def _stage_data_files(
             "modificationTime": _now_ms(),
             "dataChange": True,
         }
-        stats = _file_stats_json(dest)
-        if stats is not None:
-            add["stats"] = stats
+        md = pq.ParquetFile(dest).metadata
+        rows += md.num_rows
+        add["stats"] = _file_stats_json(md)
         adds.append({"add": add})
     shutil.rmtree(staging, ignore_errors=True)
-    return adds
+    return adds, rows
 
 
 def _cdf_enabled(metadata: dict) -> bool:
@@ -2307,7 +2347,7 @@ def write_delta(
     ``append`` commits adds, ``overwrite`` commits adds + removes of
     every currently-active file — all through the put-if-absent commit
     rule, with append retrying lost version races. Returns the
-    committed version.
+    committed version (_write_delta also returns the rows staged).
 
     ``txn_app_id`` + ``txn_version`` (r13, PROTOCOL.md 'Transaction
     Identifiers'): the commit also records a ``txn`` (SetTransaction)
@@ -2315,6 +2355,25 @@ def write_delta(
     txn version is an idempotent NO-OP (nothing staged, current
     version returned) — the exactly-once contract streaming sinks
     replay batches against."""
+    return _write_delta(
+        spark, df, path, mode, partition_by, configuration, txn_app_id,
+        txn_version,
+    )[0]
+
+
+def _write_delta(
+    spark: SparkSession,
+    df,
+    path: str,
+    mode: str = "append",
+    partition_by: list[str] | None = None,
+    configuration: dict[str, str] | None = None,
+    txn_app_id: str | None = None,
+    txn_version: int | None = None,
+) -> tuple[int, int]:
+    """write_delta returning (committed version, rows staged): the
+    count is summed from the staged files' footers, so it is the
+    number of rows the commit holds."""
     if mode not in ("create", "append", "overwrite"):
         raise ValueError("mode must be create/append/overwrite")
     if (txn_app_id is None) != (txn_version is None):
@@ -2351,7 +2410,7 @@ def write_delta(
             schema_string = df.schema.json()
             protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
             stage_df, stage_parts = df, part_cols
-        adds = _stage_data_files(stage_df, path, stage_parts)
+        adds, rows = _stage_data_files(stage_df, path, stage_parts)
         actions = [
             {
                 "commitInfo": {
@@ -2375,7 +2434,7 @@ def write_delta(
         ] + adds
         if not _try_commit(path, 0, actions):
             raise FileExistsError(f"{path}: version 0 already committed")
-        return 0
+        return 0, rows
     if not exists:
         raise FileNotFoundError(
             f"{path} is not a Delta table (use mode='create')"
@@ -2391,7 +2450,7 @@ def write_delta(
         if txn_app_id is not None:
             last = delta_txn_versions(spark, path).get(txn_app_id)
             if last is not None and int(txn_version) <= last:
-                return version  # already committed: idempotent no-op
+                return version, 0  # already committed: no-op
         part_cols = list(metadata.get("partitionColumns") or [])
         if partition_by is not None and list(partition_by) != part_cols:
             raise DeltaProtocolError(
@@ -2407,7 +2466,7 @@ def write_delta(
                 f" {df.columns}"
             )
         stage_df, stage_parts = _stage_physical(df, metadata)
-        adds = _stage_data_files(stage_df, path, stage_parts)
+        adds, rows = _stage_data_files(stage_df, path, stage_parts)
         actions: list[dict] = [
             {
                 "commitInfo": {
@@ -2433,10 +2492,12 @@ def write_delta(
         actions += adds
         if _try_commit(path, version + 1, actions):
             if mode == "append":
-                update_extended_stats_on_append(spark, path, df)
+                update_extended_stats_on_append(
+                    spark, path, metadata, adds
+                )
             else:
                 drop_extended_stats(path)
-            return version + 1
+            return version + 1, rows
         # lost the race: orphan the staged files (never referenced by
         # any commit — invisible to readers) and retry on fresh state
     raise DeltaProtocolError(
@@ -2496,7 +2557,7 @@ def _rewrite_matched_files(
         # column-mapped tables rewrite LOGICAL rows, then re-stage
         # physically (rename + parquet field ids) per the protocol
         stage_df, stage_parts = _stage_physical(rewrite(touched), metadata)
-        adds = _stage_data_files(stage_df, path, stage_parts)
+        adds, _ = _stage_data_files(stage_df, path, stage_parts)
         cdc_actions = (
             _stage_cdc_files(cdc_rows(touched), path, metadata)
             if cdc_rows is not None and _cdf_enabled(metadata)
@@ -2629,7 +2690,7 @@ def delta_update_where(
         # like the COW paths — appending logical-named files to a
         # mapped table would read back all-NULL
         stage_df, stage_parts = _stage_physical(updated, metadata)
-        adds = _stage_data_files(stage_df, path, stage_parts)
+        adds, _ = _stage_data_files(stage_df, path, stage_parts)
         if _cdf_enabled(metadata):
             pre = matched.drop("__dv_file", "__dv_pos")
             adds += _stage_cdc_files(
@@ -2699,7 +2760,7 @@ def _delta_merge_dv(
     # stage through the column-mapping physical form (same contract as
     # the COW/append paths — see delta_update_where)
     stage_df, stage_parts = _stage_physical(survivors, metadata)
-    adds = _stage_data_files(stage_df, path, stage_parts)
+    adds, _ = _stage_data_files(stage_df, path, stage_parts)
     if per_file:
         if _cdf_enabled(metadata):
             # MERGE's change stream: diff the matched image against
@@ -2802,7 +2863,7 @@ def delta_merge_into(
                 raise DeltaProtocolError(f"scanned file not in log: {f}")
             removed.append(by_abs[ap])
         stage_df, stage_parts = _stage_physical(merged, metadata)
-        adds = _stage_data_files(stage_df, path, stage_parts)
+        adds, _ = _stage_data_files(stage_df, path, stage_parts)
         if not removed and not adds:
             return {"version": version, "files_rewritten": 0}
         cdc_actions = []
@@ -3204,7 +3265,7 @@ def delta_optimize(spark: SparkSession, path: str, target_files: int = 1) -> dic
             df = df.coalesce(target_files)
         # column-mapped tables re-stage physically (r10)
         stage_df, stage_parts = _stage_physical(df, metadata)
-        adds = _stage_data_files(stage_df, path, stage_parts)
+        adds, _ = _stage_data_files(stage_df, path, stage_parts)
         for a in adds:
             a["add"]["dataChange"] = False
         actions = (
@@ -3454,16 +3515,28 @@ def drop_extended_stats(path: str) -> bool:
     return False
 
 
-def update_extended_stats_on_append(spark, path: str, df) -> None:
+def update_extended_stats_on_append(
+    spark, path: str, metadata: dict, adds: list[dict]
+) -> None:
     """Post-commit, best-effort: if an ANALYZE sidecar exists, merge
     the appended batch's HLL registers into each analyzed column's
     sketch (per-register MAX — sketch union), re-resolve NDV from the
     merged sketch, and add the batch's string/binary byte sizes.
+    The batch is read back from the committed ``adds``, never
+    re-evaluated from the writer's query, so a non-deterministic
+    query's sidecar counts exactly the rows the commit holds.
     Sidecars from before sketches were persisted (no 'hll' key) can't
     be merged and are dropped instead of being served stale."""
     target = extended_stats_file(path)
     if not os.path.exists(target):
         return
+    df = _scan_entries(
+        spark, path, metadata,
+        [
+            (a["add"]["path"], a["add"]["partitionValues"], None)
+            for a in adds
+        ],
+    )
     try:
         with open(target) as fh:
             side = json.load(fh)

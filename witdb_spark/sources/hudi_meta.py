@@ -815,7 +815,8 @@ def _stage_hudi_files(
         files = sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
     out: dict[str, list[dict]] = {}
     for f in files:
-        if pq.ParquetFile(f).metadata.num_rows == 0:
+        num_rows = pq.ParquetFile(f).metadata.num_rows
+        if num_rows == 0:
             continue
         fid = uuid.uuid4().hex
         base = f"{fid}_0_{instant}.parquet"
@@ -850,6 +851,7 @@ def _stage_hudi_files(
             {
                 "fileId": fid,
                 "path": rel,
+                "numWrites": num_rows,
                 "totalWriteBytes": os.path.getsize(
                     os.path.join(path, rel)
                 ),
@@ -857,6 +859,13 @@ def _stage_hudi_files(
         )
     shutil.rmtree(staging, ignore_errors=True)
     return out
+
+
+def _num_writes(stats_by_part: dict[str, list[dict]]) -> int:
+    """Rows a commit wrote: the sum of its write stats' numWrites."""
+    return sum(
+        st["numWrites"] for sts in stats_by_part.values() for st in sts
+    )
 
 
 def _group_fids_by_partition(rels: list[str]) -> dict[str, list[str]]:
@@ -892,6 +901,22 @@ def write_hudi(
     partitioned tables land hive-style <col>=<val>/ file groups with
     write stats keyed by partition path (late r10). Returns the
     commit instant."""
+    return _write_hudi(
+        spark, df, path, mode, record_key, partition_by, extra_metadata,
+    )[0]
+
+
+def _write_hudi(
+    spark: SparkSession,
+    df,
+    path: str,
+    mode: str = "append",
+    record_key: str | None = None,
+    partition_by: list[str] | None = None,
+    extra_metadata: dict[str, str] | None = None,
+) -> tuple[str, int]:
+    """write_hudi returning (commit instant, rows staged): the count
+    is the commit's numWrites, read from the staged files' footers."""
     if mode not in ("create", "append", "overwrite"):
         raise ValueError("mode must be create/append/overwrite")
     exists = os.path.isdir(_meta_dir(path))
@@ -977,7 +1002,7 @@ def write_hudi(
     # the .requested claim made this instant ours; 'x' stays as a belt
     with open(target, "x") as f:
         json.dump(meta, f)
-    return instant
+    return instant, _num_writes(stats_by_part)
 
 
 def hudi_commits(path: str) -> list[dict]:
@@ -1754,7 +1779,7 @@ def _write_log_blocks_distributed(
     path: str,
     instant: str,
     avro_schema: dict,
-    group_info: dict[str, dict],
+    group_info: dict[str, dict] | None,
     data_cols: list[str],
     btype: int | None = None,
     del_col: str | None = None,
@@ -1763,12 +1788,14 @@ def _write_log_blocks_distributed(
     ``routed`` carries (__grp, __k, *data_cols); applyInPandas shuffles
     rows to one task per group, which stamps the hoodie meta columns,
     binary-avro-encodes the batch, and lands the framed log file — the
-    driver receives only [Row(grp, rel, nbytes)] descriptors, never
-    record batches (reference analog: hudi's log writers run in the
-    executors; core/trino-main/.../MergeWriterOperator.java for the
-    fragment-to-coordinator shape). ``group_info``:
+    driver receives only [Row(grp, fid, part, rel, nbytes, rows)]
+    descriptors, never record batches (reference analog: hudi's log
+    writers run in the executors; core/trino-main/.../MergeWriterOperator.java
+    for the fragment-to-coordinator shape). ``group_info``:
     {group key: {'rel': log rel path, 'fid': ..., 'part': ...}} —
-    O(file groups) metadata captured by the task closure. ``del_col``
+    O(file groups) metadata captured by the task closure; None makes
+    every group key a partition path that opens a NEW file group
+    (_new_log_group), so the source is read by this one job only. ``del_col``
     (r11, MERGE): a boolean column splitting the group's rows into
     data records and DELETE tombstones — both land in the SAME log
     file (an AVRO_DATA block then a DELETE block), so a MERGE commits
@@ -1796,7 +1823,11 @@ def _write_log_blocks_distributed(
         )
 
         grp = str(pdf["__grp"].iloc[0])
-        info = group_info[grp]
+        info = (
+            group_info[grp]
+            if group_info is not None
+            else _new_log_group(instant, grp)
+        )
         types = {}
         for fld in avro_schema["fields"]:
             t = fld["type"]
@@ -1884,16 +1915,38 @@ def _write_log_blocks_distributed(
         return _pd.DataFrame(
             {
                 "grp": [grp],
+                "fid": [info["fid"]],
+                "part": [info["part"]],
                 "rel": [info["rel"]],
                 "nbytes": [_os.path.getsize(final)],
+                "rows": [len(recs)],
             }
         )
 
     return (
         routed.groupBy("__grp")
-        .applyInPandas(write_group, "grp string, rel string, nbytes long")
+        .applyInPandas(
+            write_group,
+            "grp string, fid string, part string, rel string,"
+            " nbytes long, rows long",
+        )
         .collect()
     )
+
+
+def _new_log_group(instant: str, part: str) -> dict:
+    """A new MOR file group's first log file in partition ``part``.
+    The fileId is derived from (instant, partition), so a retried
+    writer task rewrites the same file instead of leaving an orphan."""
+    import uuid
+
+    fid = uuid.uuid5(uuid.NAMESPACE_OID, f"{instant}/{part}").hex
+    name = f".{fid}_{instant}.log.1_0-0-0"
+    return {
+        "rel": f"{part}/{name}" if part else name,
+        "fid": fid,
+        "part": part,
+    }
 
 
 #: virtual-key string rendering = hudi's OWN record-key rendering
@@ -2074,8 +2127,17 @@ def hudi_log_insert(
     hoodie.populate.meta.fields=false, composite keys allowed) write
     data-only records — the reader takes commit times from block
     headers. Returns the commit instant."""
-    import uuid
+    return _hudi_log_insert(spark, path, source, extra_metadata)[0]
 
+
+def _hudi_log_insert(
+    spark: SparkSession,
+    path: str,
+    source,
+    extra_metadata: dict[str, str] | None = None,
+) -> tuple[str, int]:
+    """hudi_log_insert returning (commit instant, rows written): the
+    count is the commit's numWrites, counted by the log writers."""
     from pyspark.sql import functions as F
 
     props = _properties(path)
@@ -2122,18 +2184,6 @@ def hudi_log_insert(
         ).alias("__grp"),
         *data_cols,
     )
-    parts = [
-        r["__grp"] for r in src.select("__grp").distinct().collect()
-    ]
-    group_info = {}
-    for part in parts:
-        fid = uuid.uuid4().hex
-        name = f".{fid}_{instant}.log.1_0-0-0"
-        group_info[part] = {
-            "rel": f"{part}/{name}" if part else name,
-            "fid": fid,
-            "part": part,
-        }
     avro_schema = {
         "type": "record",
         "name": "witdb_mor",
@@ -2145,15 +2195,17 @@ def hudi_log_insert(
         ),
     }
     stats_by_part: dict[str, list] = {}
+    # one read of the source: each partition's writer task opens its
+    # own file group, so no rows can reach a group the driver never saw
     for r in _write_log_blocks_distributed(
-        src, path, instant, avro_schema, group_info, data_cols
+        src, path, instant, avro_schema, None, data_cols
     ):
-        info = group_info[r["grp"]]
-        stats_by_part.setdefault(info["part"], []).append(
+        stats_by_part.setdefault(r["part"], []).append(
             {
-                "fileId": info["fid"],
+                "fileId": r["fid"],
                 "path": r["rel"],
                 "prevCommit": "null",
+                "numWrites": r["rows"],
                 "totalWriteBytes": r["nbytes"],
             }
         )
@@ -2181,7 +2233,7 @@ def hudi_log_insert(
             },
             f,
         )
-    return instant
+    return instant, _num_writes(stats_by_part)
 
 
 def hudi_log_delete(

@@ -1374,6 +1374,25 @@ def write_iceberg(
     markers ride here, the same snapshot-summary channel the iceberg
     library's own Spark streaming sink uses. Returns the committed
     snapshot id."""
+    return _write_iceberg(
+        spark, df, path, mode, properties, partition_by, branch,
+        summary_extra,
+    )[0]
+
+
+def _write_iceberg(
+    spark: SparkSession,
+    df,
+    path: str,
+    mode: str = "append",
+    properties: dict[str, str] | None = None,
+    partition_by: list[str] | None = None,
+    branch: str | None = None,
+    summary_extra: dict[str, str] | None = None,
+) -> tuple[int, int]:
+    """write_iceberg returning (committed snapshot id, rows staged):
+    the count is summed from the staged files' footers, so it is the
+    number of rows the snapshot adds."""
     import uuid
 
     if mode not in ("create", "append", "overwrite"):
@@ -1672,7 +1691,7 @@ def write_iceberg(
             os.path.join(path, "metadata", "version-hint.text"), "w"
         ) as f:
             f.write(str(version))
-        return snap_id
+        return snap_id, sum(rec["record_count"] for rec in staged)
     raise IcebergProtocolError(f"{path}: lost 5 consecutive commit races")
 
 

@@ -53,14 +53,30 @@ _CONNECTORS = {
 }
 
 
-def connector_available(spark: SparkSession, fmt: str) -> bool:
-    if fmt not in _CONNECTORS:
-        raise ValueError(f"unknown connector {fmt!r}; one of {sorted(_CONNECTORS)}")
+def _probe_connector(spark: SparkSession, fmt: str) -> bool:
     try:
         spark._jvm.java.lang.Class.forName(_CONNECTORS[fmt][0])
         return True
     except Exception:
         return False
+
+
+def connector_available(spark: SparkSession, fmt: str) -> bool:
+    if fmt not in _CONNECTORS:
+        raise ValueError(f"unknown connector {fmt!r}; one of {sorted(_CONNECTORS)}")
+    # Memoized per (SparkContext, format), like catalog.py's
+    # _witdb_df_memo. Assumes the driver JVM's classpath is fixed at
+    # launch (--packages / --jars resolve before the context starts),
+    # so the answer cannot change within one context. A miss costs a
+    # py4j Class.forName -> ClassNotFoundException round trip (~30 ms),
+    # which every lake read, INSERT target lookup and lake ref paid.
+    sc = spark.sparkContext
+    memo = getattr(sc, "_witdb_connector_memo", None)
+    if memo is None:
+        memo = sc._witdb_connector_memo = {}
+    if fmt not in memo:
+        memo[fmt] = _probe_connector(spark, fmt)
+    return memo[fmt]
 
 
 def _require(spark: SparkSession, fmt: str) -> None:
