@@ -695,11 +695,14 @@ def test_session_sql_forms_and_explain_options(engine, spark):
     EXPLAIN (TYPE ...) options (grammar SqlBase.g4 explainOption)."""
     import pytest
 
+    launched = spark.conf.get("spark.sql.shuffle.partitions")
     engine.sql("SET SESSION hash_partition_count = '7'")
     assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
     rows = {r.Name: r.Value for r in engine.sql("SHOW SESSION").collect()}
     assert rows["hash_partition_count"] == "7"
     engine.sql("RESET SESSION hash_partition_count")
+    # RESET restores the session's launched value, not Spark's 200
+    assert spark.conf.get("spark.sql.shuffle.partitions") == launched
     # EXPLAIN option forms
     v = engine.sql("EXPLAIN (TYPE VALIDATE) SELECT 1 AS x").collect()
     assert v[0].Valid is True

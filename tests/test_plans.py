@@ -1379,44 +1379,6 @@ def test_sketch_split_comment_guard():
     ) == "SELECT qdigest_agg(CASE WHEN p > 1 THEN x END, w) AS d FROM t"
 
 
-def test_cte_materialization_option(spark):
-    """r8 opt-in: SET SESSION materialize_repeated_ctes=true computes a
-    WITH body referenced >= 3x once (localCheckpoint) instead of
-    inlining it per reference — tpcds_sql_q4's year_total is scanned by
-    six self-join arms, so the inlined plan has 7 FileScans and the
-    materialized plan <= 2 (arms read the checkpointed rows). Results
-    must be identical either way; the property resets afterwards."""
-    from witdb_spark.engine import Engine
-    from witdb_spark.queries import QUERIES
-
-    text = None
-    from witdb_spark.queries.tpcds_sql import _Q4
-
-    text = _Q4
-    eng = Engine(spark, sf_dir=SF_DIR)
-    base = eng.sql(text)
-    base_rows = {tuple(r) for r in base.collect()}
-
-    def filescans(df):
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        return len(re.findall(r"Scan parquet", plan))
-
-    assert filescans(base) >= 6  # inlined: one fact scan per arm
-    eng.sql("SET SESSION materialize_repeated_ctes=true")
-    try:
-        mat = eng.sql(text)
-        assert filescans(mat) <= 2, "year_total arms must reuse the checkpoint"
-        assert {tuple(r) for r in mat.collect()} == base_rows
-    finally:
-        eng.sql("RESET SESSION materialize_repeated_ctes")
-    # with the property off again the plan inlines as before
-    assert filescans(eng.sql(text)) >= 6
-
-
 def test_late_r8_pipeline_plans(spark):
     """Scale shapes of the late-r8 pipeline tier: the Gopher quality
     flags are a pure map (zero Exchange); concat-chunk packing plans ONE

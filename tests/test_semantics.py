@@ -51,6 +51,20 @@ def test_decimal_38_precision(engine):
     assert str(one(engine, f"CAST('{big}' AS DECIMAL(38,0))")) == big
 
 
+def test_wide_decimal_sum_ignores_column_name(engine):
+    """A column's name says nothing about its values: SUM over a
+    DECIMAL(30,6) cast of a 10^13 value returns it exactly whether the
+    column is called ``value`` (the events fixture's measure) or ``v``."""
+    from decimal import Decimal
+
+    for col in ("value", "v"):
+        got = engine.sql(
+            f"SELECT SUM(CAST({col} AS DECIMAL(30,6))) AS s FROM (VALUES"
+            f" (CAST(10000000000000.5 AS DECIMAL(20,1)))) AS t({col})"
+        ).collect()[0][0]
+        assert got == Decimal("10000000000000.500000"), (col, got)
+
+
 def test_interval_literal(engine):
     got = one(
         engine,
@@ -314,9 +328,9 @@ def test_map_shaped_aggregate_rewrites(spark):
 
 
 # ---------------------------------------------------------------------------
-# r16: declared catalog constraints backing the transpiler's eager-agg and
-# decimal-narrowing rewrites. These gates make the declarations LOAD-BEARING:
-# a fixture violating them fails the suite before a wrong plan can ship.
+# r16: declared catalog constraints backing the transpiler's CTE self-join
+# narrowing. These gates make the declarations LOAD-BEARING: a fixture
+# violating them fails the suite before a wrong plan can ship.
 # ---------------------------------------------------------------------------
 
 _FIXTURE_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
@@ -343,60 +357,6 @@ def test_declared_unique_columns_hold():
                     f" FROM '{path}'"
                 ).fetchone()
                 assert n == nd and nn == 0, (d, table, c, n, nd, nn)
-
-
-def test_declared_column_bounds_hold():
-    """catalog.COLUMN_ABS_BOUNDS: every declared |value| bound holds with
-    margin in every fixture directory (the decimal-narrowing rewrite's
-    interval arithmetic depends on these)."""
-    import os
-
-    import duckdb
-
-    from witdb_spark.catalog import COLUMN_ABS_BOUNDS, TABLE_COLUMNS
-
-    con = duckdb.connect()
-    owner = {
-        c: t for t, cs in TABLE_COLUMNS.items() for c in cs if t != "events"
-    }
-    for d in _FIXTURE_DIRS:
-        for col, bound in COLUMN_ABS_BOUNDS.items():
-            t = owner.get(col, "events")
-            path = os.path.join(d, f"{t}.parquet")
-            expr = "value" if col == "value" else col
-            mx = con.execute(
-                f"SELECT MAX(ABS({expr})) FROM '{path}'"
-            ).fetchone()[0]
-            assert mx is not None and float(mx) <= bound, (d, col, mx, bound)
-
-
-def test_sum_decimal_narrowing_rewrite():
-    """r16: SUM(CAST(e AS DECIMAL(30,6))) narrows to a per-row
-    DECIMAL(18,6) cast (compact-long representation) wrapped back to
-    SUM's original result type — fires only when the declared bounds
-    prove |e| <= 1e8, so value AND type are bit-identical."""
-    from witdb_spark.plans.dialect import (
-        _expr_abs_bound,
-        _rewrite_sum_decimal_narrowing,
-    )
-
-    out = _rewrite_sum_decimal_narrowing(
-        "SELECT SUM(CAST(l_extendedprice * (1 - l_discount)"
-        " AS DECIMAL(30,6))) AS s FROM lineitem"
-    )
-    assert "DECIMAL(18,6)" in out and "AS DECIMAL(38,6))" in out
-    # unknown column -> unbounded -> untouched
-    q = "SELECT SUM(CAST(mystery AS DECIMAL(30,6))) AS s FROM t"
-    assert _rewrite_sum_decimal_narrowing(q) == q
-    # division -> unbounded -> untouched
-    q2 = "SELECT SUM(CAST(l_extendedprice / l_quantity AS DECIMAL(30,6))) AS s FROM t"
-    assert _rewrite_sum_decimal_narrowing(q2) == q2
-    # bound arithmetic sanity
-    assert _expr_abs_bound("l_quantity * p_retailprice") == 1e3 * 1e5
-    assert _expr_abs_bound(
-        "CASE WHEN l_returnflag = 'R' THEN l_extendedprice ELSE 0 END"
-    ) == 1e6
-    assert _expr_abs_bound("unknown + 1") == float("inf")
 
 
 def test_cte_selfjoin_narrowing_guards():
@@ -502,21 +462,3 @@ def test_cte_selfjoin_narrowing(oracle):
         "SELECT cs1.product_name, cs1.store_name,", "SELECT cs1.*,"
     )
     assert rewrite_cte_selfjoin_narrow(qstar) == qstar
-
-
-def test_sum_narrowing_skips_window_calls():
-    """A windowed SUM cannot carry the type-restoring CAST wrap (OVER
-    must attach to the aggregate call) — the narrowing must leave
-    ``SUM(CAST(...)) OVER (...)`` byte-identical."""
-    from witdb_spark.plans.dialect import _rewrite_sum_decimal_narrowing
-
-    q = (
-        "SELECT SUM(CAST(l_extendedprice AS DECIMAL(30,6)))"
-        " OVER (PARTITION BY l_suppkey) AS s FROM lineitem"
-    )
-    assert _rewrite_sum_decimal_narrowing(q) == q
-    qf = (
-        "SELECT SUM(CAST(l_extendedprice AS DECIMAL(30,6)))"
-        " FILTER (WHERE l_quantity > 5) AS s FROM lineitem"
-    )
-    assert _rewrite_sum_decimal_narrowing(qf) == qf

@@ -61,9 +61,9 @@ TABLE_COLUMNS: dict[str, tuple[str, ...]] = {
 #: Declared UNIQUE (and NOT NULL) columns per table — TPC-H's primary keys
 #: plus name columns that are injective by the spec's generation rules
 #: (s_name/c_name are 'Supplier#%09d'-style, n_name/r_name are the fixed
-#: distinct lists). The transpiler's eager-aggregation rewrite is only
-#: sound for joins on / groupings by these columns, so every entry is
-#: VERIFIED against all fixture directories by
+#: distinct lists). The transpiler's CTE self-join narrowing
+#: (plans/eager_agg.py) is only sound for joins on / groupings by these
+#: columns, so every entry is VERIFIED against all fixture directories by
 #: tests/test_semantics.py::test_declared_unique_columns_hold — a fixture
 #: violating a declared constraint fails the suite before it can produce
 #: a wrong plan.
@@ -74,30 +74,6 @@ UNIQUE_COLUMNS: dict[str, frozenset[str]] = {
     "supplier": frozenset({"s_suppkey", "s_name"}),
     "part": frozenset({"p_partkey"}),
     "orders": frozenset({"o_orderkey"}),
-}
-
-#: Declared |value| upper bounds for the numeric measure columns, with
-#: 10-1000x headroom over the TPC-H generation rules (l_quantity <= 50,
-#: prices < 10^6). The transpiler's decimal-narrowing rewrite
-#: (plans/dialect.py::_rewrite_sum_decimal_narrowing) only fires when
-#: interval arithmetic over these bounds proves an expression's
-#: magnitude stays far inside decimal(18,6)'s 10^12 range, so the
-#: narrowed per-row cast provably rounds to the same 6-dp value as the
-#: wide one. Verified against every fixture directory by
-#: tests/test_semantics.py::test_declared_column_bounds_hold, and
-#: spark.sql.ansi.enabled is pinned on, so a violation is loud twice
-#: over (test gate + runtime overflow error), never a silent wrap.
-COLUMN_ABS_BOUNDS: dict[str, float] = {
-    "l_quantity": 1e3,
-    "l_extendedprice": 1e6,
-    "l_discount": 2.0,
-    "l_tax": 2.0,
-    "o_totalprice": 1e7,
-    "p_retailprice": 1e5,
-    "p_size": 1e3,
-    "c_acctbal": 1e6,
-    "s_acctbal": 1e6,
-    "value": 1e6,
 }
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -32,9 +32,6 @@ SESSION_PROPERTIES: dict[str, str] = {
     "join_reordering_strategy": "spark.sql.cbo.joinReorder.enabled",
     "hash_partition_count": "spark.sql.shuffle.partitions",
     "query_max_execution_time": "spark.sql.broadcastTimeout",
-    # engine-specific (no Trino analog — Trino 411 inlines CTEs per
-    # reference): materialize top-level WITH bodies referenced >= 3x
-    "materialize_repeated_ctes": "spark.witdb.materializeRepeatedCtes",
 }
 
 
@@ -441,9 +438,15 @@ class Engine:
             text, re.I,
         )
         if m:  # reference ResetSessionTask.java
-            self.spark.conf.unset(
-                SESSION_PROPERTIES.get(m.group(1), m.group(1))
-            )
+            # back to the value the session was launched with (Trino's
+            # configured default), not Spark's built-in one: a bare unset
+            # turns a session started with 8 shuffle partitions into 200
+            conf = SESSION_PROPERTIES.get(m.group(1), m.group(1))
+            launched = self.spark.sparkContext.getConf().get(conf)
+            if launched is None:
+                self.spark.conf.unset(conf)
+            else:
+                self.spark.conf.set(conf, launched)
             return self.spark.range(0).select()
         if re.match(r"^\s*SHOW\s+SESSION\s*;?\s*$", text, re.I):
             # reference ShowSessionTask: Name | Value | Default layout
@@ -598,12 +601,6 @@ class Engine:
             return local_frame(
                 self.spark, rows, "`Column Name` string, Type string"
             )
-        if re.match(r"^\s*SHOW\s+SESSION\s*;?\s*$", text, re.I):
-            rows = [
-                (prop, self.spark.conf.get(conf, None) or "")
-                for prop, conf in SESSION_PROPERTIES.items()
-            ]
-            return local_frame(self.spark, rows, "Name string, Value string")
         m = _CREATE_MV.match(text)
         if m:
             return self.create_materialized_view(
@@ -707,10 +704,6 @@ class Engine:
                 ).columns,
             )
         spark_sql = transpile(text)
-        if not named_params and self._prop_enabled(
-            "spark.witdb.materializeRepeatedCtes"
-        ):
-            spark_sql = self._materialize_repeated_ctes(spark_sql)
         if named_params:
             return self.spark.sql(spark_sql, args=named_params)
         return self.spark.sql(spark_sql)
@@ -1724,84 +1717,6 @@ class Engine:
                 ),
             }
         return fns[op]()
-
-    def _prop_enabled(self, conf: str) -> bool:
-        try:
-            return self.spark.conf.get(conf, "false").lower() == "true"
-        except Exception:
-            return False
-
-    def _materialize_repeated_ctes(self, sql: str, threshold: int = 3) -> str:
-        """Opt-in (SET SESSION materialize_repeated_ctes=true): a
-        top-level WITH body referenced >= `threshold` times is computed
-        ONCE via localCheckpoint and the references retargeted to the
-        checkpointed view. Spark inlines CTEs per reference (and Trino
-        411 does too — reference sql/planner/ ... both re-plan the body
-        per arm), so the year-total family (tpcds q4/q11/q74) reads the
-        fact table once per self-join arm; at 100x scale materializing
-        a body scanned 6 times beats both engines' inlining. Off by
-        default: checkpointing is eager and trades recompute for
-        executor-local storage. Operates on TRANSPILED Spark SQL. Bails
-        (returns the text unchanged) on WITH RECURSIVE, parameterized
-        queries, or any unexpected shape. The CTE keeps its NAME — its
-        body is swapped for SELECT * FROM the checkpointed view, so no
-        reference retargeting happens and a column sharing the CTE's
-        name (tpcds q4's year_total output column) is unaffected."""
-        head = re.match(r"\s*WITH\s+", sql, re.I)
-        if head is None or re.match(r"\s*WITH\s+RECURSIVE\b", sql, re.I):
-            return sql
-
-        def code_refs(text: str, name: str):
-            return list(lex(text).finditer(r"\b%s\b" % re.escape(name), flags=0))
-
-        pos = head.end()
-        ctes: list[tuple[str, str]] = []
-        while True:
-            nm = re.match(r"\s*([A-Za-z_]\w*)\s+AS\s*\(", sql[pos:], re.I)
-            if nm is None:
-                return sql  # unexpected WITH shape: leave untouched
-            open_idx = pos + nm.end() - 1
-            try:
-                close_idx = lex(sql).close(open_idx)
-            except UnsupportedTrinoSyntax:
-                return sql
-            ctes.append((nm.group(1), sql[open_idx + 1 : close_idx]))
-            after = re.match(r"\s*,", sql[close_idx + 1 :])
-            if after is None:
-                main = sql[close_idx + 1 :]
-                break
-            pos = close_idx + 1 + after.end()
-
-        kept: list[tuple[str, str]] = []
-        changed = False
-        for i, (name, body) in enumerate(ctes):
-            rest = " ".join(b for _, b in ctes[i + 1 :]) + " " + main
-            if len(code_refs(rest, name)) >= threshold:
-                body_sql = body
-                if kept:
-                    body_sql = (
-                        "WITH "
-                        + ", ".join(f"{n} AS ({b})" for n, b in kept)
-                        + " "
-                        + body
-                    )
-                df = self.spark.sql(body_sql).localCheckpoint(eager=True)
-                seq = len(getattr(self, "_cte_mat", []))
-                view = f"__cte_mat_{seq}_{name}"
-                df.createOrReplaceTempView(view)
-                self._cte_mat = getattr(self, "_cte_mat", []) + [view]
-                kept.append((name, f"SELECT * FROM {view}"))
-                changed = True
-            else:
-                kept.append((name, body))
-        if not changed:
-            return sql
-        return (
-            "WITH "
-            + ", ".join(f"{n} AS ({b})" for n, b in kept)
-            + " "
-            + main
-        )
 
     def _refresh_information_schema(self) -> None:
         """Populate __information_schema_{tables,columns,views} temp views

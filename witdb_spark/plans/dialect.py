@@ -2498,8 +2498,7 @@ def transpile(sql: str) -> str:
     sql = _rewrite_rollup_prestage(sql)
     from witdb_spark.plans.eager_agg import rewrite_cte_selfjoin_narrow
 
-    sql = rewrite_cte_selfjoin_narrow(sql)
-    return _rewrite_sum_decimal_narrowing(sql)
+    return rewrite_cte_selfjoin_narrow(sql)
 
 
 _ROLLUP_HEAD = re.compile(r"\bGROUP\s+BY\s+(ROLLUP|CUBE)\s*\(", re.I)
@@ -2691,20 +2690,6 @@ def _rewrite_year_ranges(sql: str) -> str:
         sql = sql[: m.start()] + repl + sql[m.end() :]
 
 
-#: magnitude cap for the decimal-narrowing rewrite: the per-row bound
-#: must stay 4 orders of magnitude under decimal(18,6)'s 10^12 range, so
-#: even a 10^14-row (beyond-100 PB) SUM stays inside decimal(28,6)'s
-#: 10^22 — and ANSI mode (pinned in session.py) makes any violation an
-#: error, never a silent NULL.
-_NARROW_BOUND_CAP = 1e8
-
-_SUM_CAST = re.compile(r"\bSUM\s*\(", re.I)
-_CAST_DEC_TAIL = re.compile(
-    r"\bAS\s+DECIMAL\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)\s*$", re.I
-)
-_NUM_LIT = re.compile(r"^\d+(\.\d+)?([eE][+-]?\d+)?$")
-
-
 def _top_chars(e: str, chars: str):
     """(index, char) of each character of ``chars`` that sits in code at
     the top level of ``e`` (outside every ()/[] group)."""
@@ -2722,140 +2707,6 @@ def _top_binary_ops(e: str, ops: str):
         prev = e[:i].rstrip()
         if i > 0 and prev and (prev[-1].isalnum() or prev[-1] in ")_."):
             yield i
-
-
-def _expr_abs_bound(expr: str) -> float:
-    """Conservative |value| bound via interval arithmetic over the
-    catalog's declared column bounds (catalog.COLUMN_ABS_BOUNDS):
-    |a+b|,|a-b| <= |a|+|b|, |a*b| <= |a||b|, CASE -> max over branch
-    values (branch CONDITIONS cannot change a value bound). Anything
-    not understood — division, function calls, unknown identifiers —
-    returns inf, which keeps the narrowing rewrite off."""
-    from witdb_spark.catalog import COLUMN_ABS_BOUNDS
-
-    INF = float("inf")
-
-    def tok_bound(t: str) -> float:
-        t = t.strip()
-        if not t:
-            return INF
-        if _NUM_LIT.match(t):
-            return float(t)
-        base = t.rsplit(".", 1)[-1].lower()
-        return COLUMN_ABS_BOUNDS.get(base, INF)
-
-    def bound(e: str) -> float:
-        e = e.strip()
-        if not e:
-            return INF
-        # CASE WHEN ... THEN v [WHEN .. THEN v] [ELSE v] END
-        cm = re.match(r"^CASE\b(.*)\bEND$", e, re.I | re.S)
-        if cm:
-            inner = cm.group(1)
-            vals = []
-            for vm in re.finditer(
-                r"\b(?:THEN|ELSE)\b(.*?)(?=\bWHEN\b|\bELSE\b|$)",
-                inner,
-                re.I | re.S,
-            ):
-                vals.append(bound(vm.group(1)))
-            return max(vals) if vals else INF
-        # strip one layer of wrapping parens
-        if e.startswith("("):
-            close = lex(e).close(0)
-            if close == len(e) - 1:
-                return bound(e[1:-1])
-        # split on top-level +/- (unary minus handled by empty lhs)
-        for i in _top_binary_ops(e, "+-"):
-            prev = e[:i].rstrip()
-            if prev[-1].lower() == "e" and len(prev) > 1 and prev[-2].isdigit():
-                continue  # exponent sign in 1.0e-2
-            return bound(e[:i]) + bound(e[i + 1 :])
-        if e.startswith("-") or e.startswith("+"):
-            return bound(e[1:])
-        # top-level *
-        for i, c in _top_chars(e, "*"):
-            return bound(e[:i]) * bound(e[i + 1 :])
-        # atom: literal or column ref
-        if "(" in e or ")" in e or "'" in e or "/" in e or " " in e:
-            return INF
-        return tok_bound(e)
-
-    try:
-        return bound(expr)
-    except Exception:
-        return INF
-
-
-def _rewrite_sum_decimal_narrowing(sql: str) -> str:
-    """``SUM(CAST(e AS DECIMAL(p,6)))`` with p > 18 ->
-    ``CAST(SUM(CAST(e AS DECIMAL(18,6))) AS DECIMAL(min(38,p+10),6))``.
-
-    Precision <= 18 keeps every per-row value in Spark's compact-long
-    Decimal representation instead of heap BigDecimal — the same
-    narrowing r15 applied to the DataFrame-side ``dsum`` helper (1.28x
-    on tpch_q1), now for the SQL texts where the wide cast is the
-    oracle-parity idiom. Three exactness facts make it value-identical:
-    (1) the per-row cast rounds to 6 dp HALF_UP under both widths
-    whenever |e| < 10^12, and the rewrite only fires when interval
-    arithmetic over catalog.COLUMN_ABS_BOUNDS proves |e| <= 10^8;
-    (2) decimal summation is exact and associative at either width, and
-    a 10^8-bounded summand cannot overflow SUM's decimal(28,6) buffer
-    below 10^14 rows (ANSI mode, pinned in session.py, errors rather
-    than NULLing if that ever changed); (3) the outer CAST back to
-    DECIMAL(min(38,p+10),6) — SUM's result type for the original width —
-    is exact widening, so the expression's TYPE is bit-identical too
-    (CTE schemas, HAVING comparisons and the driver's schema hash see
-    no difference). Only the Spark-side text changes; the DuckDB oracle
-    text never does. Runs LAST in transpile so the rollup/eager
-    pre-stage rewrites see the original decimal-cast idiom, and their
-    inner partial SUMs (whose results the outer stages re-aggregate)
-    get narrowed here too."""
-    out = sql
-    search = 0
-    while True:
-        lx = lex(out)
-        m = lx.search(_SUM_CAST, search)
-        if m is None:
-            return out
-        search = m.end()
-        s_open = m.end() - 1
-        try:
-            s_close = lx.close(s_open)
-        except UnsupportedTrinoSyntax:
-            continue
-        arg = out[s_open + 1 : s_close].strip()
-        after = out[s_close + 1 :].lstrip().upper()
-        if after.startswith("OVER") or after.startswith("FILTER"):
-            # OVER / FILTER must attach to the aggregate call itself, so
-            # the type-restoring CAST wrap cannot be applied — skip
-            continue
-        cm = re.match(r"CAST\s*\(", arg, re.I)
-        if not cm:
-            continue
-        try:
-            c_close = lex(arg).close(cm.end() - 1)
-        except UnsupportedTrinoSyntax:
-            continue
-        if c_close != len(arg) - 1:
-            continue
-        body = arg[cm.end() : c_close]
-        tm = _CAST_DEC_TAIL.search(body)
-        if tm is None:
-            continue
-        p, s = int(tm.group(1)), int(tm.group(2))
-        if p <= 18 or s != 6:
-            continue
-        inner_expr = body[: tm.start()]
-        if _expr_abs_bound(inner_expr) > _NARROW_BOUND_CAP:
-            continue
-        outp = min(38, p + 10)
-        repl = (
-            f"CAST(SUM(CAST({inner_expr.strip()} AS DECIMAL(18,6)))"
-            f" AS DECIMAL({outp},6))"
-        )
-        out = out[: m.start()] + repl + out[s_close + 1 :]
-        search = m.start() + len(repl)
 
 
 def _is_decimal_cast(arg: str, dec_cols: frozenset[str] = frozenset()) -> bool:

@@ -52,11 +52,12 @@ def get_spark(
         .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
         # --- determinism / oracle parity ---
         .config("spark.sql.session.timeZone", "UTC")
-        # Pinned, not assumed (ADVICE r15): the decimal-width narrowing in
-        # queries/shared.py and plans/dialect.py is safe because a sum
-        # overflowing decimal(28,6) raises under ANSI instead of returning
-        # NULL. Spark 4 defaults this to true; pinning it here makes the
-        # overflow-is-loud invariant hold even under legacy configs.
+        # Pinned, not assumed (ADVICE r15): the DataFrame-side dsum/davg
+        # per-row decimal(18,6) cast in queries/shared.py is safe because
+        # a value or sum outside its decimal type raises under ANSI
+        # instead of returning NULL. Spark 4 defaults this to true;
+        # pinning it here makes the overflow-is-loud invariant hold even
+        # under legacy configs.
         .config("spark.sql.ansi.enabled", "true")
         # --- python exchange is Arrow-batched, never row-at-a-time ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
