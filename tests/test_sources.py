@@ -1485,6 +1485,166 @@ def test_hudi_cow_delete_update(spark, tmp_path):
     assert dict(empty.dtypes) == {"id": "bigint", "v": "double"}
 
 
+def _lake_table(spark, fmt: str, mode: str, df, t: str):
+    """Create a ``fmt`` table at ``t`` in copy-on-write (``mode='cow'``)
+    or its merge-on-read flavour (Delta deletion vectors, Iceberg
+    position deletes, Hudi MERGE_ON_READ); returns (read, delete_where,
+    update_where, version) where ``version()`` names the committed
+    table state."""
+    from witdb_spark.sources import delta_log as D
+    from witdb_spark.sources import hudi_meta as H
+    from witdb_spark.sources import iceberg_meta as I
+
+    if fmt == "delta":
+        D.write_delta(
+            spark, df, t, mode="create",
+            configuration={"delta.enableDeletionVectors": "true"}
+            if mode == "mor"
+            else None,
+        )
+        return (
+            D.read_delta_snapshot, D.delta_delete_where,
+            D.delta_update_where, lambda: D.delta_table_version(spark, t),
+        )
+    if fmt == "iceberg":
+        I.write_iceberg(spark, df, t, mode="create")
+        if mode == "mor":
+            I.iceberg_set_properties(
+                spark, t,
+                {"write.delete.mode": "merge-on-read",
+                 "write.update.mode": "merge-on-read"},
+            )
+        return (
+            I.read_iceberg_snapshot, I.iceberg_delete_where,
+            I.iceberg_update_where,
+            lambda: I._current_metadata(t)["current-snapshot-id"],
+        )
+    if mode == "mor":
+        H.write_hudi_mor_create(spark, df, t, record_key="id")
+    else:
+        H.write_hudi(spark, df, t, mode="create", record_key="id")
+    return (
+        H.read_hudi_snapshot, H.hudi_delete_where, H.hudi_update_where,
+        lambda: [c["instant"] for c in H.hudi_commits(t)],
+    )
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "hudi"])
+def test_cow_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path, fmt):
+    """DELETE removes the rows whose predicate is TRUE. A row where it
+    is NULL shares the matched file and must survive the rewrite:
+    ``NOT (p)`` is not the complement of ``p`` when ``p`` can be
+    NULL."""
+    t = str(tmp_path / fmt)
+    df = spark.createDataFrame(
+        [(1, 1), (2, None), (3, 10)], "id bigint, x int"
+    ).coalesce(1)
+    read, delete_where_, _, _ = _lake_table(spark, fmt, "cow", df, t)
+    delete_where_(spark, t, "x > 5")
+    assert sorted(r.id for r in read(spark, t).collect()) == [1, 2]
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "hudi"])
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_update_casts_to_the_declared_column_type(
+    spark, tmp_path, fmt, mode
+):
+    """UPDATE casts each assigned value to its column's declared type,
+    as INSERT does: a DECIMAL(12,2) column stays DECIMAL(12,2) after
+    ``price + 1.5``, and an int overflow raises (ANSI) instead of
+    widening the column, nulling the value or committing a file the
+    table's own reader rejects — and commits nothing."""
+    from decimal import Decimal
+
+    t = str(tmp_path / f"{fmt}_{mode}")
+    df = spark.createDataFrame(
+        [(1, Decimal("7.00"), 5)], "id bigint, price decimal(12,2), x int"
+    ).coalesce(1)
+    read, _, update_where_, version = _lake_table(spark, fmt, mode, df, t)
+
+    def data(frame):
+        return frame.select("id", "price", "x")
+
+    schema = data(read(spark, t)).dtypes
+    update_where_(spark, t, "id = 1", {"price": "price + 1.5"})
+    got = data(read(spark, t))
+    assert got.dtypes == schema
+    assert [tuple(r) for r in got.collect()] == [(1, Decimal("8.50"), 5)]
+    before = version()
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        update_where_(spark, t, "id = 1", {"x": "x + 100000000000"})
+    assert version() == before
+    assert [tuple(r) for r in data(read(spark, t)).collect()] == [
+        (1, Decimal("8.50"), 5)
+    ]
+
+
+def test_iceberg_cow_commit_keeps_a_concurrent_metadata_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A copy-on-write commit builds its metadata from the table as it
+    stands at commit time: a metadata-only commit (SET PROPERTIES) that
+    lands while the DELETE stages its files survives the DELETE's
+    commit."""
+    from witdb_spark.sources import iceberg_meta as I
+
+    t = str(tmp_path / "ice_props")
+    df = spark.createDataFrame(
+        [(i, float(i)) for i in range(4)], "id bigint, v double"
+    ).coalesce(1)
+    I.write_iceberg(spark, df, t, mode="create")
+    stage = I._stage_iceberg_data
+
+    def stage_during_alter(*args, **kwargs):
+        I.iceberg_set_properties(spark, t, {"owner": "ops"})
+        return stage(*args, **kwargs)
+
+    monkeypatch.setattr(I, "_stage_iceberg_data", stage_during_alter)
+    I.iceberg_delete_where(spark, t, "id = 2")
+    monkeypatch.undo()
+    meta = I._current_metadata(t)
+    assert meta["properties"].get("owner") == "ops"
+    assert sorted(
+        r.id for r in I.read_iceberg_snapshot(spark, t).collect()
+    ) == [0, 1, 3]
+
+
+def test_iceberg_cow_dml_appends_history(spark, tmp_path):
+    """Every copy-on-write DELETE/UPDATE snapshot enters the
+    snapshot-log (the $history metadata table) and moves an explicit
+    main ref, as every other commit does."""
+    from witdb_spark.engine import Engine
+    from witdb_spark.sources import iceberg_meta as I
+
+    t = str(tmp_path / "ice_hist")
+    df = spark.createDataFrame(
+        [(i, float(i)) for i in range(4)], "id bigint, v double"
+    ).coalesce(1)
+    I.write_iceberg(spark, df, t, mode="create")
+    # an explicit main ref, as library writers keep one
+    base = I._current_metadata(t)["current-snapshot-id"]
+    I._commit_metadata(
+        t,
+        lambda m: dict(
+            m, refs={"main": {"snapshot-id": base, "type": "branch"}}
+        ),
+        base,
+    )
+    I.write_iceberg(spark, df, t, mode="append")
+    I.iceberg_delete_where(spark, t, "id = 2")
+    I.iceberg_update_where(spark, t, "id = 3", {"v": "v + 1"})
+    meta = I._current_metadata(t)
+    snaps = [s["snapshot-id"] for s in meta["snapshots"]]
+    assert len(snaps) == 4
+    assert [e["snapshot-id"] for e in meta["snapshot-log"]] == snaps
+    assert snaps[-1] == meta["current-snapshot-id"]
+    assert meta["refs"]["main"]["snapshot-id"] == snaps[-1]
+    hist = Engine(spark).sql(
+        f"SELECT snapshot_id FROM iceberg.'{t}$history'"
+    ).collect()
+    assert sorted(r.snapshot_id for r in hist) == sorted(snaps)
+
+
 def test_iceberg_merge_into(spark, tmp_path):
     """File-level MERGE on the jar-free Iceberg table: matched files
     rewritten through merge_into, unmatched files kept as EXISTING

@@ -1391,7 +1391,7 @@ class Engine:
             fmt, path = m.group(1).lower(), m.group("path")
             # no WHERE = every row (ANSI DELETE semantics)
             pred = fragment(m.group("pred")) if m.group("pred") else "true"
-            res = self._dml_dispatch(fmt, "delete", path, pred)
+            res = self._dml_dispatch(fmt, "delete_where", path, pred)
             return local_frame(
                 self.spark, [(path, str(res))], "path string, result string"
             )
@@ -1432,7 +1432,7 @@ class Engine:
                     )
                 assignments[am.group(1)] = fragment(am.group(2).strip())
             res = self._dml_dispatch(
-                fmt, "update", path, pred, assignments
+                fmt, "update_where", path, pred, assignments
             )
             return local_frame(
                 self.spark, [(path, str(res))], "path string, result string"
@@ -1664,59 +1664,27 @@ class Engine:
                 " only in that spelling)"
             )
         res = self._dml_dispatch(
-            fmt, "merge", path, None, None, source, on_cols, kwargs
+            fmt, "merge_into", path, source, on_cols, **kwargs
         )
         return local_frame(
             self.spark, [(path, str(res))], "path string, result string"
         )
 
-    def _dml_dispatch(
-        self, fmt, op, path, pred=None, assignments=None,
-        source=None, on_cols=None, merge_kwargs=None,
-    ):
-        if fmt == "delta":
-            from witdb_spark.sources import delta_log as M
+    def _dml_dispatch(self, fmt, op, path, *args, **kwargs):
+        """Run the format module's ``{fmt}_{op}`` — delta_delete_where,
+        iceberg_update_where, hudi_merge_into, ..."""
+        import importlib
 
-            fns = {
-                "delete": lambda: M.delta_delete_where(
-                    self.spark, path, pred
-                ),
-                "update": lambda: M.delta_update_where(
-                    self.spark, path, pred, assignments
-                ),
-                "merge": lambda: M.delta_merge_into(
-                    self.spark, path, source, on_cols, **merge_kwargs
-                ),
-            }
-        elif fmt == "iceberg":
-            from witdb_spark.sources import iceberg_meta as M
-
-            fns = {
-                "delete": lambda: M.iceberg_delete_where(
-                    self.spark, path, pred
-                ),
-                "update": lambda: M.iceberg_update_where(
-                    self.spark, path, pred, assignments
-                ),
-                "merge": lambda: M.iceberg_merge_into(
-                    self.spark, path, source, on_cols, **merge_kwargs
-                ),
-            }
-        else:
-            from witdb_spark.sources import hudi_meta as M
-
-            fns = {
-                "delete": lambda: M.hudi_delete_where(
-                    self.spark, path, pred
-                ),
-                "update": lambda: M.hudi_update_where(
-                    self.spark, path, pred, assignments
-                ),
-                "merge": lambda: M.hudi_merge_into(
-                    self.spark, path, source, on_cols, **merge_kwargs
-                ),
-            }
-        return fns[op]()
+        module = {
+            "delta": "delta_log",
+            "iceberg": "iceberg_meta",
+            "hudi": "hudi_meta",
+        }[fmt]
+        fn = getattr(
+            importlib.import_module(f"witdb_spark.sources.{module}"),
+            f"{fmt}_{op}",
+        )
+        return fn(self.spark, path, *args, **kwargs)
 
     def _refresh_information_schema(self) -> None:
         """Populate __information_schema_{tables,columns,views} temp views

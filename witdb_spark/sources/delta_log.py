@@ -59,6 +59,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from witdb_spark.sources.merge import (
+    RowRule,
+    delete_rule,
+    merge_rule,
+    rewrite_files,
+    update_rule,
+)
 from witdb_spark.sources.paths import norm_path_expr
 
 #: minReaderVersion 3 reader features this module actually honors.
@@ -381,15 +388,18 @@ def _snapshot_state(
             )
         )
     if not allow_dvs:
-        for add in state.values():
-            if add.get("deletionVector"):
-                raise DeltaProtocolError(
-                    "active deletion vectors: this operation would"
-                    " rewrite or re-serialize DV'd files — add the"
-                    " delta-spark jar (snapshot READS handle DVs"
-                    " jar-free)"
-                )
+        _refuse_dvs(state)
     return protocol, metadata, state, target
+
+
+def _refuse_dvs(state: dict[str, dict]) -> None:
+    if any(add.get("deletionVector") for add in state.values()):
+        raise DeltaProtocolError(
+            "active deletion vectors: this operation would"
+            " rewrite or re-serialize DV'd files — add the"
+            " delta-spark jar (snapshot READS handle DVs"
+            " jar-free)"
+        )
 
 
 _FILES_ENTRY_SCHEMA = (
@@ -1235,22 +1245,13 @@ def delta_write_deletion_vectors(
         # accept _metadata.file_path URIs, absolute paths, or
         # table-relative add paths
         by_file.setdefault(_strip_uri(p), set()).add(int(pos))
-    for _ in range(5):
-        # allow_name_mapping: DV commits only re-add existing entries
-        # with descriptors — no column data is (re)written here; the
-        # extra_actions adds were staged physical by the caller
-        protocol, metadata, state, version = _snapshot_state(
-            spark, path, None, None,
-            allow_dvs=True, allow_name_mapping=True,
-            keep_stats=True,
-        )
-        by_add_path: dict[str, dict] = {}
-        for ap, add in state.items():
-            by_add_path[os.path.abspath(os.path.join(path, unquote(ap)))] = (
-                ap,
-                add,
-            )
-        targets: dict[str, tuple[dict, set[int]]] = {}
+
+    def build(protocol, _metadata, state, version):
+        by_add_path = {
+            os.path.abspath(os.path.join(path, unquote(ap))): ap
+            for ap in state
+        }
+        targets: dict[str, set[int]] = {}
         for p, poss in by_file.items():
             cand = os.path.abspath(
                 p if os.path.isabs(p) else os.path.join(path, p)
@@ -1259,18 +1260,18 @@ def delta_write_deletion_vectors(
                 raise DeltaProtocolError(
                     f"deletion vector targets unknown data file: {p}"
                 )
-            ap, add = by_add_path[cand]
+            ap = by_add_path[cand]
             merged = set(poss)
-            if add.get("deletionVector"):
+            if state[ap].get("deletionVector"):
                 merged |= set(
-                    read_deletion_vector(path, add["deletionVector"])
+                    read_deletion_vector(path, state[ap]["deletionVector"])
                 )
-            targets[ap] = (add, merged)
+            targets[ap] = merged
         dv_uuid = _uuid.uuid4()
         dv_rel = f"deletion_vector_{dv_uuid}.bin"
         frames = bytearray(b"\x01")  # format version byte
         descs: dict[str, dict] = {}
-        for ap, (add, merged) in sorted(targets.items()):
+        for ap, merged in sorted(targets.items()):
             data = encode_roaring_array(sorted(merged))
             offset = len(frames)
             frames += _struct.pack(">i", len(data))
@@ -1285,43 +1286,13 @@ def delta_write_deletion_vectors(
             }
         with open(os.path.join(path, dv_rel), "wb") as f:
             f.write(bytes(frames))
-        feats_r = sorted(
-            set(protocol.get("readerFeatures") or [])
-            | {"deletionVectors"}
-        )
-        feats_w = sorted(
-            set(protocol.get("writerFeatures") or [])
-            | {"deletionVectors"}
-        )
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": operation,
-                    "operationParameters": {"mode": "deletionVectors"},
-                }
-            },
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": feats_r,
-                    "writerFeatures": feats_w,
-                }
-            },
-        ]
-        for ap, (add, _merged) in sorted(targets.items()):
-            actions.append(_remove_action(ap, add))
-            new_add = dict(add)
-            new_add["deletionVector"] = descs[ap]
-            new_add["dataChange"] = True
-            new_add["modificationTime"] = _now_ms()
-            actions.append({"add": new_add})
-        actions += list(extra_actions or [])
-        if _try_commit(path, version + 1, actions):
-            drop_extended_stats(path)  # rows vanished; sketch can't follow
-            return version + 1
-    raise DeltaProtocolError(f"{path}: lost 5 consecutive commit races")
+        actions = _dv_actions(protocol, state, descs, operation)
+        return actions + list(extra_actions or []), version + 1
+
+    # DV commits only re-add existing entries with descriptors — no
+    # column data is (re)written here; the extra_actions adds were
+    # staged physical by the caller
+    return _commit(spark, path, build, keep_stats=True, stale_stats=True)
 
 
 def _dv_build_distributed(spark: SparkSession, path: str, matched) -> list:
@@ -1439,12 +1410,8 @@ def _dv_commit_distributed(
     silently committing would resurrect deleted rows."""
     descs = {r["ap"]: json.loads(r["desc"]) for r in per_file}
     assumed = {r["ap"]: (r["existing"] or None) for r in per_file}
-    for _ in range(5):
-        protocol, _, state, version = _snapshot_state(
-            spark, path, None, None,
-            allow_dvs=True, allow_name_mapping=True,
-            keep_stats=True,
-        )
+
+    def build(protocol, _metadata, state, version):
         for ap in descs:
             add = state.get(ap)
             if add is None:
@@ -1462,43 +1429,39 @@ def _dv_commit_distributed(
                     f"concurrent deletion-vector commit on {ap}"
                     " — re-run the statement"
                 )
-        feats_r = sorted(
-            set(protocol.get("readerFeatures") or [])
-            | {"deletionVectors"}
-        )
-        feats_w = sorted(
-            set(protocol.get("writerFeatures") or [])
-            | {"deletionVectors"}
-        )
-        actions: list[dict] = [
+        actions = _dv_actions(protocol, state, descs, operation)
+        return actions + list(extra_actions or []), version + 1
+
+    return _commit(spark, path, build, keep_stats=True, stale_stats=True)
+
+
+def _dv_actions(
+    protocol: dict, state: dict, descs: dict[str, dict], operation: str
+) -> list[dict]:
+    """A deletion-vector commit: the protocol bumped to
+    readerFeatures=[deletionVectors] (minReader 3 / minWriter 7), and
+    each touched file removed and re-added with its new descriptor."""
+    feats = {
+        k: sorted(set(protocol.get(k) or []) | {"deletionVectors"})
+        for k in ("readerFeatures", "writerFeatures")
+    }
+    actions: list[dict] = [
+        _commit_info(operation, mode="deletionVectors"),
+        {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7, **feats}},
+    ]
+    for ap in sorted(descs):
+        actions.append(_remove_action(ap, state[ap]))
+        actions.append(
             {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": operation,
-                    "operationParameters": {"mode": "deletionVectors"},
-                }
-            },
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": feats_r,
-                    "writerFeatures": feats_w,
-                }
-            },
-        ]
-        for ap in sorted(descs):
-            actions.append(_remove_action(ap, state[ap]))
-            new_add = dict(state[ap])
-            new_add["deletionVector"] = descs[ap]
-            new_add["dataChange"] = True
-            new_add["modificationTime"] = _now_ms()
-            actions.append({"add": new_add})
-        actions += list(extra_actions or [])
-        if _try_commit(path, version + 1, actions):
-            drop_extended_stats(path)  # rows vanished; sketch can't follow
-            return version + 1
-    raise DeltaProtocolError(f"{path}: lost 5 consecutive commit races")
+                "add": dict(
+                    state[ap],
+                    deletionVector=descs[ap],
+                    dataChange=True,
+                    modificationTime=_now_ms(),
+                )
+            }
+        )
+    return actions
 
 
 def delta_table_version(spark: SparkSession, path: str) -> int:
@@ -2289,37 +2252,6 @@ def _stage_cdc_files(change_df, path: str, metadata: dict) -> list[dict]:
     return actions
 
 
-def _cdc_classify(before, after, on: list[str]):
-    """Row-level change rows between two images of the same logical
-    relation keyed by ``on`` (MERGE's change stream): rows common to
-    both images drop out; a key present in both diffs emits an
-    update_preimage/update_postimage pair, a key only in the before
-    diff emits delete, only in the after diff emits insert. Pure
-    set-algebra over DataFrames — exceptAll + semi/anti joins, no
-    driver collect."""
-    pre = before.exceptAll(after)
-    post = after.exceptAll(before)
-    k_pre = pre.select(*on).distinct()
-    k_post = post.select(*on).distinct()
-    ct = "_change_type"
-    return (
-        pre.join(k_post, on, "left_semi")
-        .withColumn(ct, F.lit("update_preimage"))
-        .unionByName(
-            pre.join(k_post, on, "left_anti")
-            .withColumn(ct, F.lit("delete"))
-        )
-        .unionByName(
-            post.join(k_pre, on, "left_semi")
-            .withColumn(ct, F.lit("update_postimage"))
-        )
-        .unionByName(
-            post.join(k_pre, on, "left_anti")
-            .withColumn(ct, F.lit("insert"))
-        )
-    )
-
-
 def _try_commit(path: str, version: int, actions: list[dict]) -> bool:
     log = os.path.join(_log_dir(path))
     os.makedirs(log, exist_ok=True)
@@ -2330,6 +2262,59 @@ def _try_commit(path: str, version: int, actions: list[dict]) -> bool:
         return True
     except FileExistsError:
         return False  # lost the version race — caller re-reads + retries
+
+
+def _commit(
+    spark: SparkSession,
+    path: str,
+    build,
+    first: tuple | None = None,
+    keep_stats: bool = False,
+    stale_stats: bool = False,
+):
+    """The optimistic commit every Delta writer shares: fold the log,
+    let ``build(protocol, metadata, state, version)`` return
+    ``(actions, result)``, and put the actions at version + 1 with the
+    put-if-absent rule (actions None commits nothing). A lost race
+    re-folds and rebuilds, five attempts at most; files the lost
+    attempt staged are orphans no commit references, invisible to
+    readers. ``first`` is a fold the caller already made, used by the
+    first attempt. ``stale_stats`` drops the extended-stats sidecar
+    after the commit (an HLL cannot subtract rows). Returns the
+    result."""
+    snap = first
+    for _ in range(5):
+        if snap is None:
+            snap = _snapshot_state(
+                spark, path, None, None,
+                allow_dvs=True, allow_name_mapping=True,
+                keep_stats=keep_stats,
+            )
+        actions, result = build(*snap)
+        if actions is None:
+            return result
+        if _try_commit(path, snap[3] + 1, actions):
+            if stale_stats:
+                drop_extended_stats(path)
+            return result
+        snap = None
+    raise DeltaProtocolError(f"{path}: lost 5 consecutive commit races")
+
+
+def _commit_info(operation: str, **parameters) -> dict:
+    info: dict = {"timestamp": _now_ms(), "operation": operation}
+    if parameters:
+        info["operationParameters"] = parameters
+    return {"commitInfo": info}
+
+
+def _dv_enabled(metadata: dict) -> bool:
+    return (
+        (metadata.get("configuration") or {})
+        .get("delta.enableDeletionVectors", "false")
+        .lower()
+        == "true"
+    )
 
 
 def write_delta(
@@ -2439,18 +2424,17 @@ def _write_delta(
         raise FileNotFoundError(
             f"{path} is not a Delta table (use mode='create')"
         )
-    for _ in range(5):
+    staged: dict = {}
+
+    def build(_protocol, metadata, state, version):
         # append adds files and overwrite retires whole files — neither
         # re-serializes an existing DV'd add, so both stay DV-safe;
         # column-mapped tables stage through _stage_physical (r10)
-        _, metadata, state, version = _snapshot_state(
-            spark, path, None, None,
-            allow_dvs=True, allow_name_mapping=True,
-        )
+        staged.clear()
         if txn_app_id is not None:
             last = delta_txn_versions(spark, path).get(txn_app_id)
             if last is not None and int(txn_version) <= last:
-                return version, 0  # already committed: no-op
+                return None, (version, 0)  # already committed: no-op
         part_cols = list(metadata.get("partitionColumns") or [])
         if partition_by is not None and list(partition_by) != part_cols:
             raise DeltaProtocolError(
@@ -2467,14 +2451,8 @@ def _write_delta(
             )
         stage_df, stage_parts = _stage_physical(df, metadata)
         adds, rows = _stage_data_files(stage_df, path, stage_parts)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": mode.upper(),
-                }
-            }
-        ]
+        staged.update(metadata=metadata, adds=adds)
+        actions: list[dict] = [_commit_info(mode.upper())]
         if mode == "overwrite":
             actions += [
                 _remove_action(p, state[p]) for p in sorted(state)
@@ -2489,158 +2467,141 @@ def _write_delta(
                     }
                 }
             )
-        actions += adds
-        if _try_commit(path, version + 1, actions):
-            if mode == "append":
-                update_extended_stats_on_append(
-                    spark, path, metadata, adds
-                )
-            else:
-                drop_extended_stats(path)
-            return version + 1, rows
-        # lost the race: orphan the staged files (never referenced by
-        # any commit — invisible to readers) and retry on fresh state
-    raise DeltaProtocolError(
-        f"{path}: lost {5} consecutive commit races"
-    )
+        return actions + adds, (version + 1, rows)
+
+    result = _commit(spark, path, build, stale_stats=mode == "overwrite")
+    if staged and mode == "append":
+        update_extended_stats_on_append(
+            spark, path, staged["metadata"], staged["adds"]
+        )
+    return result
 
 
-def _rewrite_matched_files(
-    spark: SparkSession,
-    path: str,
-    predicate_sql: str,
-    operation: str,
-    rewrite,
-    cdc_rows=None,
+def _row_level(
+    spark: SparkSession, path: str, rule: RowRule, operation: str
 ) -> dict:
-    """Shared copy-on-write kernel for DELETE/UPDATE (reference delta
-    connector row-level operations): files CONTAINING matches are
-    rewritten through ``rewrite(rows_of_those_files)``; the rest of the
-    table is untouched. One commit: remove(touched) + add(rewrites).
-    When delta.enableChangeDataFeed=true, ``cdc_rows(touched_rows)``
-    supplies the labeled change rows (table columns + _change_type)
-    and the SAME commit carries their Change Data Files — readers
-    replay exactly the changed rows, never the whole rewritten
-    files."""
-    from pyspark.sql import functions as F
+    """DELETE/UPDATE/MERGE on a Delta table; the row rules are
+    sources/merge.py's. Mode follows the table's own configuration, the
+    same switch the reference honors: delta.enableDeletionVectors=true
+    routes to merge-on-read (_dv_rewrite); otherwise copy-on-write
+    (reference delta connector row-level operations): the kernel
+    (merge.rewrite_files) finds the files holding matches and their
+    survivors, and ONE commit removes those files and adds the
+    survivors — the rest of the table is untouched. The scan is built
+    from the same log fold whose files the commit removes, and the
+    fold that read the mode serves the first attempt. When
+    delta.enableChangeDataFeed=true the SAME commit carries Change
+    Data Files of exactly the changed rows, never the whole rewritten
+    files. Returns {'version', 'files_rewritten'}."""
+    first = _snapshot_state(
+        spark, path, None, None, allow_dvs=True, allow_name_mapping=True
+    )
+    if _dv_enabled(first[1]):
+        return _dv_rewrite(spark, path, rule, operation, first[1])
 
-    for _ in range(5):
-        _, metadata, state, version = _snapshot_state(
-            spark, path, None, None, allow_name_mapping=True
-        )
-        df = read_delta_snapshot(spark, path).withColumn(
-            "__sf", F.input_file_name()
-        )
-        hit_files = {
-            r["__sf"]
-            for r in df.filter(predicate_sql)
-            .select("__sf")
-            .distinct()
-            .collect()
-        }
-        if not hit_files:
-            return {"version": version, "files_rewritten": 0}
-        # map absolute scan paths back to log-relative add paths
-        by_abs = {
+    def build(_protocol, metadata, state, version):
+        _refuse_dvs(state)
+        known = {
             os.path.abspath(os.path.join(path, unquote(p))): p
             for p in state
         }
-        removed = []
-        for f in hit_files:
-            ap = os.path.abspath(_strip_uri(f))
-            if ap not in by_abs:
-                raise DeltaProtocolError(f"scanned file not in log: {f}")
-            removed.append(by_abs[ap])
-        touched = df.filter(f"__sf IN ({_in_list(hit_files)})").drop(
-            "__sf"
+        scan = _scan_entries(
+            spark, path, metadata,
+            [
+                (p, add.get("partitionValues") or {}, None)
+                for p, add in state.items()
+            ],
         )
+        rw = rewrite_files(scan, known, rule, DeltaProtocolError)
+        if rw is None:
+            return None, {"version": version, "files_rewritten": 0}
         # column-mapped tables rewrite LOGICAL rows, then re-stage
         # physically (rename + parquet field ids) per the protocol
-        stage_df, stage_parts = _stage_physical(rewrite(touched), metadata)
+        stage_df, stage_parts = _stage_physical(rw.survivors, metadata)
         adds, _ = _stage_data_files(stage_df, path, stage_parts)
-        cdc_actions = (
-            _stage_cdc_files(cdc_rows(touched), path, metadata)
-            if cdc_rows is not None and _cdf_enabled(metadata)
+        # a rewrite commit on a CDF table must carry Change Data Files
+        # (even empty ones) or readers would synthesize the whole
+        # rewritten files; a pure insert stays cdc-less (add-only
+        # synthesis is exact)
+        cdc = (
+            _stage_cdc_files(
+                rule.changes(rw.touched, rw.survivors), path, metadata
+            )
+            if rw.removed and _cdf_enabled(metadata)
             else []
         )
         actions = (
-            [
-                {
-                    "commitInfo": {
-                        "timestamp": _now_ms(),
-                        "operation": operation,
-                    }
-                }
-            ]
-            + [_remove_action(p, state[p]) for p in sorted(removed)]
+            [_commit_info(operation)]
+            + [_remove_action(p, state[p]) for p in sorted(rw.removed)]
             + adds
-            + cdc_actions
+            + cdc
         )
-        if _try_commit(path, version + 1, actions):
-            drop_extended_stats(path)  # HLLs can't subtract changed rows
-            return {
-                "version": version + 1,
-                "files_rewritten": len(removed),
-            }
-    raise DeltaProtocolError(f"{path}: lost {5} consecutive commit races")
+        return actions, {
+            "version": version + 1,
+            "files_rewritten": len(rw.removed),
+        }
+
+    return _commit(spark, path, build, first=first, stale_stats=True)
+
+
+def _dv_rewrite(
+    spark: SparkSession,
+    path: str,
+    rule: RowRule,
+    operation: str,
+    metadata: dict,
+) -> dict:
+    """Merge-on-read DELETE/UPDATE/MERGE: the matched rows are shadowed
+    by deletion vectors, and the rows that replace them (UPDATE's
+    post-images; MERGE's merged images — updated, carried verbatim, or
+    omitted by a DELETE clause — and its inserts) append as new files
+    in the SAME commit: update = delete + insert, the DV writer's
+    contract; a DELETE appends nothing. Matched positions never reach
+    the driver: the bitmaps build and write executor-side
+    (_dv_build_distributed) and the driver commits descriptors."""
+    matched = rule.matcher(read_delta_snapshot(spark, path, _row_tags=True))
+    rows = matched.drop("__dv_file", "__dv_pos")
+    per_file = _dv_build_distributed(spark, path, matched)
+    survivors = None if operation == "DELETE" else rule.rewrite(rows)
+    if not per_file and (survivors is None or survivors.isEmpty()):
+        return {
+            "version": delta_table_version(spark, path),
+            "files_rewritten": 0,
+        }
+    adds: list[dict] = []
+    if survivors is not None:
+        # column-mapped tables stage physical names + field ids exactly
+        # like the COW paths — appending logical-named files to a
+        # mapped table would read back all-NULL
+        stage_df, stage_parts = _stage_physical(survivors, metadata)
+        adds, _ = _stage_data_files(stage_df, path, stage_parts)
+    if not per_file:
+        # a MERGE that matched nothing: plain adds, no DV to write
+        v = _commit(
+            spark, path,
+            lambda _p, _m, _s, version: (
+                [_commit_info(operation)] + adds, version + 1
+            ),
+        )
+        return {"version": v, "files_rewritten": 0}
+    if _cdf_enabled(metadata):
+        adds += _stage_cdc_files(
+            rule.changes(rows, survivors), path, metadata
+        )
+    v = _dv_commit_distributed(
+        spark, path, per_file, extra_actions=adds, operation=operation
+    )
+    return {"version": v, "files_rewritten": 0}
 
 
 def delta_delete_where(
     spark: SparkSession, path: str, predicate_sql: str
 ) -> dict:
-    """DELETE FROM ... WHERE. Mode follows the table's own
-    configuration, the same switch the reference honors:
-    delta.enableDeletionVectors=true routes to a merge-on-read
-    deletion-vector commit (row-targeted, no file rewrite — the right
-    trade for sparse deletes; matched positions materialize on the
-    driver, which is what every DV writer does); otherwise
-    copy-on-write rewrites matched files without the matching rows.
-    Returns {'version', 'files_rewritten'}."""
-    _, metadata, _, _ = _snapshot_state(
-        spark, path, None, None, allow_dvs=True, allow_name_mapping=True
-    )
-    dv_mode = (
-        (metadata.get("configuration") or {})
-        .get("delta.enableDeletionVectors", "false")
-        .lower()
-        == "true"
-    )
-    if dv_mode:
-        # matched positions NEVER reach the driver: the bitmaps build
-        # and write executor-side, the driver commits descriptors
-        matched = read_delta_snapshot(spark, path, _row_tags=True).where(
-            predicate_sql
-        )
-        per_file = _dv_build_distributed(spark, path, matched)
-        if not per_file:
-            return {
-                "version": delta_table_version(spark, path),
-                "files_rewritten": 0,
-            }
-        extra = (
-            _stage_cdc_files(
-                matched.drop("__dv_file", "__dv_pos").withColumn(
-                    "_change_type", F.lit("delete")
-                ),
-                path, metadata,
-            )
-            if _cdf_enabled(metadata)
-            else []
-        )
-        v = _dv_commit_distributed(
-            spark, path, per_file, extra_actions=extra
-        )
-        return {"version": v, "files_rewritten": 0}
-    return _rewrite_matched_files(
-        spark,
-        path,
-        predicate_sql,
-        "DELETE",
-        lambda rows: rows.filter(f"NOT ({predicate_sql})"),
-        cdc_rows=lambda rows: rows.filter(predicate_sql).withColumn(
-            "_change_type", F.lit("delete")
-        ),
-    )
+    """DELETE FROM ... WHERE (_row_level): deletion-vector tables get a
+    row-targeted commit with no file rewrite — the right trade for
+    sparse deletes; copy-on-write rewrites matched files without the
+    matching rows. Returns {'version', 'files_rewritten'}."""
+    return _row_level(spark, path, delete_rule(predicate_sql), "DELETE")
 
 
 def delta_update_where(
@@ -2649,154 +2610,13 @@ def delta_update_where(
     predicate_sql: str,
     assignments: dict[str, str],
 ) -> dict:
-    """UPDATE ... SET ... WHERE. delta.enableDeletionVectors=true
-    routes to merge-on-read: matched rows are shadowed by a deletion
-    vector and their POST-update images appended as a new file, in ONE
-    commit (update = delete + insert, the DV writer's contract);
-    otherwise copy-on-write — in matched files, matching rows get the
-    SQL-expression assignments applied and unmatched rows in those
-    files are carried verbatim. Assignments and the predicate always
-    evaluate against the PRE-update row. Returns
+    """UPDATE ... SET ... WHERE (_row_level): assignments and the
+    predicate always evaluate against the PRE-update row, and each
+    value is cast to its column's type (merge.update_where). Returns
     {'version', 'files_rewritten'}."""
-    from pyspark.sql import functions as F
-
-    _, metadata, _, _ = _snapshot_state(
-        spark, path, None, None, allow_dvs=True, allow_name_mapping=True
+    return _row_level(
+        spark, path, update_rule(predicate_sql, assignments), "UPDATE"
     )
-    dv_mode = (
-        (metadata.get("configuration") or {})
-        .get("delta.enableDeletionVectors", "false")
-        .lower()
-        == "true"
-    )
-    if dv_mode:
-        tagged = read_delta_snapshot(spark, path, _row_tags=True)
-        matched = tagged.where(predicate_sql)
-        # executor-side bitmap build first: nothing is staged when no
-        # row matched, and the driver only ever holds descriptors
-        per_file = _dv_build_distributed(spark, path, matched)
-        if not per_file:
-            return {
-                "version": delta_table_version(spark, path),
-                "files_rewritten": 0,
-            }
-        updated = _apply_assignments(
-            matched.drop("__dv_file", "__dv_pos"),
-            predicate_sql,
-            assignments,
-            DeltaProtocolError,
-        )
-        # column-mapped tables stage physical names + field ids exactly
-        # like the COW paths — appending logical-named files to a
-        # mapped table would read back all-NULL
-        stage_df, stage_parts = _stage_physical(updated, metadata)
-        adds, _ = _stage_data_files(stage_df, path, stage_parts)
-        if _cdf_enabled(metadata):
-            pre = matched.drop("__dv_file", "__dv_pos")
-            adds += _stage_cdc_files(
-                pre.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ).unionByName(
-                    updated.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                ),
-                path, metadata,
-            )
-        v = _dv_commit_distributed(
-            spark, path, per_file, extra_actions=adds, operation="UPDATE"
-        )
-        return {"version": v, "files_rewritten": 0}
-
-    def rewrite(rows):
-        return _apply_assignments(
-            rows, predicate_sql, assignments, DeltaProtocolError
-        )
-
-    def cdc_rows(rows):
-        m = rows.filter(predicate_sql)
-        return m.withColumn(
-            "_change_type", F.lit("update_preimage")
-        ).unionByName(
-            _apply_assignments(
-                m, predicate_sql, assignments, DeltaProtocolError
-            ).withColumn("_change_type", F.lit("update_postimage"))
-        )
-
-    return _rewrite_matched_files(
-        spark, path, predicate_sql, "UPDATE", rewrite, cdc_rows=cdc_rows
-    )
-
-
-def _delta_merge_dv(
-    spark: SparkSession, path: str, source, on: list[str], **merge_kwargs
-) -> dict:
-    """MERGE in deletion-vector mode: matched-KEY target rows are
-    shadowed by a DV and their merged images (updated, or carried
-    verbatim when no clause touched them, or omitted when a DELETE
-    clause did) append as new files together with the inserts — ONE
-    commit, no file rewrite. Matched positions stay on the executors
-    (_dv_build_distributed); the driver commits per-file descriptors."""
-    from pyspark.sql import functions as F
-
-    from witdb_spark.sources.merge import merge_into
-
-    tagged = read_delta_snapshot(spark, path, _row_tags=True)
-    matched = tagged.join(
-        source.select(*on).distinct(), on=on, how="left_semi"
-    )
-    per_file = _dv_build_distributed(spark, path, matched)
-    survivors = merge_into(
-        matched.drop("__dv_file", "__dv_pos"), source, on, **merge_kwargs
-    )
-    if not per_file and survivors.isEmpty():
-        return {
-            "version": delta_table_version(spark, path),
-            "files_rewritten": 0,
-        }
-    _, metadata, _, _ = _snapshot_state(
-        spark, path, None, None, allow_dvs=True, allow_name_mapping=True
-    )
-    # stage through the column-mapping physical form (same contract as
-    # the COW/append paths — see delta_update_where)
-    stage_df, stage_parts = _stage_physical(survivors, metadata)
-    adds, _ = _stage_data_files(stage_df, path, stage_parts)
-    if per_file:
-        if _cdf_enabled(metadata):
-            # MERGE's change stream: diff the matched image against
-            # the merged one — carried-verbatim rows emit nothing
-            adds += _stage_cdc_files(
-                _cdc_classify(
-                    matched.drop("__dv_file", "__dv_pos"),
-                    survivors, on,
-                ),
-                path, metadata,
-            )
-        v = _dv_commit_distributed(
-            spark, path, per_file, extra_actions=adds, operation="MERGE"
-        )
-    else:
-        # pure insert: plain adds commit (no DV to write)
-        for _ in range(5):
-            _, _, _, version = _snapshot_state(
-                spark, path, None, None, allow_dvs=True
-            )
-            actions = [
-                {
-                    "commitInfo": {
-                        "timestamp": _now_ms(),
-                        "operation": "MERGE",
-                    }
-                }
-            ] + adds
-            if _try_commit(path, version + 1, actions):
-                v = version + 1
-                break
-        else:
-            raise DeltaProtocolError(
-                f"{path}: lost 5 consecutive commit races"
-            )
-    return {"version": v, "files_rewritten": 0}
 
 
 def delta_merge_into(
@@ -2806,95 +2626,15 @@ def delta_merge_into(
     on: list[str],
     **merge_kwargs,
 ) -> dict:
-    """MERGE INTO a Delta table. delta.enableDeletionVectors=true
-    routes to the merge-on-read shadow-and-append (_delta_merge_dv);
-    default file-level copy-on-write (reference
-    delta connector MERGE): any target file containing a key-matched
-    row is rewritten through sources/merge.merge_into applied to JUST
-    those files' rows plus the whole source (a source row matching a
-    row in an untouched file is impossible — that file would be
-    touched), so unmatched files are never rewritten and pure inserts
-    commit as plain adds. Accepts merge_into's clause kwargs."""
-    from pyspark.sql import functions as F
-
-    from witdb_spark.sources.merge import merge_into
-
-    _, md0, _, _ = _snapshot_state(
-        spark, path, None, None, allow_dvs=True, allow_name_mapping=True
+    """MERGE INTO a Delta table (_row_level with merge.merge_rule;
+    reference delta connector MERGE): copy-on-write rewrites only the
+    files holding a key-matched row, and pure inserts commit as plain
+    adds; deletion-vector tables shadow the matched-key rows and
+    append their merged images with the inserts. Accepts merge_into's
+    clause kwargs."""
+    return _row_level(
+        spark, path, merge_rule(source, on, **merge_kwargs), "MERGE"
     )
-    if (
-        (md0.get("configuration") or {})
-        .get("delta.enableDeletionVectors", "false")
-        .lower()
-        == "true"
-    ):
-        return _delta_merge_dv(spark, path, source, on, **merge_kwargs)
-    for _ in range(5):
-        _, metadata, state, version = _snapshot_state(
-            spark, path, None, None, allow_name_mapping=True
-        )
-        df = read_delta_snapshot(spark, path).withColumn(
-            "__sf", F.input_file_name()
-        )
-        hit_files = {
-            r["__sf"]
-            for r in df.join(
-                source.select(*on).distinct(), on=on, how="left_semi"
-            )
-            .select("__sf")
-            .distinct()
-            .collect()
-        }
-        if hit_files:
-            touched = df.filter(f"__sf IN ({_in_list(hit_files)})").drop(
-                "__sf"
-            )
-        else:
-            touched = df.limit(0).drop("__sf")
-        merged = merge_into(touched, source, on, **merge_kwargs)
-        by_abs = {
-            os.path.abspath(os.path.join(path, unquote(p))): p
-            for p in state
-        }
-        removed = []
-        for f in hit_files:
-            ap = os.path.abspath(_strip_uri(f))
-            if ap not in by_abs:
-                raise DeltaProtocolError(f"scanned file not in log: {f}")
-            removed.append(by_abs[ap])
-        stage_df, stage_parts = _stage_physical(merged, metadata)
-        adds, _ = _stage_data_files(stage_df, path, stage_parts)
-        if not removed and not adds:
-            return {"version": version, "files_rewritten": 0}
-        cdc_actions = []
-        if removed and _cdf_enabled(metadata):
-            # a rewrite commit on a CDF table must carry Change Data
-            # Files (even empty ones) or readers would synthesize the
-            # whole rewritten files; insert-only merges stay cdc-less
-            # (add-only synthesis is exact)
-            cdc_actions = _stage_cdc_files(
-                _cdc_classify(touched, merged, on), path, metadata
-            )
-        actions = (
-            [
-                {
-                    "commitInfo": {
-                        "timestamp": _now_ms(),
-                        "operation": "MERGE",
-                    }
-                }
-            ]
-            + [_remove_action(p, state[p]) for p in sorted(removed)]
-            + adds
-            + cdc_actions
-        )
-        if _try_commit(path, version + 1, actions):
-            drop_extended_stats(path)  # HLLs can't subtract changed rows
-            return {
-                "version": version + 1,
-                "files_rewritten": len(removed),
-            }
-    raise DeltaProtocolError(f"{path}: lost {5} consecutive commit races")
 
 
 def delta_set_properties(
@@ -2908,11 +2648,8 @@ def delta_set_properties(
     of None unsets the key. Column-mapping mode cannot be flipped this
     way (existing files lack the physical naming) — refused."""
     cur_mode_new = properties.get("delta.columnMapping.mode")
-    for _ in range(5):
-        _, metadata, _, version = _snapshot_state(
-            spark, path, None, None,
-            allow_dvs=True, allow_name_mapping=True,
-        )
+
+    def build(_protocol, metadata, _state, version):
         cfg = dict(metadata.get("configuration") or {})
         if (
             cur_mode_new is not None
@@ -2929,18 +2666,11 @@ def delta_set_properties(
             else:
                 cfg[k] = str(v)
         new_meta = dict(metadata, configuration=cfg)
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "SET TBLPROPERTIES",
-                }
-            },
-            {"metaData": new_meta},
-        ]
-        if _try_commit(path, version + 1, actions):
-            return version + 1
-    raise DeltaProtocolError(f"{path}: lost 5 consecutive commit races")
+        return [
+            _commit_info("SET TBLPROPERTIES"), {"metaData": new_meta}
+        ], version + 1
+
+    return _commit(spark, path, build)
 
 
 def delta_truncate(spark: SparkSession, path: str) -> dict:
@@ -2949,25 +2679,17 @@ def delta_truncate(spark: SparkSession, path: str) -> dict:
     add — no file rewrite, no data deletion (time travel still sees
     the rows; vacuum reclaims them later). CDF tables record the
     truncate as whole-file deletes, which synthesis serves exactly."""
-    for _ in range(5):
-        _, _, state, version = _snapshot_state(
-            spark, path, None, None,
-            allow_dvs=True, allow_name_mapping=True,
-        )
+
+    def build(_protocol, _metadata, state, version):
         if not state:
-            return {"version": version, "files_removed": 0}
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "TRUNCATE",
-                }
-            }
-        ] + [_remove_action(p, state[p]) for p in sorted(state)]
-        if _try_commit(path, version + 1, actions):
-            drop_extended_stats(path)  # table emptied; sketch is stale
-            return {"version": version + 1, "files_removed": len(state)}
-    raise DeltaProtocolError(f"{path}: lost 5 consecutive commit races")
+            return None, {"version": version, "files_removed": 0}
+        actions = [_commit_info("TRUNCATE")] + [
+            _remove_action(p, state[p]) for p in sorted(state)
+        ]
+        return actions, {"version": version + 1, "files_removed": len(state)}
+
+    # the table is emptied; its sketch is stale
+    return _commit(spark, path, build, stale_stats=True)
 
 
 def delta_txn_versions(spark: SparkSession, path: str) -> dict[str, int]:
@@ -3243,16 +2965,13 @@ def delta_optimize(spark: SparkSession, path: str, target_files: int = 1) -> dic
     REORG TABLE ... APPLY (PURGE)); a table whose only excess baggage
     is deletion vectors still rewrites even at the target file count.
     Returns {'version', 'files_before', 'files_after'}."""
-    for _ in range(5):
-        _, metadata, state, version = _snapshot_state(
-            spark, path, None, None,
-            allow_dvs=True, allow_name_mapping=True,
-        )
+
+    def build(_protocol, metadata, state, version):
         has_dvs = any(
             a.get("deletionVector") for a in state.values()
         )
         if len(state) <= target_files and not has_dvs:
-            return {
+            return None, {
                 "version": version,
                 "files_before": len(state),
                 "files_after": len(state),
@@ -3269,27 +2988,20 @@ def delta_optimize(spark: SparkSession, path: str, target_files: int = 1) -> dic
         for a in adds:
             a["add"]["dataChange"] = False
         actions = (
-            [
-                {
-                    "commitInfo": {
-                        "timestamp": _now_ms(),
-                        "operation": "OPTIMIZE",
-                    }
-                }
-            ]
+            [_commit_info("OPTIMIZE")]
             + [
                 _remove_action(p, state[p], data_change=False)
                 for p in sorted(state)
             ]
             + adds
         )
-        if _try_commit(path, version + 1, actions):
-            return {
-                "version": version + 1,
-                "files_before": len(state),
-                "files_after": len(adds),
-            }
-    raise DeltaProtocolError(f"{path}: lost {5} consecutive commit races")
+        return actions, {
+            "version": version + 1,
+            "files_before": len(state),
+            "files_after": len(adds),
+        }
+
+    return _commit(spark, path, build)
 
 
 def delta_restore(spark: SparkSession, path: str, version: int) -> dict:
@@ -3305,19 +3017,15 @@ def delta_restore(spark: SparkSession, path: str, version: int) -> dict:
     was vacuumed away. Returns {'version', 'files_added',
     'files_removed'}."""
     target = int(version)
-    for _ in range(5):
-        _, m_old, state_old, _ = _snapshot_state(
-            spark, path, target, None,
-            allow_dvs=True, allow_name_mapping=True,
-            keep_stats=True,
-        )
-        _, m_cur, state_cur, cur_v = _snapshot_state(
-            spark, path, None, None,
-            allow_dvs=True, allow_name_mapping=True,
-            keep_stats=True,
-        )
+    _, m_old, state_old, _ = _snapshot_state(
+        spark, path, target, None,
+        allow_dvs=True, allow_name_mapping=True,
+        keep_stats=True,
+    )
+
+    def build(_protocol, m_cur, state_cur, cur_v):
         if target == cur_v:
-            return {
+            return None, {
                 "version": cur_v, "files_added": 0, "files_removed": 0
             }
         adds = []
@@ -3342,27 +3050,21 @@ def delta_restore(spark: SparkSession, path: str, version: int) -> dict:
             for ap in sorted(set(state_cur) - set(state_old))
         ]
         actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "RESTORE",
-                    "operationParameters": {"version": str(target)},
-                }
-            }
+            _commit_info("RESTORE", version=str(target))
         ]
         if json.dumps(m_old, sort_keys=True) != json.dumps(
             m_cur, sort_keys=True
         ):
             actions.append({"metaData": m_old})
         actions += removes + adds
-        if _try_commit(path, cur_v + 1, actions):
-            drop_extended_stats(path)  # visible rows changed wholesale
-            return {
-                "version": cur_v + 1,
-                "files_added": len(adds),
-                "files_removed": len(removes),
-            }
-    raise DeltaProtocolError(f"{path}: lost 5 consecutive commit races")
+        return actions, {
+            "version": cur_v + 1,
+            "files_added": len(adds),
+            "files_removed": len(removes),
+        }
+
+    # visible rows changed wholesale
+    return _commit(spark, path, build, keep_stats=True, stale_stats=True)
 
 
 def delta_vacuum(
@@ -3411,39 +3113,12 @@ def delta_vacuum(
     return {"deleted": deleted}
 
 
-def _apply_assignments(rows, predicate_sql: str, assignments, err_cls):
-    """UPDATE semantics shared by the Delta/Iceberg/Hudi COW paths: one
-    SELECT in which every assignment RHS and the predicate evaluate
-    against the PRE-update row — {'a': 'b', 'b': 'a'} swaps, and an
-    assignment that falsifies the predicate cannot suppress later
-    assignments (the chained-withColumn bug this replaced)."""
-    from pyspark.sql import functions as F
-
-    for col in assignments:
-        if col not in rows.columns:
-            raise err_cls(f"no such column {col!r}")
-    return rows.select(
-        *[
-            F.when(
-                F.expr(predicate_sql), F.expr(assignments[c])
-            ).otherwise(F.col(c)).alias(c)
-            if c in assignments
-            else F.col(c)
-            for c in rows.columns
-        ]
-    )
-
-
 def _strip_uri(p: str) -> str:
     """file:-URI -> local path. input_file_name() returns a percent-
     ENCODED URI (spaces, non-ASCII), while the add-action paths are
     unquote()d before joining — decode so the two sides of the
     scan-path -> log-path map agree for any table/partition path."""
     return unquote(re.sub(r"^file:(//)?", "", p))
-
-
-def _in_list(values) -> str:
-    return ", ".join("'" + v.replace("'", "''") + "'" for v in sorted(values))
 
 
 # ---------------------------------------------------------------------------

@@ -27,6 +27,14 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from witdb_spark.sources.merge import (
+    RowRule,
+    delete_rule,
+    merge_rule,
+    rewrite_files,
+    update_rule,
+)
+
 
 class HudiProtocolError(RuntimeError):
     pass
@@ -1013,93 +1021,50 @@ def hudi_commits(path: str) -> list[dict]:
     ]
 
 
-def _hudi_rewrite_matched(
+def _hudi_cow(
     spark: SparkSession,
     path: str,
-    matcher,
-    rewrite,
-    commit_on_no_match: bool = False,
-    op: str = "DML",
+    rule: RowRule,
     scan_files: list[str] | None = None,
 ) -> str | None:
-    """Copy-on-write file-group rewrite shared by DELETE/UPDATE/MERGE:
-    one replacecommit retires every file group ``matcher`` flags (it
-    receives the __sf-annotated scan and returns the matching ``__sf``
-    column) and publishes the surviving rows as fresh groups — the
-    timeline's own mechanism, so readers (including as-of time travel)
-    need nothing new. ``commit_on_no_match`` keeps going when no group
-    matched (MERGE's pure-insert case). Returns the commit instant, or
-    None when nothing was committed."""
-    from pyspark.sql import functions as F
-
-    from witdb_spark.sources.delta_log import _strip_uri
-
-    files = hudi_base_files(path)
-    by_abs = {os.path.abspath(f): f for f in files}
-    if not files and not commit_on_no_match:
-        return None
+    """Copy-on-write commit for DELETE/UPDATE/MERGE/UPSERT/clustering:
+    the kernel (merge.rewrite_files) scans the active file groups and
+    rewrites the ones the rule matches; one replacecommit retires them
+    and publishes the surviving rows as fresh groups — the timeline's
+    own mechanism, so readers (including as-of time travel) need
+    nothing new. ``scan_files`` (keyed-upsert footer pruning) narrows
+    the scan to a SUPERSET of the groups that can hold matches; the
+    rest are never read and never rewritten. Returns the commit
+    instant, or None when nothing was committed."""
+    known = {os.path.abspath(f): f for f in hudi_base_files(path)}
     if scan_files is not None:
-        # keyed-upsert footer pruning: only a SUPERSET of the groups
-        # that can contain matches needs scanning; the rest are never
-        # read and never rewritten. Must be active files.
         unknown = [
-            f for f in scan_files if os.path.abspath(f) not in by_abs
+            f for f in scan_files if os.path.abspath(f) not in known
         ]
         if unknown:
             raise HudiProtocolError(
                 f"scan pruning produced non-snapshot files: {unknown[:3]}"
             )
-        files = sorted(scan_files)
+        known = {os.path.abspath(f): f for f in scan_files}
     # staleness fence: remember the last completed instant we planned
     # against; a concurrent commit retiring the same groups would make
     # our survivors duplicate rows, so re-check before publishing
     base_last = _completed_instants(path)[-1][0]
-    if files:
-        df = spark.read.parquet(*files).withColumn(
-            "__sf", F.input_file_name()
-        )
-    else:
-        # zero active file groups (delete-all): MERGE pure inserts must
-        # still commit against the typed empty frame
-        df = read_hudi_snapshot(spark, path).withColumn("__sf", F.lit(""))
-    if matcher is None:
-        # clustering: the matched set is ALL active file groups, known
-        # driver-side — no scan-and-collect, and zero-row file groups
-        # (invisible to a row-derived matcher) are retired too
-        matched_paths = [os.path.abspath(f) for f in files]
-    else:
-        matched_uris = [
-            r["__sf"] for r in matcher(df).distinct().collect()
-        ]
-        if not matched_uris and not commit_on_no_match:
-            return None
-        matched_paths = []
-        for u in matched_uris:
-            ap = os.path.abspath(_strip_uri(u))
-            if ap not in by_abs:
-                raise HudiProtocolError(
-                    f"scanned file {ap} not in the current snapshot"
-                )
-            matched_paths.append(ap)
-    matched_rels = [os.path.relpath(ap, path) for ap in matched_paths]
-    replace_by_part = _group_fids_by_partition(matched_rels)
-
-    if matcher is None:
-        touched = df.drop("__sf")
-    else:
-        touched = (
-            df.where(F.col("__sf").isin(matched_uris))
-            if matched_uris
-            else df.limit(0)
-        ).drop("__sf")
-    survivors = rewrite(touched).select(*touched.columns)
-    if not matched_rels and survivors.isEmpty():
-        # MERGE with nothing matched and nothing to insert: a true
-        # no-op, detected BEFORE claiming an instant or staging files
+    # zero scanned groups (delete-all, or no upsert candidate): MERGE
+    # pure inserts still run against the typed empty frame
+    scan = (
+        spark.read.parquet(*sorted(known))
+        if known
+        else read_hudi_snapshot(spark, path).limit(0)
+    )
+    rw = rewrite_files(scan, known, rule, HudiProtocolError)
+    if rw is None:
+        # a true no-op, detected BEFORE claiming an instant or staging
         return None
+    matched_rels = [os.path.relpath(f, path) for f in rw.removed]
     instant = _claim_instant(path)
     stats_by_part = _stage_hudi_files(
-        survivors, path, instant, _hudi_partition_fields(path)
+        rw.survivors, path, instant, _hudi_partition_fields(path)
     )
     if not stats_by_part and not matched_rels:
         # survivors were all zero-row part files: nothing to publish —
@@ -1108,8 +1073,10 @@ def _hudi_rewrite_matched(
         return None
     meta = {
         "partitionToWriteStats": stats_by_part or {"": []},
-        "partitionToReplaceFileIds": replace_by_part or {"": []},
-        "extraMetadata": {"schema": survivors.schema.json()},
+        "partitionToReplaceFileIds": (
+            _group_fids_by_partition(matched_rels) or {"": []}
+        ),
+        "extraMetadata": {"schema": rw.survivors.schema.json()},
     }
     if _completed_instants(path)[-1][0] != base_last:
         raise HudiProtocolError(
@@ -1134,11 +1101,7 @@ def hudi_delete_where(
     props = _properties(path)
     if props.get("hoodie.table.type") == "MERGE_ON_READ":
         return hudi_log_delete(spark, path, predicate_sql)
-    return _hudi_rewrite_matched(
-        spark, path,
-        lambda df: df.where(predicate_sql).select("__sf"),
-        lambda rows: rows.filter(f"NOT ({predicate_sql})"),
-    )
+    return _hudi_cow(spark, path, delete_rule(predicate_sql))
 
 
 def hudi_update_where(
@@ -1152,11 +1115,9 @@ def hudi_update_where(
     hudi_log_upsert (r11 — every matched key exists, so the upsert
     routes them all as updates; no base rewrite); COPY_ON_WRITE
     rewrites matched file groups. Every assignment RHS and the
-    predicate evaluate against the PRE-update row
-    (delta_log._apply_assignments, the rule all three COW paths
-    share)."""
-    from witdb_spark.sources.delta_log import _apply_assignments
-
+    predicate evaluate against the PRE-update row (merge.update_where,
+    the rule every path shares)."""
+    rule = update_rule(predicate_sql, assignments)
     props = _properties(path)
     if props.get("hoodie.table.type") == "MERGE_ON_READ":
         # the record key is immutable (hudi's own contract — the same
@@ -1184,26 +1145,15 @@ def hudi_update_where(
                 f"the record key field(s) {sorted(hit)} are immutable"
                 " — UPDATE cannot assign them"
             )
-        matched = read_hudi_snapshot(spark, path).where(predicate_sql)
+        matched = rule.matcher(read_hudi_snapshot(spark, path))
         if matched.isEmpty():
             return None
         data_cols = [
             c for c in matched.columns if not c.startswith("_hoodie_")
         ]
-        updated = _apply_assignments(
-            matched.select(*data_cols),
-            predicate_sql,
-            assignments,
-            HudiProtocolError,
-        )
+        updated = rule.rewrite(matched.select(*data_cols))
         return hudi_log_upsert(spark, path, updated)
-    return _hudi_rewrite_matched(
-        spark, path,
-        lambda df: df.where(predicate_sql).select("__sf"),
-        lambda rows: _apply_assignments(
-            rows, predicate_sql, assignments, HudiProtocolError
-        ),
-    )
+    return _hudi_cow(spark, path, rule)
 
 
 def hudi_merge_into(
@@ -1223,20 +1173,10 @@ def hudi_merge_into(
     matched-but-DELETEd keys as tombstones in the SAME log file, and
     inserts as fresh base groups — no base rewrite. Accepts
     merge_into's clause kwargs."""
-    from witdb_spark.sources.merge import merge_into
-
     props = _properties(path)
     if props.get("hoodie.table.type") == "MERGE_ON_READ":
         return _hudi_mor_merge(spark, path, source, on, **merge_kwargs)
-    return _hudi_rewrite_matched(
-        spark, path,
-        lambda df: df.join(
-            source.select(*on).distinct(), on=on, how="left_semi"
-        ).select("__sf"),
-        lambda rows: merge_into(rows, source, on, **merge_kwargs),
-        commit_on_no_match=True,
-        op="MERGE",
-    )
+    return _hudi_cow(spark, path, merge_rule(source, on, **merge_kwargs))
 
 
 def _hudi_mor_merge(
@@ -1254,8 +1194,6 @@ def _hudi_mor_merge(
     fresh base groups. The record key is immutable (hudi's own
     contract) — an UPDATE assignment on it refuses."""
     from pyspark.sql import functions as F
-
-    from witdb_spark.sources.merge import merge_into
 
     props = _properties(path)
     virtual = (
@@ -1296,10 +1234,9 @@ def _hudi_mor_merge(
     data_cols = [
         c for c in snapshot.columns if not c.startswith("_hoodie_")
     ]
-    matched = snapshot.select(*data_cols).join(
-        source.select(*on).distinct(), on=on, how="left_semi"
-    )
-    survivors = merge_into(matched, source, on, **merge_kwargs)
+    rule = merge_rule(source, on, **merge_kwargs)
+    matched = rule.matcher(snapshot.select(*data_cols))
+    survivors = rule.rewrite(matched)
     if matched.isEmpty() and survivors.isEmpty():
         return None
     keymap = _mor_keymap(
@@ -1421,8 +1358,6 @@ def hudi_upsert(
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from witdb_spark.sources.merge import merge_into
-
     props = _properties(path)
     if props.get("hoodie.table.type") == "MERGE_ON_READ":
         # MOR tables take the log-append path — same upsert contract,
@@ -1532,19 +1467,13 @@ def hudi_upsert(
         for c in source.columns
         if c not in key_fields
     }
-    return _hudi_rewrite_matched(
+    return _hudi_cow(
         spark, path,
-        lambda df: df.join(
-            source.select(*key_fields).distinct(),
-            on=key_fields, how="left_semi",
-        ).select("__sf"),
-        lambda rows: merge_into(
-            rows, source, key_fields,
+        merge_rule(
+            source, key_fields,
             when_matched_update=update_cols,
             insert_not_matched=True,
         ),
-        commit_on_no_match=True,
-        op="UPSERT",
         scan_files=candidates,
     )
 
@@ -2751,11 +2680,9 @@ def hudi_cluster(
     table copy per run."""
     if len(hudi_base_files(path)) <= max(1, int(target_groups)):
         return None
-    return _hudi_rewrite_matched(
+    return _hudi_cow(
         spark, path,
-        None,
-        lambda rows: rows.coalesce(max(1, int(target_groups))),
-        op="clustering",
+        RowRule(None, lambda rows: rows.coalesce(max(1, int(target_groups)))),
     )
 
 

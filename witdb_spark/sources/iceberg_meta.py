@@ -33,6 +33,13 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from witdb_spark.sources.avro_codec import read_avro_file, write_avro_file
+from witdb_spark.sources.merge import (
+    RowRule,
+    delete_rule,
+    merge_rule,
+    rewrite_files,
+    update_rule,
+)
 
 
 class IcebergProtocolError(RuntimeError):
@@ -2243,33 +2250,19 @@ def iceberg_write_equality_deletes(
     )
 
 
-def _iceberg_rewrite_matched(
-    spark: SparkSession,
-    path: str,
-    matcher,
-    rewrite,
-    commit_on_no_match: bool = False,
-    op: str = "COW DELETE/UPDATE",
+def _iceberg_cow(
+    spark: SparkSession, path: str, rule: RowRule, op: str
 ) -> dict:
-    """Copy-on-write file rewrite shared by DELETE/UPDATE/MERGE
-    (reference iceberg connector COW write mode): scan the current
-    snapshot with input_file_name(), rewrite ONLY the files ``matcher``
-    flags (it receives the scan and returns the matching ``__sf``
-    column), and commit a self-contained snapshot whose single manifest
-    lists the kept files as EXISTING (status 0) entries plus the
-    rewritten outputs as ADDED (status 1). Old files stay on disk for
-    time travel. ``commit_on_no_match`` keeps going when no file
-    matched — MERGE's pure-insert case still commits new files.
-    Returns {'snapshot_id', 'files_rewritten'}."""
-    import glob
-    import shutil
+    """Copy-on-write commit for DELETE/UPDATE/MERGE/OPTIMIZE (reference
+    iceberg connector COW write mode): the kernel (merge.rewrite_files)
+    scans the current snapshot's data files and rewrites the ones the
+    rule matches; the new snapshot's single manifest lists the kept
+    files as EXISTING (status 0) entries plus the rewritten outputs as
+    ADDED (status 1), and commits through _commit_metadata — fenced on
+    the scanned snapshot, built from the metadata current at commit
+    time, with snapshot-log and main ref following. Old files stay on
+    disk for time travel. Returns {'snapshot_id', 'files_rewritten'}."""
     import uuid
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from witdb_spark.sources.avro_codec import write_avro_file
-    from witdb_spark.sources.delta_log import _strip_uri
 
     meta = _current_metadata(path)
     base_snap = _pick_snapshot(meta, None, None)["snapshot-id"]
@@ -2321,61 +2314,27 @@ def _iceberg_rewrite_matched(
             all_entries.append(
                 (e, os.path.abspath(_resolve(path, d["file_path"])))
             )
-    files = [ap for _, ap in all_entries]
-    cols = _schema_fields(meta)
-    by_abs = {ap: ap for ap in files}
-    if not files and not commit_on_no_match:
+    known = {ap: ap for _, ap in all_entries}
+    scan = (
+        spark.read.parquet(*sorted(known))
+        if known
+        else read_iceberg_snapshot(spark, path)
+    ).select(*_schema_fields(meta))
+    rw = rewrite_files(scan, known, rule, IcebergProtocolError)
+    if rw is None:
         return {"snapshot_id": base_snap, "files_rewritten": 0}
-    if files:
-        df = spark.read.parquet(*sorted(set(files))).withColumn(
-            "__sf", F.input_file_name()
-        )
-    else:
-        df = read_iceberg_snapshot(spark, path).withColumn(
-            "__sf", F.lit("")
-        )
-    if matcher is None:
-        # compaction: the matched set is definitionally ALL active
-        # files, already known driver-side — no scan-and-collect pass,
-        # no isin over every file URI, and zero-row files (invisible to
-        # a row-derived matcher) are retired too
-        matched_abs = set(by_abs)
-        touched = df.drop("__sf").select(*cols)
-    else:
-        matched_uris = [
-            r["__sf"] for r in matcher(df).distinct().collect()
-        ]
-        matched_abs = set()
-        for u in matched_uris:
-            ap = os.path.abspath(_strip_uri(u))
-            if ap not in by_abs:
-                raise IcebergProtocolError(
-                    f"scanned file {ap} not in the current snapshot"
-                )
-            matched_abs.add(ap)
-        if not matched_abs and not commit_on_no_match:
-            return {"snapshot_id": base_snap, "files_rewritten": 0}
-        touched = (
-            df.where(F.col("__sf").isin(matched_uris))
-            if matched_uris
-            else df.limit(0)
-        ).drop("__sf").select(*cols)
-    survivors = rewrite(touched).select(*cols)
-    snaps = meta.get("snapshots") or []
-    snap_id = max(s["snapshot-id"] for s in snaps) + 1
+    matched = set(rw.removed)
+    snap_id = max(s["snapshot-id"] for s in meta.get("snapshots") or []) + 1
     entries = [
         {"status": 1, "snapshot_id": snap_id, "data_file": rec}
         for rec in _stage_iceberg_data(
-            survivors, path, part_fields, _table_schema(meta)
+            rw.survivors, path, part_fields, _table_schema(meta)
         )
     ]
-    if not entries and not matched_abs:
-        # MERGE with nothing to insert and nothing matched: no-op
-        return {"snapshot_id": base_snap, "files_rewritten": 0}
     # kept files: the walked entries whose file survives, re-emitted as
     # EXISTING with their original counts
     for e, ap in all_entries:
-        if ap not in matched_abs:
+        if ap not in matched:
             entries.append(dict(e, status=0, snapshot_id=snap_id))
 
     mpath = os.path.join(path, "metadata", f"m-{uuid.uuid4().hex}.avro")
@@ -2401,45 +2360,23 @@ def _iceberg_rewrite_matched(
             ),
         }
     ])
-    new_meta = dict(
-        meta,
-        **{
-            "current-snapshot-id": snap_id,
-            "last-updated-ms": _now_ms_ice(),
-            "snapshots": snaps
-            + [
-                {
-                    "snapshot-id": snap_id,
-                    "timestamp-ms": _now_ms_ice(),
-                    "manifest-list": mlist,
-                    "summary": {"operation": "overwrite"},
-                }
-            ],
-        },
-    )
-    hint = os.path.join(path, "metadata", "version-hint.text")
-    for _ in range(5):
-        cur = _current_metadata(path)
-        if _pick_snapshot(cur, None, None)["snapshot-id"] != base_snap:
-            raise IcebergProtocolError(
-                f"{path}: concurrent commit during COW rewrite —"
-                " rewritten files are stale; re-run the statement"
-            )
-        version = (
-            int(open(hint).read().strip()) + 1
-            if os.path.exists(hint)
-            else len(snaps) + 1
-        )
-        target = os.path.join(path, "metadata", f"v{version}.metadata.json")
-        try:
-            with open(target, "x") as f:
-                json.dump(new_meta, f)
-        except FileExistsError:
-            continue  # version race with a reader-visible commit; recheck
-        with open(hint, "w") as f:
-            f.write(str(version))
-        return {"snapshot_id": snap_id, "files_rewritten": len(matched_abs)}
-    raise IcebergProtocolError(f"{path}: lost 5 consecutive commit races")
+
+    def build(cur: dict) -> dict:
+        new = dict(cur)
+        new["current-snapshot-id"] = snap_id
+        new["last-updated-ms"] = _now_ms_ice()
+        new["snapshots"] = (cur.get("snapshots") or []) + [
+            {
+                "snapshot-id": snap_id,
+                "timestamp-ms": _now_ms_ice(),
+                "manifest-list": mlist,
+                "summary": {"operation": "overwrite"},
+            }
+        ]
+        return new
+
+    _commit_metadata(path, build, base_snap)
+    return {"snapshot_id": snap_id, "files_rewritten": len(matched)}
 
 
 def iceberg_delete_where(
@@ -2452,8 +2389,7 @@ def iceberg_delete_where(
     containing matches without the matching rows — a file whose rows
     ALL match simply disappears from the new snapshot. Prior snapshots
     still see the old files (time travel)."""
-    from pyspark.sql import functions as F
-
+    rule = delete_rule(predicate_sql)
     meta = _current_metadata(path)
     mode = (meta.get("properties") or {}).get(
         "write.delete.mode", "copy-on-write"
@@ -2461,9 +2397,9 @@ def iceberg_delete_where(
     if mode == "merge-on-read":
         # matched positions never reach the driver — the sorted delete
         # parquet files are written by the executors
-        matched = read_iceberg_snapshot(
-            spark, path, _row_tags=True
-        ).where(predicate_sql)
+        matched = rule.matcher(
+            read_iceberg_snapshot(spark, path, _row_tags=True)
+        )
         snap = _iceberg_posdelete_commit_df(spark, path, matched, None)
         if snap is None:
             return {
@@ -2471,11 +2407,7 @@ def iceberg_delete_where(
                 "files_rewritten": 0,
             }
         return {"snapshot_id": snap, "files_rewritten": 0}
-    return _iceberg_rewrite_matched(
-        spark, path,
-        lambda df: df.where(predicate_sql).select("__sf"),
-        lambda rows: rows.filter(f"NOT ({predicate_sql})"),
-    )
+    return _iceberg_cow(spark, path, rule, "DELETE")
 
 
 def iceberg_update_where(
@@ -2489,27 +2421,22 @@ def iceberg_update_where(
     shadows the matched rows AND a data manifest with their
     post-update images (update = delete + insert atomically); default
     copy-on-write rewrites matched files. Every RHS and the predicate
-    evaluate against the PRE-update row (delta_log._apply_assignments,
-    the rule all three COW paths share)."""
-    from witdb_spark.sources.delta_log import _apply_assignments
-
+    evaluate against the PRE-update row (merge.update_where, the rule
+    every path shares)."""
+    rule = update_rule(predicate_sql, assignments)
     meta = _current_metadata(path)
     if (meta.get("properties") or {}).get(
         "write.update.mode"
     ) == "merge-on-read":
-        tagged = read_iceberg_snapshot(spark, path, _row_tags=True)
-        matched = tagged.where(predicate_sql)
+        matched = rule.matcher(
+            read_iceberg_snapshot(spark, path, _row_tags=True)
+        )
         if matched.isEmpty():
             return {
                 "snapshot_id": meta.get("current-snapshot-id"),
                 "files_rewritten": 0,
             }
-        updated = _apply_assignments(
-            matched.drop("__file", "__pos"),
-            predicate_sql,
-            assignments,
-            IcebergProtocolError,
-        )
+        updated = rule.rewrite(matched.drop("__file", "__pos"))
         # the shared partition-aware staging (r11): post-update images
         # land in the table's spec layout with partition structs, so
         # MOR UPDATE works on partitioned tables too
@@ -2526,13 +2453,7 @@ def iceberg_update_where(
             spark, path, matched, data_adds
         )
         return {"snapshot_id": snap, "files_rewritten": 0}
-    return _iceberg_rewrite_matched(
-        spark, path,
-        lambda df: df.where(predicate_sql).select("__sf"),
-        lambda rows: _apply_assignments(
-            rows, predicate_sql, assignments, IcebergProtocolError
-        ),
-    )
+    return _iceberg_cow(spark, path, rule, "UPDATE")
 
 
 def iceberg_merge_into(
@@ -2548,26 +2469,22 @@ def iceberg_merge_into(
     files' rows plus the whole source — a source row matching a row in
     an untouched file is impossible (that file would be matched), so
     unmatched files stay as EXISTING entries and pure inserts commit as
-    plain adds (commit_on_no_match). write.merge.mode=merge-on-read
+    plain adds. write.merge.mode=merge-on-read
     routes to ONE snapshot shadowing the matched-key rows with a
     position-delete manifest and appending their merged images + the
     inserts (r9). Accepts merge_into's clause kwargs
     (when_matched_update / when_matched_delete / insert_not_matched /
     the r9 conditional + projected-insert kwargs)."""
-    from witdb_spark.sources.merge import merge_into
-
+    rule = merge_rule(source, on, **merge_kwargs)
     meta = _current_metadata(path)
     if (meta.get("properties") or {}).get(
         "write.merge.mode"
     ) == "merge-on-read":
-        tagged = read_iceberg_snapshot(spark, path, _row_tags=True)
-        matched = tagged.join(
-            source.select(*on).distinct(), on=on, how="left_semi"
+        matched = rule.matcher(
+            read_iceberg_snapshot(spark, path, _row_tags=True)
         )
         has_matches = not matched.isEmpty()
-        survivors = merge_into(
-            matched.drop("__file", "__pos"), source, on, **merge_kwargs
-        )
+        survivors = rule.rewrite(matched.drop("__file", "__pos"))
         if not has_matches and survivors.isEmpty():
             return {
                 "snapshot_id": meta.get("current-snapshot-id"),
@@ -2595,15 +2512,7 @@ def iceberg_merge_into(
             spark, path, matched, data_adds
         )
         return {"snapshot_id": snap, "files_rewritten": 0}
-    return _iceberg_rewrite_matched(
-        spark, path,
-        lambda df: df.join(
-            source.select(*on).distinct(), on=on, how="left_semi"
-        ).select("__sf"),
-        lambda rows: merge_into(rows, source, on, **merge_kwargs),
-        commit_on_no_match=True,
-        op="MERGE",
-    )
+    return _iceberg_cow(spark, path, rule, "MERGE")
 
 
 def _now_ms_ice() -> int:
@@ -2904,9 +2813,11 @@ def _sync_main_ref(new_meta: dict) -> None:
 
 def _commit_metadata(path: str, build_new_meta, base_cur_id) -> dict:
     """The open-exclusive metadata commit shared by the maintenance
-    procedures: re-read the current metadata each attempt, fence on the
-    current snapshot id (a commit landing mid-procedure must abort the
-    procedure, not be silently erased from history), pick the next
+    procedures and the copy-on-write DML: re-read the current metadata
+    each attempt, fence on the current snapshot id (a commit landing
+    mid-operation must abort it, not be silently erased from history;
+    a metadata-only commit keeps the current snapshot and passes, and
+    the build then carries it forward), pick the next
     version from the hint or the existing v*.metadata.json files, and
     put-if-absent. ``build_new_meta(cur_meta)`` derives the metadata to
     write from the freshly-read state."""
@@ -2916,8 +2827,8 @@ def _commit_metadata(path: str, build_new_meta, base_cur_id) -> dict:
         cur = _current_metadata(path)
         if cur.get("current-snapshot-id") != base_cur_id:
             raise IcebergProtocolError(
-                f"{path}: concurrent commit during the maintenance"
-                " procedure — re-run it"
+                f"{path}: concurrent commit during the operation"
+                " — re-run it"
             )
         new_meta = build_new_meta(cur)
         # spec-shaped snapshot-log: every commit that moves
@@ -3314,11 +3225,10 @@ def iceberg_optimize(
             "snapshot_id": meta.get("current-snapshot-id"),
             "files_rewritten": 0,
         }
-    return _iceberg_rewrite_matched(
+    return _iceberg_cow(
         spark, path,
-        None,
-        lambda rows: rows.coalesce(max(1, int(target_files))),
-        op="OPTIMIZE",
+        RowRule(None, lambda rows: rows.coalesce(max(1, int(target_files)))),
+        "OPTIMIZE",
     )
 
 
