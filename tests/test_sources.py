@@ -4967,7 +4967,7 @@ def test_skipping_predicate_tree_or():
 
 def test_delta_file_skipping(spark, tmp_path):
     """r10: read_delta_snapshot(where=) prunes add entries by
-    partition values and per-file stats (written by _stage_data_files
+    partition values and per-file stats (written by _stage_adds
     from parquet footers, PROTOCOL.md 'Per-file Statistics'), then
     re-applies the predicate — results always equal full-scan+filter,
     and the pruned scan lists strictly fewer files where stats allow."""
@@ -5801,7 +5801,7 @@ def test_empty_string_partition_values_distinct_from_null(spark, tmp_path):
         read_iceberg_snapshot,
         write_iceberg,
     )
-    from witdb_spark.sources.paths import EMPTY_PARTITION_SENTINEL
+    from witdb_spark.sources.staging import EMPTY_PARTITION_SENTINEL
 
     rows = [
         (1, "", 10.0), (2, None, 20.0), (3, "x", 30.0),

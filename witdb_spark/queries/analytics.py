@@ -2801,7 +2801,7 @@ def delta_cm_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation WHERE n_nationkey % 5 <> 3
     """,
     doc="Partitioned Hudi COW jar-free (late r10, hudi_meta.py "
-    "_stage_hudi_files; reference plugin/trino-hudi partition-aware "
+    "_file_groups; reference plugin/trino-hudi partition-aware "
     "file listing): CTAS nation partitioned by n_regionkey "
     "(hive-style dirs, write stats + replace bookkeeping keyed by "
     "partition path), append the tail, COW DELETE a stripe (matched "
@@ -2862,7 +2862,7 @@ def hudi_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation WHERE n_nationkey < 3
     """,
     doc="Partitioned MERGE_ON_READ roundtrip (late r10, hudi_meta.py "
-    "_stage_mor_groups + hudi_log_upsert partition routing; reference "
+    "_mor_groups + hudi_log_upsert partition routing; reference "
     "plugin/trino-hudi stock_ticks_mor layout): CTAS nation as a MOR "
     "table partitioned by n_regionkey (hive dirs, "
     "_hoodie_partition_path stamped to match), log-upsert a key "

@@ -53,6 +53,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,6 +68,7 @@ from witdb_spark.sources.merge import (
     update_rule,
 )
 from witdb_spark.sources.paths import norm_path_expr
+from witdb_spark.sources.staging import footer_stats, stage
 
 #: minReaderVersion 3 reader features this module actually honors.
 #: timestampNtz is a plain parquet NTZ read; columnMapping is accepted
@@ -1485,7 +1487,7 @@ def delta_table_changes(
     commit, explicit ``cdc`` actions are AUTHORITATIVE when present
     (their parquet carries _change_type; other adds/removes in that
     commit are not changes — this repo's own DML writes them, see
-    _stage_cdc_files); otherwise the changes synthesize from the log,
+    _stage_cdc); otherwise the changes synthesize from the log,
     which is exact for the commit shapes CDF-enabled writers may leave
     cdc-less (blind appends -> inserts, whole-file deletes -> deletes,
     DV re-adds -> exactly the newly-shadowed positions, RESTORE's
@@ -1861,95 +1863,16 @@ def _remove_action(
     return {"remove": rm}
 
 
-def _partition_values_from_rel(rel: str, part_cols: list[str]) -> dict:
-    """Recover partitionValues from the hive-style directory layout the
-    Spark writer produces (col=value/...; the protocol stores the
-    string serialization, NULL as the hive default marker)."""
-    vals: dict[str, str | None] = {}
-    for seg in rel.split(os.sep)[:-1]:
-        if "=" not in seg:
-            continue
-        k, v = seg.split("=", 1)
-        if k in part_cols:
-            from witdb_spark.sources.paths import (
-                unescape_partition_value,
-            )
-
-            vals[k] = (
-                None if v == "__HIVE_DEFAULT_PARTITION__"
-                else unescape_partition_value(unquote(v))
-            )
-    missing = [c for c in part_cols if c not in vals]
-    if missing:
-        raise DeltaProtocolError(
-            f"partition column(s) {missing} absent from written layout"
-        )
-    return vals
-
-
 def _file_stats_json(md) -> str:
     """Per-file stats for the add action (PROTOCOL.md 'Per-file
-    Statistics': numRecords/minValues/maxValues/nullCount), aggregated
-    from the parquet footer ``md`` (pyarrow FileMetaData) row-group
-    column statistics — what the reference persists via
-    AddFileEntry.stats and what read_delta_snapshot's file skipping
-    prunes on. Columns without usable footer stats are simply omitted
-    (readers treat missing stats as unknown), one column at a time: a
-    column whose bounds pyarrow cannot extract (INT32/INT64-backed
-    DECIMAL) or JSON cannot encode (Decimal) loses only its own
-    min/max."""
+    Statistics': numRecords/minValues/maxValues/nullCount) from the
+    footer fold (staging.footer_stats) — what the reference persists
+    via AddFileEntry.stats and what read_delta_snapshot's file skipping
+    prunes on. Nested columns are outside the skipping subset; a column
+    without usable bounds, or whose bounds JSON cannot encode
+    (Decimal), loses only its own min/max (readers treat missing stats
+    as unknown)."""
     import datetime as _dt
-
-    import pyarrow as pa
-
-    num_records = md.num_rows
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    bad_nulls: set = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if "." in name:  # nested — out of the skipping subset
-                continue
-            st = col.statistics
-            if st is None:
-                # a stats-less row group may hold values outside the
-                # other groups' bounds (and nulls): poison min/max AND
-                # the null count for this column, or skipping would
-                # prune files that contain matching rows
-                mins[name] = maxs[name] = None
-                bad_nulls.add(name)
-                nulls.pop(name, None)
-                continue
-            if name not in bad_nulls:
-                if st.null_count is None:
-                    # partial null counts are as unsound as partial
-                    # bounds — drop the column's count entirely
-                    bad_nulls.add(name)
-                    nulls.pop(name, None)
-                else:
-                    nulls[name] = nulls.get(name, 0) + st.null_count
-            if not st.has_min_max:
-                mins[name] = maxs[name] = None  # poison: drop below
-                continue
-            try:
-                lo, hi = st.min, st.max
-            except pa.ArrowNotImplementedError:
-                mins[name] = maxs[name] = None
-                continue
-            if isinstance(lo, bytes):
-                try:
-                    lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
-                except UnicodeDecodeError:
-                    mins[name] = maxs[name] = None
-                    continue
-            if name in mins and mins[name] is None:
-                continue
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
 
     def ser(v):
         if isinstance(v, _dt.datetime):
@@ -1965,18 +1888,21 @@ def _file_stats_json(md) -> str:
         except (TypeError, ValueError):
             return False
 
+    stats = {n: s for n, s in footer_stats(md).items() if "." not in n}
     bounds = {
-        k: (ser(lo), ser(maxs[k]))
-        for k, lo in mins.items()
-        if lo is not None and maxs.get(k) is not None
+        n: (ser(s.min), ser(s.max))
+        for n, s in stats.items()
+        if s.min is not None
     }
     bounds = {k: b for k, b in bounds.items() if encodable(b)}
     return json.dumps(
         {
-            "numRecords": num_records,
+            "numRecords": md.num_rows,
             "minValues": {k: b[0] for k, b in bounds.items()},
             "maxValues": {k: b[1] for k, b in bounds.items()},
-            "nullCount": nulls,
+            "nullCount": {
+                n: s.nulls for n, s in stats.items() if s.nulls is not None
+            },
         }
     )
 
@@ -2119,66 +2045,44 @@ def _cm_create_schema(df, mode: str) -> tuple[str, int]:
     )
 
 
-def _stage_data_files(
-    df, path: str, partition_by: list[str]
-) -> tuple[list[dict], int]:
-    """Write df's rows as parquet under the table root (hive dirs for
-    partitions) and return their add actions, each carrying per-file
-    stats for data skipping, plus the number of rows staged (summed
-    from the footers the stats are read from). Files keep Spark's
-    part-<task>-<uuid> names, which are globally unique."""
-    import glob
-    import shutil
-    import uuid
+def _move_in(f, path: str, parts: list[str], prefix: str = ""):
+    """Move a staged file into the table at <prefix><col>=<dir>/...
+    /<Spark's part-<task>-<uuid> name> (globally unique); returns its
+    relative path and size."""
+    rel = prefix + "/".join(
+        [f"{c}={d}" for c, d in zip(parts, f.dirs)]
+        + [os.path.basename(f.path)]
+    )
+    dest = os.path.join(path, rel)
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    shutil.move(f.path, dest)
+    return rel, os.path.getsize(dest)
 
-    import pyarrow.parquet as pq
 
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    if partition_by:
-        # '' and NULL both render as __HIVE_DEFAULT_PARTITION__ in
-        # hive-style directories; escaping '' (paths.py sentinel)
-        # before partitionBy keeps them distinct in the recovered
-        # partitionValues. Content is unaffected: partitionBy drops
-        # the column from the staged files.
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StringType
-
-        from witdb_spark.sources.paths import (
-            escape_empty_partition_expr,
-        )
-
-        for c in partition_by:
-            if isinstance(df.schema[c].dataType, StringType):
-                df = df.withColumn(
-                    c, escape_empty_partition_expr(F.col(c))
-                )
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+def _stage_adds(df, path: str, metadata: dict) -> tuple[list[dict], int]:
+    """Write LOGICAL rows as data files (sources/staging.py; mapped
+    tables stage physically, _stage_physical) and return their add
+    actions, each carrying per-file stats for data skipping, plus the
+    number of rows written (summed from the same footers)."""
+    df, parts = _stage_physical(df, metadata)
     adds = []
     rows = 0
-    for f in glob.glob(
-        os.path.join(staging, "**", "*.parquet"), recursive=True
-    ):
-        rel = os.path.relpath(f, staging)
-        dest = os.path.join(path, rel)
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
-        shutil.move(f, dest)
-        add = {
-            "path": rel.replace(os.sep, "/"),
-            "partitionValues": _partition_values_from_rel(
-                rel, partition_by
-            ),
-            "size": os.path.getsize(dest),
-            "modificationTime": _now_ms(),
-            "dataChange": True,
-        }
-        md = pq.ParquetFile(dest).metadata
-        rows += md.num_rows
-        add["stats"] = _file_stats_json(md)
-        adds.append({"add": add})
-    shutil.rmtree(staging, ignore_errors=True)
+    with stage(df, path, [(c, F.col(c)) for c in parts]) as files:
+        for f in files:
+            rel, size = _move_in(f, path, parts)
+            adds.append(
+                {
+                    "add": {
+                        "path": rel,
+                        "partitionValues": dict(zip(parts, f.values)),
+                        "size": size,
+                        "modificationTime": _now_ms(),
+                        "dataChange": True,
+                        "stats": _file_stats_json(f.footer),
+                    }
+                }
+            )
+            rows += f.footer.num_rows
     return adds, rows
 
 
@@ -2191,7 +2095,7 @@ def _cdf_enabled(metadata: dict) -> bool:
     )
 
 
-def _stage_cdc_files(change_df, path: str, metadata: dict) -> list[dict]:
+def _stage_cdc(change_df, path: str, metadata: dict) -> list[dict]:
     """Write labeled change rows (table columns + ``_change_type``) as
     Change Data Files under ``_change_data/`` (Delta PROTOCOL.md "Add
     CDC File" / "Writer Requirements for AddCDCFile") and return their
@@ -2202,53 +2106,28 @@ def _stage_cdc_files(change_df, path: str, metadata: dict) -> list[dict]:
     stages one empty cdc file: a commit that rewrote files without
     changing any row must carry an authoritative (empty) cdc action or
     readers would synthesize the whole rewritten files as changes."""
-    import glob
-    import shutil
-    import uuid
-
-    staged, phys_parts = _stage_physical(
+    staged, parts = _stage_physical(
         change_df, metadata, extra_cols=("_change_type",)
     )
     empty = staged.isEmpty()
-    parts_eff = [] if empty else list(phys_parts)
-    if parts_eff:
-        from pyspark.sql.types import StringType
-
-        from witdb_spark.sources.paths import escape_empty_partition_expr
-
-        for c in parts_eff:
-            if isinstance(staged.schema[c].dataType, StringType):
-                staged = staged.withColumn(
-                    c, escape_empty_partition_expr(F.col(c))
-                )
-    staging = os.path.join(path, f".staging-cdc-{uuid.uuid4().hex}")
-    writer = (staged.coalesce(1) if empty else staged).write.mode(
-        "overwrite"
-    )
-    if parts_eff:
-        writer = writer.partitionBy(*parts_eff)
-    writer.parquet(staging)
+    if empty:
+        staged, parts = staged.coalesce(1), []
     actions = []
-    for f in glob.glob(
-        os.path.join(staging, "**", "*.parquet"), recursive=True
-    ):
-        rel = os.path.relpath(f, staging)
-        dest = os.path.join(path, "_change_data", rel)
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
-        shutil.move(f, dest)
-        actions.append(
-            {
-                "cdc": {
-                    "path": "_change_data/" + rel.replace(os.sep, "/"),
-                    "partitionValues": _partition_values_from_rel(
-                        rel, parts_eff
-                    ),
-                    "size": os.path.getsize(dest),
-                    "dataChange": False,
+    with stage(
+        staged, path, [(c, F.col(c)) for c in parts], keep_empty=empty
+    ) as files:
+        for f in files:
+            rel, size = _move_in(f, path, parts, "_change_data/")
+            actions.append(
+                {
+                    "cdc": {
+                        "path": rel,
+                        "partitionValues": dict(zip(parts, f.values)),
+                        "size": size,
+                        "dataChange": False,
+                    }
                 }
-            }
-        )
-    shutil.rmtree(staging, ignore_errors=True)
+            )
     return actions
 
 
@@ -2385,17 +2264,17 @@ def _write_delta(
                 "delta.columnMapping.maxColumnId", str(max_id)
             )
             protocol = {"minReaderVersion": 2, "minWriterVersion": 5}
-            stage_meta = {
-                "schemaString": schema_string,
-                "partitionColumns": part_cols,
-                "configuration": cfg,
-            }
-            stage_df, stage_parts = _stage_physical(df, stage_meta)
         else:
             schema_string = df.schema.json()
             protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
-            stage_df, stage_parts = df, part_cols
-        adds, rows = _stage_data_files(stage_df, path, stage_parts)
+        adds, rows = _stage_adds(
+            df, path,
+            {
+                "schemaString": schema_string,
+                "partitionColumns": part_cols,
+                "configuration": cfg,
+            },
+        )
         actions = [
             {
                 "commitInfo": {
@@ -2449,8 +2328,7 @@ def _write_delta(
                 f"schema mismatch: table has {table_cols}, data has"
                 f" {df.columns}"
             )
-        stage_df, stage_parts = _stage_physical(df, metadata)
-        adds, rows = _stage_data_files(stage_df, path, stage_parts)
+        adds, rows = _stage_adds(df, path, metadata)
         staged.update(metadata=metadata, adds=adds)
         actions: list[dict] = [_commit_info(mode.upper())]
         if mode == "overwrite":
@@ -2517,14 +2395,13 @@ def _row_level(
             return None, {"version": version, "files_rewritten": 0}
         # column-mapped tables rewrite LOGICAL rows, then re-stage
         # physically (rename + parquet field ids) per the protocol
-        stage_df, stage_parts = _stage_physical(rw.survivors, metadata)
-        adds, _ = _stage_data_files(stage_df, path, stage_parts)
+        adds, _ = _stage_adds(rw.survivors, path, metadata)
         # a rewrite commit on a CDF table must carry Change Data Files
         # (even empty ones) or readers would synthesize the whole
         # rewritten files; a pure insert stays cdc-less (add-only
         # synthesis is exact)
         cdc = (
-            _stage_cdc_files(
+            _stage_cdc(
                 rule.changes(rw.touched, rw.survivors), path, metadata
             )
             if rw.removed and _cdf_enabled(metadata)
@@ -2573,8 +2450,7 @@ def _dv_rewrite(
         # column-mapped tables stage physical names + field ids exactly
         # like the COW paths — appending logical-named files to a
         # mapped table would read back all-NULL
-        stage_df, stage_parts = _stage_physical(survivors, metadata)
-        adds, _ = _stage_data_files(stage_df, path, stage_parts)
+        adds, _ = _stage_adds(survivors, path, metadata)
     if not per_file:
         # a MERGE that matched nothing: plain adds, no DV to write
         v = _commit(
@@ -2585,7 +2461,7 @@ def _dv_rewrite(
         )
         return {"version": v, "files_rewritten": 0}
     if _cdf_enabled(metadata):
-        adds += _stage_cdc_files(
+        adds += _stage_cdc(
             rule.changes(rows, survivors), path, metadata
         )
     v = _dv_commit_distributed(
@@ -2767,8 +2643,6 @@ def delta_checkpoint(
     delta-spark writes under v2Checkpoint, and the one this module's
     readers have consumed since r12. Returns the checkpointed
     version."""
-    import glob
-    import shutil
     import uuid
 
     protocol, metadata, version, state, files_df = _snapshot_files_plan(
@@ -2868,20 +2742,14 @@ def delta_checkpoint(
         # sidecar batches: add-only parquet under _delta_log/_sidecars
         sc_dir = os.path.join(_log_dir(path), "_sidecars")
         os.makedirs(sc_dir, exist_ok=True)
-        staging = os.path.join(path, f".cp-v2-staging-{uuid.uuid4().hex}")
-        adds_df.select("add").coalesce(parts).write.mode(
-            "overwrite"
-        ).parquet(staging)
         sidecars = []
-        for p in sorted(
-            glob.glob(os.path.join(staging, "part-*.parquet"))
-        ):
-            name = f"{uuid.uuid4()}.parquet"
-            shutil.move(p, os.path.join(sc_dir, name))
-            sidecars.append(
-                (name, os.path.getsize(os.path.join(sc_dir, name)))
-            )
-        shutil.rmtree(staging, ignore_errors=True)
+        with stage(adds_df.select("add").coalesce(parts), path) as files:
+            for f in files:
+                name = f"{uuid.uuid4()}.parquet"
+                shutil.move(f.path, os.path.join(sc_dir, name))
+                sidecars.append(
+                    (name, os.path.getsize(os.path.join(sc_dir, name)))
+                )
         v2_schema = (
             "protocol struct<minReaderVersion:int,minWriterVersion:int,"
             "readerFeatures:array<string>,writerFeatures:array<string>>,"
@@ -2900,19 +2768,16 @@ def delta_checkpoint(
             (None, None, None, None, (name, size, _now_ms()))
             for name, size in sidecars
         ]
-        mstage = os.path.join(
-            path, f".cp-v2-manifest-{uuid.uuid4().hex}"
-        )
-        spark.createDataFrame(v2_rows, v2_schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(mstage)
-        mpart = glob.glob(os.path.join(mstage, "part-*.parquet"))[0]
-        dest = os.path.join(
-            _log_dir(path),
-            f"{version:020d}.checkpoint.{uuid.uuid4()}.parquet",
-        )
-        shutil.move(mpart, dest)
-        shutil.rmtree(mstage, ignore_errors=True)
+        with stage(
+            spark.createDataFrame(v2_rows, v2_schema).coalesce(1), path
+        ) as files:
+            shutil.move(
+                files[0].path,
+                os.path.join(
+                    _log_dir(path),
+                    f"{version:020d}.checkpoint.{uuid.uuid4()}.parquet",
+                ),
+            )
         with open(
             os.path.join(_log_dir(path), "_last_checkpoint"), "w"
         ) as f:
@@ -2922,32 +2787,29 @@ def delta_checkpoint(
         return version
     out_df = head_df.unionByName(adds_df)
     out_df = out_df.coalesce(parts) if parts > 1 else out_df.coalesce(1)
-    staging = os.path.join(path, f".cp-staging-{uuid.uuid4().hex}")
-    out_df.write.mode("overwrite").parquet(staging)
-    written = sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
-    if len(written) == 1:
-        dest = os.path.join(
-            _log_dir(path), f"{version:020d}.checkpoint.parquet"
-        )
-        shutil.move(written[0], dest)
-        cp_doc = {"version": version, "size": n_adds + len(head_rows)}
-    else:
-        n = len(written)
-        for i, p in enumerate(written, start=1):
-            shutil.move(
-                p,
-                os.path.join(
-                    _log_dir(path),
-                    f"{version:020d}.checkpoint.{i:010d}.{n:010d}"
-                    ".parquet",
-                ),
+    with stage(out_df, path) as written:
+        if len(written) == 1:
+            dest = os.path.join(
+                _log_dir(path), f"{version:020d}.checkpoint.parquet"
             )
-        cp_doc = {
-            "version": version,
-            "size": n_adds + len(head_rows),
-            "parts": n,
-        }
-    shutil.rmtree(staging, ignore_errors=True)
+            shutil.move(written[0].path, dest)
+            cp_doc = {"version": version, "size": n_adds + len(head_rows)}
+        else:
+            n = len(written)
+            for i, f in enumerate(written, start=1):
+                shutil.move(
+                    f.path,
+                    os.path.join(
+                        _log_dir(path),
+                        f"{version:020d}.checkpoint.{i:010d}.{n:010d}"
+                        ".parquet",
+                    ),
+                )
+            cp_doc = {
+                "version": version,
+                "size": n_adds + len(head_rows),
+                "parts": n,
+            }
     with open(os.path.join(_log_dir(path), "_last_checkpoint"), "w") as f:
         json.dump(cp_doc, f)
     return version
@@ -2983,8 +2845,7 @@ def delta_optimize(spark: SparkSession, path: str, target_files: int = 1) -> dic
         else:
             df = df.coalesce(target_files)
         # column-mapped tables re-stage physically (r10)
-        stage_df, stage_parts = _stage_physical(df, metadata)
-        adds, _ = _stage_data_files(stage_df, path, stage_parts)
+        adds, _ = _stage_adds(df, path, metadata)
         for a in adds:
             a["add"]["dataChange"] = False
         actions = (

@@ -24,8 +24,10 @@ from __future__ import annotations
 import json
 import os
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from witdb_spark.sources.merge import (
     RowRule,
@@ -34,6 +36,7 @@ from witdb_spark.sources.merge import (
     rewrite_files,
     update_rule,
 )
+from witdb_spark.sources.staging import footer_stats, stage
 
 
 class HudiProtocolError(RuntimeError):
@@ -737,16 +740,19 @@ def read_hudi_snapshot(
     )
 
 
-def _claim_instant(path: str) -> str:
-    """Claim a commit instant FIRST (put-if-absent on a ``.requested``
-    marker, Hudi's own protocol): two writers in the same millisecond
+@contextmanager
+def _claimed_instant(path: str):
+    """Claim a commit instant (put-if-absent on a ``.requested``
+    marker, Hudi's own protocol) for the body that names, moves and
+    commits the instant's files: two writers in the same millisecond
     would otherwise collide on the completed-commit filename only AFTER
-    their data files were already published. The marker name carries NO
-    action — a commit and a replacecommit claimed in the same
+    their data files were already published. The marker name carries
+    NO action — a commit and a replacecommit claimed in the same
     millisecond must also conflict, or the timeline would hold two
     actions at one instant (ambiguous time travel). The completed-
     instants regex ignores ``.requested``, so claims are invisible to
-    readers."""
+    readers. A body that raises releases the claim: a failed write
+    leaves the timeline as it found it."""
     import datetime
     import time
 
@@ -754,15 +760,19 @@ def _claim_instant(path: str) -> str:
         instant = datetime.datetime.utcnow().strftime(
             "%Y%m%d%H%M%S%f"
         )[:17]
+        marker = os.path.join(_meta_dir(path), f"{instant}.requested")
         try:
-            with open(
-                os.path.join(_meta_dir(path), f"{instant}.requested"),
-                "x",
-            ):
-                return instant
+            with open(marker, "x"):
+                break
         except FileExistsError:
             time.sleep(0.001)
-    raise HudiProtocolError("could not claim a commit instant")
+    else:
+        raise HudiProtocolError("could not claim a commit instant")
+    try:
+        yield instant
+    except BaseException:
+        os.remove(marker)
+        raise
 
 
 def _hudi_partition_fields(path: str) -> list[str]:
@@ -772,100 +782,80 @@ def _hudi_partition_fields(path: str) -> list[str]:
     return [c for c in raw.split(",") if c]
 
 
-def _stage_hudi_files(
-    df, path: str, instant: str, part_fields: list[str]
+def _cow_parts(df, part_fields: list[str]) -> list:
+    """Staging partition expressions of a COW write: COPIES of the
+    partition columns, so base files keep every column physically, like
+    real Hudi."""
+    missing = [c for c in part_fields if c not in df.columns]
+    if missing:
+        raise HudiProtocolError(
+            f"partition columns {missing} absent from the data"
+        )
+    return [(f"__p_{i}", F.col(c)) for i, c in enumerate(part_fields)]
+
+
+def _mor_groups(
+    df, path: str, instant: str, part_fields: list[str], virtual: bool
 ) -> dict[str, list[dict]]:
-    """Stage ``df`` as fresh file groups and return the
-    partitionToWriteStats dict. Partitioned tables stage with
-    partitionBy on COPIES of the partition columns (base files keep
-    every column physically, like real Hudi), land under hive-style
-    <col>=<val>/ dirs, and key their write stats by partition path —
-    the same (partition, fileId) grain the timeline fold uses.
-    Zero-row part files publish no group."""
-    import glob
+    """Stage MOR rows as fresh base file groups (sources/staging.py),
+    keyed by partition path. Partitioned rows stage on their FULL
+    hive-style partition path as one value (never NULL — NULL partition
+    VALUES render the hive marker inside it): meta-columned rows carry
+    it stamped in _hoodie_partition_path; ``virtual`` rows (r12 —
+    hoodie.populate.meta.fields=false tables carry NO meta columns)
+    compute it from the partition fields."""
+    parts = [
+        (
+            "__hpp",
+            _hoodie_partition_path_expr(part_fields)
+            if virtual
+            else F.col("_hoodie_partition_path"),
+        )
+    ] if part_fields else []
+    with stage(df, path, parts) as files:
+        return _file_groups(files, path, instant, part_fields, mor=True)
+
+
+def _file_groups(
+    files, path: str, instant: str, part_fields: list[str],
+    mor: bool = False,
+) -> dict[str, list[dict]]:
+    """Publish staged files (sources/staging.py) as fresh file groups
+    <fileId>_0_<instant>.parquet and return the partitionToWriteStats
+    dict, keyed by partition path — the same (partition, fileId) grain
+    the timeline fold uses. A COW group lands under <col>=<val>/ dirs
+    that keep the staged percent-encoding (matching the stamped
+    _hoodie_partition_path convention "p=" for ''); a MOR group under
+    its decoded stamped path."""
     import shutil
     import uuid
 
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    if part_fields:
-        missing = [c for c in part_fields if c not in df.columns]
-        if missing:
-            raise HudiProtocolError(
-                f"partition columns {missing} absent from the data"
-            )
-        from pyspark.sql.types import StringType
-
-        from witdb_spark.sources.paths import (
-            escape_empty_partition_expr,
-        )
-
-        sdf = df
-        for i, c in enumerate(part_fields):
-            col = F.col(c)
-            if isinstance(df.schema[c].dataType, StringType):
-                # keep '' distinct from NULL through the hive-style
-                # staging round-trip (paths.py sentinel); unescaped
-                # below so the final layout matches the stamped
-                # _hoodie_partition_path convention ("p=")
-                col = escape_empty_partition_expr(col)
-            sdf = sdf.withColumn(f"__hp_{i}", col)
-        sdf.write.mode("overwrite").partitionBy(
-            *[f"__hp_{i}" for i in range(len(part_fields))]
-        ).parquet(staging)
-        files = sorted(glob.glob(
-            os.path.join(staging, "**", "part-*.parquet"), recursive=True
-        ))
-    else:
-        df.write.mode("overwrite").parquet(staging)
-        files = sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
     out: dict[str, list[dict]] = {}
     for f in files:
-        num_rows = pq.ParquetFile(f).metadata.num_rows
-        if num_rows == 0:
-            continue
         fid = uuid.uuid4().hex
-        base = f"{fid}_0_{instant}.parquet"
-        if part_fields:
-            from witdb_spark.sources.paths import (
-                EMPTY_PARTITION_SENTINEL,
-            )
-
-            rel_dir = os.path.relpath(os.path.dirname(f), staging)
-            by_idx: dict[int, str] = {}
-            for comp in rel_dir.split(os.sep):
-                k, _, v = comp.partition("=")
-                # unescape the '' sentinel but keep the percent
-                # encoding (the final dir value stays encoded, like
-                # the staged one); NULL's __HIVE_DEFAULT_PARTITION__
-                # marker passes through untouched
-                if v == EMPTY_PARTITION_SENTINEL:
-                    v = ""
-                elif v.startswith(EMPTY_PARTITION_SENTINEL):
-                    v = v[len(EMPTY_PARTITION_SENTINEL):]
-                by_idx[int(k[len("__hp_"):])] = v
-            part_dir = "/".join(
-                f"{part_fields[i]}={by_idx[i]}"
-                for i in range(len(part_fields))
-            )
-            os.makedirs(os.path.join(path, part_dir), exist_ok=True)
-            rel, part_key = f"{part_dir}/{base}", part_dir
+        if mor:
+            part = f.values[0] if f.values else ""
         else:
-            rel, part_key = base, ""
-        shutil.move(f, os.path.join(path, rel))
-        out.setdefault(part_key, []).append(
+            part = "/".join(
+                f"{c}={d}" for c, d in zip(part_fields, f.plain_dirs)
+            )
+        base = f"{fid}_0_{instant}.parquet"
+        if part:
+            os.makedirs(os.path.join(path, part), exist_ok=True)
+        rel = f"{part}/{base}" if part else base
+        shutil.move(f.path, os.path.join(path, rel))
+        out.setdefault(part, []).append(
             {
                 "fileId": fid,
                 "path": rel,
-                "numWrites": num_rows,
-                "totalWriteBytes": os.path.getsize(
-                    os.path.join(path, rel)
+                **(
+                    {"prevCommit": "null"}
+                    if mor
+                    else {"numWrites": f.footer.num_rows}
                 ),
+                "totalWriteBytes": os.path.getsize(os.path.join(path, rel)),
             }
         )
-    shutil.rmtree(staging, ignore_errors=True)
     return out
 
 
@@ -985,31 +975,33 @@ def _write_hudi(
         if action == "replacecommit"
         else []
     )
-    instant = _claim_instant(path)
-    stats_by_part = _stage_hudi_files(df, path, instant, part_fields)
-    meta: dict = {
-        "partitionToWriteStats": stats_by_part or {"": []},
-        # schema travels in the commit metadata (as real Hudi does) so
-        # an all-rows-deleted table can still produce a TYPED empty
-        # read; extra_metadata rides the same map (hudi's own channel
-        # for e.g. deltastreamer checkpoint keys — the streaming
-        # sink's epoch markers live here, r13)
-        "extraMetadata": {
-            "schema": df.schema.json(),
-            **{
-                str(k): str(v)
-                for k, v in (extra_metadata or {}).items()
+    with stage(df, path, _cow_parts(df, part_fields)) as files, \
+            _claimed_instant(path) as instant:
+        stats_by_part = _file_groups(files, path, instant, part_fields)
+        meta: dict = {
+            "partitionToWriteStats": stats_by_part or {"": []},
+            # schema travels in the commit metadata (as real Hudi does)
+            # so an all-rows-deleted table can still produce a TYPED
+            # empty read; extra_metadata rides the same map (hudi's own
+            # channel for e.g. deltastreamer checkpoint keys — the
+            # streaming sink's epoch markers live here, r13)
+            "extraMetadata": {
+                "schema": df.schema.json(),
+                **{
+                    str(k): str(v)
+                    for k, v in (extra_metadata or {}).items()
+                },
             },
-        },
-    }
-    if action == "replacecommit":
-        meta["partitionToReplaceFileIds"] = _group_fids_by_partition(
-            prior_rels
-        )
-    target = os.path.join(_meta_dir(path), f"{instant}.{action}")
-    # the .requested claim made this instant ours; 'x' stays as a belt
-    with open(target, "x") as f:
-        json.dump(meta, f)
+        }
+        if action == "replacecommit":
+            meta["partitionToReplaceFileIds"] = _group_fids_by_partition(
+                prior_rels
+            )
+        target = os.path.join(_meta_dir(path), f"{instant}.{action}")
+        # the .requested claim made this instant ours; 'x' stays as a
+        # belt
+        with open(target, "x") as f:
+            json.dump(meta, f)
     return instant, _num_writes(stats_by_part)
 
 
@@ -1062,30 +1054,35 @@ def _hudi_cow(
         # a true no-op, detected BEFORE claiming an instant or staging
         return None
     matched_rels = [os.path.relpath(f, path) for f in rw.removed]
-    instant = _claim_instant(path)
-    stats_by_part = _stage_hudi_files(
-        rw.survivors, path, instant, _hudi_partition_fields(path)
-    )
-    if not stats_by_part and not matched_rels:
-        # survivors were all zero-row part files: nothing to publish —
-        # release the claimed instant so no-ops leave no litter
-        os.remove(os.path.join(_meta_dir(path), f"{instant}.requested"))
-        return None
-    meta = {
-        "partitionToWriteStats": stats_by_part or {"": []},
-        "partitionToReplaceFileIds": (
-            _group_fids_by_partition(matched_rels) or {"": []}
-        ),
-        "extraMetadata": {"schema": rw.survivors.schema.json()},
-    }
-    if _completed_instants(path)[-1][0] != base_last:
-        raise HudiProtocolError(
-            f"{path}: concurrent commit during COW rewrite — rewritten"
-            " file groups are stale; re-run the statement"
-        )
-    target = os.path.join(_meta_dir(path), f"{instant}.replacecommit")
-    with open(target, "x") as f:
-        json.dump(meta, f)
+    part_fields = _hudi_partition_fields(path)
+    with stage(
+        rw.survivors, path, _cow_parts(rw.survivors, part_fields)
+    ) as files:
+        if not files and not matched_rels:
+            # survivors were all zero-row part files: nothing to
+            # publish, and no instant was claimed
+            return None
+        with _claimed_instant(path) as instant:
+            meta = {
+                "partitionToWriteStats": _file_groups(
+                    files, path, instant, part_fields
+                ) or {"": []},
+                "partitionToReplaceFileIds": (
+                    _group_fids_by_partition(matched_rels) or {"": []}
+                ),
+                "extraMetadata": {"schema": rw.survivors.schema.json()},
+            }
+            if _completed_instants(path)[-1][0] != base_last:
+                raise HudiProtocolError(
+                    f"{path}: concurrent commit during COW rewrite —"
+                    " rewritten file groups are stale; re-run the"
+                    " statement"
+                )
+            target = os.path.join(
+                _meta_dir(path), f"{instant}.replacecommit"
+            )
+            with open(target, "x") as f:
+                json.dump(meta, f)
     return instant
 
 
@@ -1274,66 +1271,66 @@ def _hudi_mor_merge(
             else _meta_string_avro_fields() + data_avro
         ),
     }
-    instant = _claim_instant(path)
-    stats_by_part: dict[str, list] = {}
-    for r in _write_log_blocks_distributed(
-        log_rows, path, instant, avro_schema, group_info, data_cols,
-        del_col="__mdel",
-    ):
-        info = group_info[r["grp"]]
-        stats_by_part.setdefault(info["part"], []).append(
-            {
-                "fileId": info["fid"],
-                "path": r["rel"],
-                "prevCommit": info["prev"],
-                "totalWriteBytes": r["nbytes"],
-            }
-        )
-    inserts = routed.where("__grp IS NULL").select(*data_cols)
-    if not inserts.isEmpty():
-        if part_fields:
-            missing = [c for c in part_fields if c not in data_cols]
-            if missing:
-                raise HudiProtocolError(
-                    f"partition columns {missing} absent from the source"
-                )
-        if virtual:
-            full = inserts.coalesce(1)
-        else:
-            full = inserts.coalesce(1).select(
-                F.lit(instant).alias("_hoodie_commit_time"),
-                F.concat(
-                    F.lit(f"{instant}_1_"),
-                    F.monotonically_increasing_id().cast("string"),
-                ).alias("_hoodie_commit_seqno"),
-                F.col(key).cast("string").alias("_hoodie_record_key"),
-                (
-                    _hoodie_partition_path_expr(part_fields)
-                    if part_fields
-                    else F.lit("")
-                ).alias("_hoodie_partition_path"),
-                F.lit("").alias("_hoodie_file_name"),
-                *data_cols,
+    with _claimed_instant(path) as instant:
+        stats_by_part: dict[str, list] = {}
+        for r in _write_log_blocks_distributed(
+            log_rows, path, instant, avro_schema, group_info, data_cols,
+            del_col="__mdel",
+        ):
+            info = group_info[r["grp"]]
+            stats_by_part.setdefault(info["part"], []).append(
+                {
+                    "fileId": info["fid"],
+                    "path": r["rel"],
+                    "prevCommit": info["prev"],
+                    "totalWriteBytes": r["nbytes"],
+                }
             )
-        for part_key, recs in _stage_mor_groups(
-            full, path, instant, part_fields, virtual=virtual
-        ).items():
-            stats_by_part.setdefault(part_key, []).extend(recs)
-    if _completed_instants(path)[-1][0] != base_last:
-        raise HudiProtocolError(
-            f"{path}: concurrent commit during MOR merge — re-run"
-        )
-    with open(
-        os.path.join(_meta_dir(path), f"{instant}.deltacommit"), "x"
-    ) as f:
-        json.dump(
-            {
-                "partitionToWriteStats": stats_by_part or {"": []},
-                "operationType": "UPSERT",
-            },
-            f,
-        )
-    return instant
+        inserts = routed.where("__grp IS NULL").select(*data_cols)
+        if not inserts.isEmpty():
+            if part_fields:
+                missing = [c for c in part_fields if c not in data_cols]
+                if missing:
+                    raise HudiProtocolError(
+                        f"partition columns {missing} absent from the source"
+                    )
+            if virtual:
+                full = inserts.coalesce(1)
+            else:
+                full = inserts.coalesce(1).select(
+                    F.lit(instant).alias("_hoodie_commit_time"),
+                    F.concat(
+                        F.lit(f"{instant}_1_"),
+                        F.monotonically_increasing_id().cast("string"),
+                    ).alias("_hoodie_commit_seqno"),
+                    F.col(key).cast("string").alias("_hoodie_record_key"),
+                    (
+                        _hoodie_partition_path_expr(part_fields)
+                        if part_fields
+                        else F.lit("")
+                    ).alias("_hoodie_partition_path"),
+                    F.lit("").alias("_hoodie_file_name"),
+                    *data_cols,
+                )
+            for part_key, recs in _mor_groups(
+                full, path, instant, part_fields, virtual
+            ).items():
+                stats_by_part.setdefault(part_key, []).extend(recs)
+        if _completed_instants(path)[-1][0] != base_last:
+            raise HudiProtocolError(
+                f"{path}: concurrent commit during MOR merge — re-run"
+            )
+        with open(
+            os.path.join(_meta_dir(path), f"{instant}.deltacommit"), "x"
+        ) as f:
+            json.dump(
+                {
+                    "partitionToWriteStats": stats_by_part or {"": []},
+                    "operationType": "UPSERT",
+                },
+                f,
+            )
+        return instant
 
 
 def hudi_upsert(
@@ -1384,25 +1381,13 @@ def hudi_upsert(
         kf = key_fields[0]
         ranges: list[tuple[str, object, object]] = []
         for f in files:
-            md = pq.ParquetFile(f).metadata
-            names = {
-                md.schema.column(i).name: i
-                for i in range(md.num_columns)
-            }
-            if kf not in names:
+            st = footer_stats(pq.read_metadata(f)).get(kf)
+            if st is None:
                 raise HudiProtocolError(
                     f"record key {kf!r} absent from base file {f}"
                 )
-            lo, hi, ok = None, None, md.num_row_groups > 0
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(names[kf]).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if ok:
-                ranges.append((f, lo, hi))
+            if st.min is not None:
+                ranges.append((f, st.min, st.max))
             else:
                 candidates.append(f)
         if ranges:
@@ -1434,32 +1419,20 @@ def hudi_upsert(
             for i in range(len(key_fields))
         ]
         for f in files:
-            md = pq.ParquetFile(f).metadata
-            names = {
-                md.schema.column(i).name: i
-                for i in range(md.num_columns)
-            }
-            miss = [k for k in key_fields if k not in names]
+            stats = footer_stats(pq.read_metadata(f))
+            miss = [k for k in key_fields if k not in stats]
             if miss:
                 raise HudiProtocolError(
                     f"record key column(s) {miss} absent from base"
                     f" file {f}"
                 )
-            can_match = True
-            for i, kf in enumerate(key_fields):
-                lo, hi, ok = None, None, md.num_row_groups > 0
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(names[kf]).statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                slo, shi = src_bounds[i]
-                if ok and slo is not None and (hi < slo or lo > shi):
-                    can_match = False
-                    break
-            if can_match:
+            if not any(
+                st.min is not None and slo is not None
+                and (st.max < slo or st.min > shi)
+                for st, (slo, shi) in zip(
+                    (stats[k] for k in key_fields), src_bounds
+                )
+            ):
                 candidates.append(f)
 
     update_cols = {
@@ -1540,73 +1513,6 @@ def _hoodie_partition_path_expr(part_fields: list[str]):
     )
 
 
-def _stage_mor_groups(
-    full, path: str, instant: str, part_fields: list[str],
-    virtual: bool = False,
-) -> dict[str, list[dict]]:
-    """Stage MOR rows as fresh base file groups, keyed by partition
-    path. Meta-columned rows partition directly on their stamped
-    _hoodie_partition_path; ``virtual`` rows (r12 —
-    hoodie.populate.meta.fields=false tables carry NO meta columns)
-    compute the same hive-style path from the partition fields
-    instead."""
-    import glob
-    import shutil
-    import uuid
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    if part_fields:
-        hpp = (
-            _hoodie_partition_path_expr(part_fields)
-            if virtual
-            else F.col("_hoodie_partition_path")
-        )
-        (
-            full.withColumn("__hpp", hpp)
-            .write.mode("overwrite").partitionBy("__hpp").parquet(staging)
-        )
-        files = sorted(glob.glob(
-            os.path.join(staging, "**", "part-*.parquet"), recursive=True
-        ))
-    else:
-        full.write.mode("overwrite").parquet(staging)
-        files = sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
-    from urllib.parse import unquote
-
-    out: dict[str, list[dict]] = {}
-    for f in files:
-        if pq.ParquetFile(f).metadata.num_rows == 0:
-            continue
-        fid = uuid.uuid4().hex
-        base = f"{fid}_0_{instant}.parquet"
-        if part_fields:
-            comp = os.path.relpath(os.path.dirname(f), staging)
-            # __hpp is the FULL stamped hive-style path (never NULL —
-            # NULL partition VALUES render the hive marker inside it),
-            # so the staged dir value round-trips verbatim
-            part = unquote(comp.partition("=")[2])
-            os.makedirs(os.path.join(path, part), exist_ok=True)
-            rel, part_key = f"{part}/{base}", part
-        else:
-            rel, part_key = base, ""
-        shutil.move(f, os.path.join(path, rel))
-        out.setdefault(part_key, []).append(
-            {
-                "fileId": fid,
-                "path": rel,
-                "prevCommit": "null",
-                "totalWriteBytes": os.path.getsize(
-                    os.path.join(path, rel)
-                ),
-            }
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-    return out
-
-
 def write_hudi_mor_create(
     spark: SparkSession,
     df,
@@ -1668,39 +1574,38 @@ def write_hudi_mor_create(
         os.path.join(_meta_dir(path), "hoodie.properties"), "w"
     ) as f:
         f.write(props_text)
-    instant = _claim_instant(path)
-    if populate_meta_fields:
-        full = df.select(
-            F.lit(instant).alias("_hoodie_commit_time"),
-            F.concat(
-                F.lit(f"{instant}_0_"),
-                F.monotonically_increasing_id().cast("string"),
-            ).alias("_hoodie_commit_seqno"),
-            F.col(record_key).cast("string").alias("_hoodie_record_key"),
-            (
-                _hoodie_partition_path_expr(part_fields)
-                if part_fields
-                else F.lit("")
-            ).alias("_hoodie_partition_path"),
-            F.lit("").alias("_hoodie_file_name"),
-            *df.columns,
+    with _claimed_instant(path) as instant:
+        if populate_meta_fields:
+            full = df.select(
+                F.lit(instant).alias("_hoodie_commit_time"),
+                F.concat(
+                    F.lit(f"{instant}_0_"),
+                    F.monotonically_increasing_id().cast("string"),
+                ).alias("_hoodie_commit_seqno"),
+                F.col(record_key).cast("string").alias("_hoodie_record_key"),
+                (
+                    _hoodie_partition_path_expr(part_fields)
+                    if part_fields
+                    else F.lit("")
+                ).alias("_hoodie_partition_path"),
+                F.lit("").alias("_hoodie_file_name"),
+                *df.columns,
+            )
+        else:
+            full = df
+        stats_by_part = _mor_groups(
+            full, path, instant, part_fields, not populate_meta_fields
         )
-    else:
-        full = df
-    stats_by_part = _stage_mor_groups(
-        full, path, instant, part_fields,
-        virtual=not populate_meta_fields,
-    )
-    meta = {
-        "partitionToWriteStats": stats_by_part or {"": []},
-        "extraMetadata": {"schema": full.schema.json()},
-        "operationType": "BULK_INSERT",
-    }
-    with open(
-        os.path.join(_meta_dir(path), f"{instant}.deltacommit"), "x"
-    ) as f:
-        json.dump(meta, f)
-    return instant
+        meta = {
+            "partitionToWriteStats": stats_by_part or {"": []},
+            "extraMetadata": {"schema": full.schema.json()},
+            "operationType": "BULK_INSERT",
+        }
+        with open(
+            os.path.join(_meta_dir(path), f"{instant}.deltacommit"), "x"
+        ) as f:
+            json.dump(meta, f)
+        return instant
 
 
 def _write_log_blocks_distributed(
@@ -2098,71 +2003,71 @@ def _hudi_log_insert(
             f"partition columns {missing} absent from the source"
         )
     base_last = _completed_instants(path)[-1][0]
-    instant = _claim_instant(path)
-    data_cols = list(source.columns)
-    src = source.select(
-        (
-            _virtual_key_expr(key_fields)
-            if virtual
-            else F.col(key).cast("string")
-        ).alias("__k"),
-        (
-            _hoodie_partition_path_expr(part_fields)
-            if part_fields
-            else F.lit("")
-        ).alias("__grp"),
-        *data_cols,
-    )
-    avro_schema = {
-        "type": "record",
-        "name": "witdb_mor",
-        "fields": (
-            _avro_schema_for(source)["fields"]
-            if virtual
-            else _meta_string_avro_fields()
-            + _avro_schema_for(source)["fields"]
-        ),
-    }
-    stats_by_part: dict[str, list] = {}
-    # one read of the source: each partition's writer task opens its
-    # own file group, so no rows can reach a group the driver never saw
-    for r in _write_log_blocks_distributed(
-        src, path, instant, avro_schema, None, data_cols
-    ):
-        stats_by_part.setdefault(r["part"], []).append(
-            {
-                "fileId": r["fid"],
-                "path": r["rel"],
-                "prevCommit": "null",
-                "numWrites": r["rows"],
-                "totalWriteBytes": r["nbytes"],
-            }
+    with _claimed_instant(path) as instant:
+        data_cols = list(source.columns)
+        src = source.select(
+            (
+                _virtual_key_expr(key_fields)
+                if virtual
+                else F.col(key).cast("string")
+            ).alias("__k"),
+            (
+                _hoodie_partition_path_expr(part_fields)
+                if part_fields
+                else F.lit("")
+            ).alias("__grp"),
+            *data_cols,
         )
-    if _completed_instants(path)[-1][0] != base_last:
-        raise HudiProtocolError(
-            f"{path}: concurrent commit during MOR log insert — re-run"
-        )
-    with open(
-        os.path.join(_meta_dir(path), f"{instant}.deltacommit"), "x"
-    ) as f:
-        json.dump(
-            {
-                "partitionToWriteStats": stats_by_part or {"": []},
-                "operationType": "INSERT",
-                **(
-                    {
-                        "extraMetadata": {
-                            str(k): str(v)
-                            for k, v in extra_metadata.items()
+        avro_schema = {
+            "type": "record",
+            "name": "witdb_mor",
+            "fields": (
+                _avro_schema_for(source)["fields"]
+                if virtual
+                else _meta_string_avro_fields()
+                + _avro_schema_for(source)["fields"]
+            ),
+        }
+        stats_by_part: dict[str, list] = {}
+        # one read of the source: each partition's writer task opens its
+        # own file group, so no rows can reach a group the driver never saw
+        for r in _write_log_blocks_distributed(
+            src, path, instant, avro_schema, None, data_cols
+        ):
+            stats_by_part.setdefault(r["part"], []).append(
+                {
+                    "fileId": r["fid"],
+                    "path": r["rel"],
+                    "prevCommit": "null",
+                    "numWrites": r["rows"],
+                    "totalWriteBytes": r["nbytes"],
+                }
+            )
+        if _completed_instants(path)[-1][0] != base_last:
+            raise HudiProtocolError(
+                f"{path}: concurrent commit during MOR log insert — re-run"
+            )
+        with open(
+            os.path.join(_meta_dir(path), f"{instant}.deltacommit"), "x"
+        ) as f:
+            json.dump(
+                {
+                    "partitionToWriteStats": stats_by_part or {"": []},
+                    "operationType": "INSERT",
+                    **(
+                        {
+                            "extraMetadata": {
+                                str(k): str(v)
+                                for k, v in extra_metadata.items()
+                            }
                         }
-                    }
-                    if extra_metadata
-                    else {}
-                ),
-            },
-            f,
-        )
-    return instant, _num_writes(stats_by_part)
+                        if extra_metadata
+                        else {}
+                    ),
+                },
+                f,
+            )
+        return instant, _num_writes(stats_by_part)
 
 
 def hudi_log_delete(
@@ -2229,36 +2134,36 @@ def hudi_log_delete(
         "name": "witdb_mor_delete",
         "fields": _meta_string_avro_fields(),
     }
-    instant = _claim_instant(path)
-    stats_by_part: dict[str, list] = {}
-    for r in _write_log_blocks_distributed(
-        routed, path, instant, avro_schema, group_info,
-        data_cols=[], btype=BLOCK_DELETE,
-    ):
-        info = group_info[r["grp"]]
-        stats_by_part.setdefault(info["part"], []).append(
-            {
-                "fileId": info["fid"],
-                "path": r["rel"],
-                "prevCommit": info["prev"],
-                "totalWriteBytes": r["nbytes"],
-            }
-        )
-    if _completed_instants(path)[-1][0] != base_last:
-        raise HudiProtocolError(
-            f"{path}: concurrent commit during MOR delete — re-run"
-        )
-    with open(
-        os.path.join(_meta_dir(path), f"{instant}.deltacommit"), "x"
-    ) as f:
-        json.dump(
-            {
-                "partitionToWriteStats": stats_by_part or {"": []},
-                "operationType": "DELETE",
-            },
-            f,
-        )
-    return instant
+    with _claimed_instant(path) as instant:
+        stats_by_part: dict[str, list] = {}
+        for r in _write_log_blocks_distributed(
+            routed, path, instant, avro_schema, group_info,
+            data_cols=[], btype=BLOCK_DELETE,
+        ):
+            info = group_info[r["grp"]]
+            stats_by_part.setdefault(info["part"], []).append(
+                {
+                    "fileId": info["fid"],
+                    "path": r["rel"],
+                    "prevCommit": info["prev"],
+                    "totalWriteBytes": r["nbytes"],
+                }
+            )
+        if _completed_instants(path)[-1][0] != base_last:
+            raise HudiProtocolError(
+                f"{path}: concurrent commit during MOR delete — re-run"
+            )
+        with open(
+            os.path.join(_meta_dir(path), f"{instant}.deltacommit"), "x"
+        ) as f:
+            json.dump(
+                {
+                    "partitionToWriteStats": stats_by_part or {"": []},
+                    "operationType": "DELETE",
+                },
+                f,
+            )
+        return instant
 
 
 def hudi_log_upsert(spark: SparkSession, path: str, source) -> str:
@@ -2326,81 +2231,81 @@ def hudi_log_upsert(spark: SparkSession, path: str, source) -> str:
     matched = routed.where("__grp IS NOT NULL").select(
         "__grp", "__k", *data_cols
     )
-    instant = _claim_instant(path)
-    stats_by_part: dict[str, list] = {}
-    if avro_fields is None:
-        if not matched.isEmpty():
-            _avro_schema_for(source)  # re-raise the informative error
-    else:
-        # virtual-key tables carry NO meta columns anywhere — log
-        # records are plain data fields (the schema drives the encode;
-        # the virtual reader takes commit time from the block header)
-        avro_schema = {
-            "type": "record",
-            "name": "witdb_mor",
-            "fields": (
-                avro_fields
-                if virtual
-                else _meta_string_avro_fields() + avro_fields
-            ),
-        }
-        for r in _write_log_blocks_distributed(
-            matched, path, instant, avro_schema, group_info, data_cols
-        ):
-            info = group_info[r["grp"]]
-            stats_by_part.setdefault(info["part"], []).append(
-                {
-                    "fileId": info["fid"],
-                    "path": r["rel"],
-                    "prevCommit": info["prev"],
-                    "totalWriteBytes": r["nbytes"],
-                }
-            )
-    inserts = routed.where("__grp IS NULL").select(*data_cols)
-    if not inserts.isEmpty():
-        if part_fields:
-            missing = [c for c in part_fields if c not in data_cols]
-            if missing:
-                raise HudiProtocolError(
-                    f"partition columns {missing} absent from the source"
-                )
-        if virtual:
-            full = inserts.coalesce(1)
+    with _claimed_instant(path) as instant:
+        stats_by_part: dict[str, list] = {}
+        if avro_fields is None:
+            if not matched.isEmpty():
+                _avro_schema_for(source)  # re-raise the informative error
         else:
-            full = inserts.coalesce(1).select(
-                F.lit(instant).alias("_hoodie_commit_time"),
-                F.concat(
-                    F.lit(f"{instant}_1_"),
-                    F.monotonically_increasing_id().cast("string"),
-                ).alias("_hoodie_commit_seqno"),
-                F.col(key).cast("string").alias("_hoodie_record_key"),
-                (
-                    _hoodie_partition_path_expr(part_fields)
-                    if part_fields
-                    else F.lit("")
-                ).alias("_hoodie_partition_path"),
-                F.lit("").alias("_hoodie_file_name"),
-                *data_cols,
+            # virtual-key tables carry NO meta columns anywhere — log
+            # records are plain data fields (the schema drives the encode;
+            # the virtual reader takes commit time from the block header)
+            avro_schema = {
+                "type": "record",
+                "name": "witdb_mor",
+                "fields": (
+                    avro_fields
+                    if virtual
+                    else _meta_string_avro_fields() + avro_fields
+                ),
+            }
+            for r in _write_log_blocks_distributed(
+                matched, path, instant, avro_schema, group_info, data_cols
+            ):
+                info = group_info[r["grp"]]
+                stats_by_part.setdefault(info["part"], []).append(
+                    {
+                        "fileId": info["fid"],
+                        "path": r["rel"],
+                        "prevCommit": info["prev"],
+                        "totalWriteBytes": r["nbytes"],
+                    }
+                )
+        inserts = routed.where("__grp IS NULL").select(*data_cols)
+        if not inserts.isEmpty():
+            if part_fields:
+                missing = [c for c in part_fields if c not in data_cols]
+                if missing:
+                    raise HudiProtocolError(
+                        f"partition columns {missing} absent from the source"
+                    )
+            if virtual:
+                full = inserts.coalesce(1)
+            else:
+                full = inserts.coalesce(1).select(
+                    F.lit(instant).alias("_hoodie_commit_time"),
+                    F.concat(
+                        F.lit(f"{instant}_1_"),
+                        F.monotonically_increasing_id().cast("string"),
+                    ).alias("_hoodie_commit_seqno"),
+                    F.col(key).cast("string").alias("_hoodie_record_key"),
+                    (
+                        _hoodie_partition_path_expr(part_fields)
+                        if part_fields
+                        else F.lit("")
+                    ).alias("_hoodie_partition_path"),
+                    F.lit("").alias("_hoodie_file_name"),
+                    *data_cols,
+                )
+            for part_key, recs in _mor_groups(
+                full, path, instant, part_fields, virtual
+            ).items():
+                stats_by_part.setdefault(part_key, []).extend(recs)
+        if _completed_instants(path)[-1][0] != base_last:
+            raise HudiProtocolError(
+                f"{path}: concurrent commit during MOR upsert — re-run"
             )
-        for part_key, recs in _stage_mor_groups(
-            full, path, instant, part_fields, virtual=virtual
-        ).items():
-            stats_by_part.setdefault(part_key, []).extend(recs)
-    if _completed_instants(path)[-1][0] != base_last:
-        raise HudiProtocolError(
-            f"{path}: concurrent commit during MOR upsert — re-run"
-        )
-    with open(
-        os.path.join(_meta_dir(path), f"{instant}.deltacommit"), "x"
-    ) as f:
-        json.dump(
-            {
-                "partitionToWriteStats": stats_by_part or {"": []},
-                "operationType": "UPSERT",
-            },
-            f,
-        )
-    return instant
+        with open(
+            os.path.join(_meta_dir(path), f"{instant}.deltacommit"), "x"
+        ) as f:
+            json.dump(
+                {
+                    "partitionToWriteStats": stats_by_part or {"": []},
+                    "operationType": "UPSERT",
+                },
+                f,
+            )
+        return instant
 
 
 def hudi_incremental_read(
@@ -2532,34 +2437,34 @@ def hudi_compact(
     merged = read_hudi_snapshot(spark, path).coalesce(
         max(1, int(target_files))
     )
-    instant = _claim_instant(path)
-    # partitioned tables re-stage per partition (the merged rows carry
-    # their stamped _hoodie_partition_path; virtual tables recompute
-    # the hive path from the partition columns); coalesce keeps the
-    # per-partition group count at target_files
-    stats_by_part = _stage_mor_groups(
-        merged, path, instant, part_fields, virtual=virtual
-    )
-    if _completed_instants(path)[-1][0] != base_last:
-        raise HudiProtocolError(
-            f"{path}: concurrent commit during compaction — re-run"
+    with _claimed_instant(path) as instant:
+        # partitioned tables re-stage per partition (the merged rows carry
+        # their stamped _hoodie_partition_path; virtual tables recompute
+        # the hive path from the partition columns); coalesce keeps the
+        # per-partition group count at target_files
+        stats_by_part = _mor_groups(
+            merged, path, instant, part_fields, virtual
         )
-    replace: dict[str, list] = {}
-    for part, fid in slices:
-        replace.setdefault(part, []).append(fid)
-    meta = {
-        "partitionToWriteStats": stats_by_part or {"": []},
-        "partitionToReplaceFileIds": {
-            p_: sorted(fids) for p_, fids in replace.items()
-        } or {"": []},
-        "extraMetadata": {"schema": merged.schema.json()},
-        "operationType": "COMPACT",
-    }
-    with open(
-        os.path.join(_meta_dir(path), f"{instant}.replacecommit"), "x"
-    ) as f:
-        json.dump(meta, f)
-    return instant
+        if _completed_instants(path)[-1][0] != base_last:
+            raise HudiProtocolError(
+                f"{path}: concurrent commit during compaction — re-run"
+            )
+        replace: dict[str, list] = {}
+        for part, fid in slices:
+            replace.setdefault(part, []).append(fid)
+        meta = {
+            "partitionToWriteStats": stats_by_part or {"": []},
+            "partitionToReplaceFileIds": {
+                p_: sorted(fids) for p_, fids in replace.items()
+            } or {"": []},
+            "extraMetadata": {"schema": merged.schema.json()},
+            "operationType": "COMPACT",
+        }
+        with open(
+            os.path.join(_meta_dir(path), f"{instant}.replacecommit"), "x"
+        ) as f:
+            json.dump(meta, f)
+        return instant
 
 
 def hudi_truncate(spark: SparkSession, path: str) -> str:
@@ -2570,28 +2475,28 @@ def hudi_truncate(spark: SparkSession, path: str) -> str:
     retired slices later. Returns the commit instant."""
     slices = _hudi_file_slices(path)
     base_last = _completed_instants(path)[-1][0]
-    instant = _claim_instant(path)
-    replace: dict[str, list] = {}
-    for part, fid in slices:
-        replace.setdefault(part, []).append(fid)
-    if _completed_instants(path)[-1][0] != base_last:
-        raise HudiProtocolError(
-            f"{path}: concurrent commit during TRUNCATE — re-run"
-        )
-    with open(
-        os.path.join(_meta_dir(path), f"{instant}.replacecommit"), "x"
-    ) as f:
-        json.dump(
-            {
-                "partitionToWriteStats": {"": []},
-                "partitionToReplaceFileIds": {
-                    p_: sorted(fids) for p_, fids in replace.items()
-                } or {"": []},
-                "operationType": "DELETE_PARTITION",
-            },
-            f,
-        )
-    return instant
+    with _claimed_instant(path) as instant:
+        replace: dict[str, list] = {}
+        for part, fid in slices:
+            replace.setdefault(part, []).append(fid)
+        if _completed_instants(path)[-1][0] != base_last:
+            raise HudiProtocolError(
+                f"{path}: concurrent commit during TRUNCATE — re-run"
+            )
+        with open(
+            os.path.join(_meta_dir(path), f"{instant}.replacecommit"), "x"
+        ) as f:
+            json.dump(
+                {
+                    "partitionToWriteStats": {"": []},
+                    "partitionToReplaceFileIds": {
+                        p_: sorted(fids) for p_, fids in replace.items()
+                    } or {"": []},
+                    "operationType": "DELETE_PARTITION",
+                },
+                f,
+            )
+        return instant
 
 
 def hudi_clean(path: str, keep_last: int = 1) -> dict:

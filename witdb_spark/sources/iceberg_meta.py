@@ -40,6 +40,7 @@ from witdb_spark.sources.merge import (
     rewrite_files,
     update_rule,
 )
+from witdb_spark.sources.staging import footer_stats, stage
 
 
 class IcebergProtocolError(RuntimeError):
@@ -1067,195 +1068,110 @@ def _typed_part_value(raw: str | None, ice_type: str, name: str):
 def _stage_iceberg_data(
     df, path: str, part_fields: list[dict], schema: dict
 ) -> list[dict]:
-    """Stage ``df`` as data parquet under <path>/data and return the
-    spec-shaped data_file records. Partitioned specs stage with
-    partitionBy on COMPUTED transform columns (identity = a copy of
-    the source; bucket/truncate/temporal evaluate jar-free in
-    sources/iceberg_transforms.py — bucket over fixed-width types as
-    pure JVM murmur3 arithmetic), so the data files keep every column
-    physically (the same layout iceberg-java writes); partition VALUES
-    parse back from the staged Hive-style directory names, typed by
-    the transform result type, and land in the manifest partition
-    struct."""
-    import glob
+    """Stage ``df`` as data parquet under <path>/data (sources/
+    staging.py) and return the spec-shaped data_file records.
+    Partitioned specs stage with partitionBy on COMPUTED transform
+    columns (identity = a copy of the source; bucket/truncate/temporal
+    evaluate jar-free in sources/iceberg_transforms.py — bucket over
+    fixed-width types as pure JVM murmur3 arithmetic), so the data
+    files keep every column physically (the same layout iceberg-java
+    writes); the decoded partition values, typed by the transform
+    result type, land in the manifest partition struct."""
     import shutil
     import uuid
-    from urllib.parse import unquote
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
     from witdb_spark.sources.iceberg_transforms import transform_expr
 
     by_id = {f["id"]: f for f in schema["fields"]}
     part_cols = [by_id[pf["source-id"]]["name"] for pf in part_fields]
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    if part_cols:
-        missing = [c for c in part_cols if c not in df.columns]
-        if missing:
-            raise IcebergProtocolError(
-                f"partition columns {missing} absent from the data"
-            )
-        from witdb_spark.sources.paths import (
-            escape_empty_partition_expr,
+    missing = [c for c in part_cols if c not in df.columns]
+    if missing:
+        raise IcebergProtocolError(
+            f"partition columns {missing} absent from the data"
         )
-
-        stage_df = df
-        for i, (pf, c) in enumerate(zip(part_fields, part_cols)):
-            expr = transform_expr(
+    parts = [
+        (
+            f"__p_{i}",
+            transform_expr(
                 pf.get("transform", "identity"), c,
                 by_id[pf["source-id"]]["type"],
-            )
-            if _part_result_type(pf, schema) == "string":
-                # keep '' distinct from NULL through the hive-style
-                # staging directory round-trip (paths.py sentinel)
-                expr = escape_empty_partition_expr(expr)
-            stage_df = stage_df.withColumn(f"__p_{i}", expr)
-        stage_df.write.mode("overwrite").partitionBy(
-            *[f"__p_{i}" for i in range(len(part_cols))]
-        ).parquet(staging)
-        files = sorted(
-            glob.glob(
-                os.path.join(staging, "**", "part-*.parquet"),
-                recursive=True,
-            )
+            ),
         )
-    else:
-        df.write.mode("overwrite").parquet(staging)
-        files = sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
-    os.makedirs(os.path.join(path, "data"), exist_ok=True)
+        for i, (pf, c) in enumerate(zip(part_fields, part_cols))
+    ]
     recs = []
-    for f in files:
-        n_rows = pq.ParquetFile(f).metadata.num_rows
-        if n_rows == 0:
-            continue
-        rec: dict = {
-            "content": 0,
-            "file_format": "PARQUET",
-            "record_count": n_rows,
-        }
-        if part_cols:
-            rel_dir = os.path.relpath(os.path.dirname(f), staging)
-            raw_by_idx: dict[int, str | None] = {}
-            dir_by_idx: dict[int, str] = {}
-            from witdb_spark.sources.paths import (
-                unescape_partition_value,
-            )
-
-            for comp in rel_dir.split(os.sep):
-                k, _, v = comp.partition("=")
-                idx = int(k[len("__p_"):])
-                # dest dir keeps the staged (escaped) rendering —
-                # readers resolve files through the manifest struct,
-                # never the directory name
-                dir_by_idx[idx] = v
-                raw_by_idx[idx] = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__"
-                    else unescape_partition_value(unquote(v))
-                )
-            part_struct = {}
-            dest_dir_parts = []
-            for i, (pf, c) in enumerate(zip(part_fields, part_cols)):
-                t = _part_result_type(pf, schema)
-                part_struct[pf["name"]] = _typed_part_value(
-                    raw_by_idx[i], t, pf["name"]
-                )
-                dest_dir_parts.append(f"{pf['name']}={dir_by_idx[i]}")
-            rec["partition"] = part_struct
+    with stage(df, path, parts) as files:
+        os.makedirs(os.path.join(path, "data"), exist_ok=True)
+        for f in files:
+            # the dir keeps the staged (escaped) rendering — readers
+            # resolve files through the manifest struct, never the
+            # directory name
             rel = os.path.join(
-                "data", *dest_dir_parts,
-                f"{uuid.uuid4().hex}-{os.path.basename(f)}",
+                "data",
+                *[f"{pf['name']}={d}" for pf, d in zip(part_fields, f.dirs)],
+                (
+                    f"{uuid.uuid4().hex}-{os.path.basename(f.path)}"
+                    if part_fields
+                    else os.path.basename(f.path)
+                ),
             )
             os.makedirs(
                 os.path.dirname(os.path.join(path, rel)), exist_ok=True
             )
-        else:
-            rel = os.path.join("data", os.path.basename(f))
-        shutil.move(f, os.path.join(path, rel))
-        rec["file_path"] = rel
-        rec["file_size_in_bytes"] = os.path.getsize(
-            os.path.join(path, rel)
-        )
-        rec.update(_column_stats(os.path.join(path, rel), schema))
-        recs.append(rec)
-    shutil.rmtree(staging, ignore_errors=True)
+            shutil.move(f.path, os.path.join(path, rel))
+            rec: dict = {
+                "content": 0,
+                "file_format": "PARQUET",
+                "record_count": f.footer.num_rows,
+            }
+            if part_fields:
+                rec["partition"] = {
+                    pf["name"]: _typed_part_value(
+                        v, _part_result_type(pf, schema), pf["name"]
+                    )
+                    for pf, v in zip(part_fields, f.values)
+                }
+            rec["file_path"] = rel
+            rec["file_size_in_bytes"] = os.path.getsize(
+                os.path.join(path, rel)
+            )
+            rec.update(_column_stats(f.footer, schema))
+            recs.append(rec)
     return recs
 
 
-def _column_stats(file_path: str, schema: dict) -> dict:
-    """Spec column-stats maps for one staged data file, aggregated
-    from the parquet footer (reference analog: the library's
+def _column_stats(md, schema: dict) -> dict:
+    """Spec column-stats maps for one staged data file from the footer
+    fold (staging.footer_stats; reference analog: the library's
     MetricsConfig defaults; our reader's bounds pruning consumes them
-    in read_iceberg_snapshot). Columns outside _BOUND_TYPES or without
-    usable footer stats are simply absent."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(file_path).metadata
-    except Exception:
-        return {}
-    id_by_name = {f["name"]: f["id"] for f in schema["fields"]}
-    type_by_name = {f["name"]: f["type"] for f in schema["fields"]}
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    counts: dict = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            fid = id_by_name.get(name)
-            t = type_by_name.get(name)
-            if fid is None or not isinstance(t, str) or (
-                t not in _BOUND_TYPES
-            ):
-                continue
-            # parquet num_values includes nulls — exactly the spec's
-            # value_counts semantics
-            counts[fid] = counts.get(fid, 0) + col.num_values
-            st = col.statistics
-            if st is None:
-                mins[fid] = None
-                continue
-            if st.null_count is not None:
-                nulls[fid] = nulls.get(fid, 0) + st.null_count
-            if not st.has_min_max or (fid in mins and mins[fid] is None):
-                mins[fid] = None
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                try:
-                    lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
-                except UnicodeDecodeError:
-                    mins[fid] = None
-                    continue
-            mins[fid] = lo if fid not in mins else min(mins[fid], lo)
-            maxs[fid] = hi if fid not in maxs else max(maxs[fid], hi)
+    in read_iceberg_snapshot). Only top-level columns of _BOUND_TYPES
+    are recorded; a column without usable footer stats has no entry in
+    the maps its stats cannot fill."""
+    stats = footer_stats(md)
+    lower, upper, counts, nulls = [], [], [], []
+    for f in schema["fields"]:
+        s, t = stats.get(f["name"]), f["type"]
+        if s is None or not isinstance(t, str) or t not in _BOUND_TYPES:
+            continue
+        # parquet num_values includes nulls — exactly the spec's
+        # value_counts semantics
+        counts.append({"key": f["id"], "value": s.values})
+        if s.nulls is not None:
+            nulls.append({"key": f["id"], "value": s.nulls})
+        if s.min is None:
+            continue
+        lb, ub = _ice_single_ser(t, s.min), _ice_single_ser(t, s.max)
+        if lb is not None and ub is not None:
+            lower.append({"key": f["id"], "value": lb})
+            upper.append({"key": f["id"], "value": ub})
     out: dict = {}
-    lower, upper = [], []
-    for fid, lo in mins.items():
-        if lo is None or fid not in maxs:
-            continue
-        name = next(n for n, i in id_by_name.items() if i == fid)
-        t = type_by_name[name]
-        lb = _ice_single_ser(t, lo)
-        ub = _ice_single_ser(t, maxs[fid])
-        if lb is None or ub is None:
-            continue
-        lower.append({"key": fid, "value": lb})
-        upper.append({"key": fid, "value": ub})
     if lower:
         out["lower_bounds"] = lower
         out["upper_bounds"] = upper
     if counts:
-        out["value_counts"] = [
-            {"key": k, "value": v} for k, v in sorted(counts.items())
-        ]
+        out["value_counts"] = sorted(counts, key=lambda kv: kv["key"])
     if nulls:
-        out["null_value_counts"] = [
-            {"key": k, "value": v} for k, v in sorted(nulls.items())
-        ]
+        out["null_value_counts"] = sorted(nulls, key=lambda kv: kv["key"])
     return out
 
 
@@ -2173,7 +2089,6 @@ def iceberg_write_equality_deletes(
     column -> value (None matches NULL, null-equals-null semantics);
     ``columns`` defaults to the first row's keys. Returns the
     committed snapshot id."""
-    import glob
     import shutil
     import uuid
 
@@ -2238,11 +2153,8 @@ def iceberg_write_equality_deletes(
         [tuple(r[c] for c in cols) for r in rows],
         ", ".join(f"`{c}` {type_of[c]}" for c in cols),
     ).coalesce(1)
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    sdf.write.mode("overwrite").parquet(staging)
-    part = sorted(glob.glob(os.path.join(staging, "part-*.parquet")))[0]
-    shutil.move(part, os.path.join(path, dpath))
-    shutil.rmtree(staging, ignore_errors=True)
+    with stage(sdf, path) as files:
+        shutil.move(files[0].path, os.path.join(path, dpath))
     return _commit_delete_snapshot(
         path, base_cur, prior, snap_id, seq, dpath, len(rows),
         [fields[c] for c in cols],
@@ -2285,7 +2197,8 @@ def _iceberg_cow(
     # re-emit (iceberg_data_files would walk the same chain again)
     cur_snap = _pick_snapshot(meta, None, None)
     _, manifests = read_avro_file(_resolve(path, cur_snap["manifest-list"]))
-    all_entries: list[tuple[dict, str]] = []  # (entry, abs data path)
+    # (entry carrying its data sequence number, abs data path)
+    all_entries: list[tuple[dict, str]] = []
     _needed = (
         "content", "file_path", "file_format",
         "record_count", "file_size_in_bytes",
@@ -2311,8 +2224,14 @@ def _iceberg_cow(
                     "non-parquet Iceberg data file — add the"
                     " iceberg-spark-runtime jar"
                 )
+            data_seq = e.get("sequence_number")
+            if data_seq is None:
+                data_seq = mf.get("sequence_number") or 0
             all_entries.append(
-                (e, os.path.abspath(_resolve(path, d["file_path"])))
+                (
+                    dict(e, sequence_number=data_seq),
+                    os.path.abspath(_resolve(path, d["file_path"])),
+                )
             )
     known = {ap: ap for _, ap in all_entries}
     scan = (
@@ -2325,6 +2244,7 @@ def _iceberg_cow(
         return {"snapshot_id": base_snap, "files_rewritten": 0}
     matched = set(rw.removed)
     snap_id = max(s["snapshot-id"] for s in meta.get("snapshots") or []) + 1
+    seq = (meta.get("last-sequence-number") or 0) + 1
     entries = [
         {"status": 1, "snapshot_id": snap_id, "data_file": rec}
         for rec in _stage_iceberg_data(
@@ -2332,29 +2252,31 @@ def _iceberg_cow(
         )
     ]
     # kept files: the walked entries whose file survives, re-emitted as
-    # EXISTING with their original counts
+    # EXISTING with their original counts and data sequence numbers
+    # (ADDED entries inherit the manifest's, this snapshot's)
     for e, ap in all_entries:
         if ap not in matched:
             entries.append(dict(e, status=0, snapshot_id=snap_id))
 
     mpath = os.path.join(path, "metadata", f"m-{uuid.uuid4().hex}.avro")
-    write_avro_file(
-        mpath,
-        _entry_schema_for(
-            _part_avro_fields(part_fields, _table_schema(meta))
-        ),
-        entries,
+    entry_schema = _entry_schema_for(
+        _part_avro_fields(part_fields, _table_schema(meta))
     )
+    entry_schema["fields"].insert(
+        2, {"name": "sequence_number", "type": ["null", "long"]}
+    )
+    write_avro_file(mpath, entry_schema, entries)
     mlist = os.path.join(
         path, "metadata", f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
     )
-    write_avro_file(mlist, _MANIFEST_FILE_SCHEMA, [
+    write_avro_file(mlist, _MANIFEST_FILE_SCHEMA_SEQ, [
         {
             "manifest_path": mpath,
             "manifest_length": os.path.getsize(mpath),
             "partition_spec_id": meta.get("default-spec-id", 0),
             "content": 0,
             "added_snapshot_id": snap_id,
+            "sequence_number": seq,
             "partitions": _partition_summaries(
                 entries, part_fields, _table_schema(meta)
             ),
@@ -2362,13 +2284,23 @@ def _iceberg_cow(
     ])
 
     def build(cur: dict) -> dict:
+        if (cur.get("last-sequence-number") or 0) + 1 != seq:
+            # a commit that kept the current snapshot (a branch append)
+            # took this sequence number and snapshot id
+            raise IcebergProtocolError(
+                f"{path}: concurrent commit during the operation"
+                " — re-run it"
+            )
         new = dict(cur)
         new["current-snapshot-id"] = snap_id
+        new["last-sequence-number"] = seq
         new["last-updated-ms"] = _now_ms_ice()
         new["snapshots"] = (cur.get("snapshots") or []) + [
             {
                 "snapshot-id": snap_id,
+                "parent-snapshot-id": cur.get("current-snapshot-id"),
                 "timestamp-ms": _now_ms_ice(),
+                "sequence-number": seq,
                 "manifest-list": mlist,
                 "summary": {"operation": "overwrite"},
             }

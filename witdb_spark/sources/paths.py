@@ -46,47 +46,3 @@ def norm_path_expr(col: Column) -> Column:
         F.try_url_decode(F.regexp_replace(stripped, r"\+", "%2B")),
         stripped,
     )
-
-
-# ------------------------------------------------- empty-string partitions
-# Spark's hive-style directory writer renders BOTH NULL and '' partition
-# values as __HIVE_DEFAULT_PARTITION__, so a writer that recovers
-# partition values from staged directory names (the jar-free delta/
-# iceberg/hudi staging paths here) would conflate the two: '' would be
-# recorded as NULL, and pruning for ``col = ''`` would silently drop
-# files that DO contain matching rows. Escaping '' to a sentinel (and
-# quote-prefixing genuine sentinel occurrences so the mapping stays
-# bijective) before partitionBy keeps the two distinct. The sentinel
-# only ever names STAGING DIRECTORIES — partitionBy drops the column
-# from file content, and the recovered (unescaped) value is what lands
-# in the table metadata.
-
-EMPTY_PARTITION_SENTINEL = "__WITDB_EMPTY_STRING__"
-
-
-def escape_empty_partition_expr(col: Column) -> Column:
-    """JVM-side escape for a string partition column about to feed
-    ``partitionBy``: '' -> sentinel; a genuine value starting with the
-    sentinel gets sentinel-prefixed (quoting), everything else passes
-    through. NULL stays NULL (-> __HIVE_DEFAULT_PARTITION__)."""
-    return (
-        F.when(col == "", F.lit(EMPTY_PARTITION_SENTINEL))
-        .when(
-            col.startswith(EMPTY_PARTITION_SENTINEL),
-            F.concat(F.lit(EMPTY_PARTITION_SENTINEL), col),
-        )
-        .otherwise(col)
-    )
-
-
-def unescape_partition_value(v: str | None) -> str | None:
-    """Python-side inverse of :func:`escape_empty_partition_expr`,
-    applied to a percent-DECODED directory value (the sentinel is
-    URL-safe, so decode order doesn't matter)."""
-    if v is None or not isinstance(v, str):
-        return v
-    if v == EMPTY_PARTITION_SENTINEL:
-        return ""
-    if v.startswith(EMPTY_PARTITION_SENTINEL):
-        return v[len(EMPTY_PARTITION_SENTINEL):]
-    return v
